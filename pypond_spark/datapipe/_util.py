@@ -1,6 +1,10 @@
-"""Shared datapipe helpers."""
+"""Shared datapipe helpers, including the word-token law (:data:`WS`,
+:func:`word_tokens`, :func:`py_word_tokens`) that every batch operator
+and every stream replay tokenizes with."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -127,6 +131,37 @@ def spread_io(df: DataFrame) -> DataFrame:
     return spread(df, min_task_bytes=SPREAD_MIN_TASK_BYTES)
 
 
+#: The whitespace class of the word-token law: Java regex ``\s`` spelled
+#: out (space, tab, LF, VT, FF, CR).  The class body means the same in
+#: Java regex and Python ``re``, so every engine splits on exactly these
+#: six characters; every other character (other C0 controls, U+0085,
+#: U+00A0, U+2028, ...) is part of a token.
+WS = r" \t\n\x0B\f\r"
+
+_WORD_RE = re.compile(f"[^{WS}]+")
+
+
+def word_tokens(text: Column | str) -> Column:
+    """The word-token law as a JVM expression:
+    ``filter(split(trim(text), '[WS]+'), t -> t != '')``, the maximal
+    runs of non-``WS`` characters.  ``text`` is a Column or a column
+    name.  NULL text gives NULL and empty or all-``WS`` text gives
+    ``[]``: neither has tokens, so shingling (:func:`ngram_explode`
+    ``min_one``) gives each one ``''`` shingle and SimHash drops both."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.filter(F.split(F.trim(c), f"[{WS}]+"),
+                    lambda t: t != F.lit(""))
+
+
+def py_word_tokens(text) -> list[str]:
+    """The Python replay of :func:`word_tokens` for Arrow stages:
+    ``re.findall('[^WS]+', text)``.  NULL (any non-``str``, e.g. a
+    pandas NaN) gives ``[]``, the same no-token document the JVM form
+    gives; the shingle and SimHash rules of :func:`word_tokens` apply
+    unchanged."""
+    return _WORD_RE.findall(text) if isinstance(text, str) else []
+
+
 def ngram_explode(df: DataFrame, arr: Column, n: int,
                   keep: list[str] | None = None,
                   out: str = "gram",
@@ -153,7 +188,9 @@ def ngram_explode(df: DataFrame, arr: Column, n: int,
     strict (default): rows whose array has fewer than ``n`` elements
     emit nothing.  ``min_one=True``: word-shingle semantics — every row
     emits at least one gram; 0 < size < n emits the joined prefix, an
-    empty (or NULL) array emits one empty-string gram.  ``pos`` (strict
+    empty (or NULL) array emits one empty-string gram — so under
+    :func:`word_tokens` both NULL and empty text get one ``''``
+    shingle.  ``pos`` (strict
     mode only) additionally emits the 0-based gram offset.
     """
     if n < 1:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypond_spark.datapipe._util import ngram_explode, spread
+from pypond_spark.datapipe._util import ngram_explode, spread, word_tokens
 from pypond_spark.datapipe.dedup import word_shingles
 
 
@@ -197,11 +197,9 @@ def longest_match(docs: DataFrame, bench: DataFrame, k: int = 5,
     docs = spread(docs)
 
     def grams(df, tcol, icol, pos_name, out_id):
-        toks = F.filter(F.split(F.trim(F.col(tcol)), r"\s+"),
-                        lambda t: t != F.lit(""))
         return ngram_explode(df.select(F.col(icol).alias(out_id),
                                        F.col(tcol)),
-                             toks, k, keep=[out_id], out="g",
+                             word_tokens(tcol), k, keep=[out_id], out="g",
                              pos=pos_name)
 
     dg = grams(docs, text_col, id_col, "i", "__doc")

@@ -22,19 +22,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pypond_spark.datapipe._util import (ngram_explode, overlap, pair_rows,
-                                          spread)
+from pypond_spark.datapipe._util import (ngram_explode, overlap, spread,
+                                          word_tokens)
 
 
 # simhash token cap per document: bounds skew and guarantees the lane-packed
 # bit counters in simhash64 cannot overflow a LONG (see comment there)
 _SIMHASH_MAX_TOKENS = 1 << 20
-
-
-def _tokens(text_col: str) -> F.Column:
-    """Whitespace tokens, empty strings dropped (split('') yields [''])."""
-    return F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: t != F.lit(""))
 
 
 def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
@@ -43,7 +37,7 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
     (:func:`~pypond_spark.datapipe._util.ngram_explode`, ``min_one`` —
     every doc emits at least one shingle, short docs the joined
     prefix): identical rows, fully code-generated."""
-    return ngram_explode(spread(df), _tokens(text_col), n,
+    return ngram_explode(spread(df), word_tokens(text_col), n,
                          keep=[id_col], out="shingle", min_one=True)
 
 
@@ -514,7 +508,7 @@ def simhash64(df: DataFrame, text_col: str = "text",
     # lane packing below provably overflow-free.
     toks = spread(df).select(
         F.col(id_col),
-        F.explode(F.slice(_tokens(text_col), 1, _SIMHASH_MAX_TOKENS))
+        F.explode(F.slice(word_tokens(text_col), 1, _SIMHASH_MAX_TOKENS))
         .alias("t")) \
         .select(F.col(id_col), tok_hash(F.col("t")).alias("h"))
     # Lane-packed bit counting: accumulator i sums bits i, i+22, i+44 in
@@ -607,7 +601,7 @@ def chunk_dedup(df: DataFrame, chunk_words: int = 20,
     k = int(chunk_words)
     if k <= 0:
         raise ValueError(f"chunk_words must be positive, got {chunk_words}")
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n_chunks = F.greatest(F.ceil(F.size(toks) / F.lit(k)).cast("int"),
                           F.lit(1))
     chunks = F.transform(
@@ -1077,7 +1071,7 @@ def source_overlap(df: DataFrame, group_col: str = "source",
     """
     if prefix_words:
         key = F.md5(F.array_join(
-            F.slice(_tokens(text_col), 1, int(prefix_words)), " "))
+            F.slice(word_tokens(text_col), 1, int(prefix_words)), " "))
     else:
         key = F.md5(F.col(text_col))
     per = (df.groupBy(key.alias("__dig"))

@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypond_spark.datapipe._util import global_prefix_sums, overlap, spread
+from pypond_spark.datapipe._util import (global_prefix_sums, overlap, spread,
+                                          word_tokens)
 
 _HASH_DENOM = 4294967296.0  # 2^32; first 8 md5 hex chars -> uniform [0,1)
 
@@ -306,10 +307,9 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 512,
     if not 0 <= overlap < chunk_tokens:
         raise ValueError(
             f"overlap must be in [0, chunk_tokens), got {overlap}")
-    from pypond_spark.datapipe.textstats import _tokens
 
     step = chunk_tokens - overlap
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n = F.size(toks)
     # ceil((n - overlap) / step), at least 1 chunk even for empty docs
     n_chunks = F.greatest(

@@ -14,7 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypond_spark.datapipe._util import ngram_explode, overlap, spread
+from pypond_spark.datapipe._util import (WS, ngram_explode, overlap, spread,
+                                          word_tokens)
 
 TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
@@ -29,17 +30,11 @@ LANG_MARKERS = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
 
 
-def _tokens(text_col: str) -> Column:
-    """Whitespace tokens, empty strings dropped (split('') yields [''])."""
-    return F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: t != F.lit(""))
-
-
 def _match_tokens(text_col: str) -> Column:
     """Tokens normalized for marker/stopword matching: lowercased with
     leading/trailing punctuation stripped ('The' / 'the,' both match 'the')."""
     return F.transform(
-        _tokens(text_col),
+        word_tokens(text_col),
         lambda t: F.regexp_replace(F.lower(t),
                                    "(^[^a-z0-9]+)|([^a-z0-9]+$)", ""))
 
@@ -49,14 +44,8 @@ def token_count(text_col: str = "text") -> Column:
     return F.regexp_count(F.col(text_col), F.lit(TOKEN_RE))
 
 
-#: Java regex \s — the ASCII class the tokenizer's split uses.  Spelled
-#: out because the codegen'd counting rewrites below must use EXACTLY
-#: the split's whitespace law (Python/\p{Space} variants differ).
-_ASCII_WS = " \\t\\n\\x0B\\f\\r"
-
-
 def _word_count_expr(text_col: str) -> Column:
-    """``size(_tokens(text_col))`` as ONE compiled regex scan: every
+    """``size(word_tokens(text_col))`` as ONE compiled regex scan: every
     maximal non-whitespace run is one token of the split/filter law
     (r15 — the interpreted HOF filter evaluated per token; see
     SCALE.md 'interpreted lambdas are the scan-level cost to fear')."""
@@ -64,7 +53,7 @@ def _word_count_expr(text_col: str) -> Column:
 
 
 def _alpha_word_count_expr(text_col: str) -> Column:
-    """``size(filter(_tokens(c), t -> t rlike '[A-Za-z]'))`` as one
+    """``size(filter(word_tokens(c), t -> t rlike '[A-Za-z]'))`` as one
     compiled scan: a maximal non-whitespace run matches exactly once
     iff it contains a letter (leftmost match anchors at the run start,
     greedy ``\\S*`` consumes the rest of the run)."""
@@ -81,9 +70,9 @@ def _marker_hits_expr(text_col: str, markers: Sequence[str]) -> Column:
     Markers must be plain ``[a-z]+`` words (they are: stopword/marker
     tables) — no regex metachars to escape."""
     alt = "|".join(markers)
-    junk = f"[^{_ASCII_WS}a-zA-Z0-9]*"
-    pat = (f"(?i)(^|(?<=[{_ASCII_WS}]))"
-           f"{junk}(?:{alt}){junk}(?=[{_ASCII_WS}]|$)")
+    junk = f"[^{WS}a-zA-Z0-9]*"
+    pat = (f"(?i)(^|(?<=[{WS}]))"
+           f"{junk}(?:{alt}){junk}(?=[{WS}]|$)")
     return F.regexp_count(F.col(text_col), F.lit(pat))
 
 
@@ -783,7 +772,7 @@ def fingerprint(df: DataFrame, text_col: str = "text",
     ``hash_fn='md5'`` is cross-engine reproducible; ``'xxhash64'`` is the
     ~10x fast path (fingerprint column becomes a LONG rendered as string).
     """
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
     if hash_fn == "md5":
         hasher = lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, shingle_n)))  # noqa: E731
@@ -855,7 +844,7 @@ def _staged_arrays(text_col: str) -> list[Column]:
     inline(array(struct)) Generate so downstream metric projections
     read the MATERIALIZED arrays instead of re-splitting per
     reference (``size`` on a materialized array is O(1))."""
-    return [_tokens(text_col).alias("__toks"),
+    return [word_tokens(text_col).alias("__toks"),
             _match_tokens(text_col).alias("__mtoks"),
             _lines(text_col).alias("__lines")]
 
@@ -901,7 +890,7 @@ def _gopher_metrics(text_col: str, toks: Column, mtoks: Column,
 def _gopher_raw(text_col: str) -> dict[str, Column]:
     """The Gopher metrics with inline (per-reference) splits — the
     single-projection form :func:`gopher_exprs` composes from."""
-    return _gopher_metrics(text_col, _tokens(text_col),
+    return _gopher_metrics(text_col, word_tokens(text_col),
                            _match_tokens(text_col), _lines(text_col))
 
 
@@ -1029,9 +1018,7 @@ def _c4_raw(text_col: str, min_line_words: int) -> dict[str, Column]:
         "n_lines": F.size(lines),
         "short_cnt": F.size(F.filter(
             lines,
-            lambda l: F.size(F.filter(F.split(F.trim(l), r"\s+"),
-                                      lambda t: t != F.lit(""))) <
-            F.lit(min_line_words))),
+            lambda l: F.size(word_tokens(l)) < F.lit(min_line_words))),
         "term_cnt": F.size(F.filter(
             lines, lambda l: F.rtrim(l).rlike("[.!?\"']$"))),
         "has_curly": F.col(text_col).contains("{"),
@@ -1115,9 +1102,7 @@ def c4_stats(df: DataFrame, text_col: str = "text",
         "n_lines": F.size(lines),
         "short_cnt": F.size(F.filter(
             lines,
-            lambda l: F.size(F.filter(F.split(F.trim(l), r"\s+"),
-                                      lambda t: t != F.lit(""))) <
-            F.lit(kw["min_line_words"]))),
+            lambda l: F.size(word_tokens(l)) < F.lit(kw["min_line_words"]))),
         "term_cnt": F.size(F.filter(
             lines, lambda l: F.rtrim(l).rlike("[.!?\"']$"))),
         "has_curly": F.col("__has_curly"),
@@ -1169,7 +1154,7 @@ def _repetition_struct(text_col: str, ns: tuple) -> Column:
     does NOT work here: GeneratorNestedColumnAliasing pushes the field
     extractions back into the generator child, re-duplicating the fold
     (measured 13s); inline's flat output leaves nothing to alias."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     fields = []
     for n in ns:
         count = F.size(toks) - (n - 1)
@@ -1957,7 +1942,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
     if k < 1 or window < 1:
         raise ValueError(f"need k >= 1 and window >= 1, "
                          f"got k={k} window={window}")
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1))),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pypond_spark.datapipe._util import ngram_explode, pair_rows, spread
+from pypond_spark.datapipe._util import WS, pair_rows, spread, word_tokens
 
 SEP = "\x1f"
 
@@ -307,7 +307,7 @@ def _corpus_words(df: DataFrame, text_col: str,
     word vocabulary, the frame every later stage runs on (never the
     corpus)."""
     return (spread(df)
-            .select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+"))
+            .select(F.explode(F.split(F.trim(F.col(text_col)), f"[{WS}]+"))
                     .alias("w0"))
             .where(F.col("w0") != "")
             .select(F.substring("w0", 1, int(max_word_len)).alias("w"))
@@ -497,9 +497,7 @@ def unigram_apply(df: DataFrame, vocab, text_col: str = "text",
     scores = spark.createDataFrame(items, "piece string, s long")
     wp = (spread(df)
           .select(F.col(id_col),
-                  F.posexplode(F.expr(
-                      f"filter(split(trim({text_col}), '\\\\s+'), "
-                      "t -> t != '')")).alias("pos", "w0"))
+                  F.posexplode(word_tokens(text_col)).alias("pos", "w0"))
           .select(F.col(id_col), "pos",
                   F.substring("w0", 1, int(max_word_len)).alias("w")))
     segs = _viterbi_segments(wp.select("w").distinct(), scores, L,
@@ -561,9 +559,7 @@ def wordpiece_apply(df: DataFrame, vocab, text_col: str = "text",
                                 "piece string")
     wp = (spread(df)
           .select(F.col(id_col),
-                  F.posexplode(F.expr(
-                      f"filter(split(trim({text_col}), '\\\\s+'), "
-                      "t -> t != '')")).alias("pos", "w0"))
+                  F.posexplode(word_tokens(text_col)).alias("pos", "w0"))
           .select(F.col(id_col), "pos",
                   F.substring("w0", 1, int(max_word_len)).alias("w")))
     words = wp.select("w").distinct()

@@ -115,11 +115,6 @@ def _parse_index(idx_str: str) -> tuple[str, int, int]:
     return "year", ms_from_dt(begin), ms_from_dt(end) - 1000
 
 
-def index_range(idx_str: str) -> tuple[datetime.datetime, datetime.datetime]:
-    _, b, e = parse_index(idx_str)
-    return dt_from_ms(b), dt_from_ms(e)
-
-
 def get_daily_index_string(date: datetime.datetime) -> str:
     date = sanitize_dt(date)
     return f"{date.year}-{date:%m}-{date:%d}"
@@ -162,14 +157,6 @@ def calendar_index_col(kind: str, time_col: Column | str, utc: bool = True,
         col = F.from_utc_timestamp(col, tz)
     fmt = {"daily": "yyyy-MM-dd", "monthly": "yyyy-MM", "yearly": "yyyy"}[kind]
     return F.date_format(col, fmt)
-
-
-def index_col(win: str, time_col: Column | str, utc: bool = True,
-              tz: str = "UTC") -> Column:
-    """Window spec ('5m' | 'daily' | 'monthly' | 'yearly') -> index string column."""
-    if win in CALENDAR_KINDS:
-        return calendar_index_col(win, time_col, utc=utc, tz=tz)
-    return fixed_index_col(win, time_col)
 
 
 def index_begin_col(index_col_: Column | str) -> Column:

@@ -243,8 +243,9 @@ def theil_sen(df: DataFrame, field: str = "value",
         raise ValueError(f"bucket needs a fixed window spec, got {bucket!r}")
     keys = list(partition_by)
     col = F.col(field).cast("double")
-    valid = col.isNotNull() & ~F.isnan(col)
     bpos = F.floor(F.unix_millis(F.col(time_col)) / F.lit(b_ms))
+    # a NULL-time row has no bucket position: drop it like a NULL value
+    valid = col.isNotNull() & ~F.isnan(col) & bpos.isNotNull()
     if keys:
         return _theil_sen_grouped(df, keys, valid, bpos, col)
     # ONE bucket aggregate whose keys-exchange is REUSED three ways

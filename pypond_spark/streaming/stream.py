@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..datapipe._util import py_word_tokens, word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
 
@@ -2090,42 +2091,6 @@ def stream_cusum(
 # streaming near-duplicate (SimHash) ingestion gate
 # ---------------------------------------------------------------------------
 
-def _simhash64_py(text: str, max_tokens: int = 1 << 20) -> tuple[int, int] | None:
-    """Row-wise SimHash identical to the batch
-    ``dedup.simhash64(hash_fn='md5', as_halves=True)`` semantics: ASCII
-    ``\\s+`` word split (Java's ``\\s`` class), 2^20-token cap, per
-    token md5's first 16 hex chars as an unsigned 64-bit hash, ±1 per
-    bit, sign of the sum.  Returns unsigned 32-bit ``(sim_hi,
-    sim_lo)`` — the cross-engine-safe halves."""
-    import hashlib
-    import re as _re
-
-    # NB: plain str.strip() would remove *Unicode* whitespace
-    # (U+00A0, U+2028, ...) that Java's \s / Spark trim does not —
-    # strip only the ASCII class the split uses so edge tokens match
-    # the batch twin bit-for-bit.
-    toks = [t for t in _re.split("[ \t\n\x0b\f\r]+",
-                                 text.strip(" \t\n\x0b\f\r"))
-            if t][:max_tokens]
-    if not toks:
-        # the batch simhash64 explode drops token-less docs; mirror it
-        return None
-    cnt = [0] * 64
-    for t in toks:
-        hx = hashlib.md5(t.encode("utf-8")).hexdigest()
-        h = (int(hx[:8], 16) << 32) | int(hx[8:16], 16)
-        for b in range(64):
-            cnt[b] += 1 if (h >> b) & 1 else -1
-    hi = lo = 0
-    for b in range(64):
-        if cnt[b] > 0:
-            if b >= 32:
-                hi |= 1 << (b - 32)
-            else:
-                lo |= 1 << b
-    return hi, lo
-
-
 def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id",
                     carry_cols: Sequence[str] = ()) -> DataFrame:
@@ -2145,9 +2110,9 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
                                  T.StructField("sim_lo", T.LongType())])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized twin of _simhash64_py (r15, guide §4.2): tokenize
-        # per doc with the same Java-trim/ASCII-\s law, md5 only the
-        # batch-chunk's UNIQUE tokens (C md5; corpus words repeat, so
+        # Vectorized row-wise SimHash (r15, guide §4.2): tokenize per
+        # doc with the shared word-token law (py_word_tokens), md5 only
+        # the batch-chunk's UNIQUE tokens (C md5; corpus words repeat, so
         # this is ~10x fewer digests), unpack each 64-bit hash into a
         # ±1 bit row once per unique token, then gather + segment-sum
         # per doc (np.add.reduceat over doc offsets) and take signs.
@@ -2155,21 +2120,14 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
         # ±1 fold, same >0 sign rule, token-less docs dropped.  Chunked
         # at 2048 docs to bound the (tokens x 64) gather matrix.
         import hashlib
-        import re as _re
-        ws = _re.compile(r"[ \t\n\x0b\f\r]+")
         md5 = hashlib.md5
         cap = 1 << 20
         shifts = np.arange(64, dtype=np.uint64)
         pow_lo = (1 << np.arange(32, dtype=np.uint64)).astype(np.int64)
 
         def chunk_rows(pdf: pd.DataFrame):
-            tok_lists = []
-            for txt in pdf[text_col]:
-                if not isinstance(txt, str):
-                    txt = ""
-                tok_lists.append([t for t in
-                                  ws.split(txt.strip(" \t\n\x0b\f\r"))
-                                  if t][:cap])
+            tok_lists = [py_word_tokens(txt)[:cap]
+                         for txt in pdf[text_col]]
             counts = np.array([len(t) for t in tok_lists])
             keep = counts > 0  # token-less docs: batch parity (dropped)
             if not keep.any():
@@ -2184,13 +2142,11 @@ def simhash_rowwise(sdf: DataFrame, text_col: str = "text",
             # ±1 per bit, one row per UNIQUE token, gathered per token
             ubits = (((hs[:, None] >> shifts[None, :]) & 1)
                      .astype(np.int32) * 2 - 1)
-            # offsets of token-less TRAILING docs equal len(flat) which
-            # reduceat rejects — clamp them (their garbage segment is
-            # dropped by [keep] anyway)
-            offs = np.minimum(
-                np.concatenate([[0], np.cumsum(counts)[:-1]]),
-                len(flat) - 1)
-            sums = np.add.reduceat(ubits[inv], offs)[keep]
+            # segment starts of the KEPT docs only: each is < len(flat)
+            # and strictly increasing, and a kept doc's segment runs to
+            # the next kept start (token-less docs between add nothing)
+            starts = np.concatenate([[0], np.cumsum(counts)[:-1]])[keep]
+            sums = np.add.reduceat(ubits[inv], starts)
             pos = (sums > 0)
             lo = pos[:, :32] @ pow_lo
             hi = pos[:, 32:] @ pow_lo
@@ -2282,14 +2238,6 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
                      if ms is not None else GroupStateTimeout.NoTimeout))
 
 
-#: Java ``String.trim`` strips every char <= U+0020 from both ends;
-#: Java regex ``\s`` is the ASCII class [ \t\n\x0B\f\r].  Both must be
-#: replayed exactly (NOT Python ``str.split``/``\s``, whose whitespace
-#: includes Unicode spaces) so the Arrow engine's shingles are
-#: byte-identical to the JVM tokenizer's.
-_JAVA_TRIM_CHARS = "".join(chr(c) for c in range(0x21))
-
-
 def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
                          num_hashes: int, band_size: int,
                          shingle_n: int,
@@ -2300,10 +2248,11 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
     boundaries of the whole batch.  Emits the IDENTICAL
     ``(id, *carry, band)`` rows as the interpreted HOF fold it
     replaces: h1/h2 are the first/second 4 md5 bytes big-endian
-    (== ``conv(md5_hex[0:8], 16, 10)``), the Java trim/ASCII-``\\s``
-    token law is replayed exactly (see ``_JAVA_TRIM_CHARS``), an empty
-    or NULL text yields the single empty-string shingle the JVM
-    ``concat_ws`` produced, and the band digest is the same
+    (== ``conv(md5_hex[0:8], 16, 10)``), the tokens are
+    :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python
+    form of the batch ``word_tokens`` law), a NULL, empty or token-less
+    text yields the single empty-string shingle the batch
+    ``word_shingles`` emits, and the band digest is the same
     ``md5("b|m0|..|m3")`` hex string."""
     n_bands = num_hashes // band_size
     carry = list(carry_cols)
@@ -2315,8 +2264,6 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import re
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
         md5 = hashlib.md5
         ks = np.arange(num_hashes, dtype=np.uint64)
 
@@ -2326,10 +2273,7 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
                 continue
             h1l, h2l, offs = [], [], [0]
             for text in pdf[text_col]:
-                if not isinstance(text, str):
-                    text = ""  # NULL text == empty: one "" shingle
-                toks = [t for t in
-                        ws.split(text.strip(_JAVA_TRIM_CHARS)) if t]
+                toks = py_word_tokens(text)
                 n = max(len(toks) - (shingle_n - 1), 1)
                 for i in range(n):
                     d = md5(" ".join(
@@ -2368,13 +2312,11 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     """Stateless per-row MinHash band keys for streaming frames — the
     batch ``minhash_signature`` is a shingle explode + per-doc min
     aggregate (a streaming agg that could not feed append-mode state);
-    this computes the IDENTICAL md5-derived signatures row-locally with
-    higher-order-function folds, entirely JVM-side (no Python at all —
-    contrast :func:`simhash_rowwise`, whose 64-bit counting genuinely
-    needs an Arrow batch).  Same shingling (``greatest(n_toks-2, 1)``
-    slices), same Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32``
-    derivation, same band digests — a batch SQL twin over
-    ``word_shingles`` replays it exactly.
+    this computes the IDENTICAL signatures row-locally.  Same shingling
+    (``greatest(n_toks-2, 1)`` slices of the ``word_tokens`` law), same
+    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` derivation, same band
+    digests — a batch SQL twin over ``word_shingles`` replays it
+    exactly.
 
     Output: ``(id_col, band)`` — one row per band per document.
 
@@ -2383,9 +2325,9 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     shingles, numpy ``minimum.reduceat`` for the per-doc folds;
     measured 3.3x the interpreted-HOF throughput that previously
     dominated the drain, guide §4.2 "heavy lifting in native code"),
-    byte-identical by the Java-``trim``/ASCII-``\\s`` tokenizer replay
-    below and pinned by the cross-batch equality tests against the
-    batch ``lsh_band_buckets``.  The xxhash64 fast path stays on the
+    byte-identical through the shared ``py_word_tokens`` replay and
+    pinned by the equality tests against the batch
+    ``lsh_band_buckets``.  The xxhash64 fast path stays on the
     JVM HOF fold — its per-shingle cost is a seeded integer hash, not
     an md5+hex parse, and reproducing Spark's multi-column xxhash64
     seed chain outside the JVM would be a second implementation of the
@@ -2396,8 +2338,9 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     if hash_fn == "md5":
         return _minhash_bands_arrow(sdf, text_col, id_col, num_hashes,
                                     band_size, shingle_n, carry_cols)
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: t != F.lit(""))
+    if hash_fn != "xxhash64":
+        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+    toks = word_tokens(text_col)
     count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
     sh = F.transform(
         F.sequence(F.lit(1), count),
@@ -2409,24 +2352,14 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     # times interpreted; measured 7.6x slower at sf0.1
     init = ", ".join(f"'m{k}', CAST({two32} AS BIGINT)"
                      for k in range(num_hashes))
-    if hash_fn == "md5":
-        def _sh_hash(s):
-            return F.struct(
-                F.conv(F.md5(s).substr(1, 8), 16, 10).cast("long")
-                .alias("h1"),
-                F.conv(F.md5(s).substr(9, 8), 16, 10).cast("long")
-                .alias("h2"))
-    elif hash_fn == "xxhash64":
-        # the production fast path (same split as the batch
-        # minhash_signature): no hex parse, Spark-only values
-        def _sh_hash(s):
-            d = F.xxhash64(s)
-            return F.struct(
-                F.pmod(d, F.lit(two32)).alias("h1"),
-                F.pmod(F.shiftrightunsigned(d, 32), F.lit(two32))
-                .alias("h2"))
-    else:
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+    # the production fast path (same split as the batch
+    # minhash_signature): no hex parse, Spark-only values
+    def _sh_hash(s):
+        d = F.xxhash64(s)
+        return F.struct(
+            F.pmod(d, F.lit(two32)).alias("h1"),
+            F.pmod(F.shiftrightunsigned(d, 32), F.lit(two32))
+            .alias("h2"))
     carry = [F.col(c) for c in carry_cols]
     hs = F.transform(sh, _sh_hash)
 
@@ -2444,21 +2377,12 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
         *[F.col(f"__mh.m{k}").alias(f"m{k}")
           for k in range(num_hashes)])
     n_bands = num_hashes // band_size
-    if hash_fn == "md5":
-        bands = F.array(*[
-            F.md5(F.concat_ws("|", F.lit(str(b)),
-                              *[F.col(f"m{b * band_size + i}")
-                                .cast("string")
-                                for i in range(band_size)]))
-            for b in range(n_bands)
-        ])
-    else:
-        bands = F.array(*[
-            F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
-                                   for i in range(band_size)])
-            .cast("string")
-            for b in range(n_bands)
-        ])
+    bands = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
+                               for i in range(band_size)])
+        .cast("string")
+        for b in range(n_bands)
+    ])
     return sig.select(F.col(id_col), *[F.col(c) for c in carry_cols],
                       F.explode(bands).alias("band"))
 

@@ -92,17 +92,6 @@ def is_valid_value(val: Any) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def ms_col(time_col: Column | str) -> Column:
-    """timestamp column -> epoch-ms long column."""
-    col = F.col(time_col) if isinstance(time_col, str) else time_col
-    return F.unix_millis(col)
-
-
-def ts_from_ms_col(ms: Column) -> Column:
-    """epoch-ms long column -> timestamp column."""
-    return F.timestamp_millis(ms.cast(T.LongType()))
-
-
 def is_valid_col(col: Column | str, dtype: T.DataType | None = None) -> Column:
     """Column dual of ``is_valid_value``: NOT (NULL | NaN | '').
 

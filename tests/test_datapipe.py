@@ -4887,9 +4887,10 @@ def test_marker_count_regex_matches_token_filter_law(spark):
     normalizer, so NOT a hit), digits glued to markers, non-ASCII junk
     and NBSP (not Java whitespace), uppercase, empty/whitespace docs."""
     from pyspark.sql import functions as F
+    from pypond_spark.datapipe._util import word_tokens
     from pypond_spark.datapipe.textstats import (
         GOPHER_STOPWORDS, _alpha_word_count_expr, _marker_hits_expr,
-        _match_tokens, _tokens, _word_count_expr)
+        _match_tokens, _word_count_expr)
 
     texts = [
         "The the, THE. tHe; ((the)) .-the-. the5 5the x-the the-the",
@@ -4901,7 +4902,7 @@ def test_marker_count_regex_matches_token_filter_law(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id long, text string")
-    toks, mtoks = _tokens("text"), _match_tokens("text")
+    toks, mtoks = word_tokens("text"), _match_tokens("text")
     old = df.select(
         "doc_id",
         F.size(toks).alias("nw"),

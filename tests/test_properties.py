@@ -6,7 +6,7 @@ properties use a handful of drawn fixtures per run to stay quick.
 
 import datetime
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pypond_spark import Index, TimeRange
@@ -203,6 +203,74 @@ def test_chunk_dedup_identity_on_unique_corpus(spark):
     out = {r["doc_id"]: r["text_dedup"]
            for r in dedup.chunk_dedup(df, chunk_words=7).collect()}
     assert out == dict(rows)
+
+
+# --- the word-token law across engines: JVM expression vs Python replay,
+# and every stream gate's Arrow signatures vs their batch twins
+
+#: every C0 control and space, the Unicode spaces Python's ``str.split``
+#: would eat (U+0085, U+00A0, U+2028), a case-fold trap (U+212A), letters
+TOKEN_ALPHABET = ([chr(c) for c in range(0x21)]
+                  + ["\x85", "\xa0", "\u2028", "\u212a"] + list("abcdefgh"))
+token_texts = st.builds(
+    lambda body, tail: body + tail,
+    st.lists(st.none() | st.text(alphabet=st.sampled_from(TOKEN_ALPHABET),
+                                 max_size=24),
+             min_size=1, max_size=8),
+    # token-less docs at the end of the (single) Arrow chunk
+    st.lists(st.sampled_from([None, "", " ", "\t\n\x0b\x0c\r "]),
+             max_size=3))
+
+
+@given(texts=token_texts)
+@example(texts=["\x0eabc def ghi", "abc def ghi", "abc def ghi\x1c",
+                "\x00abc def", None, "   "])
+@settings(max_examples=8, deadline=None)
+def test_word_token_law_cross_engine(spark, texts):
+    """JVM ``word_tokens`` == ``py_word_tokens`` per row, the Arrow
+    MinHash bands == the batch ``lsh_band_buckets`` bands, and the Arrow
+    SimHash == the batch ``simhash64`` halves, on adversarial text.  All
+    five outputs come from ONE collect of a unioned plan; the frame is
+    one partition, so the Arrow stages see the docs as one chunk."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from pypond_spark.datapipe._util import py_word_tokens, word_tokens
+    from pypond_spark.datapipe.dedup import lsh_band_buckets, simhash64
+    from pypond_spark.streaming.stream import (minhash_bands_rowwise,
+                                               simhash_rowwise)
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string").coalesce(1)
+
+    def tagged(tag, frame, value):
+        return frame.select(F.lit(tag).alias("tag"), "doc_id",
+                            value.alias("v"))
+
+    halves = F.concat_ws(",", "sim_hi", "sim_lo")
+    rows = (tagged("tok", df, F.to_json(word_tokens("text")))
+            .unionByName(tagged("mh_batch", lsh_band_buckets(df),
+                                F.col("band")))
+            .unionByName(tagged("mh_arrow", minhash_bands_rowwise(df),
+                                F.col("band")))
+            .unionByName(tagged("sh_batch", simhash64(
+                df, hash_fn="md5", as_halves=True), halves))
+            .unionByName(tagged("sh_arrow", simhash_rowwise(df), halves))
+            .collect())
+    got = {}
+    for r in rows:
+        got.setdefault(r["tag"], {}).setdefault(r["doc_id"], []) \
+            .append(r["v"])
+    for i, t in enumerate(texts):
+        (jvm,) = got["tok"][i]
+        assert (jvm is None) == (t is None)
+        assert (json.loads(jvm) if jvm else []) == py_word_tokens(t), i
+
+    def per_doc(tag):
+        return {i: sorted(v) for i, v in got.get(tag, {}).items()}
+
+    assert per_doc("mh_arrow") == per_doc("mh_batch")
+    assert per_doc("sh_arrow") == per_doc("sh_batch")
 
 
 # --- closed-form identities the round-4 operators rely on (pure python,

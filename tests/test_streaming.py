@@ -1012,6 +1012,42 @@ def test_stream_cusum_cross_batch(spark, tmp_path):
     assert rows == [("a", 2_000, "up", 6.0), ("b", 1_000, "down", 6.0)]
 
 
+def _simhash64_py(text, max_tokens=1 << 20):
+    """Row-wise SimHash oracle for the batch
+    ``dedup.simhash64(hash_fn='md5', as_halves=True)`` semantics: ASCII
+    ``\\s+`` word split (Java's ``\\s`` class), 2^20-token cap, per
+    token md5's first 16 hex chars as an unsigned 64-bit hash, ±1 per
+    bit, sign of the sum.  Returns unsigned 32-bit ``(sim_hi,
+    sim_lo)`` — the cross-engine-safe halves."""
+    import hashlib
+    import re as _re
+
+    # NB: plain str.strip() would remove *Unicode* whitespace
+    # (U+00A0, U+2028, ...) that Java's \s (the batch split) does not —
+    # strip only the ASCII class the split uses so edge tokens match
+    # the batch twin bit-for-bit.
+    toks = [t for t in _re.split("[ \t\n\x0b\f\r]+",
+                                 text.strip(" \t\n\x0b\f\r"))
+            if t][:max_tokens]
+    if not toks:
+        # the batch simhash64 explode drops token-less docs; mirror it
+        return None
+    cnt = [0] * 64
+    for t in toks:
+        hx = hashlib.md5(t.encode("utf-8")).hexdigest()
+        h = (int(hx[:8], 16) << 32) | int(hx[8:16], 16)
+        for b in range(64):
+            cnt[b] += 1 if (h >> b) & 1 else -1
+    hi = lo = 0
+    for b in range(64):
+        if cnt[b] > 0:
+            if b >= 32:
+                hi |= 1 << (b - 32)
+            else:
+                lo |= 1 << b
+    return hi, lo
+
+
 def test_stream_simhash_dedup_cross_batch(spark, tmp_path):
     """Near-dup suppression ACROSS micro-batches: batch 1 admits the
     original (claims all 4 band keys); batch 2's perturbed near-clone
@@ -1020,8 +1056,7 @@ def test_stream_simhash_dedup_cross_batch(spark, tmp_path):
     all four.  Band-claim state survives the checkpoint."""
     import json as _json
     from pyspark.sql import types as T2
-    from pypond_spark.streaming.stream import (_simhash64_py,
-                                               stream_simhash_dedup)
+    from pypond_spark.streaming.stream import stream_simhash_dedup
     schema = T2.StructType([T2.StructField("doc_id", T2.LongType()),
                             T2.StructField("text", T2.StringType())])
     base = ("spark window batch order data column agg join small line "
@@ -1138,7 +1173,6 @@ def test_simhash_py_unicode_whitespace_parity(spark):
     strip() would tokenize edge tokens differently and the streaming
     gate would silently diverge from its batch twin."""
     from pypond_spark.datapipe.dedup import simhash64
-    from pypond_spark.streaming.stream import _simhash64_py
     texts = [
         "\u00a0leading nbsp glues to the first token",
         "trailing line-sep glues to the last token\u2028",
@@ -1152,6 +1186,45 @@ def test_simhash_py_unicode_whitespace_parity(spark):
              simhash64(df, hash_fn="md5", as_halves=True).collect()}
     for i, t in enumerate(texts):
         assert _simhash64_py(t) == batch[i], f"doc {i} diverged"
+
+
+def test_simhash_rowwise_trailing_tokenless_doc(spark):
+    """A token-less doc at the END of an Arrow chunk must not shorten
+    the previous doc's token segment: over one partition (one chunk),
+    simhash_rowwise equals the batch simhash64 and the oracle."""
+    from pypond_spark.datapipe.dedup import simhash64
+    from pypond_spark.streaming.stream import simhash_rowwise
+    texts = ["hello world foo bar baz", "   "]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string").coalesce(1)
+    batch = {r["doc_id"]: (r["sim_hi"], r["sim_lo"]) for r in
+             simhash64(df, hash_fn="md5", as_halves=True).collect()}
+    rowwise = {r["doc_id"]: (r["sim_hi"], r["sim_lo"])
+               for r in simhash_rowwise(df).collect()}
+    assert rowwise == batch == {0: _simhash64_py(texts[0])}
+
+
+def test_minhash_rowwise_edge_control_chars(spark):
+    """C0 controls other than the six whitespace chars are token chars
+    in the batch law, at the edges too, so the Arrow replay must keep
+    them: a doc with a leading U+000E and the same doc without it are
+    not near-duplicates on either engine."""
+    from pypond_spark.datapipe.dedup import lsh_band_buckets
+    from pypond_spark.streaming.stream import minhash_bands_rowwise
+    texts = ["\x0eabc def ghi", "abc def ghi", "abc def ghi\x00",
+             "\x1cabc def"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+
+    def bands(frame):
+        out = {}
+        for r in frame.collect():
+            out.setdefault(r["doc_id"], set()).add(r["band"])
+        return out
+
+    batch = bands(lsh_band_buckets(df))
+    assert bands(minhash_bands_rowwise(df)) == batch
+    assert not batch[0] & batch[1] and not batch[1] & batch[2]
 
 
 def test_stream_minhash_dedup_cross_batch(spark, tmp_path):

@@ -555,6 +555,26 @@ def test_theil_sen_single_bucket_drops(spark):
     assert {r["k"] for r in out} == {"a"}  # no pair for 'b'
 
 
+def test_theil_sen_null_time_rows_dropped(spark):
+    """A NULL-time row has no bucket: it drops like a NULL value on the
+    keyed and unkeyed paths alike, and both fit the remaining line."""
+    from pypond_spark.operators.correlate import theil_sen
+    H = 3600_000
+    rows = ([(k, i * H, 1.0 + 2.0 * i) for k in "ab" for i in range(4)]
+            + [("a", None, 500.0), ("b", None, -500.0)])
+    df = spark.createDataFrame(rows, "k string, ms long, value double") \
+        .select("k", F.timestamp_millis("ms").alias("time"), "value")
+    keyed = theil_sen(df, "value", bucket="1h", partition_by=["k"]) \
+        .collect()
+    assert {r["k"] for r in keyed} == {"a", "b"}
+    whole = theil_sen(df.where(F.col("k") == "a"), "value",
+                      bucket="1h").collect()
+    for r in keyed + whole:
+        assert r["ts_slope"] == pytest.approx(2.0, abs=1e-9)
+        assert r["ts_intercept"] == pytest.approx(1.0, abs=1e-9)
+        assert (r["n_pairs"], r["n_buckets"]) == (6, 4)
+
+
 def test_rolling_correlation_exact_line(spark):
     from pypond_spark.operators.correlate import rolling_correlation
     # view = 2*click + 1 in every hour -> r = 1, beta = 2 at every pos
