@@ -16,8 +16,6 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,6 +27,10 @@ from pypond_spark.datapipe._util import (ngram_explode, overlap, spread,
 # simhash token cap per document: bounds skew and guarantees the lane-packed
 # bit counters in simhash64 cannot overflow a LONG (see comment there)
 _SIMHASH_MAX_TOKENS = 1 << 20
+
+# dup_clusters labels components on the driver (BFS) at or below this many
+# directed edges, and by distributed label propagation above it
+DRIVER_CC_MAX_EDGES = 500_000
 
 
 def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
@@ -91,7 +93,7 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_hashes: int = 8,
                         band_size: int = 4, shingle_n: int = 3,
-                        cache: bool = True, hash_fn: str = "md5",
+                        hash_fn: str = "md5",
                         max_bucket: int | None = None) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding.
 
@@ -116,19 +118,16 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     recall concession, which exact-digest dedup upstream (identical
     boilerplate never reaches LSH) keeps small in practice.
 
-    ``cache=True`` persists the (id, band) table so the self-join's two sides
-    share one shingle+signature computation instead of recomputing the whole
-    upstream pipeline per side. At warehouse scale, write the signature table
-    to storage once and join against that instead.
+    The (id, band) table is materialized once, so the self-join's two
+    sides share one shingle+signature computation. At warehouse scale,
+    write the signature table to storage once and join against that.
     """
+    # localCheckpoint (not persist): the blocks are released when the
+    # DataFrame is garbage-collected instead of pinning storage memory for
+    # the session lifetime. Spark's exchange reuse does not replace it: an
+    # uncached self-join recomputed the signatures on both sides.
     buckets = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
-                               shingle_n, hash_fn)
-    if cache:
-        # localCheckpoint (not persist): materializes once so the self-join's
-        # two sides share one signature computation, and the blocks are
-        # released when the DataFrame is garbage-collected instead of pinning
-        # storage memory for the session lifetime
-        buckets = buckets.localCheckpoint()
+                               shingle_n, hash_fn).localCheckpoint()
     if max_bucket is not None:
         if max_bucket < 2:
             raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
@@ -303,10 +302,13 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # distance from a component's min node) and fails max_iter <= R.
     # `on_nonconverged='ignore'` keeps the distributed path — its
     # documented partial labels ARE the r-hop propagation state.
-    cap = int(os.environ.get("PYPOND_DRIVER_CC_MAX_EDGES", "500000"))
-    if on_nonconverged == "raise" and edges.count() <= cap:
+    # One bounded collect both counts and fetches the edges; past the cap
+    # its rows are dropped and the distributed path runs.
+    small = (edges.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+             if on_nonconverged == "raise" else None)
+    if small is not None and len(small) <= DRIVER_CC_MAX_EDGES:
         adj: dict = {}
-        for r in edges.collect():
+        for r in small:
             adj.setdefault(r["src"], []).append(r["dst"])
         seen: set = set()
         labels_out = []

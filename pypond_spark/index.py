@@ -21,7 +21,6 @@ import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .util import dt_from_ms, ms_from_dt, sanitize_dt
 
@@ -134,29 +133,17 @@ def get_yearly_index_string(date: datetime.datetime) -> str:
 # ---------------------------------------------------------------------------
 
 
-def fixed_index_col(win: str, time_col: Column | str) -> Column:
-    """``'5m-<floor(epoch_ms/300000)>'`` as a string column."""
+def fixed_index_cols(win: str, pos: Column) -> list[Column]:
+    """The fixed-window Index law at bucket position ``pos`` (a long
+    column, ``floor(epoch_ms / dur)``): ``index = "<win>-<pos>"``,
+    ``begin = pos * dur``, ``end = (pos + 1) * dur``, aliased ``index``,
+    ``begin`` and ``end``."""
     dur = window_duration_ms(win)
     if dur is None:
         raise ValueError(f"not a fixed window spec: {win!r}")
-    col = F.col(time_col) if isinstance(time_col, str) else time_col
-    pos = F.floor(F.unix_millis(col) / F.lit(dur)).cast(T.LongType())
-    return F.concat(F.lit(win + "-"), pos.cast(T.StringType()))
-
-
-def calendar_index_col(kind: str, time_col: Column | str, utc: bool = True,
-                       tz: str = "UTC") -> Column:
-    """daily -> 'YYYY-MM-DD', monthly -> 'YYYY-MM', yearly -> 'YYYY'.
-
-    ``utc=False`` renders the bucket in timezone ``tz`` (reference
-    ``series.py:1278-1331`` localtime rollups); session TZ stays pinned UTC and
-    we shift explicitly, so the same plan is correct on any cluster.
-    """
-    col = F.col(time_col) if isinstance(time_col, str) else time_col
-    if not utc:
-        col = F.from_utc_timestamp(col, tz)
-    fmt = {"daily": "yyyy-MM-dd", "monthly": "yyyy-MM", "yearly": "yyyy"}[kind]
-    return F.date_format(col, fmt)
+    return [F.concat(F.lit(win + "-"), pos.cast("string")).alias("index"),
+            F.timestamp_millis(pos * dur).alias("begin"),
+            F.timestamp_millis((pos + 1) * dur).alias("end")]
 
 
 def index_begin_col(index_col_: Column | str) -> Column:

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from functools import reduce as _reduce
 
 from ..functions import compile_agg_spec_split
-from ..index import CALENDAR_KINDS, window_duration_ms
+from ..index import CALENDAR_KINDS, fixed_index_cols, window_duration_ms
 
 
 def _group_cols(group_by) -> list[str]:
@@ -129,11 +129,8 @@ def windowed_aggregate(
     pos = F.floor(F.unix_millis(F.col(time_col)) / F.lit(dur)).cast("long")
     out = _grouped_agg(df, [pos.alias("__pos"), *gexprs],
                        ["__pos"] + gnames, spec, time_col)
-    return out.select(
-        F.concat(F.lit(window + "-"), F.col("__pos").cast("string")).alias("index"),
-        F.timestamp_millis(F.col("__pos") * dur).alias("begin"),
-        F.timestamp_millis((F.col("__pos") + 1) * dur).alias("end"),
-        *gnames, *[r for r in spec])
+    return out.select(*fixed_index_cols(window, F.col("__pos")),
+                      *gnames, *[r for r in spec])
 
 
 def densify_rollup(rollup: DataFrame, window: str,
@@ -176,12 +173,8 @@ def densify_rollup(rollup: DataFrame, window: str,
     joined = scaffold.join(flat, [*groups, "__pos"], "left")
     vals = [F.coalesce(F.col(c), F.lit(fill[c])).alias(c)
             if fill and c in fill else F.col(c) for c in measures]
-    return joined.select(
-        F.concat(F.lit(window + "-"),
-                 F.col("__pos").cast("string")).alias("index"),
-        F.timestamp_millis(F.col("__pos") * dur).alias("begin"),
-        F.timestamp_millis((F.col("__pos") + 1) * dur).alias("end"),
-        *groups, *vals)
+    return joined.select(*fixed_index_cols(window, F.col("__pos")),
+                         *groups, *vals)
 
 
 def sliding_window_aggregate(
@@ -243,11 +236,8 @@ def collect_by_fixed_window(df: DataFrame, window: str,
     if dur is None:
         raise ValueError(f"bad window spec {window!r}")
     pos = F.floor(F.unix_millis(F.col(time_col)) / F.lit(dur)).cast("long")
-    return (df
-            .withColumn("index",
-                        F.concat(F.lit(window + "-"), pos.cast("string")))
-            .withColumn("begin", F.timestamp_millis(pos * dur))
-            .withColumn("end", F.timestamp_millis((pos + 1) * dur)))
+    return df.withColumns(dict(zip(("index", "begin", "end"),
+                                   fixed_index_cols(window, pos))))
 
 
 def pivot_rollup(df: DataFrame, window: str, field: str,
@@ -288,9 +278,5 @@ def pivot_rollup(df: DataFrame, window: str, field: str,
     aggs = [cell(v) for v in values]
     return (df.groupBy(pos.alias("__pos"))
             .agg(*aggs)
-            .select(F.concat(F.lit(window + "-"),
-                             F.col("__pos").cast("string")).alias("index"),
-                    F.timestamp_millis(F.col("__pos") * dur).alias("begin"),
-                    F.timestamp_millis((F.col("__pos") + 1) * dur)
-                    .alias("end"),
+            .select(*fixed_index_cols(window, F.col("__pos")),
                     *[F.col(str(v)) for v in values]))

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import index_begin_col, index_end_col, window_duration_ms
+from ..index import (fixed_index_cols, index_begin_col, index_end_col,
+                     window_duration_ms)
 
 
 def _payload(df: DataFrame) -> list[str]:
@@ -47,10 +48,7 @@ def events_to_indexed_events(df: DataFrame, duration: str) -> DataFrame:
         raise ValueError(f"bad duration {duration!r}")
     # begin/end by bucket arithmetic (pos*dur), not a string round-trip
     pos = F.floor(F.unix_millis(F.col("time")) / F.lit(dur)).cast("long")
-    return df.select(
-        F.concat(F.lit(duration + "-"), pos.cast("string")).alias("index"),
-        F.timestamp_millis(pos * dur).alias("begin"),
-        F.timestamp_millis((pos + 1) * dur).alias("end"), *_payload(df))
+    return df.select(*fixed_index_cols(duration, pos), *_payload(df))
 
 
 def timerange_events_to_events(df: DataFrame, alignment: str = "center") -> DataFrame:

@@ -16,6 +16,17 @@ Mapping of the reference's push-based stream mode:
   carried (last_ts, last_value) state per series key, so state survives
   micro-batch boundaries exactly like the reference's long-lived processor
   objects.
+
+The fifteen keyed processors (rate, gaps, sessions, throttle, transitions,
+cumulative, align, fill, ewma, holt, holt_winters, rolling, zscore, cusum,
+xchart) share one shell, ``_keyed_state``. It owns the constant key used
+when no series key is given (and its drop), the key-prefixed output schema,
+the state schema, and the ``append`` / ``NoTimeout`` call. Each processor
+supplies only a step function, which sees the WHOLE group (every Arrow
+chunk), stable-sorted by time and optional tiebreak, and never an empty
+group. The dedup gates (first-seen, SimHash and MinHash) keep their own
+calls: they key on a digest or band, not a series, and arm event-time
+timeouts when given a TTL.
 """
 
 from __future__ import annotations
@@ -129,6 +140,39 @@ def _whole_group(pdfs: Iterator[pd.DataFrame], time_col: str,
     return pdf.sort_values([time_col, *tiebreak], kind="mergesort")
 
 
+def _keyed_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
+                 out_fields: list, state_fields: list, make_step,
+                 tiebreak: str | None = None) -> DataFrame:
+    """The shell of every keyed, timeout-free state operator below.
+
+    It owns the constant ``__k`` key of :func:`_keyed` (and its drop), the
+    output schema (key fields + ``out_fields``), the state schema, the
+    ``append`` / ``NoTimeout`` ``applyInPandasWithState`` call, and the
+    group prologue. ``make_step(keys)`` gets the resolved grouping keys
+    and returns ``step(key, pdf, state)``, a generator of output frames.
+    The step sees the WHOLE group (:func:`_whole_group`), stable-sorted by
+    time then ``tiebreak``, and never an empty one: under ``NoTimeout``
+    Spark only calls for groups that have rows.
+    """
+    sdf, keys, dummy = _keyed(sdf, list(partition_by))
+    step = make_step(keys)
+    tb = (tiebreak,) if tiebreak else ()
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        pdf = _whole_group(pdfs, time_col, tb)
+        if len(pdf):
+            yield from step(key, pdf, state)
+
+    out = sdf.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=T.StructType(
+            [sdf.schema[k] for k in keys] + out_fields),
+        stateStructType=T.StructType(state_fields),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout)
+    return out.drop("__k") if dummy else out
+
+
 def _t_ms(pdf: pd.DataFrame, time_col: str) -> "np.ndarray":
     """Event times of a (sorted) group chunk as int64 epoch-ms — the
     vectorized twin of the old per-row ``row[time_col].value // 10**6``
@@ -152,7 +196,7 @@ def _key_frame(key, keys: list[str], n: int, cols: dict) -> pd.DataFrame:
 
 def _rate_state_fn(fields: list[str], keys: list[str], time_col: str,
                    allow_negative: bool, counter_wrap: float | None = None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized: consecutive-pair rates via shifted numpy arrays
         (state-prepended), elementwise IEEE-identical to the former
         per-row loop ((cv - pv) / ((cur - prev) / 1000.0), same wrap
@@ -161,10 +205,6 @@ def _rate_state_fn(fields: list[str], keys: list[str], time_col: str,
             prev_ms, prev_vals = state.get[0], list(state.get[1:])
         else:
             prev_ms, prev_vals = None, [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        cols = keys + ["begin_ms", "end_ms"] + [f"{f}_rate" for f in fields]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         t_new = _t_ms(pdf, time_col)
         vals = {f: _f64(pdf, f) for f in fields}
         if prev_ms is not None:
@@ -219,37 +259,24 @@ def stream_rate(
         raise ValueError("counter_wrap corrects negative deltas; "
                          "allow_negative=False would mask the correction")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("begin_ms", T.LongType()),
-           T.StructField("end_ms", T.LongType())]
-        + [T.StructField(f"{f}_rate", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
+    wrap = float(counter_wrap) if counter_wrap is not None else None
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("begin_ms", T.LongType()),
+         T.StructField("end_ms", T.LongType())]
+        + [T.StructField(f"{f}_rate", T.DoubleType()) for f in fields],
         [T.StructField("ts", T.LongType())]
-        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _rate_state_fn(fields, keys, time_col, allow_negative,
-                       float(counter_wrap) if counter_wrap is not None
-                       else None),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))],
+        lambda keys: _rate_state_fn(fields, keys, time_col, allow_negative,
+                                    wrap))
 
 
 def _gaps_state_fn(keys: list[str], time_col: str, gap_ms: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized: one ``np.diff`` over the state-prepended sorted
         times replaces the former per-row loop — integer arithmetic, so
         output is identical by construction."""
         prev_ms = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col)
-        cols = keys + ["gap_start_ms", "gap_end_ms", "gap_ms"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         t = _t_ms(pdf, time_col)
         t_all = (np.concatenate([np.array([prev_ms], dtype=np.int64), t])
                  if prev_ms is not None else t)
@@ -286,26 +313,18 @@ def stream_gaps(
         raise ValueError(f"min_gap needs a fixed window spec, got {min_gap!r}")
     if gap_ms <= 0:
         raise ValueError(f"min_gap must be positive, got {min_gap!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("gap_start_ms", T.LongType()),
-           T.StructField("gap_end_ms", T.LongType()),
-           T.StructField("gap_ms", T.LongType())])
-    state_schema = T.StructType([T.StructField("ts", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _gaps_state_fn(keys, time_col, gap_ms),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("gap_start_ms", T.LongType()),
+         T.StructField("gap_end_ms", T.LongType()),
+         T.StructField("gap_ms", T.LongType())],
+        [T.StructField("ts", T.LongType())],
+        lambda keys: _gaps_state_fn(keys, time_col, gap_ms))
 
 
 def _sessions_state_fn(keys: list[str], time_col: str, gap_ms: int,
                        fields: list[str]):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized (r10): session breaks come from one ``np.diff``
         (strictly greater than the gap — an event at EXACTLY last+gap
         still joins, matching Spark's native session_window boundary);
@@ -320,12 +339,7 @@ def _sessions_state_fn(keys: list[str], time_col: str, gap_ms: int,
         else:
             begin, last, n0 = None, None, 0
             sums0 = [0.0] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        cols = (keys + ["begin_ms", "end_ms", "n"]
-                + [f"{f}_sum" for f in fields])
         nr = len(pdf)
-        if not nr:
-            return  # yield nothing: no output rows for this group
         t = _t_ms(pdf, time_col)
         vals = {f: _f64(pdf, f) for f in fields}
         zvals = {f: np.where(np.isnan(v), 0.0, v)
@@ -408,32 +422,22 @@ def stream_sessions(
         raise ValueError(f"window must be positive, got {window!r}")
     fields = ([field_spec] if isinstance(field_spec, str)
               else list(field_spec))
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("begin_ms", T.LongType()),
-           T.StructField("end_ms", T.LongType()),
-           T.StructField("n", T.LongType())]
-        + [T.StructField(f"{f}_sum", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("begin_ms", T.LongType()),
+         T.StructField("end_ms", T.LongType()),
+         T.StructField("n", T.LongType())]
+        + [T.StructField(f"{f}_sum", T.DoubleType()) for f in fields],
         [T.StructField("begin", T.LongType()),
          T.StructField("last", T.LongType()),
          T.StructField("n", T.LongType())]
         + [T.StructField(f"s{i}", T.DoubleType())
-           for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _sessions_state_fn(keys, time_col, gap_ms, fields),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+           for i in range(len(fields))],
+        lambda keys: _sessions_state_fn(keys, time_col, gap_ms, fields))
 
 
-def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int,
-                       tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized: the greedy keep-chain only re-enters Python once
         per KEPT event (``searchsorted`` jumps to the next time >=
         last + gap), not once per event — O(kept * log n) instead of
@@ -442,11 +446,6 @@ def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int,
         this next-fit chain on sorted times; equal-ts peers after the
         first kept are skipped by searchsorted side='left')."""
         last = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = keys + ["t_ms", "throttle_keep"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         t = _t_ms(pdf, time_col)
         n = len(t)
         keep = np.zeros(n, dtype=bool)
@@ -481,25 +480,16 @@ def stream_throttle(
     if gap_ms is None or gap_ms <= 0:
         raise ValueError(f"min_spacing must be a positive fixed window, "
                          f"got {min_spacing!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType()),
-           T.StructField("throttle_keep", T.BooleanType())])
-    state_schema = T.StructType([T.StructField("last", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _throttle_state_fn(keys, time_col, gap_ms, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType()),
+         T.StructField("throttle_keep", T.BooleanType())],
+        [T.StructField("last", T.LongType())],
+        lambda keys: _throttle_state_fn(keys, time_col, gap_ms), tiebreak)
 
 
-def _transitions_state_fn(keys: list[str], time_col: str, type_col: str,
-                          tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+def _transitions_state_fn(keys: list[str], time_col: str, type_col: str):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized: (prev, cur) pairs via a shifted object array with
         the cross-batch state prepended. A NULL type value is a REAL
         observation: it participates as both `to_type` and the next
@@ -511,10 +501,6 @@ def _transitions_state_fn(keys: list[str], time_col: str, type_col: str,
         micro-batch boundaries, fabricating never-adjacent edges)."""
         seen = state.exists and bool(state.get[1])
         prev = state.get[0] if state.exists else None
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         t = _t_ms(pdf, time_col)
         cur = pdf[type_col].to_numpy(dtype=object)
         cur = np.array([None if (x is None or (isinstance(x, float)
@@ -549,29 +535,21 @@ def stream_transitions(
     than bridged over (filter ``from_type/to_type IS NOT NULL``
     downstream for the oracle's lead()-pairs view).
     """
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
     t = sdf.schema[type_col].dataType
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType()),
-           T.StructField("from_type", t), T.StructField("to_type", t)])
-    state_schema = T.StructType([T.StructField("prev", t),
-                                 T.StructField("seen", T.BooleanType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _transitions_state_fn(keys, time_col, type_col, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType()),
+         T.StructField("from_type", t), T.StructField("to_type", t)],
+        [T.StructField("prev", t), T.StructField("seen", T.BooleanType())],
+        lambda keys: _transitions_state_fn(keys, time_col, type_col),
+        tiebreak)
 
 
 def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
-                  tiebreak: str | None, carry: list[str]):
+                  carry: list[str]):
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized (r10): every cumulative reducer is a prefix scan
         — state-seeded ``np.cumsum`` for sum/count (sequential
         left-to-right, bit-identical to the former per-row ``+=``),
@@ -585,13 +563,6 @@ def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
                    for i, c in enumerate(in_cols)}
         else:
             acc = {c: [0.0, 0, None, None] for c in in_cols}
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = (keys + ["t_ms"] + list(carry) + [r[0] for r in rows_spec])
-        nr = len(pdf)
-        if not nr:
-            state.update(tuple(x for c in in_cols for x in acc[c]))
-            return  # yield nothing: no output rows for this group
         scans: dict = {}
         for c in in_cols:
             v = _f64(pdf, c)
@@ -630,7 +601,7 @@ def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
                 vals = cmx
             out_cols[out] = np.where(empty, np.nan, vals)
         state.update(tuple(x for c in in_cols for x in acc[c]))
-        yield _key_frame(key, keys, nr, out_cols)
+        yield _key_frame(key, keys, len(pdf), out_cols)
 
     return fn
 
@@ -669,15 +640,7 @@ def stream_cumulative(
                 f"{flt!r} for {out!r}")
         rows_spec.append((out, in_col, func, flt))
     carry = list(carry_cols)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields
-        + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry]
-        + [T.StructField(r[0], T.LongType() if r[2] == "count"
-                         else T.DoubleType()) for r in rows_spec])
     state_fields = []
     for i, c in enumerate(in_cols):
         state_fields += [
@@ -685,18 +648,20 @@ def stream_cumulative(
             T.StructField(f"c{i}", T.LongType()),
             T.StructField(f"mn{i}", T.DoubleType()),
             T.StructField(f"mx{i}", T.DoubleType())]
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _cum_state_fn(rows_spec, keys, time_col, tiebreak, carry),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
+        + [sdf.schema[c] for c in carry]
+        + [T.StructField(r[0], T.LongType() if r[2] == "count"
+                         else T.DoubleType()) for r in rows_spec],
+        state_fields,
+        lambda keys: _cum_state_fn(rows_spec, keys, time_col, carry),
+        tiebreak)
 
 
 def _align_state_fn(fields: list[str], keys: list[str], time_col: str,
                     dur_ms: int, method: str, limit: int | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized (r11): boundary synthesis per consecutive pair via
         np.repeat over per-gap boundary counts; the interpolation
         ``pv + (cv - pv) * (b - prev) / (cur - prev)`` runs elementwise
@@ -706,9 +671,6 @@ def _align_state_fn(fields: list[str], keys: list[str], time_col: str,
             prev_ms, prev_vals = state.get[0], list(state.get[1:])
         else:
             prev_ms, prev_vals = None, [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col)
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         t_new = _t_ms(pdf, time_col)
         vals = {f: _f64(pdf, f) for f in fields}
         head = None
@@ -793,21 +755,14 @@ def stream_align(
     if dur is None:
         raise ValueError(f"align needs a fixed window spec, got {window!r}")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [T.StructField(f, T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
+        + [T.StructField(f, T.DoubleType()) for f in fields],
         [T.StructField("ts", T.LongType())]
-        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _align_state_fn(fields, keys, time_col, dur, method, limit),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+        + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))],
+        lambda keys: _align_state_fn(fields, keys, time_col, dur, method,
+                                     limit))
 
 
 def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
@@ -824,7 +779,7 @@ def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
       event time (rows are emitted when their run closes, append-mode).
     """
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         n = len(fields)
         if state.exists:
             snap = state.get
@@ -845,9 +800,6 @@ def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
         def slot(ms):
             return rows.setdefault(ms, [None] * n)
 
-        pdf = _whole_group(pdfs, time_col)
-        if not len(pdf):
-            return  # yield nothing: no rows, state unchanged
         t_arr = _t_ms(pdf, time_col)
         v_arrs = [_f64(pdf, f) for f in fields]
         if method in ("pad", "zero") and \
@@ -984,24 +936,17 @@ def stream_fill(
     if method == "linear" and len(fields) != 1:
         raise ValueError("streaming linear fill takes a single column "
                          "(reference filler.py:107-110)")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [T.StructField(f, T.DoubleType()) for f in fields])
     n = len(fields)
-    state_schema = T.StructType(
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
+        + [T.StructField(f, T.DoubleType()) for f in fields],
         [T.StructField(f"v{i}", T.DoubleType()) for i in range(n)]
         + [T.StructField(f"c{i}", T.LongType()) for i in range(n)]
         + [T.StructField(f"t{i}", T.LongType()) for i in range(n)]
-        + [T.StructField("cache", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _fill_state_fn(fields, keys, time_col, method, fill_limit),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+        + [T.StructField("cache", T.StringType())],
+        lambda keys: _fill_state_fn(fields, keys, time_col, method,
+                                    fill_limit))
 
 
 def stream_fill_pad(
@@ -1015,9 +960,8 @@ def stream_fill_pad(
 
 
 def _ewma_state_fn(fields: list[str], keys: list[str], time_col: str,
-                   alpha: float, tiebreak: str | None = None,
-                   carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+                   alpha: float, carry: Sequence[str] = ()):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         # array-based loop (r11): the EWMA recurrence rounds at every
         # step, so any reassociated closed form (the ewma_scan affine
         # compose) drifts in the last ulp and would break the
@@ -1026,10 +970,6 @@ def _ewma_state_fn(fields: list[str], keys: list[str], time_col: str,
         # two flops — plain indexing over numpy arrays removes it while
         # keeping the scalar float ops identical
         accs = list(state.get) if state.exists else [None] * len(fields)
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        if not len(pdf):
-            return  # yield nothing: no rows, state unchanged
         t_arr = _t_ms(pdf, time_col)
         v_arrs = [_f64(pdf, f) for f in fields]
         c_arrs = [pdf[c].to_list() for c in carry]
@@ -1071,22 +1011,15 @@ def stream_ewma(
     as the batch operator) pins their fold order on both sides.
     """
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
         + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _ewma_state_fn(fields, keys, time_col, alpha, tiebreak,
-                       list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields],
+        [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))],
+        lambda keys: _ewma_state_fn(fields, keys, time_col, alpha,
+                                    list(carry_cols)),
+        tiebreak)
 
 
 def stream_ewma_tws(
@@ -1182,10 +1115,8 @@ def stream_ewma_tws(
 
 
 def _holt_state_fn(field: str, keys: list[str], time_col: str,
-                   alpha: float, beta: float,
-                   tiebreak: str | None = None,
-                   carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+                   alpha: float, beta: float, carry: Sequence[str] = ()):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         import math
 
         # NaN sentinel for "no valid sample yet", matching the batch
@@ -1198,8 +1129,6 @@ def _holt_state_fn(field: str, keys: list[str], time_col: str,
             bt = math.nan if bt is None else bt
         else:
             lv = bt = math.nan
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
         # array-based loop (r11): Holt is a genuinely order-1 sequential
         # recurrence (level feeds trend feeds level) — no parallel
         # decomposition reproduces the fold's per-step rounding, so the
@@ -1246,31 +1175,23 @@ def stream_holt(
     drained stream and the batch op agree bit-for-bit (same tiebreak
     contract as stream_ewma).
     """
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
         + [sdf.schema[c] for c in carry_cols]
         + [T.StructField(f"{field}_level", T.DoubleType()),
-           T.StructField(f"{field}_trend", T.DoubleType())])
-    state_schema = T.StructType(
+           T.StructField(f"{field}_trend", T.DoubleType())],
         [T.StructField("l", T.DoubleType()),
-         T.StructField("b", T.DoubleType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _holt_state_fn(field, keys, time_col, alpha, beta, tiebreak,
-                       list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+         T.StructField("b", T.DoubleType())],
+        lambda keys: _holt_state_fn(field, keys, time_col, alpha, beta,
+                                    list(carry_cols)),
+        tiebreak)
 
 
 def _hw_state_fn(field: str, keys: list[str], time_col: str,
                  period: int, alpha: float, beta: float, gamma: float,
-                 tiebreak: str | None = None,
                  carry: Sequence[str] = ()):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         import math
 
         if state.exists:
@@ -1282,8 +1203,6 @@ def _hw_state_fn(field: str, keys: list[str], time_col: str,
         else:
             lv = bt = sv = math.nan
             kcount, seas = 0, [0.0] * period
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
         # array-based loop (r11): like Holt, the seasonal recurrence is
         # order-1 sequential per key (level/trend/seasonal all feed the
         # next step) — iterrows was the cost, not the arithmetic
@@ -1341,28 +1260,21 @@ def stream_holt_winters(
     """
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
         + [sdf.schema[c] for c in carry_cols]
         + [T.StructField(f"{field}_level", T.DoubleType()),
            T.StructField(f"{field}_trend", T.DoubleType()),
-           T.StructField(f"{field}_seasonal", T.DoubleType())])
-    state_schema = T.StructType(
+           T.StructField(f"{field}_seasonal", T.DoubleType())],
         [T.StructField("l", T.DoubleType()),
          T.StructField("b", T.DoubleType()),
          T.StructField("sv", T.DoubleType()),
          T.StructField("k", T.LongType()),
-         T.StructField("seas", T.ArrayType(T.DoubleType()))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _hw_state_fn(field, keys, time_col, period, alpha, beta, gamma,
-                     tiebreak, list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+         T.StructField("seas", T.ArrayType(T.DoubleType()))],
+        lambda keys: _hw_state_fn(field, keys, time_col, period, alpha,
+                                  beta, gamma, list(carry_cols)),
+        tiebreak)
 
 
 _STREAM_ROLLING_FUNCS = ("sum", "avg", "min", "max", "count", "stddev",
@@ -1428,7 +1340,7 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
 
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized (r10): the buffer and batch concatenate into one
         sorted int64/float64 array pair; every distinct timestamp's
         window is a contiguous slice located by ONE vectorized
@@ -1442,19 +1354,7 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
             d = _json.loads(state.get[0])
         else:
             d = {"t": [], **{c: [] for c in in_cols}}
-        pdf = _whole_group(pdfs, time_col)
-        if zscore_threshold is None:
-            cols = (keys + ["t_ms"] + list(carry)
-                    + [r[0] for r in rows_spec])
-        else:
-            cols = keys + ["t_ms"] + list(carry)
-            for _, in_col, _f, _fl in rows_spec:
-                cols += [in_col, f"{in_col}_zscore", f"{in_col}_anomaly"]
         n = len(pdf)
-        if not n:
-            state.update((state.get[0] if state.exists else
-                          _json.dumps(d),))
-            return  # yield nothing: no output rows for this group
         t_new = _t_ms(pdf, time_col)
         t_all = np.concatenate([np.asarray(d["t"], dtype=np.int64), t_new])
         v_all = {c: np.concatenate([
@@ -1563,23 +1463,16 @@ def stream_rolling(
             raise ValueError(
                 f"stream_rolling supports filters {_ROLLING_FILTERS}, "
                 f"got {flt!r} for {out!r}")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
         + [sdf.schema[c] for c in carry_cols]
         + [T.StructField(out,
                          T.LongType() if func == "count" else T.DoubleType())
-           for out, _in, func, _fl in rows_spec])
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _buffer_state_fn(rows_spec, keys, time_col, dur_ms, None,
-                         list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+           for out, _in, func, _fl in rows_spec],
+        [T.StructField("buf", T.StringType())],
+        lambda keys: _buffer_state_fn(rows_spec, keys, time_col, dur_ms,
+                                      None, list(carry_cols)))
 
 
 def stream_zscore(
@@ -1610,25 +1503,18 @@ def stream_zscore(
     if dur_ms is None:
         raise ValueError(f"stream_zscore needs a fixed window, got {window!r}")
     rows_spec = [(f, f, "zscore", "ignore_missing") for f in fields]
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
     per_field = []
     for f in fields:
         per_field += [T.StructField(f, T.DoubleType()),
                       T.StructField(f"{f}_zscore", T.DoubleType()),
                       T.StructField(f"{f}_anomaly", T.BooleanType())]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols] + per_field)
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _buffer_state_fn(rows_spec, keys, time_col, dur_ms, float(threshold),
-                         list(carry_cols)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
+        + [sdf.schema[c] for c in carry_cols] + per_field,
+        [T.StructField("buf", T.StringType())],
+        lambda keys: _buffer_state_fn(rows_spec, keys, time_col, dur_ms,
+                                      float(threshold), list(carry_cols)))
 
 
 def stream_exact_dedup(
@@ -1960,9 +1846,8 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
 
 
 def _cusum_state_fn(field: str, keys: list[str], time_col: str,
-                    t_mic: int, k_mic: int, h_mic: int,
-                    tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+                    t_mic: int, k_mic: int, h_mic: int):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         """Vectorized: the clipped recurrence s_j = max(0, s_{j-1} + a_j)
         has the closed form s_j = P_j - min(0, runmin(P)_j) with
         P = s_0 + cumsum(a) (the same identity the batch operator uses,
@@ -1975,11 +1860,6 @@ def _cusum_state_fn(field: str, keys: list[str], time_col: str,
         correctly-rounded round() has no numpy twin (np.round scales by
         1e6 in float space — the documented half-even trap)."""
         sp, sn = state.get if state.exists else (0, 0)
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
-        cols = keys + ["t_ms", "direction", "stat"]
-        if not len(pdf):
-            return  # yield nothing: no output rows for this group
         v = _f64(pdf, field)
         ok = ~np.isnan(v)
         t = _t_ms(pdf, time_col)[ok]
@@ -2069,22 +1949,15 @@ def stream_cusum(
         raise ValueError("stream_cusum: |target|/k/h above ~2.2e9 "
                          "overflow exact micro-unit arithmetic; "
                          "rescale the series")
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k_] for k_ in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType()),
-                      T.StructField("direction", T.StringType()),
-                      T.StructField("stat", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("sp", T.LongType()),
-                                 T.StructField("sn", T.LongType())])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _cusum_state_fn(field, keys, time_col, t_mic, k_mic, h_mic,
-                        tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType()),
+         T.StructField("direction", T.StringType()),
+         T.StructField("stat", T.DoubleType())],
+        [T.StructField("sp", T.LongType()), T.StructField("sn", T.LongType())],
+        lambda keys: _cusum_state_fn(field, keys, time_col, t_mic, k_mic,
+                                     h_mic),
+        tiebreak)
 
 
 # ---------------------------------------------------------------------------
@@ -2451,13 +2324,9 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
 
 
 def _xchart_state_fn(field: str, keys: list[str], time_col: str,
-                     t_mic: int, s_mic: int, tiebreak: str | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import numpy as np
-
+                     t_mic: int, s_mic: int):
+    def fn(key, pdf: pd.DataFrame, state: GroupState):
         prior = list(state.get[0]) if state.exists else []
-        pdf = _whole_group(pdfs, time_col,
-                           (tiebreak,) if tiebreak else ())
         cols = keys + ["t_ms", "rule", "side", "value"]
         vals = pdf[field]
         mask = vals.notna()
@@ -2545,22 +2414,15 @@ def stream_xchart(
         raise ValueError(f"sigma must be positive, got {sigma}")
     t_mic = int(round(float(target) * 1e6))
     s_mic = int(round(float(sigma) * 1e6))
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k_] for k_ in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType()),
-                      T.StructField("rule", T.StringType()),
-                      T.StructField("side", T.StringType()),
-                      T.StructField("value", T.DoubleType())])
-    state_schema = T.StructType(
-        [T.StructField("hist", T.ArrayType(T.LongType()))])
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        _xchart_state_fn(field, keys, time_col, t_mic, s_mic, tiebreak),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return out.drop("__k") if dummy else out
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType()),
+         T.StructField("rule", T.StringType()),
+         T.StructField("side", T.StringType()),
+         T.StructField("value", T.DoubleType())],
+        [T.StructField("hist", T.ArrayType(T.LongType()))],
+        lambda keys: _xchart_state_fn(field, keys, time_col, t_mic, s_mic),
+        tiebreak)
 
 
 # ---------------------------------------------------------------------------

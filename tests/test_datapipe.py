@@ -1252,6 +1252,26 @@ def test_dup_clusters_nonconvergence_guard(spark):
     assert set(full.values()) == {0}
 
 
+@pytest.mark.parametrize("cap", [None, 0], ids=["driver", "distributed"])
+def test_dup_clusters_rounds_contract_both_paths(spark, monkeypatch, cap):
+    """The driver BFS and the distributed label propagation keep one
+    max_iter contract. A 25-node chain (diameter 24) is one component
+    labelled 0 after 25 rounds; max_iter=24 raises and 25 passes. A cap
+    of 0 edges forces the distributed path."""
+    if cap is not None:
+        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", cap)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(24)],
+                                  "id_a long, id_b long")
+    stats = {}
+    full = {r["id"]: r["cluster_id"] for r in
+            dedup.dup_clusters(pairs, max_iter=30, stats=stats).collect()}
+    assert full == {i: 0 for i in range(25)}
+    assert stats["rounds"] == 25
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dup_clusters(pairs, max_iter=24)
+    assert dedup.dup_clusters(pairs, max_iter=25).count() == 25
+
+
 def test_dedup_documents_end_to_end(spark, docs):
     base = docs.limit(4).select("doc_id", "text")
     clone = base.withColumn("doc_id", F.col("doc_id") + 1_000_000)

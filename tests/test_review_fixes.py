@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from pypond_spark import TimeSeries
 from pypond_spark import index as codec
+from pypond_spark.operators.aggregate import collect_by_fixed_window
 from pypond_spark.operators.asof import asof_join, asof_join_broadcast
 
 UTC = datetime.timezone.utc
@@ -88,8 +89,7 @@ def test_negative_ms_index_floor_and_parse():
 def test_negative_index_matches_column_dual(spark):
     dt = datetime.datetime(1969, 12, 31, 23, 59, tzinfo=UTC)
     df = spark.createDataFrame([(dt,)], "time timestamp")
-    got = df.select(
-        codec.fixed_index_col("5m", "time").alias("idx")).collect()[0]["idx"]
+    got = collect_by_fixed_window(df, "5m").collect()[0]["index"]
     assert got == codec.get_index_string("5m", dt)
 
 

@@ -1589,3 +1589,62 @@ def test_stream_attribution_outer_emits_unmatched_on_expiry(spark, tmp_path):
     assert sum(1 for r in rows if r[2] == 12) == 1
     with pytest.raises(ValueError, match="unmatched"):
         stream_attribution_join(views, clicks, unmatched="bogus")
+
+
+_NO_KEY_CALLS = {
+    "stream_rate": {},
+    "stream_gaps": {"min_gap": "1m"},
+    "stream_sessions": {"window": "1m", "field_spec": "value"},
+    "stream_throttle": {"min_spacing": "1m"},
+    "stream_transitions": {"type_col": "event_type"},
+    "stream_cumulative": {"aggregation": {"v_sum": {"value": "sum"},
+                                          "n": {"value": "count"}}},
+    "stream_align": {"window": "1m"},
+    "stream_fill": {"method": "linear"},
+    "stream_ewma": {},
+    "stream_holt": {},
+    "stream_holt_winters": {"period": 2},
+    "stream_rolling": {"window": "2m",
+                       "aggregation": {"v_avg": {"value": "avg"}}},
+    "stream_zscore": {"window": "5m", "threshold": 1.0},
+    "stream_cusum": {"target": 100.0},
+    "stream_xchart": {"target": 100.0, "sigma": 10.0},
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NO_KEY_CALLS))
+def test_keyed_state_ops_no_key_path(spark, tmp_path, op):
+    """Every keyed state operator run without a series key (the injected
+    constant key) emits exactly the rows of the same single-series input
+    keyed by ``user``, minus that column, and never leaks the constant
+    key column."""
+    from pypond_spark.streaming import stream
+    schema = T.StructType([T.StructField("t_ms", T.LongType()),
+                           T.StructField("user", T.StringType()),
+                           T.StructField("value", T.DoubleType()),
+                           T.StructField("event_type", T.StringType())])
+    events = [(0, 100.0, "x"), (30_000, 130.0, "y"), (60_000, None, None),
+              (90_000, 220.0, "x"), (240_000, 160.0, "y"),
+              (270_000, 95.0, "y"), (300_000, 50.0, "x")]
+    _write_chunks(tmp_path, [[{"t_ms": t, "user": "a", "value": v,
+                               "event_type": e} for t, v, e in events]])
+
+    def drain(partition_by):
+        sdf = (spark.readStream.schema(schema).json(str(tmp_path))
+               .withColumn("time", F.timestamp_millis(F.col("t_ms")))
+               .drop("t_ms"))
+        out = getattr(stream, op)(sdf, partition_by=partition_by,
+                                  **_NO_KEY_CALLS[op])
+        return run_available_now(out, "append")
+
+    bare, keyed = drain(()), drain(["user"])
+    assert "__k" not in bare.columns
+    cols = [c for c in keyed.columns if c != "user"]
+    assert bare.columns == cols
+
+    def rows(df):
+        return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
+
+    want = rows(keyed)
+    assert want
+    assert rows(bare) == want
