@@ -46,6 +46,7 @@ from pypond_spark.datapipe._util import spread as _spread
 from pypond_spark.datapipe._util import spread_io as _spread_io
 from pypond_spark.operators import merge as merge_ops
 from pypond_spark.operators.take import take as take_op
+from pypond_spark.streaming import run_available_now
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -283,20 +284,7 @@ def q_stream_cms_sketch(spark, sf_dir):
     sketch counter-for-counter (the batch-SQL oracle)."""
     sdf = _docs_stream(spark, sf_dir)
     out = dp_sketch.cms_token_counts(sdf, width=8, depth=3)
-    return _run_stream_32(spark, out, "complete")
-
-
-def _run_stream_32(spark, out, mode):
-    """Drain a stateful streaming query at a pinned 32-partition shuffle
-    width (streaming state stores can't use AQE coalescing); restore the
-    session's width after."""
-    from pypond_spark.streaming import run_available_now
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        return run_available_now(out, mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_available_now(out, "complete")
 
 
 def q_stream_rollup_1h(spark, sf_dir):
@@ -310,7 +298,7 @@ def q_stream_rollup_1h(spark, sf_dir):
     out, mode = windowed_stream_aggregate(
         sdf, {"v_sum": {"value": "sum"}, "n": {"value": "count"}},
         "1h", group_by="event_type", emit_on="flush")
-    result = _run_stream_32(spark, out, mode)
+    result = run_available_now(out, mode)
     return result.select(
         F.unix_millis("begin").alias("begin_ms"), "event_type",
         F.round("v_sum", 6).alias("v_sum"), "n")
@@ -960,7 +948,7 @@ def q_stream_cusum(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_cusum(sdf, "value", target=50.0, k=10.0, h=200.0,
                        partition_by=["user_id"], tiebreak="event_id")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 
@@ -975,7 +963,7 @@ def q_stream_xchart(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_xchart(sdf, "value", target=50.0, sigma=60.0,
                         partition_by=["user_id"], tiebreak="event_id")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_rouge2_pairs(spark, sf_dir):
@@ -1062,7 +1050,7 @@ def q_stream_hll(spark, sf_dir):
     sdf = _docs_stream(spark, sf_dir)
     keyed = sdf.select(F.md5("text").alias("digest"))
     out = dp_sketch.hll_registers(keyed, "digest", m=64)
-    return _run_stream_32(spark, out, "complete")
+    return run_available_now(out, "complete")
 
 
 def q_stream_first_seen(spark, sf_dir):
@@ -1083,7 +1071,7 @@ def q_stream_first_seen(spark, sf_dir):
     out = stream_first_seen(both, key_col="digest",
                             payload_cols=("doc_id",),
                             order_col="doc_id")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def _attrib_streams(spark, sf_dir):
@@ -1110,7 +1098,7 @@ def q_stream_attribution_join(spark, sf_dir):
     from pypond_spark.streaming.stream import stream_attribution_join
     views, clicks = _attrib_streams(spark, sf_dir)
     out = stream_attribution_join(views, clicks, horizon="1h")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_attribution_outer(spark, sf_dir):
@@ -1127,7 +1115,7 @@ def q_stream_attribution_outer(spark, sf_dir):
     views, clicks = _attrib_streams(spark, sf_dir)
     out = stream_attribution_join(views, clicks, horizon="1h",
                                   unmatched="emit")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_attribution_last_touch(spark, sf_dir):
@@ -1144,7 +1132,7 @@ def q_stream_attribution_last_touch(spark, sf_dir):
     from pypond_spark.streaming.stream import stream_attribution_touch
     views, clicks = _attrib_streams(spark, sf_dir)
     out = stream_attribution_touch(views, clicks, horizon="1h")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_attribution_first_touch(spark, sf_dir):
@@ -1156,7 +1144,7 @@ def q_stream_attribution_first_touch(spark, sf_dir):
     views, clicks = _attrib_streams(spark, sf_dir)
     out = stream_attribution_touch(views, clicks, horizon="1h",
                                    touch="first")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_minhash_dedup(spark, sf_dir):
@@ -1173,7 +1161,7 @@ def q_stream_minhash_dedup(spark, sf_dir):
                 (F.col("doc_id") + 10000).alias("doc_id"), "text")))
     from pypond_spark.streaming.stream import stream_minhash_dedup
     out = stream_minhash_dedup(both, num_hashes=8, band_size=4)
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_minhash_dedup_indexed(spark, sf_dir):
@@ -1201,7 +1189,7 @@ def q_stream_minhash_dedup_indexed(spark, sf_dir):
         from pypond_spark.streaming.stream import stream_minhash_dedup
         out = stream_minhash_dedup(odd, num_hashes=8, band_size=4,
                                    index_path=path)
-        return _run_stream_32(spark, out, "append")
+        return run_available_now(out, "append")
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -1222,7 +1210,7 @@ def q_stream_simhash_dedup(spark, sf_dir):
                 F.concat(F.col("text"), F.lit(" extra")).alias("text"))))
     from pypond_spark.streaming.stream import stream_simhash_dedup
     out = stream_simhash_dedup(both, n_bands=4)
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_bloom(spark, sf_dir):
@@ -1236,7 +1224,7 @@ def q_stream_bloom(spark, sf_dir):
     sdf = _docs_stream(spark, sf_dir)
     keyed = sdf.select(F.md5("text").alias("digest"))
     out = dp_sketch.bloom_build(keyed, m_bits=2048, k=3)
-    return _run_stream_32(spark, out, "complete")
+    return run_available_now(out, "complete")
 
 
 def q_heavy_hitters(spark, sf_dir):
@@ -4153,7 +4141,7 @@ def q_stream_rolling_10m(spark, sf_dir):
                           "max_10m": {"value": "max"}},
                          partition_by=["user_id"],
                          carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms",
                          F.round("avg_10m", 6).alias("avg_10m"),
                          "n_10m", "max_10m")
@@ -4168,7 +4156,7 @@ def q_stream_zscore_10m(spark, sf_dir):
     out = stream_zscore(sdf, "value", window="10m",
                         partition_by=["user_id"], threshold=2.0,
                         carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms",
                          F.round("value_zscore", 6).alias("value_zscore"),
                          "value_anomaly")
@@ -4183,7 +4171,7 @@ def q_stream_ewma(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_ewma(sdf, "value", alpha=0.5, partition_by=["user_id"],
                       tiebreak="event_id", carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms", "value_ewma")
 
 
@@ -4436,7 +4424,7 @@ def q_stream_gaps(spark, sf_dir):
     from pypond_spark.streaming import stream_gaps
     sdf = _events_stream(spark, sf_dir)
     out = stream_gaps(sdf, "4h", partition_by=["user_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "gap_start_ms", "gap_end_ms", "gap_ms")
 
 
@@ -4863,7 +4851,7 @@ def q_stream_cumsum(spark, sf_dir):
               "n_seen": {"value": "count"}},
         partition_by=["user_id"], tiebreak="event_id",
         carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms",
                          F.round("v_cum", 6).alias("v_cum"),
                          "v_runmax", "n_seen")
@@ -4904,7 +4892,7 @@ def q_stream_align_1h(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_align(sdf, window="1h", field_spec="value", method="hold",
                        partition_by=["user_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "t_ms",
                          F.round("value", 6).alias("value"))
 
@@ -4922,7 +4910,7 @@ def q_stream_fill_pad(spark, sf_dir):
         .otherwise(F.col("value")))
     out = stream_fill(nulled, field_spec="value", method="pad",
                       partition_by=["user_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "t_ms",
                          F.round("value", 6).alias("value_filled"))
 
@@ -4965,7 +4953,7 @@ def q_stream_rate(spark, sf_dir):
     from pypond_spark.streaming import stream_rate
     sdf = _events_stream(spark, sf_dir)
     out = stream_rate(sdf, field_spec="value", partition_by=["user_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select(
         "user_id", "begin_ms", "end_ms",
         (F.round("value_rate", 6) + F.lit(0.0)).alias("value_rate"))
@@ -5105,7 +5093,7 @@ def q_stream_holt(spark, sf_dir):
     out = stream_holt(sdf, "value", alpha=0.5, beta=0.5,
                       partition_by=["user_id"], tiebreak="event_id",
                       carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms",
                          "value_level", "value_trend")
 
@@ -6054,7 +6042,7 @@ def q_stream_tar_ingest(spark, sf_dir):
         keyed, key_col="digest",
         payload_cols=("ord", "ext", "n_bytes", "content"),
         order_col="ord")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_stream_chat_ingest(spark, sf_dir):
@@ -6134,7 +6122,7 @@ def q_stream_chat_ingest(spark, sf_dir):
         payload_cols=("ord", "n_turns", "n_user", "n_assistant",
                       "alternates", "render_digest"),
         order_col="ord")
-    return _run_stream_32(spark, out, "append")
+    return run_available_now(out, "append")
 
 
 def q_warc_gz_members(spark, sf_dir):
@@ -6730,7 +6718,7 @@ def q_stream_throttle(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_throttle(sdf, "30m", partition_by=["user_id"],
                           tiebreak="event_id")
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "t_ms", "throttle_keep")
 
 
@@ -6816,7 +6804,7 @@ def q_stream_transitions(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_transitions(sdf, "event_type", partition_by=["user_id"],
                              tiebreak="event_id")
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return (result.groupBy("from_type", "to_type")
             .agg(F.count("*").alias("n")))
 
@@ -6888,7 +6876,7 @@ def q_stream_sessions_sum(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_sessions(sdf, window="1h", partition_by=["user_id"],
                           field_spec="value")
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "begin_ms", "end_ms", "n",
                          F.round("value_sum", 6).alias("v_sum"))
 
@@ -7024,7 +7012,7 @@ def q_stream_distinct_hourly(spark, sf_dir):
     sdf = _events_stream(spark, sf_dir)
     out = stream_distinct_counts(sdf, "user_id", window="1h",
                                  partition_by=["event_type"])
-    result = _run_stream_32(spark, out, "complete")
+    result = run_available_now(out, "complete")
     return result.select(F.unix_millis("begin").alias("begin_ms"),
                          "event_type", "u_user_id")
 
@@ -7244,7 +7232,7 @@ def q_stream_holt_winters(spark, sf_dir):
                               partition_by=["user_id"],
                               tiebreak="event_id",
                               carry_cols=["event_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("event_id", "user_id", "t_ms",
                          "value_level", "value_trend", "value_seasonal")
 
@@ -7292,7 +7280,7 @@ def q_stream_sessions(spark, sf_dir):
     from pypond_spark.streaming import stream_sessions
     sdf = _events_stream(spark, sf_dir)
     out = stream_sessions(sdf, window="1h", partition_by=["user_id"])
-    result = _run_stream_32(spark, out, "append")
+    result = run_available_now(out, "append")
     return result.select("user_id", "begin_ms", "end_ms", "n")
 
 

@@ -9,6 +9,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
+
 
 def global_prefix_sums(df: DataFrame, order_exprs: list[Column],
                        cols: list[str],
@@ -34,9 +36,7 @@ def global_prefix_sums(df: DataFrame, order_exprs: list[Column],
     resolved by the caller's order_exprs; pass a tiebreak column when
     exclusive sums must be deterministic under ties.
     """
-    spark = df.sparkSession
-    n_parts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    n_parts = shuffle_width(df.sparkSession)
     part = (df.repartitionByRange(n_parts, *order_exprs)
             .localCheckpoint()
             .withColumn("__gps_pid", F.spark_partition_id()))

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from pypond_spark.datapipe._util import (ngram_explode, overlap, spread,
                                           word_tokens)
+from pypond_spark.session import shuffle_width
 
 
 # simhash token cap per document: bounds skew and guarantees the lane-packed
@@ -1045,8 +1046,7 @@ def compact_neardup_index(spark, path: str,
     sh = base + "/shingles"
     staged = base + "/shingles.compacting"
     stats["shingles_files_before"] = _n_parquet_files(sh)
-    n_parts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    n_parts = shuffle_width(spark)
     (spark.read.parquet(sh).repartition(n_parts)
      .write.mode("overwrite").parquet(staged))
     _swap(sh, staged)

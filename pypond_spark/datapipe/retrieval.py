@@ -77,6 +77,9 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
 
     Output: ``(query_id, rank, doc_id, bm25, n_matched)`` with rank
     1..k per query ordered by rounded score desc, doc_id asc.
+
+    ``avgdl`` folds case for ASCII only: a whitespace run whose letters
+    are all U+212A or U+0130 is a token (``k``, ``i``) but is not counted.
     """
     docs = spread(docs)
     doc_cols = [F.col(id_col), _tok_arr(text_col).alias("__toks")]
@@ -112,8 +115,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     # containing an alphanumeric (the edge-strip normalizer empties a
     # token iff it has no [A-Za-z0-9]) — one compiled regex scan of the
     # raw text instead of re-running the interpreted tokenize chain
-    # (verified: identical totals; textstats._marker_hits_expr has the
-    # law notes)
+    # (identical totals on ASCII text, see the docstring for the fold;
+    # textstats._marker_hits_expr has the law notes)
     n_toks = F.regexp_count(F.col(text_col),
                             F.lit(r"\S*[A-Za-z0-9]\S*"))
     (scal_row,), tf = overlap(

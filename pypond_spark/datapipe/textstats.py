@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pypond_spark.datapipe._util import (WS, ngram_explode, overlap, spread,
                                           word_tokens)
+from pypond_spark.session import shuffle_width
 
 TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
@@ -68,7 +69,10 @@ def _marker_hits_expr(text_col: str, markers: Sequence[str]) -> Column:
     is KEPT by the normalizer, so it must not appear inside the match;
     the run boundary is start-of-string or the ASCII whitespace class).
     Markers must be plain ``[a-z]+`` words (they are: stopword/marker
-    tables) — no regex metachars to escape."""
+    tables) — no regex metachars to escape.  Case folds for ASCII only
+    (Java ``(?i)`` without UNICODE_CASE), while the normalizer's ``lower``
+    folds Unicode: U+212A (Kelvin sign) is a ``k`` to the token law but
+    not to this scan, and U+0130 is not an ``i`` to either."""
     alt = "|".join(markers)
     junk = f"[^{WS}a-zA-Z0-9]*"
     pat = (f"(?i)(^|(?<=[{WS}]))"
@@ -1704,9 +1708,7 @@ def zipf_slope(df: DataFrame, text_col: str = "text") -> DataFrame:
             .select(F.explode(toks).alias("tok"))
             .where(F.col("tok") != "")
             .groupBy("tok").agg(F.count("*").alias("__f")))
-    spark = df.sparkSession
-    n_parts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    n_parts = shuffle_width(df.sparkSession)
     part = (freq
             .repartitionByRange(n_parts, F.desc("__f"), F.asc("tok"))
             .localCheckpoint()

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from ..index import window_duration_ms
+from ..session import shuffle_width
 
 
 def series_correlation(
@@ -154,9 +155,7 @@ def _theil_sen_grouped(df: DataFrame, keys: list[str], valid,
     import numpy as np
     import pandas as pd
 
-    spark = df.sparkSession
-    n_parts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    n_parts = shuffle_width(df.sparkSession)
     # bucket agg keeps its own exchange (partial map-side aggregation
     # shuffles partially-agged buckets, never raw events — §2.3); the
     # explicit key repartition of the BUCKET frame then satisfies the

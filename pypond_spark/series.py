@@ -48,6 +48,7 @@ from .operators.rolling import winsorize as winsorize_op
 from .operators.rolling import rolling as rolling_op
 from .operators.rolling import zscore as zscore_op
 from .operators.take import take as take_op
+from .session import shuffle_width
 from .timerange import TimeRange
 from .util import field_dtype, is_valid_col, ms_from_any, valid_or_null
 
@@ -336,9 +337,7 @@ class TimeSeries:
         from pyspark.sql import Window
         if begin is None and end is None:
             return self
-        spark = self._df.sparkSession
-        n_parts = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+        n_parts = shuffle_width(self._df.sparkSession)
         part = (self._df
                 .repartitionByRange(n_parts, F.col(self.time_col))
                 .localCheckpoint()

@@ -13,6 +13,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width, at least 1 (unset reads as 32)."""
+    return max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+
+
 def get_spark(app_name: str = "pypond_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:

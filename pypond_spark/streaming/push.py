@@ -34,6 +34,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .stream import _drain_available_now
+
 
 class PushStream:
     """Push events one at a time into a streaming query (test ergonomics /
@@ -120,12 +122,9 @@ class PushStream:
                 for cb in callbacks:
                     cb(r)
 
-        q = (df.writeStream.outputMode(mode)
-             .foreachBatch(deliver)
-             .option("checkpointLocation", self._checkpoint)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+        _drain_available_now(self._spark, df.writeStream.outputMode(mode)
+                             .foreachBatch(deliver)
+                             .option("checkpointLocation", self._checkpoint))
 
     def flush(self) -> None:
         self.process()

@@ -27,6 +27,12 @@ chunk), stable-sorted by time and optional tiebreak, and never an empty
 group. The dedup gates (first-seen, SimHash and MinHash) keep their own
 calls: they key on a digest or band, not a series, and arm event-time
 timeouts when given a TTL.
+
+State width: every state partition costs a state store and a Python state
+start per micro-batch, and AQE is off inside streaming queries. So every
+``availableNow`` drain starts in ``_drain_available_now``, which gives a
+new query ``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
+partitions. The checkpoint pins the width a query first ran with.
 """
 
 from __future__ import annotations
@@ -36,14 +42,16 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..datapipe._util import py_word_tokens, word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
+from ..session import shuffle_width
 
 OUTPUT_MODE = {"eachEvent": "update", "discard": "append", "flush": "complete"}
 
@@ -1586,15 +1594,28 @@ def stream_distinct_counts(
             .withColumnRenamed("__bucket", "begin"))
 
 
+def _drain_available_now(spark: SparkSession,
+                         writer: DataStreamWriter) -> StreamingQuery:
+    """Drain ``writer`` at the state width (module docstring)."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(min(shuffle_width(spark),
+                                spark.sparkContext.defaultParallelism)))
+    try:
+        query = writer.trigger(availableNow=True).start()
+        query.awaitTermination()
+    finally:
+        spark.conf.set(key, prev)
+    return query
+
+
 def run_available_now(sdf: DataFrame, output_mode: str,
                       name: str | None = None) -> DataFrame:
     """Drain all available input through a memory sink (the test/flush path:
     the reference's ``stop()``-flushes-everything protocol)."""
     name = name or f"q_{uuid.uuid4().hex[:8]}"
-    query = (sdf.writeStream.format("memory").queryName(name)
-             .outputMode(output_mode)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    _drain_available_now(sdf.sparkSession, sdf.writeStream.format("memory")
+                         .queryName(name).outputMode(output_mode))
     return sdf.sparkSession.table(name)
 
 

@@ -4938,6 +4938,40 @@ def test_marker_count_regex_matches_token_filter_law(spark):
     assert sorted(map(tuple, old)) == sorted(map(tuple, new))
 
 
+def test_ascii_case_fold_scans_do_not_fold_unicode(spark):
+    """The two compiled scans fold case for ASCII only (a pinned
+    divergence, not the intended law): U+212A (Kelvin sign) and U+0130
+    (capital I with dot) are not folded by ``_marker_hits_expr`` or by
+    ``bm25_topk``'s corpus length scan, although the token normalizer's
+    ``lower`` maps them to ``k`` and to ``i`` plus a combining dot."""
+    import math
+
+    from pypond_spark.datapipe.retrieval import bm25_topk
+    from pypond_spark.datapipe.textstats import (_marker_hits_expr,
+                                                 _match_tokens)
+
+    df = spark.createDataFrame([(0, "KELVIN IS"), (1, "\u212aelvin \u0130s")],
+                               "doc_id long, text string")
+    got = {r["doc_id"]: (r["hits"], r["toks"]) for r in df.select(
+        "doc_id", _marker_hits_expr("text", ["kelvin", "is"]).alias("hits"),
+        _match_tokens("text").alias("toks")).collect()}
+    assert got[0] == (2, ["kelvin", "is"])
+    assert got[1] == (0, ["kelvin", "i\u0307s"])
+
+    # doc 0 has three normalized tokens (apple, k, i) but the length scan
+    # counts one, so avgdl = (1 + 2) / 2
+    docs = spark.createDataFrame([(0, "apple \u212a \u0130"),
+                                  (1, "apple pear")],
+                                 "doc_id long, text string")
+    qs = spark.createDataFrame([(7, "apple")], "query_id long, query string")
+    scores = {r["doc_id"]: r["bm25"]
+              for r in bm25_topk(docs, qs, k=2).collect()}
+    idf, avgdl = math.log(1.2), 1.5
+    for doc_id, dl in ((0, 3), (1, 2)):
+        want = idf * 2.2 / (1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+        assert scores[doc_id] == pytest.approx(want, abs=1e-6)
+
+
 def test_line_count_regexes_match_line_filter_law(spark):
     """r15: the compiled line counters must equal the interpreted
     line-filter law (trim/rtrim + rlike per line), including CR, tab,

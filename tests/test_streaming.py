@@ -6,8 +6,11 @@ operators genuinely cross micro-batch boundaries.
 
 import json
 import os
+import shutil
+from contextlib import contextmanager
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1648,3 +1651,97 @@ def test_keyed_state_ops_no_key_path(spark, tmp_path, op):
     want = rows(keyed)
     assert want
     assert rows(bare) == want
+
+
+@contextmanager
+def _session_confs(spark, confs):
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _state_partitions(ck, version):
+    """State partitions of operator 0 that committed ``version``."""
+    root = os.path.join(ck, "state", "0")
+    return sorted(int(d) for d in os.listdir(root) if d.isdigit()
+                  and os.path.exists(os.path.join(root, d,
+                                                  f"{version}.delta")))
+
+
+_TWO_FILES = [
+    [{"t_ms": 0, "user": "a", "value": 100.0},
+     {"t_ms": 10_000, "user": "b", "value": 10.0},
+     {"t_ms": 30_000, "user": "a", "value": 130.0},
+     {"t_ms": 60_000, "user": "a", "value": None}],
+    [{"t_ms": 70_000, "user": "b", "value": 40.0},
+     {"t_ms": 90_000, "user": "a", "value": 220.0},
+     {"t_ms": 120_000, "user": "a", "value": 160.0}],
+]
+
+
+def test_drain_state_width_law_and_restore(spark, tmp_path):
+    """A new stateful drain runs min(session width, cores) state
+    partitions, and the session's width is the same after the drain,
+    also after a drain whose query raises."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_chunks(src, _TWO_FILES)
+    ck = tmp_path / "ck"
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 32
+    with _session_confs(spark, {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.streaming.checkpointLocation": str(ck)}):
+        out = stream_rate(_read_stream(spark, str(src)),
+                          field_spec="value", partition_by=["user"])
+        assert run_available_now(out, "append", name="width_law").count()
+        assert _state_partitions(str(ck / "width_law"), 2) \
+            == list(range(cores))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        bad = _read_stream(spark, str(src)).select(
+            F.raise_error(F.lit("boom")).alias("x"))
+        with pytest.raises(StreamingQueryException):
+            run_available_now(bad, "append")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+@pytest.mark.parametrize("keys", [["user"], []], ids=["keyed", "unkeyed"])
+def test_wide_checkpoint_resumes_at_its_width(spark, tmp_path, keys):
+    """A checkpoint first written at state width 8 by a plain start
+    resumes through the drain helper at width 8, not at the core count,
+    and its two drains deliver exactly the rows of one fresh drain."""
+    from pypond_spark.streaming.stream import _drain_available_now
+    both, src = tmp_path / "both", tmp_path / "src"
+    both.mkdir()
+    src.mkdir()
+    _write_chunks(both, _TWO_FILES)
+    shutil.copy2(both / "p0.json", src)
+    ck = str(tmp_path / "ck")
+    got = []
+
+    def writer():
+        out = stream_rate(_read_stream(spark, str(src)), field_spec="value",
+                          partition_by=keys)
+        return (out.writeStream.outputMode("append")
+                .foreachBatch(lambda df, _: got.extend(df.collect()))
+                .option("checkpointLocation", ck))
+
+    with _session_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+        writer().trigger(availableNow=True).start().awaitTermination()
+    assert _state_partitions(ck, 1) == list(range(8))
+    shutil.copy2(both / "p1.json", src)
+    _drain_available_now(spark, writer())
+    assert _state_partitions(ck, 2) == list(range(8))
+    fresh = run_available_now(
+        stream_rate(_read_stream(spark, str(both)), field_spec="value",
+                    partition_by=keys), "append").collect()
+    assert len(fresh) > 3
+    assert sorted(map(tuple, got)) == sorted(map(tuple, fresh))

@@ -22,16 +22,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from pypond_spark.session import get_spark  # noqa: E402
+from pypond_spark.streaming.stream import _drain_available_now  # noqa: E402
 
 
 def drain_with_progress(sdf, output_mode: str):
     """run_available_now, but keep the query handle so the state-operator
     metrics of the final micro-batch are readable after the drain."""
     name = f"audit_{uuid.uuid4().hex[:8]}"
-    query = (sdf.writeStream.format("memory").queryName(name)
-             .outputMode(output_mode)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    query = _drain_available_now(
+        sdf.sparkSession, sdf.writeStream.format("memory").queryName(name)
+        .outputMode(output_mode))
     rows = sdf.sparkSession.table(name).count()
     state = {}
     for prog in reversed(query.recentProgress):
@@ -46,7 +46,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("pypond_state_audit")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     from pypond_spark.streaming import stream_ewma
     from pypond_spark.streaming.stream import stream_first_seen

@@ -234,7 +234,7 @@ def _attribution_chain_stress(ev) -> float:
     """sf1-class tier for the chained stateful attribution (stream-
     stream interval join -> append-mode windowed argmax): write the
     event frame to parquet, drain stream_attribution_touch(horizon=1h)
-    with availableNow at a pinned 32-way state width, report the drain
+    with availableNow at the stream state width, report the drain
     wall.  The per-key state is one open window row per click plus the
     join buffers the watermark hasn't released — O(active horizon),
     not O(events) — so the wall should scale ~linearly in event count."""
@@ -244,7 +244,8 @@ def _attribution_chain_stress(ev) -> float:
 
     from pyspark.sql import functions as F2
 
-    from pypond_spark.streaming.stream import stream_attribution_touch
+    from pypond_spark.streaming.stream import (_drain_available_now,
+                                               stream_attribution_touch)
     spark = ev.sparkSession
     src = tempfile.mkdtemp(prefix="stress_attr_")
     try:
@@ -264,22 +265,15 @@ def _attribution_chain_stress(ev) -> float:
                   .select("user_id",
                           F2.col("event_id").alias("click_id"), "time"))
         out = stream_attribution_touch(views, clicks, horizon="1h")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        try:
-            t0 = _time.time()
-            # parquet sink, not memory: the memory sink collects every
-            # result row into the driver and OOMs at the 10x tiers
-            q = (out.writeStream.format("parquet")
-                 .option("path", src + "/out")
-                 .option("checkpointLocation", src + "/ck")
-                 .outputMode("append")
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-            wall = _time.time() - t0
-            n = spark.read.parquet(src + "/out").count()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        t0 = _time.time()
+        # parquet sink, not memory: the memory sink collects every
+        # result row into the driver and OOMs at the 10x tiers
+        _drain_available_now(spark, out.writeStream.format("parquet")
+                             .option("path", src + "/out")
+                             .option("checkpointLocation", src + "/ck")
+                             .outputMode("append"))
+        wall = _time.time() - t0
+        n = spark.read.parquet(src + "/out").count()
         print(f"    [attribution_chain] drain {wall:.1f}s -> "
               f"{n:,} attributed clicks")
         return wall
