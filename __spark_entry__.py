@@ -675,7 +675,7 @@ def q_simhash_docs(spark, sf_dir):
     emitted as unsigned 32-bit halves so neither engine deals in the sign
     bit of a 64-bit value."""
     docs = _read(spark, sf_dir, "documents")
-    return dp_dedup.simhash64(docs, hash_fn="md5", as_halves=True)
+    return dp_dedup.simhash64(docs, as_halves=True)
 
 
 def q_text_quality(spark, sf_dir):
@@ -5453,16 +5453,14 @@ def _data_fingerprint(sf_dir: str, table: str) -> tuple:
 
 
 def _pq_books(spark, sf_dir):
-    """PQ codebooks on the BLAS build path (pq_build_arrow, measured 30x
-    the expression build and unit-proven to derive identical quantized
-    codebooks — similarity.py::pq_build_arrow docstring), memoized per
-    sf_dir. The expression build stays in the library as the
-    SQL-replayable recipe the DuckDB oracle recomputes."""
+    """PQ codebooks (similarity.py::pq_build — one BLAS Lloyd pass per
+    round, quantize=6 pins the means), memoized per sf_dir. The DuckDB
+    oracle recomputes the same k-means in its own SQL (_PQ_BODY)."""
     emb = _read(spark, sf_dir, "embeddings")
     key = ("pq_books", sf_dir,
            _data_fingerprint(sf_dir, "embeddings"))
     if key not in _ANN_CACHE:
-        _ANN_CACHE[key] = dp_sim.pq_build_arrow(
+        _ANN_CACHE[key] = dp_sim.pq_build(
             emb, n_blocks=8, n_codes=16, n_iters=2, dim=64, quantize=6)
     return emb, _ANN_CACHE[key]
 
@@ -5480,16 +5478,15 @@ def _ivf_cents(spark, sf_dir, emb=None):
 
 
 def q_pq_codes(spark, sf_dir):
-    """Product-quantization encode on the SCALE path (datapipe/
-    similarity.py::pq_build_arrow + pq_encode_arrow — BLAS matmuls per
-    Arrow batch, measured 30x/8x the expression twins and unit-proven
-    identical): 64-dim float vectors -> 8 one-byte codes against
-    per-block k-means codebooks (seeds = first 16 vectors, 2 Lloyd
-    rounds, quantize=6). The oracle recomputes the identical k-means in
-    SQL (per-block assign/means CTEs), so every code of every vector is
-    verified — the write path of a memory-bounded ANN index."""
+    """Product-quantization encode (datapipe/similarity.py::pq_build +
+    pq_encode — BLAS matmuls per Arrow batch): 64-dim float vectors ->
+    8 one-byte codes against per-block k-means codebooks (seeds = first
+    16 vectors, 2 Lloyd rounds, quantize=6). The oracle recomputes the
+    identical k-means in SQL (per-block assign/means CTEs), so every code
+    of every vector is verified — the write path of a memory-bounded ANN
+    index."""
     emb, books = _pq_books(spark, sf_dir)
-    out = dp_sim.pq_encode_arrow(emb, books)
+    out = dp_sim.pq_encode(emb, books)
     # BIGINT codes: the Arrow path emits int32, the oracle BIGINT — the
     # driver hash is width-insensitive (14 green int32 queries prove it)
     # but this row has never had a driver slot, so don't bet on it
@@ -5499,7 +5496,7 @@ def q_pq_codes(spark, sf_dir):
 
 def q_pq_topk_adc(spark, sf_dir):
     """PQ asymmetric-distance top-k (datapipe/similarity.py::pq_topk,
-    arrow=True so the encode runs the BLAS path): the query stays
+    whose encode is the BLAS pq_encode): the query stays
     full-precision, the corpus is 8 code bytes per row, scoring is table
     lookups + an 8-term add — the bandwidth shape that makes
     billion-vector ANN fit in memory. Rounded distances + id tiebreak
@@ -5507,7 +5504,7 @@ def q_pq_topk_adc(spark, sf_dir):
     emb, books = _pq_books(spark, sf_dir)
     q = [float(x) for x in
          emb.where(F.col("vec_id") == 1).first()["embedding"]]
-    out = dp_sim.pq_topk(emb, q, books, k=5, arrow=True)
+    out = dp_sim.pq_topk(emb, q, books, k=5)
     return out.select("rank", "vec_id", "adc")
 
 
@@ -7060,18 +7057,17 @@ def q_rollup_daily_local_dst(spark, sf_dir):
 
 
 def q_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ composition (datapipe/similarity.py::ivfpq_topk,
-    arrow=True encode, pq_build_arrow codebooks): coarse IVF routing
-    prunes to nprobe=2 of 8 cells, PQ ADC scores only those cells'
-    8-byte codes — the production billion-vector layout, both halves
-    recomputed independently by the SQL oracle (IVF k-means CTEs + PQ
-    k-means CTEs joined on the probe filter)."""
+    """IVF-PQ composition (datapipe/similarity.py::ivfpq_topk, BLAS
+    pq_encode, pq_build codebooks): coarse IVF routing prunes to
+    nprobe=2 of 8 cells, PQ ADC scores only those cells' 8-byte codes —
+    the production billion-vector layout, both halves recomputed
+    independently by the SQL oracle (IVF k-means CTEs + PQ k-means CTEs
+    joined on the probe filter)."""
     emb, books = _pq_books(spark, sf_dir)
     q = [float(x) for x in
          emb.where(F.col("vec_id") == 1).first()["embedding"]]
     cents = _ivf_cents(spark, sf_dir, emb)
-    out = dp_sim.ivfpq_topk(emb, q, cents, books, k=5, nprobe=2,
-                            arrow=True)
+    out = dp_sim.ivfpq_topk(emb, q, cents, books, k=5, nprobe=2)
     return out.select("rank", "vec_id", "adc")
 
 

@@ -10,8 +10,10 @@ Scale design notes (100 TB):
   exact Jaccard only on candidates;
 - SimHash: 64 per-bit partial sums composed into one BIGINT — all map-side
   expression work, one groupBy per doc (no shuffle beyond the agg);
-- md5 (not xxhash64) is used for signatures so results are reproducible
-  across engines (the DuckDB oracle computes the same strings).
+- md5 is the one token and shingle hash of the near-dup family (MinHash,
+  LSH bands, SimHash, the persisted index) so results are reproducible
+  across engines (the DuckDB oracle computes the same strings) and the
+  stream twins replay the same law.
 """
 
 from __future__ import annotations
@@ -55,7 +57,7 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
 
 def minhash_signature(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 4,
-                      shingle_n: int = 3, hash_fn: str = "md5") -> DataFrame:
+                      shingle_n: int = 3) -> DataFrame:
     """MinHash signature: per seed k, min over shingles of a derived hash.
 
     Returns (id, m0..m{k-1}) BIGINT columns. One explode + one groupBy;
@@ -69,23 +71,15 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     ``num_hashes``: the dominant work at corpus scale is one digest per
     shingle, not k.
 
-    ``hash_fn='md5'`` (default) is reproducible across engines (the DuckDB
-    oracle derives identical values from the same md5 hex); ``'xxhash64'``
-    is the fast path (no hex parse, Spark-only) for production corpora.
-    All arithmetic stays in [0, 2^35] — safe under ANSI overflow checks.
+    The digest is md5, reproducible across engines (the DuckDB oracle
+    derives identical values from the same md5 hex). All arithmetic
+    stays in [0, 2^35] — safe under ANSI overflow checks.
     """
     sh = word_shingles(df, text_col, shingle_n, id_col)
     two32 = F.lit(4294967296)
-    if hash_fn == "md5":
-        d = F.md5(F.col("shingle"))
-        h1 = F.conv(d.substr(1, 8), 16, 10).cast("long")
-        h2 = F.conv(d.substr(9, 8), 16, 10).cast("long")
-    elif hash_fn == "xxhash64":
-        d = F.xxhash64(F.col("shingle"))
-        h1 = F.pmod(d, two32)
-        h2 = F.pmod(F.shiftrightunsigned(d, 32), two32)
-    else:
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+    d = F.md5(F.col("shingle"))
+    h1 = F.conv(d.substr(1, 8), 16, 10).cast("long")
+    h2 = F.conv(d.substr(9, 8), 16, 10).cast("long")
     hashes = [F.pmod(h1 + F.lit(k) * h2, two32) for k in range(num_hashes)]
     aggs = [F.min(h).alias(f"m{k}") for k, h in enumerate(hashes)]
     return sh.groupBy(id_col).agg(*aggs)
@@ -94,7 +88,6 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_hashes: int = 8,
                         band_size: int = 4, shingle_n: int = 3,
-                        hash_fn: str = "md5",
                         max_bucket: int | None = None) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding.
 
@@ -128,7 +121,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     # the session lifetime. Spark's exchange reuse does not replace it: an
     # uncached self-join recomputed the signatures on both sides.
     buckets = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
-                               shingle_n, hash_fn).localCheckpoint()
+                               shingle_n).localCheckpoint()
     if max_bucket is not None:
         if max_bucket < 2:
             raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
@@ -168,31 +161,20 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
 
 def lsh_band_buckets(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", num_hashes: int = 8,
-                     band_size: int = 4, shingle_n: int = 3,
-                     hash_fn: str = "md5") -> DataFrame:
+                     band_size: int = 4, shingle_n: int = 3) -> DataFrame:
     """The (id, band-bucket) table LSH banding joins on — factored out of
     :func:`lsh_candidate_pairs` so scale audits can measure the bucket
     occupancy distribution (candidate-join cost is Σ|bucket|², the number
     this table bounds) without re-implementing the banding scheme."""
     if num_hashes % band_size:
         raise ValueError("num_hashes must be a multiple of band_size")
-    sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n,
-                            hash_fn)
-    n_bands = num_hashes // band_size
-    if hash_fn == "md5":
-        bands = F.array(*[
-            F.md5(F.concat_ws("|", F.lit(str(b)),
-                              *[F.col(f"m{b * band_size + i}").cast("string")
-                                for i in range(band_size)]))
-            for b in range(n_bands)
-        ])
-    else:
-        # m columns are BIGINT; xxhash64 hashes them natively, no casts
-        bands = F.array(*[
-            F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
-                                   for i in range(band_size)]).cast("string")
-            for b in range(n_bands)
-        ])
+    sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
+    bands = F.array(*[
+        F.md5(F.concat_ws("|", F.lit(str(b)),
+                          *[F.col(f"m{b * band_size + i}").cast("string")
+                            for i in range(band_size)]))
+        for b in range(num_hashes // band_size)
+    ])
     return sig.select(F.col(id_col), F.explode(bands).alias("band"))
 
 
@@ -469,8 +451,7 @@ def dedup_documents(df: DataFrame, text_col: str = "text",
 
 
 def simhash64(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", hash_fn: str = "xxhash64",
-              as_halves: bool = False) -> DataFrame:
+              id_col: str = "doc_id", as_halves: bool = False) -> DataFrame:
     """64-bit SimHash per document.
 
     ``as_halves=True`` emits unsigned 32-bit columns ``sim_hi``/``sim_lo``
@@ -485,25 +466,17 @@ def simhash64(df: DataFrame, text_col: str = "text",
     groupBy(doc) shuffles only (id, hash) longs with map-side partial
     sums — the scalable classic shape.
 
-    ``hash_fn='xxhash64'`` (default) is the fast path; ``'md5'`` builds the
-    64-bit token hash from the first 16 hex chars of md5 (two 32-bit halves,
-    hi<<32 | lo) so a DuckDB oracle can reproduce it exactly.
+    The 64-bit token hash is the first 16 hex chars of md5 (two 32-bit
+    halves, hi<<32 | lo), so a DuckDB oracle reproduces it exactly and
+    the stream twin ``simhash_rowwise`` replays the same law.
 
     (A fully row-wise higher-order-function variant was measured 6x slower:
     Catalyst re-inlines the token-hash expression into each of the 64 bit
     filters, recomputing hashes 64x per row.)
     """
-    if hash_fn == "xxhash64":
-        def tok_hash(t):
-            return F.xxhash64(t)
-    elif hash_fn == "md5":
-        def tok_hash(t):
-            d = F.md5(t)
-            hi = F.conv(d.substr(1, 8), 16, 10).cast("long")
-            lo = F.conv(d.substr(9, 8), 16, 10).cast("long")
-            return F.shiftleft(hi, 32).bitwiseOR(lo)
-    else:
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+    d = F.md5(F.col("t"))
+    hi = F.conv(d.substr(1, 8), 16, 10).cast("long")
+    lo = F.conv(d.substr(9, 8), 16, 10).cast("long")
     # hash AFTER explode, not inside transform(): a lambda in transform()
     # is an interpreted HOF per element, while a post-explode column expr
     # is whole-stage-codegen — measured 2.3x end-to-end at sf0.1.
@@ -513,7 +486,7 @@ def simhash64(df: DataFrame, text_col: str = "text",
         F.col(id_col),
         F.explode(F.slice(word_tokens(text_col), 1, _SIMHASH_MAX_TOKENS))
         .alias("t")) \
-        .select(F.col(id_col), tok_hash(F.col("t")).alias("h"))
+        .select(F.col(id_col), F.shiftleft(hi, 32).bitwiseOR(lo).alias("h"))
     # Lane-packed bit counting: accumulator i sums bits i, i+22, i+44 in
     # three 21-bit lanes of one LONG — 23 aggregate buffers instead of 65
     # (the agg buffer updates, not the token hashing, dominate simhash
@@ -648,12 +621,10 @@ def dedup_against(df: DataFrame, reference: DataFrame,
 
 def _band_pfx(band: Column, prefix_chars: int = 2) -> Column:
     """Partition-prefix for a band key: ``prefix_chars`` hex chars of a
-    RE-hash of the band string. Re-hashing (rather than
-    ``substring(band, 1, k)``) keeps the 16^k-way prefix distribution
-    uniform for EVERY ``hash_fn`` — ``xxhash64`` band keys are signed
-    decimal strings whose leading characters concentrate on a handful
-    of values ('-1', '1', ...), which would skew both the directory
-    layout and the pruned scan. Write and query side both call this,
+    RE-hash of the band string. The re-hash is part of the on-disk
+    index layout: every index already written names its ``band_pfx``
+    directories by ``md5(band)``, so the query side must derive the
+    prefix the same way to find them. Write and query side both call this,
     so the derivation can never drift. The 'x' sentinel keeps every
     partition value non-numeric: a small index whose prefixes happen
     to be all digits would otherwise have Spark's partition-column
@@ -750,7 +721,6 @@ def _estimated_bytes(df: DataFrame) -> int:
 def write_neardup_index(df: DataFrame, path: str, text_col: str = "text",
                         id_col: str = "doc_id", num_hashes: int = 8,
                         band_size: int = 4, shingle_n: int = 3,
-                        hash_fn: str = "md5",
                         mode: str = "overwrite",
                         files_per_prefix: int = 4,
                         prefix_chars: int = 2,
@@ -769,10 +739,9 @@ def write_neardup_index(df: DataFrame, path: str, text_col: str = "text",
       :func:`~pypond_spark.datapipe.similarity.write_ann_index`
       pattern): ``path/bands/band_pfx=<xx>/...`` — the (id,
       band-bucket) rows, PARTITION-pruned on a ``prefix_chars``-hex-char
-      re-hash prefix of the band key (256 directories at the default,
-      uniform for every hash_fn): a query batch touching a handful of
-      prefixes scans a handful of directories, never the corpus-wide
-      table.
+      re-hash prefix of the band key (256 directories at the default):
+      a query batch touching a handful of prefixes scans a handful of
+      directories, never the corpus-wide table.
     - ``layout="flat"``: the same rows with ``band_pfx`` as a plain
       DATA column, written as a handful of files with no partition
       directories.  Below roughly a gigabyte of corpus the partitioned
@@ -813,7 +782,7 @@ def write_neardup_index(df: DataFrame, path: str, text_col: str = "text",
                 f"{prefix_chars} — prefix_chars is part of the layout")
         layout = prior.get("layout", layout)
     buckets = lsh_band_buckets(df, text_col, id_col, num_hashes,
-                               band_size, shingle_n, hash_fn)
+                               band_size, shingle_n)
     bands = buckets.withColumn("band_pfx",
                                _band_pfx(F.col("band"), prefix_chars))
 
@@ -864,7 +833,7 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
                           threshold: float = 0.8,
                           text_col: str = "text", id_col: str = "doc_id",
                           num_hashes: int = 8, band_size: int = 4,
-                          shingle_n: int = 3, hash_fn: str = "md5",
+                          shingle_n: int = 3,
                           keep_scores: bool = False,
                           checkpoint: bool = True,
                           max_candidates: int | None = None,
@@ -922,7 +891,7 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
                         f"be empty and every duplicate would pass")
                 break
     nb = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
-                          shingle_n, hash_fn) \
+                          shingle_n) \
         .withColumnRenamed(id_col, "__new_id").localCheckpoint()
     pfx = [r["p"] for r in
            nb.select(_band_pfx(F.col("band"), prefix_chars)

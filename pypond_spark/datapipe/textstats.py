@@ -768,24 +768,16 @@ def langid_ngram(train: DataFrame, corpus: DataFrame,
 
 
 def fingerprint(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", shingle_n: int = 3,
-                hash_fn: str = "md5") -> DataFrame:
-    """Document fingerprint: min digest over word n-gram shingles
-    (a 1-hash MinHash — the winnowing idea reduced to one band).
-
-    ``hash_fn='md5'`` is cross-engine reproducible; ``'xxhash64'`` is the
-    ~10x fast path (fingerprint column becomes a LONG rendered as string).
+                id_col: str = "doc_id", shingle_n: int = 3) -> DataFrame:
+    """Document fingerprint: min md5 digest over word n-gram shingles
+    (a 1-hash MinHash — the winnowing idea reduced to one band), so the
+    value is reproducible across engines.
     """
     toks = word_tokens(text_col)
     count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
-    if hash_fn == "md5":
-        hasher = lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, shingle_n)))  # noqa: E731
-    elif hash_fn == "xxhash64":
-        hasher = lambda i: F.xxhash64(  # noqa: E731
-            F.concat_ws(" ", F.slice(toks, i, shingle_n))).cast("string")
-    else:
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
-    shingles = F.transform(F.sequence(F.lit(1), count), hasher)
+    shingles = F.transform(
+        F.sequence(F.lit(1), count),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, shingle_n))))
     return spread(df).select(F.col(id_col),
                              F.array_min(shingles).alias("fingerprint"))
 

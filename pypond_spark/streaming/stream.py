@@ -24,9 +24,9 @@ when no series key is given (and its drop), the key-prefixed output schema,
 the state schema, and the ``append`` / ``NoTimeout`` call. Each processor
 supplies only a step function, which sees the WHOLE group (every Arrow
 chunk), stable-sorted by time and optional tiebreak, and never an empty
-group. The dedup gates (first-seen, SimHash and MinHash) keep their own
-calls: they key on a digest or band, not a series, and arm event-time
-timeouts when given a TTL.
+group. The three dedup gates (first-seen, SimHash and MinHash) share a
+second shell, ``_first_seen_claims``: they key on a digest or band, not a
+series, and arm event-time timeouts when given a TTL.
 
 State width: every state partition costs a state store and a Python state
 start per micro-batch, and AQE is off inside streaming queries. So every
@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..datapipe._util import py_word_tokens, word_tokens
+from ..datapipe._util import py_word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
 from ..session import shuffle_width
@@ -1801,23 +1801,47 @@ exactly the extra batches needed to fire timers the advanced watermark
 unlocked."""
 
 
-def _first_seen_ttl_prep(keyed: DataFrame, ttl, time_col: str,
-                         late: str):
-    """Validate + normalize the claim-TTL options: returns
-    (watermarked frame, ttl_ms, extra state fields).  ``ttl=None``
-    passes the frame through untouched with the 1-field seen schema."""
-    if ttl is None:
-        return keyed, None, [T.StructField("seen", T.BooleanType())]
-    ms = ttl if isinstance(ttl, int) else window_duration_ms(ttl)
-    if not ms or ms <= 0:
-        raise ValueError(f"ttl must be a positive duration, got {ttl!r}")
-    if time_col not in keyed.columns:
-        raise ValueError(
-            f"ttl needs event-time column {time_col!r} in the frame "
-            f"(claim expiry is watermark-bounded)")
-    return (keyed.withWatermark(time_col, late), ms,
-            [T.StructField("seen", T.BooleanType()),
-             T.StructField("deadline", T.LongType())])
+def _first_seen_claims(sdf: DataFrame, key_col: str,
+                       payload_cols: Sequence[str], order_col: str,
+                       ttl, time_col: str, late: str,
+                       keyed=None) -> DataFrame:
+    """The shell of the three claim gates: validate the claim-TTL
+    options, key the frame, and run the first-seen state operator.
+
+    ``keyed(carry)`` builds the claim-keyed frame from ``sdf``, passing
+    the ``carry`` columns through (the event-time column when ``ttl``
+    is set); without it ``sdf`` is keyed as is.  Both TTL checks run
+    before ``keyed`` is called, so a frame with no event-time column
+    gets the contract error below, not a KeyError from a carry-schema
+    build.  Output: ``key_col`` + ``payload_cols``, typed as in the
+    keyed frame.
+    """
+    ms = None
+    state_fields = [T.StructField("seen", T.BooleanType())]
+    if ttl is not None:
+        ms = ttl if isinstance(ttl, int) else window_duration_ms(ttl)
+        if not ms or ms <= 0:
+            raise ValueError(
+                f"ttl must be a positive duration, got {ttl!r}")
+        if time_col not in sdf.columns:
+            raise ValueError(
+                f"ttl needs event-time column {time_col!r} in the frame "
+                f"(claim expiry is watermark-bounded)")
+        state_fields.append(T.StructField("deadline", T.LongType()))
+    if keyed is not None:
+        sdf = keyed((time_col,) if ms is not None else ())
+    out_schema = T.StructType([sdf.schema[c]
+                               for c in (key_col, *payload_cols)])
+    if ms is not None:
+        sdf = sdf.withWatermark(time_col, late)
+    return sdf.groupBy(key_col).applyInPandasWithState(
+        _first_seen_state_fn([key_col], list(payload_cols), order_col,
+                             ms, time_col),
+        outputStructType=out_schema,
+        stateStructType=T.StructType(state_fields),
+        outputMode="append",
+        timeoutConf=(GroupStateTimeout.EventTimeTimeout
+                     if ms is not None else GroupStateTimeout.NoTimeout))
 
 
 def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
@@ -1851,19 +1875,8 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
     matter downstream).  See ``_FIRST_SEEN_TTL_NOTE`` for why the TTL
     is event-time rather than processing-time.
     """
-    key_fields = [sdf.schema[key_col]]
-    pay_fields = [sdf.schema[c] for c in payload_cols]
-    out_schema = T.StructType(key_fields + pay_fields)
-    sdf, ms, state_fields = _first_seen_ttl_prep(sdf, ttl, time_col,
-                                                 late)
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        _first_seen_state_fn([key_col], list(payload_cols), order_col,
-                             ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+    return _first_seen_claims(sdf, key_col, payload_cols, order_col, ttl,
+                              time_col, late)
 
 
 def _cusum_state_fn(field: str, keys: list[str], time_col: str,
@@ -2096,16 +2109,7 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
     if n_bands < 2 or n_bands % 2 or 64 % n_bands:
         raise ValueError(f"n_bands must be even and divide 64, "
                          f"got {n_bands}")
-    if ttl is not None and time_col not in sdf.columns:
-        # the carry-schema build below would KeyError first — raise the
-        # same clear contract error _first_seen_ttl_prep gives
-        raise ValueError(
-            f"ttl needs event-time column {time_col!r} in the frame "
-            f"(claim expiry is watermark-bounded)")
     width = 64 // n_bands
-    sh = simhash_rowwise(sdf, text_col, id_col,
-                         carry_cols=(time_col,) if ttl is not None
-                         else ())
     # band values from the unsigned 32-bit halves directly — never
     # reassemble the 64-bit hash (hi << 32 overflows a signed BIGINT)
     bands = F.array(*[
@@ -2116,38 +2120,47 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
                  .bitwiseAND(F.lit((1 << width) - 1)).cast("string"))
         for k in range(n_bands)
     ])
-    carry = [F.col(time_col)] if ttl is not None else []
-    keyed = sh.select(F.col(id_col), *carry,
-                      F.explode(bands).alias("band"))
-    out_schema = T.StructType([T.StructField("band", T.StringType()),
-                               sdf.schema[id_col]])
-    keyed, ms, state_fields = _first_seen_ttl_prep(keyed, ttl, time_col,
-                                                   late)
-    return keyed.groupBy("band").applyInPandasWithState(
-        _first_seen_state_fn(["band"], [id_col], id_col, ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+
+    def keyed(carry):
+        sh = simhash_rowwise(sdf, text_col, id_col, carry_cols=carry)
+        return sh.select(F.col(id_col), *carry,
+                         F.explode(bands).alias("band"))
+
+    return _first_seen_claims(sdf, "band", [id_col], id_col, ttl,
+                              time_col, late, keyed)
 
 
-def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
-                         num_hashes: int, band_size: int,
-                         shingle_n: int,
-                         carry_cols: Sequence[str]) -> DataFrame:
-    """md5 engine of :func:`minhash_bands_rowwise` as one vectorized
-    Arrow stage: C md5 per shingle (``hashlib``), per-doc Kirsch-
-    Mitzenmacher min-folds as ``numpy.minimum.reduceat`` over the doc
-    boundaries of the whole batch.  Emits the IDENTICAL
-    ``(id, *carry, band)`` rows as the interpreted HOF fold it
-    replaces: h1/h2 are the first/second 4 md5 bytes big-endian
-    (== ``conv(md5_hex[0:8], 16, 10)``), the tokens are
-    :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python
-    form of the batch ``word_tokens`` law), a NULL, empty or token-less
-    text yields the single empty-string shingle the batch
-    ``word_shingles`` emits, and the band digest is the same
-    ``md5("b|m0|..|m3")`` hex string."""
+def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
+                          id_col: str = "doc_id", num_hashes: int = 8,
+                          band_size: int = 4, shingle_n: int = 3,
+                          carry_cols: Sequence[str] = ()) -> DataFrame:
+    """Stateless per-row MinHash band keys for streaming frames — the
+    batch ``minhash_signature`` is a shingle explode + per-doc min
+    aggregate (a streaming agg that could not feed append-mode state);
+    this computes the IDENTICAL signatures row-locally.  Same shingling
+    (``greatest(n_toks-2, 1)`` slices of the ``word_tokens`` law), same
+    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` derivation, same band
+    digests — a batch SQL twin over ``word_shingles`` replays it
+    exactly.
+
+    Output: ``(id_col, *carry_cols, band)`` — one row per band per
+    document; ``carry_cols`` pass through untouched.
+
+    One vectorized Arrow stage: C md5 per shingle (``hashlib``), per-doc
+    min-folds as ``numpy.minimum.reduceat`` over the doc boundaries of
+    the whole batch (measured 3.3x the interpreted JVM fold it replaced,
+    guide §4.2 "heavy lifting in native code").  h1/h2 are the
+    first/second 4 md5 bytes big-endian (== ``conv(md5_hex[0:8], 16,
+    10)``), the tokens are
+    :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python form
+    of the batch ``word_tokens`` law), a NULL, empty or token-less text
+    yields the single empty-string shingle the batch ``word_shingles``
+    emits, and the band digest is the same ``md5("b|m0|..|m3")`` hex
+    string — pinned by the equality tests against the batch
+    ``lsh_band_buckets``.
+    """
+    if num_hashes % band_size:
+        raise ValueError("num_hashes must be a multiple of band_size")
     n_bands = num_hashes // band_size
     carry = list(carry_cols)
     fields = [sdf.schema[id_col]] + [sdf.schema[c] for c in carry] + [
@@ -2198,93 +2211,9 @@ def _minhash_bands_arrow(sdf: DataFrame, text_col: str, id_col: str,
     return sdf.select(*cols).mapInPandas(run, out_schema)
 
 
-def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", num_hashes: int = 8,
-                          band_size: int = 4, shingle_n: int = 3,
-                          hash_fn: str = "md5",
-                          carry_cols: Sequence[str] = ()) -> DataFrame:
-    """Stateless per-row MinHash band keys for streaming frames — the
-    batch ``minhash_signature`` is a shingle explode + per-doc min
-    aggregate (a streaming agg that could not feed append-mode state);
-    this computes the IDENTICAL signatures row-locally.  Same shingling
-    (``greatest(n_toks-2, 1)`` slices of the ``word_tokens`` law), same
-    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` derivation, same band
-    digests — a batch SQL twin over ``word_shingles`` replays it
-    exactly.
-
-    Output: ``(id_col, band)`` — one row per band per document.
-
-    Engines (r15): the md5 law runs as ONE vectorized Arrow stage
-    (:func:`_minhash_bands_arrow` — hashlib's C md5 over the same
-    shingles, numpy ``minimum.reduceat`` for the per-doc folds;
-    measured 3.3x the interpreted-HOF throughput that previously
-    dominated the drain, guide §4.2 "heavy lifting in native code"),
-    byte-identical through the shared ``py_word_tokens`` replay and
-    pinned by the equality tests against the batch
-    ``lsh_band_buckets``.  The xxhash64 fast path stays on the
-    JVM HOF fold — its per-shingle cost is a seeded integer hash, not
-    an md5+hex parse, and reproducing Spark's multi-column xxhash64
-    seed chain outside the JVM would be a second implementation of the
-    law for no measured win.
-    """
-    if num_hashes % band_size:
-        raise ValueError("num_hashes must be a multiple of band_size")
-    if hash_fn == "md5":
-        return _minhash_bands_arrow(sdf, text_col, id_col, num_hashes,
-                                    band_size, shingle_n, carry_cols)
-    if hash_fn != "xxhash64":
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
-    toks = word_tokens(text_col)
-    count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
-    sh = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_n)))
-    two32 = 4294967296
-    # ONE fold carrying all k mins as a struct — k separate aggregate()
-    # folds would each re-inline the shingle/md5 transform upstream
-    # (Catalyst collapses the projections), hashing every shingle k
-    # times interpreted; measured 7.6x slower at sf0.1
-    init = ", ".join(f"'m{k}', CAST({two32} AS BIGINT)"
-                     for k in range(num_hashes))
-    # the production fast path (same split as the batch
-    # minhash_signature): no hex parse, Spark-only values
-    def _sh_hash(s):
-        d = F.xxhash64(s)
-        return F.struct(
-            F.pmod(d, F.lit(two32)).alias("h1"),
-            F.pmod(F.shiftrightunsigned(d, 32), F.lit(two32))
-            .alias("h2"))
-    carry = [F.col(c) for c in carry_cols]
-    hs = F.transform(sh, _sh_hash)
-
-    def _merge(acc, x):
-        return F.struct(*[
-            F.least(acc[f"m{k}"],
-                    F.pmod(x["h1"] + F.lit(k) * x["h2"], F.lit(two32)))
-            .alias(f"m{k}")
-            for k in range(num_hashes)])
-
-    folded = F.aggregate(hs, F.expr(f"named_struct({init})"), _merge)
-    sig = sdf.select(F.col(id_col), *carry,
-                     folded.alias("__mh")).select(
-        F.col(id_col), *[F.col(c) for c in carry_cols],
-        *[F.col(f"__mh.m{k}").alias(f"m{k}")
-          for k in range(num_hashes)])
-    n_bands = num_hashes // band_size
-    bands = F.array(*[
-        F.xxhash64(F.lit(b), *[F.col(f"m{b * band_size + i}")
-                               for i in range(band_size)])
-        .cast("string")
-        for b in range(n_bands)
-    ])
-    return sig.select(F.col(id_col), *[F.col(c) for c in carry_cols],
-                      F.explode(bands).alias("band"))
-
-
 def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", num_hashes: int = 8,
                          band_size: int = 4, shingle_n: int = 3,
-                         hash_fn: str = "md5",
                          ttl: str | int | None = None,
                          time_col: str = "time",
                          late: str = "0 seconds",
@@ -2318,30 +2247,18 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
     of genuinely novel bands — banding is already heuristic, but that
     trade must be opted into, so it is not the default here).
     """
-    if ttl is not None and time_col not in sdf.columns:
-        raise ValueError(
-            f"ttl needs event-time column {time_col!r} in the frame "
-            f"(claim expiry is watermark-bounded)")
-    keyed = minhash_bands_rowwise(sdf, text_col, id_col, num_hashes,
-                                  band_size, shingle_n, hash_fn,
-                                  carry_cols=(time_col,)
-                                  if ttl is not None else ())
-    if index_path is not None:
+    def keyed(carry):
+        out = minhash_bands_rowwise(sdf, text_col, id_col, num_hashes,
+                                    band_size, shingle_n, carry_cols=carry)
+        if index_path is None:
+            return out
         idx = (sdf.sparkSession.read
                .parquet(index_path.rstrip("/") + "/bands")
                .select("band").distinct().persist())
-        keyed = keyed.join(idx, "band", "left_anti")
-    out_schema = T.StructType([T.StructField("band", T.StringType()),
-                               sdf.schema[id_col]])
-    keyed, ms, state_fields = _first_seen_ttl_prep(keyed, ttl, time_col,
-                                                   late)
-    return keyed.groupBy("band").applyInPandasWithState(
-        _first_seen_state_fn(["band"], [id_col], id_col, ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+        return out.join(idx, "band", "left_anti")
+
+    return _first_seen_claims(sdf, "band", [id_col], id_col, ttl,
+                              time_col, late, keyed)
 
 
 def _xchart_state_fn(field: str, keys: list[str], time_col: str,

@@ -254,7 +254,7 @@ def test_word_token_law_cross_engine(spark, texts):
             .unionByName(tagged("mh_arrow", minhash_bands_rowwise(df),
                                 F.col("band")))
             .unionByName(tagged("sh_batch", simhash64(
-                df, hash_fn="md5", as_halves=True), halves))
+                df, as_halves=True), halves))
             .unionByName(tagged("sh_arrow", simhash_rowwise(df), halves))
             .collect())
     got = {}

@@ -1017,7 +1017,7 @@ def test_stream_cusum_cross_batch(spark, tmp_path):
 
 def _simhash64_py(text, max_tokens=1 << 20):
     """Row-wise SimHash oracle for the batch
-    ``dedup.simhash64(hash_fn='md5', as_halves=True)`` semantics: ASCII
+    ``dedup.simhash64(as_halves=True)`` semantics: ASCII
     ``\\s+`` word split (Java's ``\\s`` class), 2^20-token cap, per
     token md5's first 16 hex chars as an unsigned 64-bit hash, ±1 per
     bit, sign of the sum.  Returns unsigned 32-bit ``(sim_hi,
@@ -1169,7 +1169,7 @@ def test_stream_simhash_dedup_ttl_eviction(spark, tmp_path):
 
 
 def test_simhash_py_unicode_whitespace_parity(spark):
-    """_simhash64_py must match the batch simhash64(hash_fn='md5')
+    """_simhash64_py must match the batch simhash64
     bit-for-bit even when the text carries *Unicode* whitespace at the
     edges: Python str.strip() removes U+00A0/U+2028/U+0085 etc. that
     Java's \\s (Spark trim / the batch split) does not, so a naive
@@ -1186,7 +1186,7 @@ def test_simhash_py_unicode_whitespace_parity(spark):
         [(i, t) for i, t in enumerate(texts)],
         "doc_id long, text string")
     batch = {r["doc_id"]: (r["sim_hi"], r["sim_lo"]) for r in
-             simhash64(df, hash_fn="md5", as_halves=True).collect()}
+             simhash64(df, as_halves=True).collect()}
     for i, t in enumerate(texts):
         assert _simhash64_py(t) == batch[i], f"doc {i} diverged"
 
@@ -1201,7 +1201,7 @@ def test_simhash_rowwise_trailing_tokenless_doc(spark):
     df = spark.createDataFrame(list(enumerate(texts)),
                                "doc_id long, text string").coalesce(1)
     batch = {r["doc_id"]: (r["sim_hi"], r["sim_lo"]) for r in
-             simhash64(df, hash_fn="md5", as_halves=True).collect()}
+             simhash64(df, as_halves=True).collect()}
     rowwise = {r["doc_id"]: (r["sim_hi"], r["sim_lo"])
                for r in simhash_rowwise(df).collect()}
     assert rowwise == batch == {0: _simhash64_py(texts[0])}
@@ -1235,7 +1235,7 @@ def test_stream_minhash_dedup_cross_batch(spark, tmp_path):
     the original (claims both bands); batch 2's exact clone claims
     nothing, and a different doc claims both of its own bands.  The
     band keys are checked against the BATCH lsh_band_buckets values —
-    the row-wise HOF signatures are the same md5 derivation."""
+    the row-wise Arrow signatures are the same md5 derivation."""
     import json as _json
     from pyspark.sql import types as T2
     from pypond_spark.datapipe.dedup import lsh_band_buckets
@@ -1271,19 +1271,9 @@ def test_stream_minhash_dedup_cross_batch(spark, tmp_path):
     assert claims[1] == batch_bands[1] and len(claims[1]) == 2
     assert 2 not in claims                      # exact clone suppressed
     assert claims[3] == batch_bands[3]
-    # the xxhash64 production path matches the batch fast path too
-    from pypond_spark.streaming.stream import minhash_bands_rowwise
-    fast_row = {(r["doc_id"], r["band"]) for r in
-                minhash_bands_rowwise(bdf, hash_fn="xxhash64").collect()}
-    fast_batch = {(r["doc_id"], r["band"]) for r in
-                  lsh_band_buckets(bdf, hash_fn="xxhash64").collect()}
-    assert fast_row == fast_batch
     with pytest.raises(ValueError, match="multiple"):
         stream_minhash_dedup(spark.readStream.schema(schema)
                              .json(str(src)), num_hashes=7)
-    with pytest.raises(ValueError, match="hash_fn"):
-        stream_minhash_dedup(spark.readStream.schema(schema)
-                             .json(str(src)), hash_fn="sha1")
 
 
 def test_stream_minhash_dedup_against_index(spark, tmp_path):

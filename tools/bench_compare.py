@@ -17,6 +17,10 @@ half of the wall growth — separating a genuine plan regression (time up,
 GC flat) from shared-JVM GC/memory noise (time and GC up together, the
 r7 `embedding_near_dups` 9.2s-shared vs 5.2s-isolated case) without
 reruns.
+
+After the regression lines it prints every query's seconds saved,
+largest first (queries under ``MIN_SEC`` on both sides are left out),
+then the common-query totals and the median per-query ratio.
 """
 
 from __future__ import annotations
@@ -26,6 +30,9 @@ import statistics
 import sys
 
 THRESHOLD = 1.5
+
+#: the saved-seconds table skips queries this fast on both sides
+MIN_SEC = 0.3
 
 
 def load(path: str) -> dict:
@@ -90,6 +97,27 @@ def _min_or_none(xs):
     return min(xs) if xs else None
 
 
+def print_saved(bq: dict, nq: dict) -> None:
+    """Seconds saved per common query, largest first, then the totals
+    and the median per-query ratio."""
+    common = sorted(set(bq) & set(nq))
+    rows = sorted(((bq[n] - nq[n], n) for n in common
+                   if max(bq[n], nq[n]) >= MIN_SEC), reverse=True)
+    print(f"\n{'query':34s} {'before':>8s} {'after':>8s} {'ratio':>6s} "
+          f"{'saved':>7s}")
+    for saved, n in rows:
+        ratio = nq[n] / bq[n] if bq[n] else float("inf")
+        print(f"{n:34s} {bq[n]:8.3f} {nq[n]:8.3f} {ratio:6.2f} "
+              f"{saved:7.3f}")
+    tb = sum(bq[n] for n in common)
+    ta = sum(nq[n] for n in common)
+    ratios = [nq[n] / bq[n] for n in common if bq[n] > 0]
+    if tb and ratios:
+        print(f"common {len(common)} queries: total {tb:.1f}s -> "
+              f"{ta:.1f}s ({ta / tb:.3f}x), median per-query ratio "
+              f"{statistics.median(ratios):.3f}")
+
+
 def main() -> None:
     if len(sys.argv) != 3:
         sys.exit(__doc__)
@@ -139,6 +167,7 @@ def main() -> None:
         missing = [n for n in missing if n not in skipped]
     for name in missing:
         print(f"MISSING{name}: {bq[name]:.2f}s in baseline, absent now")
+    print_saved(bq, nq)
     print(f"\ntotal: {base['value']:.2f}s -> {now['value']:.2f}s")
     if regressed or missing:
         if regressed:

@@ -705,11 +705,12 @@ def _textchain_stress(spark, n: int) -> float:
 def main() -> None:
     mrows = float(sys.argv[1]) if len(sys.argv) > 1 else 20.0
     only = set(sys.argv[2:])
+    if "pq_encode_arrow_2m" in only:
+        only.add("pq_build_arrow_2m")   # the encode needs its codebooks
     n = int(mrows * 1_000_000)
     spark = get_spark("pypond_stress")
     spark.sparkContext.setLogLevel("ERROR")
-    emb_ops = {"pq_build_2m", "pq_encode_2m", "pq_encode_arrow_2m",
-               "pq_build_arrow_2m"}
+    emb_ops = {"pq_build_arrow_2m", "pq_encode_arrow_2m"}
     doc_ops = {"repeated_spans", "dsir_weights", "pack_bins",
                "char_entropy", "rrf_fusion", "bpe_tokenize", "nb_quality",
                "cms_sketch", "heavy_hitters", "bloom_roundtrip",
@@ -757,10 +758,7 @@ def main() -> None:
                                                 rrf_fusion)
     from pypond_spark.datapipe.textstats import char_entropy
     from pypond_spark.datapipe.sampling import dsir_weights
-    from pypond_spark.datapipe.similarity import (pq_build,
-                                                  pq_build_arrow,
-                                                  pq_encode,
-                                                  pq_encode_arrow)
+    from pypond_spark.datapipe.similarity import pq_build, pq_encode
 
     if ev_needed:
         half = ev.where(F.col("user_id") < 2500)
@@ -800,16 +798,12 @@ def main() -> None:
         "densify_rollup": lambda: sink(densify_rollup(
             roll(ev), "1h", group_by="event_type",
             fill={"v_sum": 0.0, "n": 0})),
-        "pq_build_2m": lambda: books_holder.update(
+        # the build fills books_holder, so it runs before the encode
+        "pq_build_arrow_2m": lambda: books_holder.update(
             books=pq_build(emb, n_blocks=8, n_codes=16, n_iters=2,
                            dim=64)),
-        "pq_encode_2m": lambda: sink(pq_encode(
+        "pq_encode_arrow_2m": lambda: sink(pq_encode(
             emb, books_holder["books"])),
-        "pq_encode_arrow_2m": lambda: sink(pq_encode_arrow(
-            emb, books_holder["books"])),
-        "pq_build_arrow_2m": lambda: books_holder.update(
-            books_a=pq_build_arrow(emb, n_blocks=8, n_codes=16,
-                                   n_iters=2, dim=64)),
         # k-gram sweep tier: corpus-CHARS is the inherent size, so the
         # synthetic corpus targets ~n chars (n/700 docs x ~700 chars);
         # docs checkpointed ABOVE so synthesis is excluded from timing
