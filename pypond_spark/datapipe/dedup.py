@@ -8,6 +8,15 @@ Scale design notes (100 TB):
   self-join *within buckets only* (never all-pairs). The band join key is a
   digest, so the shuffle is uniform; candidate verification joins back for
   exact Jaccard only on candidates;
+- one sketch pass per call: ``_doc_sketch`` (one shingle explode, one
+  groupBy) gives the signature and the distinct shingle set together.
+  ``dedup_documents`` and ``dedup_against_neardup`` localCheckpoint it
+  once and derive bands and Jaccard from it; ``minhash_jaccard_estimate``
+  reads both from one lazy sketch (a checkpoint there measured flat).
+  The checkpoints left: ``lsh_candidate_pairs``' band table (its
+  self-join would recompute it per side), the ``max_bucket`` rank frame,
+  ``dedup_against_neardup``'s candidates (``checkpoint=``), and
+  ``dup_clusters``' edges and labels on its distributed path only;
 - SimHash: 64 per-bit partial sums composed into one BIGINT — all map-side
   expression work, one groupBy per doc (no shuffle beyond the agg);
 - md5 is the one token and shingle hash of the near-dup family (MinHash,
@@ -17,6 +26,8 @@ Scale design notes (100 TB):
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,7 +43,7 @@ from pypond_spark.session import shuffle_width
 _SIMHASH_MAX_TOKENS = 1 << 20
 
 # dup_clusters labels components on the driver (BFS) at or below this many
-# directed edges, and by distributed label propagation above it
+# pair rows, and by distributed label propagation above it
 DRIVER_CC_MAX_EDGES = 500_000
 
 
@@ -75,14 +86,41 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     derives identical values from the same md5 hex). All arithmetic
     stays in [0, 2^35] — safe under ANSI overflow checks.
     """
+    return _doc_sketch(df, text_col, id_col, num_hashes, shingle_n, False)
+
+
+def _doc_sketch(df: DataFrame, text_col: str, id_col: str, num_hashes: int,
+                shingle_n: int, sets: bool) -> DataFrame:
+    """The one per-doc pass of the near-dup family (module docstring):
+    ``(id, m0..m{num_hashes-1})`` and, when ``sets``, ``sh``, the
+    distinct shingle set every Jaccard consumer compares."""
     sh = word_shingles(df, text_col, shingle_n, id_col)
-    two32 = F.lit(4294967296)
-    d = F.md5(F.col("shingle"))
-    h1 = F.conv(d.substr(1, 8), 16, 10).cast("long")
-    h2 = F.conv(d.substr(9, 8), 16, 10).cast("long")
-    hashes = [F.pmod(h1 + F.lit(k) * h2, two32) for k in range(num_hashes)]
-    aggs = [F.min(h).alias(f"m{k}") for k, h in enumerate(hashes)]
+    aggs = []
+    if num_hashes:
+        two32 = F.lit(4294967296)
+        d = F.md5(F.col("shingle"))
+        h1 = F.conv(d.substr(1, 8), 16, 10).cast("long")
+        h2 = F.conv(d.substr(9, 8), 16, 10).cast("long")
+        aggs = [F.min(F.pmod(h1 + F.lit(k) * h2, two32)).alias(f"m{k}")
+                for k in range(num_hashes)]
+    if sets:
+        aggs.append(F.collect_set("shingle").alias("sh"))
     return sh.groupBy(id_col).agg(*aggs)
+
+
+def _bands(sketch: DataFrame, id_col: str, num_hashes: int,
+           band_size: int) -> DataFrame:
+    """(id, band) rows of a signature frame: each band of ``band_size``
+    minhashes digested into one bucket key."""
+    if num_hashes % band_size:
+        raise ValueError("num_hashes must be a multiple of band_size")
+    bands = F.array(*[
+        F.md5(F.concat_ws("|", F.lit(str(b)),
+                          *[F.col(f"m{b * band_size + i}").cast("string")
+                            for i in range(band_size)]))
+        for b in range(num_hashes // band_size)
+    ])
+    return sketch.select(F.col(id_col), F.explode(bands).alias("band"))
 
 
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
@@ -116,47 +154,48 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     sides share one shingle+signature computation. At warehouse scale,
     write the signature table to storage once and join against that.
     """
-    # localCheckpoint (not persist): the blocks are released when the
-    # DataFrame is garbage-collected instead of pinning storage memory for
-    # the session lifetime. Spark's exchange reuse does not replace it: an
-    # uncached self-join recomputed the signatures on both sides.
+    # localCheckpoint, not persist: the blocks go when the frame does.
+    # Exchange reuse does not replace it (the self-join's two sides each
+    # recomputed the signatures).
     buckets = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
                                shingle_n).localCheckpoint()
-    if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
-        from pyspark.sql import Window
-        order = F.md5(F.concat_ws(":", F.col("band"),
-                                  F.col(id_col).cast("string")))
-        w = Window.partitionBy("band").orderBy(order)
-        ranked = (buckets
-                  .select(id_col, "band", F.row_number().over(w)
-                          .alias("__rn"))
-                  .localCheckpoint())
-        core = ranked.where(F.col("__rn") <= max_bucket)
-        a, b = core.alias("a"), core.alias("b")
-        clique = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                  .select(F.col(f"a.{id_col}").alias("id_a"),
-                          F.col(f"b.{id_col}").alias("id_b")))
-        rep = (ranked.where(F.col("__rn") == 1)
-               .select("band", F.col(id_col).alias("__rep")))
-        star = (ranked.where(F.col("__rn") > max_bucket)
-                .join(rep, "band")
-                .select(F.least(F.col(id_col), F.col("__rep"))
-                        .alias("id_a"),
-                        F.greatest(F.col(id_col), F.col("__rep"))
-                        .alias("id_b")))
-        return clique.unionByName(star).distinct()
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return _band_pairs(buckets, id_col, max_bucket)
+
+
+def _band_pairs(buckets: DataFrame, id_col: str,
+                max_bucket: int | None) -> DataFrame:
+    """(id_a < id_b) pairs sharing a band of the materialized (id, band)
+    table ``buckets``, capped per bucket as :func:`lsh_candidate_pairs`
+    describes when ``max_bucket`` is set."""
+    if max_bucket is None:
+        a, b = buckets.alias("a"), buckets.alias("b")
+        return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+                .select(F.col(f"a.{id_col}").alias("id_a"),
+                        F.col(f"b.{id_col}").alias("id_b"))
+                .distinct())
+    if max_bucket < 2:
+        raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
+    order = F.md5(F.concat_ws(":", F.col("band"),
+                              F.col(id_col).cast("string")))
+    w = Window.partitionBy("band").orderBy(order)
+    ranked = (buckets
+              .select(id_col, "band", F.row_number().over(w).alias("__rn"))
+              .localCheckpoint())
+    core = ranked.where(F.col("__rn") <= max_bucket)
+    a, b = core.alias("a"), core.alias("b")
+    clique = (a.join(b, (F.col("a.band") == F.col("b.band"))
+                     & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+              .select(F.col(f"a.{id_col}").alias("id_a"),
+                      F.col(f"b.{id_col}").alias("id_b")))
+    rep = (ranked.where(F.col("__rn") == 1)
+           .select("band", F.col(id_col).alias("__rep")))
+    star = (ranked.where(F.col("__rn") > max_bucket)
+            .join(rep, "band")
+            .select(F.least(F.col(id_col), F.col("__rep")).alias("id_a"),
+                    F.greatest(F.col(id_col), F.col("__rep"))
+                    .alias("id_b")))
+    return clique.unionByName(star).distinct()
 
 
 def lsh_band_buckets(df: DataFrame, text_col: str = "text",
@@ -166,36 +205,30 @@ def lsh_band_buckets(df: DataFrame, text_col: str = "text",
     :func:`lsh_candidate_pairs` so scale audits can measure the bucket
     occupancy distribution (candidate-join cost is Σ|bucket|², the number
     this table bounds) without re-implementing the banding scheme."""
-    if num_hashes % band_size:
-        raise ValueError("num_hashes must be a multiple of band_size")
-    sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
-    bands = F.array(*[
-        F.md5(F.concat_ws("|", F.lit(str(b)),
-                          *[F.col(f"m{b * band_size + i}").cast("string")
-                            for i in range(band_size)]))
-        for b in range(num_hashes // band_size)
-    ])
-    return sig.select(F.col(id_col), F.explode(bands).alias("band"))
+    return _bands(minhash_signature(df, text_col, id_col, num_hashes,
+                                    shingle_n), id_col, num_hashes, band_size)
 
 
 def _doc_shingle_sets(df: DataFrame, text_col: str, id_col: str,
                       shingle_n: int) -> DataFrame:
-    """ONE distinct-shingle-set frame per doc — the single definition
-    every Jaccard consumer (pair verify, persisted near-dup index,
-    incremental verify) builds on, so the sides can never diverge."""
-    return (word_shingles(df, text_col, shingle_n, id_col)
-            .groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("sh")))
+    """:func:`_doc_sketch`'s ``(id, sh)`` set frame, no signature."""
+    return _doc_sketch(df, text_col, id_col, 0, shingle_n, True)
 
 
-def _shingle_sets(df: DataFrame, text_col: str, id_col: str,
-                  shingle_n: int) -> tuple[DataFrame, DataFrame]:
-    """Distinct shingle set per doc, projected as the two join sides
-    (shared by the pair-verify metrics so they can never diverge)."""
-    sets_df = _doc_shingle_sets(df, text_col, id_col, shingle_n)
-    a = sets_df.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets_df.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    return a, b
+def _jaccard(a: str, b: str) -> Column:
+    """|A ∩ B| / |A ∪ B| of two shingle-set columns."""
+    return (F.size(F.array_intersect(a, b)).cast("double")
+            / F.size(F.array_union(a, b)).cast("double"))
+
+
+def _pair_sets(pairs: DataFrame, sets_df: DataFrame, id_col: str,
+               cols: tuple = ("sh",)) -> DataFrame:
+    """``pairs`` inner-joined with both sides' ``cols`` of ``sets_df``
+    (column ``c`` lands as ``c_a`` / ``c_b``)."""
+    def side(s):
+        return sets_df.select(F.col(id_col).alias(f"id_{s}"),
+                              *[F.col(c).alias(f"{c}_{s}") for c in cols])
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
 
 
 def ngram_jaccard(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -204,11 +237,9 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, text_col: str = "text",
 
     Joins shingle sets only for candidate pairs (post-LSH), never all pairs.
     """
-    a, b = _shingle_sets(df, text_col, id_col, shingle_n)
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (pairs.join(a, "id_a").join(b, "id_b")
-            .select("id_a", "id_b", (inter / union).alias("jaccard")))
+    sets_df = _doc_shingle_sets(df, text_col, id_col, shingle_n)
+    return (_pair_sets(pairs, sets_df, id_col)
+            .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard")))
 
 
 def ngram_containment(df: DataFrame, pairs: DataFrame,
@@ -230,9 +261,9 @@ def ngram_containment(df: DataFrame, pairs: DataFrame,
     pairs referencing ids absent from ``df`` are dropped by the inner
     joins, exactly as in :func:`ngram_jaccard`.
     """
-    a, b = _shingle_sets(df, text_col, id_col, shingle_n)
+    sets_df = _doc_shingle_sets(df, text_col, id_col, shingle_n)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    return (pairs.join(a, "id_a").join(b, "id_b")
+    return (_pair_sets(pairs, sets_df, id_col)
             .select("id_a", "id_b",
                     F.try_divide(inter, F.size("sh_a").cast("double"))
                     .alias("containment_a"),
@@ -264,64 +295,45 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     if on_nonconverged not in ("raise", "ignore"):
         raise ValueError(
             f"on_nonconverged must be raise|ignore, got {on_nonconverged!r}")
-    # localCheckpoint truncates lineage: without it every round's plan
-    # re-derives the whole upstream LSH pipeline and planning cost grows
-    # with iteration count (observed as hundreds of scans in the static plan)
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .union(pairs.select(F.col(id_b).alias("src"),
-                                 F.col(id_a).alias("dst")))
-             .distinct()
-             .localCheckpoint())
-    # Scale-adaptive driver fast path (r15, guide §1.2 job-count
-    # latency): each propagation round is 3+ driver-coordinated jobs
-    # (join, checkpoint, convergence count) of pure stage latency when
-    # the dup-pair set is small — which it almost always is relative
-    # to the corpus (only near-dup PAIRS appear here).  Below the
-    # edge cap, collect the (already checkpointed, bounded) edge list
-    # and run exact BFS components on the driver; same (id, min-id)
-    # labels by construction, and the distributed path's max_iter
-    # contract is preserved exactly: min-label propagation moves one
-    # hop per round, so it converges with `rounds = R+1` (R = max
-    # distance from a component's min node) and fails max_iter <= R.
-    # `on_nonconverged='ignore'` keeps the distributed path — its
-    # documented partial labels ARE the r-hop propagation state.
-    # One bounded collect both counts and fetches the edges; past the cap
-    # its rows are dropped and the distributed path runs.
-    small = (edges.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    # A pair naming a NULL id is no edge, on both paths.
+    ends = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
+    # Driver fast path: each propagation round is 3+ jobs of pure stage
+    # latency, and the dup-pair set is small relative to the corpus.
+    # One bounded collect both counts and fetches the pairs; at or below
+    # the cap, exact BFS components over the undirected adjacency give
+    # the same (id, min-id) labels, and the max_iter contract holds:
+    # min-label propagation moves one hop per round, so it converges
+    # with `rounds = R+1` (R = max distance from a component's min
+    # node) and fails max_iter <= R.  Past the cap the distributed path
+    # runs; `on_nonconverged='ignore'` always takes it — its partial
+    # labels ARE the r-hop propagation state.
+    small = (ends.limit(DRIVER_CC_MAX_EDGES + 1).collect()
              if on_nonconverged == "raise" else None)
     if small is not None and len(small) <= DRIVER_CC_MAX_EDGES:
         adj: dict = {}
-        for r in small:
-            adj.setdefault(r["src"], []).append(r["dst"])
-        seen: set = set()
+        for src, dst in small:
+            adj.setdefault(src, set()).add(dst)
+            adj.setdefault(dst, set()).add(src)
+        # BFS from each component's min node (the first one met in id
+        # order): a node's distance is the rounds it takes to converge
+        dist: dict = {}
         labels_out = []
-        max_dist = 0
-        for start in adj:
-            if start in seen:
+        for root in sorted(adj):
+            if root in dist:
                 continue
-            comp = [start]
-            seen.add(start)
-            for node in comp:  # grow the component (order-agnostic)
-                for nb in adj[node]:
-                    if nb not in seen:
-                        seen.add(nb)
-                        comp.append(nb)
-            root = min(comp)
-            # BFS from the min node: propagation rounds to converge
-            dist = {root: 0}
+            dist[root] = 0
             frontier = [root]
-            d = 0
             while frontier:
-                d += 1
                 nxt = []
                 for node in frontier:
+                    labels_out.append((node, root))
                     for nb in adj[node]:
                         if nb not in dist:
-                            dist[nb] = d
+                            dist[nb] = dist[node] + 1
                             nxt.append(nb)
                 frontier = nxt
-            max_dist = max(max_dist, max(dist.values(), default=0))
-            labels_out.extend((n, root) for n in comp)
+        max_dist = max(dist.values(), default=0)
         if stats is not None:
             stats["rounds"] = min(max_dist + 1, max_iter)
         if max_dist >= max_iter:
@@ -335,6 +347,13 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                                T.StructField("cluster_id", id_type)])
         return pairs.sparkSession.createDataFrame(
             sorted(labels_out), schema)
+    # localCheckpoint truncates lineage: without it every round's plan
+    # re-derives the whole upstream LSH pipeline and planning cost grows
+    # with iteration count (observed as hundreds of scans in the static plan)
+    edges = (ends.union(ends.select(F.col("dst").alias("src"),
+                                    F.col("src").alias("dst")))
+             .distinct()
+             .localCheckpoint())
     labels = (edges.select(F.col("src").alias("id"))
               .distinct()
               .withColumn("cluster_id", F.col("id"))
@@ -417,10 +436,14 @@ def dedup_documents(df: DataFrame, text_col: str = "text",
             f"keeper must be min_id|longest|max_col, got {keeper!r}")
     if keeper == "max_col" and not keeper_col:
         raise ValueError("keeper='max_col' requires keeper_col")
-    pairs = lsh_candidate_pairs(df, text_col, id_col, num_hashes, band_size,
-                                shingle_n, max_bucket=max_bucket)
-    verified = (ngram_jaccard(df, pairs, text_col, id_col, shingle_n)
-                .where(F.col("jaccard") >= jaccard_threshold)
+    # one checkpointed sketch feeds both the band self-join and the
+    # Jaccard verify (see the module docstring)
+    sketch = _doc_sketch(df, text_col, id_col, num_hashes, shingle_n,
+                         True).localCheckpoint()
+    pairs = _band_pairs(_bands(sketch, id_col, num_hashes, band_size),
+                        id_col, max_bucket)
+    verified = (_pair_sets(pairs, sketch, id_col)
+                .where(_jaccard("sh_a", "sh_b") >= jaccard_threshold)
                 .select("id_a", "id_b"))
     clusters = dup_clusters(verified, stats=stats)
     out = df.join(clusters.withColumnRenamed("id", id_col), id_col, "left")
@@ -676,8 +699,6 @@ def _nd_fs(spark, base: str):
 def _nd_write_meta(spark, base: str, meta: dict) -> None:
     """Write ``_layout.json`` at the index root (Hadoop FS so the same
     code serves local, HDFS and object-store paths)."""
-    import json
-
     fs, hpath = _nd_fs(spark, base)
     out = fs.create(hpath(base + "/" + _ND_META), True)
     try:
@@ -687,8 +708,6 @@ def _nd_write_meta(spark, base: str, meta: dict) -> None:
 
 
 def _nd_read_meta(spark, base: str) -> dict | None:
-    import json
-
     fs, hpath = _nd_fs(spark, base)
     p = hpath(base + "/" + _ND_META)
     if not fs.exists(p):
@@ -704,6 +723,14 @@ def _nd_read_meta(spark, base: str) -> dict | None:
     return json.loads(raw.decode("utf-8"))
 
 
+def _nd_read(spark, base: str, meta: dict | None, table: str) -> DataFrame:
+    """Index table ``table``, read with the schema ``_layout.json``
+    records when it has one: no schema-inference job."""
+    sch = (meta or {}).get("schemas", {}).get(table)
+    return (spark.read.schema(T.StructType.fromJson(json.loads(sch)))
+            if sch else spark.read).parquet(f"{base}/{table}")
+
+
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for ``df`` (no job is run): parquet
     footer sizes propagated through the plan. The same estimate the
@@ -716,6 +743,24 @@ def _estimated_bytes(df: DataFrame) -> int:
     # back to the conservative partitioned layout, which is the safe
     # direction for an input of unknown size.
     return sz if isinstance(sz, int) else int(sz.toString())
+
+
+def _write_bands(bands: DataFrame, dest: str, layout: str, n_files: int,
+                 files_per_prefix: int, mode: str) -> None:
+    """Write a band table: ``flat`` as ``n_files`` files (a repartition,
+    not a coalesce, keeps the band compute at full parallelism), else
+    partitioned by ``band_pfx`` after a repartition on (prefix, salt).
+    A bare write sprays every task into every prefix directory (tasks
+    x 256 small files, measured as the dominant per-batch scan cost);
+    the prefix alone funnels each prefix's slice through one writer;
+    the salt keeps 256 x files_per_prefix writers and at most
+    files_per_prefix files per directory."""
+    if layout == "flat":
+        bands.repartition(int(n_files)).write.mode(mode).parquet(dest)
+        return
+    salt = F.pmod(F.xxhash64("band"), F.lit(int(files_per_prefix)))
+    (bands.repartition(F.col("band_pfx"), salt)
+     .write.mode(mode).partitionBy("band_pfx").parquet(dest))
 
 
 def write_neardup_index(df: DataFrame, path: str, text_col: str = "text",
@@ -786,47 +831,27 @@ def write_neardup_index(df: DataFrame, path: str, text_col: str = "text",
     bands = buckets.withColumn("band_pfx",
                                _band_pfx(F.col("band"), prefix_chars))
 
-    def _write_bands() -> None:
-        if layout == "partitioned":
-            # repartition on (prefix, salt) first: a bare write lets
-            # every shuffle task spray into every prefix directory (up
-            # to tasks x 256 small files — measured as the dominant
-            # scan cost of the per-batch path), while
-            # repartition("band_pfx") alone caps the WRITE at 256 tasks
-            # and funnels each prefix's whole slice (corpus/256 at the
-            # 100 TB design point) through one writer.  The salt keeps
-            # write parallelism at 256 x files_per_prefix with
-            # files-per-directory bounded at files_per_prefix.
-            salt = F.pmod(F.xxhash64("band"),
-                          F.lit(int(files_per_prefix)))
-            (bands.repartition(F.col("band_pfx"), salt)
-             .write.mode(mode).partitionBy("band_pfx")
-             .parquet(base + "/bands"))
-        else:
-            # flat: a couple of files sized off the input estimate; the
-            # tiny repartition shuffle keeps the band COMPUTE at full
-            # parallelism (coalesce would drag the upstream stage
-            # narrow)
-            n_files = max(1, min(64, est // (128 * 1024 * 1024) + 1))
-            (bands.repartition(int(n_files))
-             .write.mode(mode).parquet(base + "/bands"))
+    # flat: a couple of files sized off the input estimate
+    n_files = max(1, min(64, est // (128 * 1024 * 1024) + 1))
+    sh = _doc_shingle_sets(df, text_col, id_col, shingle_n)
 
     def _write_shingles() -> None:
-        n_sh = max(1, min(256, est // (128 * 1024 * 1024) + 1)) \
-            if layout == "flat" else None
-        sh = _doc_shingle_sets(df, text_col, id_col, shingle_n)
-        if n_sh is not None:
-            sh = sh.repartition(int(n_sh))
-        sh.write.mode(mode).parquet(base + "/shingles")
+        n_sh = max(1, min(256, est // (128 * 1024 * 1024) + 1))
+        (sh.repartition(int(n_sh)) if layout == "flat" else sh) \
+            .write.mode(mode).parquet(base + "/shingles")
 
     # the band table and the shingle sets land in different
     # subdirectories and share no lineage beyond the scan — write them
     # concurrently (guide §2.6 overlap)
-    overlap(_write_bands, _write_shingles)
+    overlap(lambda: _write_bands(bands, base + "/bands", layout, n_files,
+                                 files_per_prefix, mode),
+            _write_shingles)
     if prior is None:
         _nd_write_meta(spark, base, {
             "layout": layout, "prefix_chars": int(prefix_chars),
-            "files_per_prefix": int(files_per_prefix)})
+            "files_per_prefix": int(files_per_prefix),
+            "schemas": {"bands": bands.schema.json(),
+                        "shingles": sh.schema.json()}})
 
 
 def dedup_against_neardup(df: DataFrame, index_path: str,
@@ -851,10 +876,10 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
     that keeps every duplicate).
 
     Scale shape (the production ingest path): the new batch's band
-    table is computed once and broadcast; its distinct re-hash band
-    prefixes (<= 16^prefix_chars values, collected driver-side) become
-    a partition filter on the index scan, so I/O is the matching
-    prefix directories only, never the corpus-wide band table — see
+    table is computed once and broadcast; on a partitioned index its
+    distinct re-hash band prefixes (<= 16^prefix_chars values,
+    collected driver-side) become a partition filter on the index
+    scan, so I/O is the matching prefix directories only — see
     :func:`_band_pfx` for the batch-size/width math.  Candidates then
     verify by exact shingle Jaccard — the new side's shingle sets
     broadcast, the corpus side's are read semi-join-bound to candidate
@@ -869,75 +894,65 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
     # legacy indexes without it fall back to a first-level listing
     # (O(dirs), driver-side)
     meta = _nd_read_meta(spark, base)
+    got = prefix_chars
     if meta is not None:
         got = int(meta.get("prefix_chars", prefix_chars))
-        if got != prefix_chars:
-            raise ValueError(
-                f"index at {index_path} was written with "
-                f"prefix_chars={got}, queried with "
-                f"{prefix_chars} — the partition filter would be "
-                f"empty and every duplicate would pass")
     else:
         fs, hpath = _nd_fs(spark, base)
         for st in fs.listStatus(hpath(base + "/bands")):
             name = st.getPath().getName()
             if name.startswith("band_pfx="):
                 got = len(name) - len("band_pfx=") - 1   # minus sentinel
-                if got != prefix_chars:
-                    raise ValueError(
-                        f"index at {index_path} was written with "
-                        f"prefix_chars={got}, queried with "
-                        f"{prefix_chars} — the partition filter would "
-                        f"be empty and every duplicate would pass")
                 break
-    nb = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
-                          shingle_n) \
-        .withColumnRenamed(id_col, "__new_id").localCheckpoint()
-    pfx = [r["p"] for r in
-           nb.select(_band_pfx(F.col("band"), prefix_chars)
-                     .alias("p"))
-           .distinct().collect()]
-    idx = (spark.read.parquet(base + "/bands")
-           .where(F.col("band_pfx").isin(pfx))
-           .withColumnRenamed(id_col, "__ref_id"))
-    cand = (idx.join(F.broadcast(nb), "band")
+    if got != prefix_chars:
+        raise ValueError(
+            f"index at {index_path} was written with prefix_chars={got}, "
+            f"queried with {prefix_chars} — the partition filter would "
+            f"be empty and every duplicate would pass")
+    # one checkpointed sketch: the batch's bands and its shingle sets
+    sketch = (_doc_sketch(df, text_col, id_col, num_hashes, shingle_n, True)
+              .withColumnRenamed(id_col, "__new_id").localCheckpoint())
+    nb = _bands(sketch, "__new_id", num_hashes, band_size)
+    idx = _nd_read(spark, base, meta, "bands")
+    if meta is None or meta.get("layout") != "flat":
+        # a flat index has no prefix directories to prune, and the
+        # broadcast band join below filters it anyway
+        pfx = [r["p"] for r in
+               nb.select(_band_pfx(F.col("band"), prefix_chars)
+                         .alias("p"))
+               .distinct().collect()]
+        idx = idx.where(F.col("band_pfx").isin(pfx))
+    cand = (idx.withColumnRenamed(id_col, "__ref_id")
+            .join(F.broadcast(nb), "band")
             .select("__new_id", "__ref_id").distinct())
     if max_candidates is not None:
-        # mega-cluster guard (the lsh_capped_pairs concession, index
-        # form): a boilerplate band shared by 10^6 INDEXED docs turns
-        # one batch doc into 10^6 verify pairs. Keep a deterministic
-        # md5-ordered sample of refs per new doc — for DEDUP one
-        # confirmed hit suffices to drop the doc, so recall is lost
-        # only when the sampled refs are all below threshold while an
-        # unsampled one is not (rare for boilerplate clusters, whose
-        # members are mutually similar).
+        # mega-cluster guard (lsh_capped_pairs' concession, index form):
+        # a band shared by 10^6 indexed docs makes 10^6 verify pairs.
+        # Keep a deterministic md5-ordered sample of refs per new doc;
+        # one confirmed hit drops the doc, so recall is lost only when
+        # every sampled ref misses and an unsampled one would not.
         order = F.md5(F.concat_ws(":", F.col("__new_id").cast("string"),
                                   F.col("__ref_id").cast("string")))
         w = Window.partitionBy("__new_id").orderBy(order)
         cand = (cand.withColumn("__rn", F.row_number().over(w))
                 .where(F.col("__rn") <= int(max_candidates))
                 .drop("__rn"))
-    new_sets = (_doc_shingle_sets(df, text_col, id_col, shingle_n)
-                .withColumnRenamed("sh", "__shn")
-                .withColumnRenamed(id_col, "__new_id"))
+    new_sets = sketch.select("__new_id", F.col("sh").alias("__shn"))
     # semi-join the corpus shingle side down to candidate ids FIRST
-    # (broadcast — candidates are batch-bounded): the verify join then
-    # never shuffles the corpus-sized shingle table.  The checkpoint
-    # materializes the pruned band join ONCE (both the id semi-join and
-    # the verify consume it); checkpoint=False keeps the plan lazy so
-    # tests can assert the PartitionFilters on the index scan
+    # (broadcast, batch-bounded): the verify never shuffles the corpus
+    # shingle table.  The checkpoint runs the band join once for both
+    # consumers; checkpoint=False keeps the plan lazy
     if checkpoint:
         cand = cand.localCheckpoint()
-    ref_sets = (spark.read.parquet(base + "/shingles")
-                .withColumnRenamed(id_col, "__ref_id")
-                .withColumnRenamed("sh", "__shr")
+    ref_sets = (_nd_read(spark, base, meta, "shingles")
+                .select(F.col(id_col).alias("__ref_id"),
+                        F.col("sh").alias("__shr"))
                 .join(F.broadcast(cand.select("__ref_id").distinct()),
                       "__ref_id", "left_semi"))
-    jac = (F.size(F.array_intersect("__shn", "__shr")).cast("double")
-           / F.size(F.array_union("__shn", "__shr")).cast("double"))
     hits = (cand.join(F.broadcast(new_sets), "__new_id")
             .join(ref_sets, "__ref_id")
-            .select("__new_id", "__ref_id", jac.alias("jaccard"))
+            .select("__new_id", "__ref_id",
+                    _jaccard("__shn", "__shr").alias("jaccard"))
             .where(F.col("jaccard") >= threshold))
     if keep_scores:
         return hits.select(F.col("__new_id").alias(f"{id_col}_new"),
@@ -975,10 +990,7 @@ def compact_neardup_index(spark, path: str,
         raise ValueError(
             f"files_per_prefix must be >= 1, got {files_per_prefix}")
     base = path.rstrip("/")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(base).getFileSystem(conf)
+    fs, hpath = _nd_fs(spark, base)
 
     def _n_parquet_files(p: str) -> int:
         it = fs.listFiles(hpath(p), True)
@@ -998,17 +1010,11 @@ def compact_neardup_index(spark, path: str,
     staged = base + "/bands.compacting"
     stats["bands_files_before"] = _n_parquet_files(bands)
     meta = _nd_read_meta(spark, base)
-    if meta is not None and meta.get("layout") == "flat":
-        # flat layout: band_pfx is a data column, no directories —
-        # compaction is a plain file-count rewrite
-        (spark.read.parquet(bands)
-         .repartition(int(files_per_prefix))
-         .write.mode("overwrite").parquet(staged))
-    else:
-        salt = F.pmod(F.xxhash64("band"), F.lit(int(files_per_prefix)))
-        (spark.read.parquet(bands)
-         .repartition(F.col("band_pfx"), salt)
-         .write.mode("overwrite").partitionBy("band_pfx").parquet(staged))
+    # a flat layout (band_pfx a data column, no directories) compacts
+    # to files_per_prefix files
+    _write_bands(_nd_read(spark, base, meta, "bands"), staged,
+                 (meta or {}).get("layout", "partitioned"),
+                 files_per_prefix, files_per_prefix, "overwrite")
     _swap(bands, staged)
     stats["bands_files_after"] = _n_parquet_files(bands)
 
@@ -1016,7 +1022,7 @@ def compact_neardup_index(spark, path: str,
     staged = base + "/shingles.compacting"
     stats["shingles_files_before"] = _n_parquet_files(sh)
     n_parts = shuffle_width(spark)
-    (spark.read.parquet(sh).repartition(n_parts)
+    (_nd_read(spark, base, meta, "shingles").repartition(n_parts)
      .write.mode("overwrite").parquet(staged))
     _swap(sh, staged)
     stats["shingles_files_after"] = _n_parquet_files(sh)
@@ -1154,7 +1160,6 @@ def strip_spans(df: DataFrame, spans: DataFrame,
                F.struct(F.col("span_start").alias("s"),
                         F.col("span_end").alias("e")))).alias("__spans")))
     joined = df.join(agg, id_col, "left")
-    from pyspark.sql import types as T
     out_schema = T.StructType(
         list(joined.drop("__spans").schema.fields)
         + [T.StructField(f"{text_col}_clean", T.StringType()),
@@ -1208,23 +1213,17 @@ def minhash_jaccard_estimate(df: DataFrame, pairs: DataFrame,
     Same candidate-only join discipline as :func:`ngram_jaccard` —
     signatures join on the pair ids, never all-pairs.
     """
-    sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
-    a = sig.select(F.col(id_col).alias("id_a"),
-                   *[F.col(f"m{k}").alias(f"__a{k}")
-                     for k in range(num_hashes)])
-    b = sig.select(F.col(id_col).alias("id_b"),
-                   *[F.col(f"m{k}").alias(f"__b{k}")
-                     for k in range(num_hashes)])
-    matches = sum(F.when(F.col(f"__a{k}") == F.col(f"__b{k}"), 1)
-                  .otherwise(0) for k in range(num_hashes))
+    sketch = _doc_sketch(df, text_col, id_col, num_hashes, shingle_n, True)
+    ms = [f"m{k}" for k in range(num_hashes)]
+    matches = sum(F.when(F.col(f"{m}_a") == F.col(f"{m}_b"), 1)
+                  .otherwise(0) for m in ms)
     est = (matches.cast("double") / F.lit(float(num_hashes)))
-    exact = ngram_jaccard(df, pairs, text_col, id_col, shingle_n)
-    return (exact.join(a, "id_a").join(b, "id_b")
+    exact = _jaccard("sh_a", "sh_b")
+    return (_pair_sets(pairs, sketch, id_col, ("sh", *ms))
             .select("id_a", "id_b",
                     F.round(est, 6).alias("jaccard_est"),
-                    F.round("jaccard", 6).alias("jaccard_exact"),
-                    F.round(F.abs(est - F.col("jaccard")), 6)
-                    .alias("abs_err")))
+                    F.round(exact, 6).alias("jaccard_exact"),
+                    F.round(F.abs(est - exact), 6).alias("abs_err")))
 
 
 def editdist_pairs(df: DataFrame, pairs: DataFrame | None = None,

@@ -67,6 +67,9 @@ def get_spark(app_name: str = "pypond_spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per Column call (README: 3 py4j
+        # round trips per F.col, not 13); analysis errors lose that block
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Python-worker daemon that preloads numpy/pandas/pyarrow before
     # forking (see pypond_spark/daemon.py): Spark kills idle Python

@@ -160,9 +160,11 @@ def _keyed_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
     and returns ``step(key, pdf, state)``, a generator of output frames.
     The step sees the WHOLE group (:func:`_whole_group`), stable-sorted by
     time then ``tiebreak``, and never an empty one: under ``NoTimeout``
-    Spark only calls for groups that have rows.
+    Spark only calls for groups that have rows.  A row with NULL time is
+    dropped on the JVM side, as the batch twins drop it.
     """
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
+    sdf, keys, dummy = _keyed(sdf.where(F.col(time_col).isNotNull()),
+                              list(partition_by))
     step = make_step(keys)
     tb = (tiebreak,) if tiebreak else ()
 

@@ -1260,6 +1260,79 @@ def test_dup_clusters_rounds_contract_both_paths(spark, monkeypatch, cap):
     assert dedup.dup_clusters(pairs, max_iter=25).count() == 25
 
 
+def test_dup_clusters_messy_pairs_driver_matches_distributed(spark,
+                                                            monkeypatch):
+    """Duplicate, reversed, self-loop and NULL-id pairs: the driver BFS
+    and the distributed propagation give the same labels and rounds. A
+    pair naming a NULL id is no edge; a self-loop is a singleton."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 1), (2, 3), (5, 5), (None, 7), (8, None),
+         (9, 10), (10, 4)], "id_a long, id_b long")
+
+    def run():
+        stats = {}
+        got = {r["id"]: r["cluster_id"]
+               for r in dedup.dup_clusters(pairs, stats=stats).collect()}
+        return got, stats["rounds"]
+
+    driver = run()
+    assert driver == ({1: 1, 2: 1, 3: 1, 5: 5, 4: 4, 9: 4, 10: 4}, 3)
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
+    assert run() == driver
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, read back from the status tracker."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_chain_job_budget(spark, docs, tmp_path):
+    """Spark jobs of the three LSH calls on a small parquet-backed frame
+    (build, then a noop write of the result) stay under pinned
+    ceilings. On a flat index the probe's build runs no job but its
+    one sketch checkpoint: no band-prefix collect, no schema
+    inference."""
+    path = str(tmp_path / "docs")
+    docs.limit(80).select("doc_id", "text").write.parquet(path)
+    corpus = spark.read.parquet(path)
+    index = str(tmp_path / "idx")
+    dedup.write_neardup_index(corpus.where(F.col("doc_id") % 2 == 0),
+                              index, layout="flat")
+    batch = corpus.where(F.col("doc_id") % 2 == 1)
+    sketch = _jobs(spark, lambda: dedup._doc_sketch(
+        batch, "text", "doc_id", 8, 3, True).localCheckpoint())
+    assert _jobs(spark, lambda: dedup.dedup_against_neardup(
+        batch, index, keep_scores=True, checkpoint=False)) == sketch
+    pairs = dedup.lsh_candidate_pairs(corpus)
+    calls = {"dedup": lambda: dedup.dedup_documents(corpus),
+             "probe": lambda: dedup.dedup_against_neardup(batch, index),
+             "estimate": lambda: dedup.minhash_jaccard_estimate(corpus,
+                                                                pairs)}
+    got = {}
+    for name, build in calls.items():
+        out = {}
+        n_build = _jobs(spark, lambda: out.setdefault("df", build()))
+        n_exec = _jobs(spark, lambda: out["df"].write.format("noop")
+                       .mode("overwrite").save())
+        got[name] = (n_build, n_exec)
+    # the estimate is lazy: all its jobs run in the action
+    assert got["estimate"][0] == 0, got
+    # (build, action) measured on local[4] with 4 shuffle partitions:
+    # dedup (7, 4), probe (5, 2), estimate (0, 7)
+    ceilings = {"dedup": 11, "probe": 7, "estimate": 7}
+    assert all(sum(got[k]) <= ceilings[k] for k in calls), got
+
+
 def test_dedup_documents_end_to_end(spark, docs):
     base = docs.limit(4).select("doc_id", "text")
     clone = base.withColumn("doc_id", F.col("doc_id") + 1_000_000)

@@ -375,3 +375,15 @@ def test_bench_compare_fails_on_missing_query(tmp_path):
         capture_output=True, text=True, cwd="/root/repo")
     assert proc.returncode == 1
     assert "q2" in proc.stdout and "missing" in proc.stdout.lower()
+
+
+def test_session_drops_call_site_capture(spark):
+    """get_spark turns PySpark's per-Column call-site capture off; an
+    analysis error still raises and names the missing column."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        spark.range(1).select("no_such_col")

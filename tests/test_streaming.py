@@ -1643,6 +1643,40 @@ def test_keyed_state_ops_no_key_path(spark, tmp_path, op):
     assert rows(bare) == want
 
 
+@pytest.mark.parametrize("op", sorted(_NO_KEY_CALLS))
+def test_keyed_state_ops_drop_null_time(spark, tmp_path, op):
+    """A NULL-time row never reaches a keyed state step: every keyed
+    state operator drains the same rows with and without it (it used to
+    enter the step as -9223372036855 ms)."""
+    from pypond_spark.streaming import stream
+    schema = T.StructType([T.StructField("t_ms", T.LongType()),
+                           T.StructField("user", T.StringType()),
+                           T.StructField("value", T.DoubleType()),
+                           T.StructField("event_type", T.StringType())])
+    events = [{"t_ms": t, "user": "a", "value": v, "event_type": e}
+              for t, v, e in [(0, 100.0, "x"), (30_000, 130.0, "y"),
+                              (60_000, None, None), (90_000, 220.0, "x"),
+                              (240_000, 160.0, "y"), (270_000, 95.0, "y"),
+                              (300_000, 50.0, "x")]]
+    null = {"t_ms": None, "user": "a", "value": 4.0, "event_type": "x"}
+
+    def drain(name, first):
+        src = tmp_path / name
+        src.mkdir()
+        _write_chunks(src, [first, events[3:]])
+        sdf = (spark.readStream.schema(schema).json(str(src))
+               .withColumn("time", F.timestamp_millis(F.col("t_ms")))
+               .drop("t_ms"))
+        out = getattr(stream, op)(sdf, partition_by=["user"],
+                                  **_NO_KEY_CALLS[op])
+        return sorted(repr(r) for r in
+                      run_available_now(out, "append").collect())
+
+    want = drain("clean", events[:3])
+    assert want
+    assert drain("null", events[:3] + [null]) == want
+
+
 @contextmanager
 def _session_confs(spark, confs):
     prev = {k: spark.conf.get(k, None) for k in confs}
