@@ -8252,12 +8252,15 @@ _NULLIFIED = ("SELECT event_id, user_id, epoch_ms(ts) AS ms, "
               "CASE WHEN event_type = 'click' THEN NULL ELSE value END AS v "
               "FROM events")
 
+# NULL text has no shingle (the library's ngram_explode min_one law);
+# empty text keeps its one '' shingle
 _SHINGLES = """
     WITH toks AS (
       SELECT doc_id,
              list_filter(string_split_regex(trim(text), '\\s+'),
                          x -> x != '') AS w
       FROM documents
+      WHERE text IS NOT NULL
     ), sh AS (
       SELECT doc_id,
              unnest([array_to_string(w[i:i+2], ' ')

@@ -146,8 +146,9 @@ def word_tokens(text: Column | str) -> Column:
     ``filter(split(trim(text), '[WS]+'), t -> t != '')``, the maximal
     runs of non-``WS`` characters.  ``text`` is a Column or a column
     name.  NULL text gives NULL and empty or all-``WS`` text gives
-    ``[]``: neither has tokens, so shingling (:func:`ngram_explode`
-    ``min_one``) gives each one ``''`` shingle and SimHash drops both."""
+    ``[]``: neither has tokens.  Shingling (:func:`ngram_explode`
+    ``min_one``) gives NULL text no shingle and empty text one ``''``
+    shingle; SimHash drops both."""
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(F.trim(c), f"[{WS}]+"),
                     lambda t: t != F.lit(""))
@@ -157,8 +158,8 @@ def py_word_tokens(text) -> list[str]:
     """The Python replay of :func:`word_tokens` for Arrow stages:
     ``re.findall('[^WS]+', text)``.  NULL (any non-``str``, e.g. a
     pandas NaN) gives ``[]``, the same no-token document the JVM form
-    gives; the shingle and SimHash rules of :func:`word_tokens` apply
-    unchanged."""
+    gives; the SimHash rule of :func:`word_tokens` applies unchanged, and
+    a replay that shingles drops NULL text first."""
     return _WORD_RE.findall(text) if isinstance(text, str) else []
 
 
@@ -186,12 +187,12 @@ def ngram_explode(df: DataFrame, arr: Column, n: int,
     ``sequence`` bound / ``greatest(count, 1)`` did.
 
     strict (default): rows whose array has fewer than ``n`` elements
-    emit nothing.  ``min_one=True``: word-shingle semantics — every row
-    emits at least one gram; 0 < size < n emits the joined prefix, an
-    empty (or NULL) array emits one empty-string gram — so under
-    :func:`word_tokens` both NULL and empty text get one ``''``
-    shingle.  ``pos`` (strict
-    mode only) additionally emits the 0-based gram offset.
+    emit nothing.  ``min_one=True``: word-shingle semantics, the one
+    place the NULL/empty shingle law lives — a NULL array emits nothing
+    (NULL text has no shingle, as SQL NULL has no value elsewhere in
+    the library), every other row at least one gram: 0 < size < n the
+    joined prefix, an empty array one empty-string gram.  ``pos``
+    (strict mode only) additionally emits the 0-based gram offset.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
@@ -203,7 +204,7 @@ def ngram_explode(df: DataFrame, arr: Column, n: int,
         src = arr
         if min_one:
             src = F.when(F.size(arr) > 0, arr) \
-                .otherwise(F.array(F.lit("")))
+                .when(arr.isNotNull(), F.array(F.lit("")))
         gen = (F.posexplode(src).alias(pos, out) if pos is not None
                else F.explode(src).alias(out))
         return df.select(*[F.col(c) for c in keep], gen)
@@ -215,7 +216,8 @@ def ngram_explode(df: DataFrame, arr: Column, n: int,
         cnt = F.greatest(F.size(arr) - (n - 1), F.lit(1))
         empty = F.array(F.struct(*[
             F.lit(None).cast("string").alias(f) for f in fields]))
-        z = F.when(F.size(arr) > 0, F.slice(z, 1, cnt)).otherwise(empty)
+        z = F.when(F.size(arr) > 0, F.slice(z, 1, cnt)) \
+            .when(arr.isNotNull(), empty)
         base = df.select(*[F.col(c) for c in keep],
                          F.explode(z).alias("__zg"))
     else:

@@ -51,8 +51,8 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
                   id_col: str = "doc_id") -> DataFrame:
     """One row per n-word shingle: (id, shingle).  Zip-exploded
     (:func:`~pypond_spark.datapipe._util.ngram_explode`, ``min_one`` —
-    every doc emits at least one shingle, short docs the joined
-    prefix): identical rows, fully code-generated."""
+    NULL text emits none, every other doc at least one, short docs the
+    joined prefix): identical rows, fully code-generated."""
     return ngram_explode(spread(df), word_tokens(text_col), n,
                          keep=[id_col], out="shingle", min_one=True)
 
@@ -150,13 +150,11 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     recall concession, which exact-digest dedup upstream (identical
     boilerplate never reaches LSH) keeps small in practice.
 
-    The (id, band) table is materialized once, so the self-join's two
-    sides share one shingle+signature computation. At warehouse scale,
-    write the signature table to storage once and join against that.
+    The (id, band) table is localCheckpointed once (blocks go with the
+    frame), so the self-join's two sides share one signature pass;
+    exchange reuse did not (each side recomputed it). At warehouse
+    scale, write the signature table to storage once and join on that.
     """
-    # localCheckpoint, not persist: the blocks go when the frame does.
-    # Exchange reuse does not replace it (the self-join's two sides each
-    # recomputed the signatures).
     buckets = lsh_band_buckets(df, text_col, id_col, num_hashes, band_size,
                                shingle_n).localCheckpoint()
     return _band_pairs(buckets, id_col, max_bucket)
@@ -258,8 +256,9 @@ def ngram_containment(df: DataFrame, pairs: DataFrame,
     each side's shingles found in the other). An empty document carries
     ``word_shingles``' single empty-string sentinel shingle (two empty
     docs therefore score containment 1.0 — they ARE exact duplicates);
-    pairs referencing ids absent from ``df`` are dropped by the inner
-    joins, exactly as in :func:`ngram_jaccard`.
+    pairs referencing NULL-text docs (no shingle) or ids absent from
+    ``df`` are dropped by the inner joins, exactly as in
+    :func:`ngram_jaccard`.
     """
     sets_df = _doc_shingle_sets(df, text_col, id_col, shingle_n)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -425,19 +424,14 @@ def dedup_documents(df: DataFrame, text_col: str = "text",
     only (bounded by the duplicate set, not the corpus) plus one join back
     on cluster_id.
 
-    ``max_bucket`` forwards to :func:`lsh_candidate_pairs` — the
-    adversarial-skew guard for crawl-scale corpora where boilerplate
-    mega-clusters make one band bucket (and its |bucket|²) explode; see
-    that function's docstring for the clique+star semantics and the
-    measured 100k-cluster numbers.
+    ``max_bucket`` is :func:`lsh_candidate_pairs`' mega-bucket guard
+    (clique over a sample plus star edges), with the same semantics.
     """
     if keeper not in ("min_id", "longest", "max_col"):
         raise ValueError(
             f"keeper must be min_id|longest|max_col, got {keeper!r}")
     if keeper == "max_col" and not keeper_col:
         raise ValueError("keeper='max_col' requires keeper_col")
-    # one checkpointed sketch feeds both the band self-join and the
-    # Jaccard verify (see the module docstring)
     sketch = _doc_sketch(df, text_col, id_col, num_hashes, shingle_n,
                          True).localCheckpoint()
     pairs = _band_pairs(_bands(sketch, id_col, num_hashes, band_size),
@@ -890,9 +884,8 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
             f"max_candidates must be >= 1, got {max_candidates}")
     spark = df.sparkSession
     base = index_path.rstrip("/")
-    # layout guard: prefer the _layout.json metadata (one tiny read);
-    # legacy indexes without it fall back to a first-level listing
-    # (O(dirs), driver-side)
+    # layout guard: _layout.json, else (legacy indexes) a first-level
+    # listing (O(dirs), driver-side)
     meta = _nd_read_meta(spark, base)
     got = prefix_chars
     if meta is not None:
@@ -909,7 +902,6 @@ def dedup_against_neardup(df: DataFrame, index_path: str,
             f"index at {index_path} was written with prefix_chars={got}, "
             f"queried with {prefix_chars} — the partition filter would "
             f"be empty and every duplicate would pass")
-    # one checkpointed sketch: the batch's bands and its shingle sets
     sketch = (_doc_sketch(df, text_col, id_col, num_hashes, shingle_n, True)
               .withColumnRenamed(id_col, "__new_id").localCheckpoint())
     nb = _bands(sketch, "__new_id", num_hashes, band_size)
@@ -1010,8 +1002,7 @@ def compact_neardup_index(spark, path: str,
     staged = base + "/bands.compacting"
     stats["bands_files_before"] = _n_parquet_files(bands)
     meta = _nd_read_meta(spark, base)
-    # a flat layout (band_pfx a data column, no directories) compacts
-    # to files_per_prefix files
+    # a flat layout (band_pfx a data column) compacts to plain files
     _write_bands(_nd_read(spark, base, meta, "bands"), staged,
                  (meta or {}).get("layout", "partitioned"),
                  files_per_prefix, files_per_prefix, "overwrite")

@@ -2155,8 +2155,9 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
     first/second 4 md5 bytes big-endian (== ``conv(md5_hex[0:8], 16,
     10)``), the tokens are
     :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python form
-    of the batch ``word_tokens`` law), a NULL, empty or token-less text
-    yields the single empty-string shingle the batch ``word_shingles``
+    of the batch ``word_tokens`` law), NULL text is dropped before the
+    stage (the batch ``word_shingles`` gives it no shingle), an empty or
+    token-less text yields the single empty-string shingle the batch
     emits, and the band digest is the same ``md5("b|m0|..|m3")`` hex
     string — pinned by the equality tests against the batch
     ``lsh_band_buckets``.
@@ -2210,7 +2211,8 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
             out["band"] = bands
             yield pd.DataFrame(out)
 
-    return sdf.select(*cols).mapInPandas(run, out_schema)
+    return (sdf.where(F.col(text_col).isNotNull()).select(*cols)
+            .mapInPandas(run, out_schema))
 
 
 def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",

@@ -1333,6 +1333,32 @@ def test_dedup_chain_job_budget(spark, docs, tmp_path):
     assert all(sum(got[k]) <= ceilings[k] for k in calls), got
 
 
+def test_null_text_has_no_shingle_in_the_lsh_calls(spark, tmp_path):
+    """NULL text has no shingle and empty text keeps its one '' shingle:
+    a NULL doc is nobody's near-duplicate in dedup_documents,
+    minhash_jaccard_estimate and dedup_against_neardup, while two empty
+    (or all-whitespace) docs are each other's."""
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "  "), (4, None), (5, "a b c d e f")],
+        "doc_id long, text string")
+    rows = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+            for r in dedup.dedup_documents(df).collect()}
+    assert rows == {1: (1, True), 2: (2, True), 3: (2, False),
+                    4: (4, True), 5: (5, True)}
+    pairs = spark.createDataFrame([(1, 4), (2, 3), (1, 2)],
+                                  "id_a long, id_b long")
+    est = {(r["id_a"], r["id_b"]): (r["jaccard_est"], r["jaccard_exact"])
+           for r in dedup.minhash_jaccard_estimate(df, pairs).collect()}
+    assert est == {(2, 3): (1.0, 1.0)}
+    index = str(tmp_path / "idx")
+    dedup.write_neardup_index(df.where(F.col("doc_id").isin(2, 4)), index,
+                              layout="flat")
+    hits = dedup.dedup_against_neardup(
+        df.where(F.col("doc_id").isin(1, 3)), index, keep_scores=True)
+    assert {(r["doc_id_new"], r["doc_id_ref"]) for r in hits.collect()} \
+        == {(3, 2)}
+
+
 def test_dedup_documents_end_to_end(spark, docs):
     base = docs.limit(4).select("doc_id", "text")
     clone = base.withColumn("doc_id", F.col("doc_id") + 1_000_000)

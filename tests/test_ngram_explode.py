@@ -22,11 +22,12 @@ def _old_strict(df, arr, n, keep, out):
 
 
 def _old_min_one(df, arr, n, keep, out):
-    """The pre-r14 word_shingles formulation: at least one shingle."""
+    """The pre-r14 word_shingles formulation under the NULL-text law: at
+    least one shingle, none for a NULL token array."""
     count = F.greatest(F.size(arr) - (n - 1), F.lit(1))
-    grams = F.transform(
+    grams = F.when(arr.isNotNull(), F.transform(
         F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(arr, i, n)))
+        lambda i: F.concat_ws(" ", F.slice(arr, i, n))))
     return df.select(*[F.col(c) for c in keep],
                      F.explode(grams).alias(out))
 
@@ -69,10 +70,10 @@ def test_min_one_matches_old_formulation(edge_docs, n):
     assert _multiset(new) == _multiset(old)
 
 
-def test_min_one_empty_and_null_emit_one_empty_gram(edge_docs):
+def test_min_one_empty_emits_one_empty_gram_null_none(edge_docs):
     out = ngram_explode(edge_docs.where("doc_id in (4, 5)"), _toks(),
                         3, keep=["doc_id"], out="g", min_one=True)
-    assert _multiset(out) == [(4, ""), (5, "")]
+    assert _multiset(out) == [(4, "")]
 
 
 def test_strict_pos_offsets(edge_docs):

@@ -228,7 +228,8 @@ token_texts = st.builds(
 @settings(max_examples=8, deadline=None)
 def test_word_token_law_cross_engine(spark, texts):
     """JVM ``word_tokens`` == ``py_word_tokens`` per row, the Arrow
-    MinHash bands == the batch ``lsh_band_buckets`` bands, and the Arrow
+    MinHash bands == the batch ``lsh_band_buckets`` bands (none for NULL
+    text), and the Arrow
     SimHash == the batch ``simhash64`` halves, on adversarial text.  All
     five outputs come from ONE collect of a unioned plan; the frame is
     one partition, so the Arrow stages see the docs as one chunk."""
@@ -270,6 +271,9 @@ def test_word_token_law_cross_engine(spark, texts):
         return {i: sorted(v) for i, v in got.get(tag, {}).items()}
 
     assert per_doc("mh_arrow") == per_doc("mh_batch")
+    # NULL text has no shingle, so no band; every other doc has bands
+    assert set(per_doc("mh_batch")) == {
+        i for i, t in enumerate(texts) if t is not None}
     assert per_doc("sh_arrow") == per_doc("sh_batch")
 
 
