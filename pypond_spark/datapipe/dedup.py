@@ -165,13 +165,15 @@ def _band_pairs(buckets: DataFrame, id_col: str,
     """(id_a < id_b) pairs sharing a band of the materialized (id, band)
     table ``buckets``, capped per bucket as :func:`lsh_candidate_pairs`
     describes when ``max_bucket`` is set."""
-    if max_bucket is None:
-        a, b = buckets.alias("a"), buckets.alias("b")
+    def clique(t: DataFrame) -> DataFrame:
+        a, b = t.alias("a"), t.alias("b")
         return (a.join(b, (F.col("a.band") == F.col("b.band"))
                        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
                 .select(F.col(f"a.{id_col}").alias("id_a"),
-                        F.col(f"b.{id_col}").alias("id_b"))
-                .distinct())
+                        F.col(f"b.{id_col}").alias("id_b")))
+
+    if max_bucket is None:
+        return clique(buckets).distinct()
     if max_bucket < 2:
         raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
     order = F.md5(F.concat_ws(":", F.col("band"),
@@ -180,12 +182,6 @@ def _band_pairs(buckets: DataFrame, id_col: str,
     ranked = (buckets
               .select(id_col, "band", F.row_number().over(w).alias("__rn"))
               .localCheckpoint())
-    core = ranked.where(F.col("__rn") <= max_bucket)
-    a, b = core.alias("a"), core.alias("b")
-    clique = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                     & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-              .select(F.col(f"a.{id_col}").alias("id_a"),
-                      F.col(f"b.{id_col}").alias("id_b")))
     rep = (ranked.where(F.col("__rn") == 1)
            .select("band", F.col(id_col).alias("__rep")))
     star = (ranked.where(F.col("__rn") > max_bucket)
@@ -193,7 +189,8 @@ def _band_pairs(buckets: DataFrame, id_col: str,
             .select(F.least(F.col(id_col), F.col("__rep")).alias("id_a"),
                     F.greatest(F.col(id_col), F.col("__rep"))
                     .alias("id_b")))
-    return clique.unionByName(star).distinct()
+    return (clique(ranked.where(F.col("__rn") <= max_bucket))
+            .unionByName(star).distinct())
 
 
 def lsh_band_buckets(df: DataFrame, text_col: str = "text",
