@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..index import window_duration_ms
+from ..util import timed_events
 
 __all__ = ["cusum_changepoints"]
 
@@ -83,7 +84,7 @@ def cusum_changepoints(
     # round-half-away division (2S+C) div (2C)
     ev_mic = F.round(F.round(F.col(field).cast("double"), 6) * 1e6) \
         .cast("long")
-    bf = (df.groupBy(*keys, pos)
+    bf = (timed_events(df, time_col).groupBy(*keys, pos)
           .agg(F.sum(ev_mic).alias("__S"),
                F.count(F.col(field)).alias("__C"))
           .where(F.col("__C") > 0)
@@ -195,7 +196,7 @@ def control_chart_rules(
                    / F.lit(b_ms))).alias("__pos")
     ev_mic = F.round(F.round(F.col(field).cast("double"), 6) * 1e6) \
         .cast("long")
-    bf = (df.groupBy(*keys, pos)
+    bf = (timed_events(df, time_col).groupBy(*keys, pos)
           .agg(F.sum(ev_mic).alias("__S"),
                F.count(F.col(field)).alias("__C"))
           .where(F.col("__C") > 0)

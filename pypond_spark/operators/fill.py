@@ -30,7 +30,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import field_dtype, is_valid_col, set_field
+from ..util import field_dtype, is_valid_col, set_field, timed_events
 
 
 def _fill_one(df: DataFrame, field: str, method: str, fill_limit: int | None,
@@ -148,7 +148,7 @@ def fill(
     # multi-field linear: the reference chains one Filler per column
     # (series.py:1124-1129); the loop below gives the same result, and the
     # identical window specs collapse into one shuffle.
-    out = df
+    out = timed_events(df, time_col)
     for f in fields:
         out = _fill_one(out, f, method, fill_limit, list(partition_by),
                         time_col, gap_ms)

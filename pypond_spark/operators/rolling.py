@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import _prefilter, normalize_agg_spec
 from ..index import window_duration_ms
+from ..util import timed_events
 
 
 def _range_window(window: str, partition_by: Sequence[str], time_col: str,
@@ -130,6 +131,7 @@ def rolling(df: DataFrame, window: str, aggregation: dict,
             raise ValueError(
                 f"rolling supports filters {_ROLLING_FILTERS}, got {flt!r}"
                 f" for {out!r}")
+    df = timed_events(df, time_col)
 
     def _is_quantile(func):
         return func == "median" or (
@@ -172,6 +174,7 @@ def cumulative(df: DataFrame, aggregation: dict,
     Scale: one window shuffle on the series key, identical shape to
     ``rolling``; no state beyond the frame Spark streams through.
     """
+    df = timed_events(df, time_col)
     order = [time_col, tiebreak] if tiebreak else [time_col]
     w = (Window.partitionBy(*partition_by).orderBy(*order)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -216,6 +219,7 @@ def ewma(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     from pyspark.sql import types as T
     out_schema = T.StructType(list(df.schema.fields)
                               + [T.StructField(f"{f}_ewma", T.DoubleType())
@@ -291,6 +295,7 @@ def holt(df: DataFrame, field: str = "value", alpha: float = 0.5,
     if not 0.0 <= beta <= 1.0:
         raise ValueError(f"beta must be in [0, 1], got {beta}")
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     from pyspark.sql import types as T
     out_schema = T.StructType(list(df.schema.fields)
                               + [T.StructField(f"{field}_level",
@@ -371,6 +376,7 @@ def throttle(df: DataFrame, min_spacing: str | int = "1m",
         raise ValueError(f"min_spacing must be a positive fixed window, "
                          f"got {min_spacing!r}")
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     from pyspark.sql import types as T
     out_schema = T.StructType(list(df.schema.fields)
                               + [T.StructField("throttle_keep",
@@ -488,6 +494,7 @@ def holt_winters(df: DataFrame, field: str = "value", period: int = 24,
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     from pyspark.sql import types as T
     out_schema = T.StructType(list(df.schema.fields)
                               + [T.StructField(f"{field}_level",
@@ -577,7 +584,7 @@ def zscore(df: DataFrame, field_spec: str = "value",
     else:
         w = _range_window(window, partition_by, time_col,
                           exclude_current=True)
-    out = df
+    out = timed_events(df, time_col)
     for f in fields:
         col = F.col(f).cast("double")
         z = F.try_divide(col - F.avg(col).over(w),
@@ -832,7 +839,8 @@ def rolling_robust_zscore(df: DataFrame, window: str,
     w = _range_window(window, partition_by, time_col)
     col = F.col(field).cast("double")
     valid = col.isNotNull() & ~F.isnan(col)
-    base = df.withColumn("__rarr", _sorted_frame(F.when(valid, col), w))
+    base = timed_events(df, time_col).withColumn(
+        "__rarr", _sorted_frame(F.when(valid, col), w))
     base = base.withColumn("__rmed",
                            _quantile_of_sorted(F.col("__rarr"), 0.5))
     dev = F.array_sort(F.transform(
@@ -877,6 +885,7 @@ def cusum(df: DataFrame, field: str = "value",
     if side not in ("upper", "lower", "both"):
         raise ValueError(f"side must be upper|lower|both, got {side!r}")
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     col = F.col(field).cast("double")
     valid = col.isNotNull() & ~F.isnan(col)
     if target is None:

@@ -23,6 +23,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import timed_events
+
 
 def _slot_cols(time_col: str, tz: str = "UTC"):
     t = (F.col(time_col) if tz == "UTC"
@@ -46,7 +48,7 @@ def seasonal_profile(
     col = F.col(field).cast("double")
     valid = col.isNotNull() & ~F.isnan(col)
     dow, hod = _slot_cols(time_col, tz)
-    return (df.where(valid)
+    return (timed_events(df, time_col).where(valid)
             .groupBy(*keys, dow, hod)
             .agg(F.avg(col).alias("mean"),
                  F.stddev_pop(col).alias("std"),
@@ -75,6 +77,7 @@ def seasonal_anomaly(
     DataFrame (stream-static join).
     """
     keys = list(partition_by)
+    df = timed_events(df, time_col)
     prof = (profile if profile is not None
             else seasonal_profile(df, field, keys, time_col, tz))
     # internal names for the profile's stat columns: the event side may

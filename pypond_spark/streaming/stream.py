@@ -52,6 +52,7 @@ from ..datapipe._util import py_word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
 from ..session import shuffle_width
+from ..util import timed_events
 
 OUTPUT_MODE = {"eachEvent": "update", "discard": "append", "flush": "complete"}
 
@@ -115,16 +116,6 @@ def windowed_stream_aggregate(
     return out, mode
 
 
-def _keyed(sdf: DataFrame, keys: list[str]) -> tuple[DataFrame, list[str], bool]:
-    """Stateful streaming ops need >=1 grouping expression (Spark's
-    StatefulOpClusteredDistribution rejects an empty key list). With no
-    series key, inject a constant key — single state partition, dropped
-    from the output."""
-    if keys:
-        return sdf, keys, False
-    return sdf.withColumn("__k", F.lit(0)), ["__k"], True
-
-
 def _whole_group(pdfs: Iterator[pd.DataFrame], time_col: str,
                  tiebreak: Sequence[str] = ()) -> pd.DataFrame:
     """Concatenate ALL Arrow chunks of the group, then sort by time.
@@ -153,18 +144,22 @@ def _keyed_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
                  tiebreak: str | None = None) -> DataFrame:
     """The shell of every keyed, timeout-free state operator below.
 
-    It owns the constant ``__k`` key of :func:`_keyed` (and its drop), the
-    output schema (key fields + ``out_fields``), the state schema, the
-    ``append`` / ``NoTimeout`` ``applyInPandasWithState`` call, and the
-    group prologue. ``make_step(keys)`` gets the resolved grouping keys
+    It owns the constant ``__k`` key (and its drop), the output schema
+    (key fields + ``out_fields``), the state schema, the ``append`` /
+    ``NoTimeout`` ``applyInPandasWithState`` call, and the group
+    prologue. ``make_step(keys)`` gets the resolved grouping keys
     and returns ``step(key, pdf, state)``, a generator of output frames.
     The step sees the WHOLE group (:func:`_whole_group`), stable-sorted by
     time then ``tiebreak``, and never an empty one: under ``NoTimeout``
     Spark only calls for groups that have rows.  A row with NULL time is
     dropped on the JVM side, as the batch twins drop it.
     """
-    sdf, keys, dummy = _keyed(sdf.where(F.col(time_col).isNotNull()),
-                              list(partition_by))
+    sdf = timed_events(sdf, time_col)
+    keys, dummy = list(partition_by), not partition_by
+    if dummy:
+        # Spark's StatefulOpClusteredDistribution rejects an empty key
+        # list: with no series key, one constant key (one state partition)
+        sdf, keys = sdf.withColumn("__k", F.lit(0)), ["__k"]
     step = make_step(keys)
     tb = (tiebreak,) if tiebreak else ()
 
@@ -1030,98 +1025,6 @@ def stream_ewma(
         lambda keys: _ewma_state_fn(fields, keys, time_col, alpha,
                                     list(carry_cols)),
         tiebreak)
-
-
-def stream_ewma_tws(
-    sdf: DataFrame,
-    field_spec: str | Sequence[str] = "value",
-    alpha: float = 0.5,
-    partition_by: Sequence[str] = (),
-    time_col: str = "time",
-    tiebreak: str | None = None,
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """`stream_ewma` on the ``transformWithStateInPandas`` API — a
-    migration spike (r6 verdict item 8), NOT the default path.
-
-    Spark 4 keeps ``applyInPandasWithState`` working but the newer
-    StatefulProcessor API is where composite/TTL state and timers land,
-    so the engine should not be wedded to the older call.  This twin
-    produces bit-identical output to :func:`stream_ewma` (same
-    ``_whole_group`` ordering, same accumulator fold, proven by
-    ``tests/test_streaming.py::test_stream_ewma_tws_spike``).
-
-    Migration cost observed (documented in SCALE.md):
-
-    - TWS requires the RocksDB state store provider
-      (``spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider``);
-      the default HDFS-backed store is rejected at query start.  The
-      drain helper below sets it for the query's session.
-    - State formats are NOT checkpoint-compatible: an
-      ``applyInPandasWithState`` checkpoint cannot be resumed by the TWS
-      operator — migrating a live pipeline means a fresh checkpoint (or
-      the state data source reader to bulk-export/import state).
-    - The per-group handler sees the same whole-group Arrow-chunk
-      iterator, so the operator body ports nearly verbatim; only state
-      access changes (``handle.getValueState`` / ``.get()`` tuple vs
-      ``GroupState.get``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    sdf, keys, dummy = _keyed(sdf, list(partition_by))
-    key_fields = [sdf.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields])
-    state_schema = T.StructType(
-        [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))])
-    carry = list(carry_cols)
-    tb = (tiebreak,) if tiebreak else ()
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState("acc", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            got = self._acc.get() if self._acc.exists() else None
-            accs = list(got) if got is not None else [None] * len(fields)
-            pdf = _whole_group(rows, time_col, tb)
-            if not len(pdf):
-                return
-            # array-based loop (r12): same numpy recipe as the
-            # applyInPandasWithState sibling _ewma_state_fn — the
-            # recurrence rounds at every step so the fold stays scalar,
-            # but iterrows row materialization (the actual cost) goes
-            t_arr = _t_ms(pdf, time_col)
-            v_arrs = [_f64(pdf, f) for f in fields]
-            c_arrs = [pdf[c].to_list() for c in carry]
-            outs = []
-            for r in range(len(t_arr)):
-                rec = (list(key) + [int(t_arr[r])]
-                       + [c[r] for c in c_arrs])
-                for j in range(len(fields)):
-                    v = v_arrs[j][r]
-                    if not np.isnan(v):
-                        accs[j] = float(v) if accs[j] is None \
-                            else alpha * float(v) + (1.0 - alpha) * accs[j]
-                    rec.append(accs[j])
-                outs.append(rec)
-            self._acc.update(tuple(accs))
-            cols = (keys + ["t_ms"] + carry + [f"{f}_ewma" for f in fields])
-            yield pd.DataFrame(outs, columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    out = sdf.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=_EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none")
-    return out.drop("__k") if dummy else out
 
 
 def _holt_state_fn(field: str, keys: list[str], time_col: str,

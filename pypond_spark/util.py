@@ -126,6 +126,13 @@ def valid_or_null(col: Column | str, dtype: T.DataType | None = None) -> Column:
 # ---------------------------------------------------------------------------
 
 
+def timed_events(df, time_col: str):
+    """The NULL-time law of the time-ordered operators, batch and stream
+    (``streaming.stream._keyed_state``): a row whose time is NULL is no
+    event, so it is dropped at entry."""
+    return df.where(F.col(time_col).isNotNull())
+
+
 def field_dtype(schema: T.StructType, path: str) -> T.DataType | None:
     """Resolve the dtype at a dotted path; None if not resolvable."""
     parts = path.split(".")

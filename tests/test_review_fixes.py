@@ -387,3 +387,79 @@ def test_session_drops_call_site_capture(spark):
     assert is_debugging_enabled() is False
     with pytest.raises(AnalysisException, match="no_such_col"):
         spark.range(1).select("no_such_col")
+
+
+_ZIP_GUARD_PROBE = r"""
+import importlib, os, sys, zipfile, zipimport
+
+zpath = sys.argv[1]
+import zpkg.a  # noqa: F401  (one zipimporter per path inside the archive)
+reads = []
+_read = zipimport._read_directory
+
+
+def counting(path):
+    reads.append(path)
+    return _read(path)
+
+
+zipimport._read_directory = counting
+importlib.invalidate_caches()
+unguarded = reads.count(zpath)
+import pypond_spark.daemon  # noqa: F401,E402  (installs the guard)
+del reads[:]
+for _ in range(3):
+    importlib.invalidate_caches()
+unchanged = reads.count(zpath)
+del reads[:]
+st = os.stat(zpath)
+with zipfile.ZipFile(zpath, "w") as z:
+    z.writestr("zpkg/__init__.py", "")
+    z.writestr("zpkg/a.py", "A = 1\n")
+    z.writestr("zpkg/b.py", "B = 2\n")
+os.utime(zpath, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+importlib.invalidate_caches()
+changed = reads.count(zpath)
+from zpkg.b import B  # noqa: E402
+print(unguarded, unchanged, changed, B)
+"""
+
+
+def test_daemon_zip_guard_rereads_only_a_changed_archive(tmp_path):
+    """The worker daemon's zipimport guard: while a zip on the path is
+    unchanged, ``importlib.invalidate_caches()`` reads no central
+    directory (unguarded, every importer of the archive reads it); a
+    rewritten zip is read once and its new module imports."""
+    import os
+    import subprocess
+    import sys
+    import zipfile
+    zpath = str(tmp_path / "zpkg.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/a.py", "A = 1\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([zpath, repo]))
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_GUARD_PROBE, zpath], env=env,
+        cwd=str(tmp_path), capture_output=True, text=True, check=True)
+    unguarded, unchanged, changed, b = map(int, out.stdout.split())
+    assert unguarded >= 2
+    assert (unchanged, changed, b) == (0, 1, 2)
+
+
+def test_workers_run_the_zip_guard(spark):
+    """Every Python task runs in a worker forked from pypond_spark.daemon,
+    so the zipimport reload guard is live inside the task."""
+    import pandas as pd
+
+    def probe(batches):
+        import zipimport
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"mod": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    got = {r["mod"] for r in spark.range(4, numPartitions=2)
+           .mapInPandas(probe, "mod string").collect()}
+    assert got == {"pypond_spark.daemon"}

@@ -286,71 +286,6 @@ def test_stream_ewma_matches_batch(spark, tmp_path):
     assert bgot == got
 
 
-def test_stream_ewma_tws_spike(spark, tmp_path):
-    """transformWithStateInPandas migration spike (r6 verdict item 8):
-    the StatefulProcessor twin must reproduce stream_ewma bit-for-bit
-    across micro-batch boundaries.  TWS needs the RocksDB state store
-    provider — set for this query's session and restored after — AND the
-    ``protobuf`` package (its Python<->JVM state server speaks protobuf;
-    absent in this sandbox, so the execution path is skipped here and the
-    plan-only construction is asserted instead — the documented migration
-    costs; see stream_ewma_tws docstring)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server requires protobuf")
-    from pypond_spark.streaming import run_available_now
-    from pypond_spark.streaming.stream import stream_ewma_tws
-    chunk1 = [{"t_ms": 0, "user": "a", "value": 10.0},
-              {"t_ms": 1_000, "user": "a", "value": 20.0}]
-    chunk2 = [{"t_ms": 2_000, "user": "a", "value": 40.0},
-              {"t_ms": 0, "user": "b", "value": 5.0}]
-    for i, chunk in enumerate([chunk1, chunk2]):
-        path = tmp_path / f"p{i}.json"
-        with open(path, "w") as fh:
-            for r in chunk:
-                fh.write(json.dumps(r) + "\n")
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    sdf = (spark.readStream.schema(SCHEMA)
-           .option("maxFilesPerTrigger", 1).json(str(tmp_path))
-           .withColumn("time", F.timestamp_millis(F.col("t_ms")))
-           .drop("t_ms"))
-    out = stream_ewma_tws(sdf, "value", alpha=0.5, partition_by=["user"])
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov, None)
-    spark.conf.set(prov, "org.apache.spark.sql.execution.streaming."
-                         "state.RocksDBStateStoreProvider")
-    try:
-        rows = run_available_now(out, "append").collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov)
-        else:
-            spark.conf.set(prov, prev)
-    got = {(r["user"], r["t_ms"]): r["value_ewma"] for r in rows}
-    # identical to test_stream_ewma_matches_batch's applyInPandasWithState
-    # goldens — the two APIs agree bit-for-bit
-    assert got == {("a", 0): 10.0, ("a", 1_000): 15.0,
-                   ("a", 2_000): 27.5, ("b", 0): 5.0}
-
-
-def test_stream_ewma_tws_constructs(spark, tmp_path):
-    """The TWS twin's logical plan builds without protobuf (only query
-    START needs the state server), so the flagged path is exercised up to
-    analysis in every environment: streaming flag, schema and grouping
-    all verified here; execution parity runs wherever protobuf exists
-    (test above)."""
-    from pypond_spark.streaming.stream import stream_ewma_tws
-    with open(tmp_path / "p.json", "w") as fh:
-        fh.write(json.dumps({"t_ms": 0, "user": "a", "value": 1.0}) + "\n")
-    sdf = (spark.readStream.schema(SCHEMA).json(str(tmp_path))
-           .withColumn("time", F.timestamp_millis(F.col("t_ms")))
-           .drop("t_ms"))
-    out = stream_ewma_tws(sdf, "value", alpha=0.5, partition_by=["user"],
-                          carry_cols=())
-    assert out.isStreaming
-    assert out.columns == ["user", "t_ms", "value_ewma"]
-
-
 def test_quality_exprs_work_on_streams(spark, tmp_path):
     """The per-document quality signals are stateless column exprs, so the
     same gopher/c4 rules drive a streaming ingestion filter unchanged."""
@@ -1643,28 +1578,32 @@ def test_keyed_state_ops_no_key_path(spark, tmp_path, op):
     assert rows(bare) == want
 
 
+_NULL_TIME_SCHEMA = T.StructType([T.StructField("t_ms", T.LongType()),
+                                  T.StructField("user", T.StringType()),
+                                  T.StructField("value", T.DoubleType()),
+                                  T.StructField("event_type", T.StringType())])
+_NULL_TIME_EVENTS = [
+    {"t_ms": t, "user": "a", "value": v, "event_type": e}
+    for t, v, e in [(0, 100.0, "x"), (30_000, 130.0, "y"),
+                    (60_000, None, None), (90_000, 220.0, "x"),
+                    (240_000, 160.0, "y"), (270_000, 95.0, "y"),
+                    (300_000, 50.0, "x")]]
+_NULL_TIME_ROW = {"t_ms": None, "user": "a", "value": 4.0, "event_type": "x"}
+
+
 @pytest.mark.parametrize("op", sorted(_NO_KEY_CALLS))
 def test_keyed_state_ops_drop_null_time(spark, tmp_path, op):
     """A NULL-time row never reaches a keyed state step: every keyed
     state operator drains the same rows with and without it (it used to
     enter the step as -9223372036855 ms)."""
     from pypond_spark.streaming import stream
-    schema = T.StructType([T.StructField("t_ms", T.LongType()),
-                           T.StructField("user", T.StringType()),
-                           T.StructField("value", T.DoubleType()),
-                           T.StructField("event_type", T.StringType())])
-    events = [{"t_ms": t, "user": "a", "value": v, "event_type": e}
-              for t, v, e in [(0, 100.0, "x"), (30_000, 130.0, "y"),
-                              (60_000, None, None), (90_000, 220.0, "x"),
-                              (240_000, 160.0, "y"), (270_000, 95.0, "y"),
-                              (300_000, 50.0, "x")]]
-    null = {"t_ms": None, "user": "a", "value": 4.0, "event_type": "x"}
+    events, null = _NULL_TIME_EVENTS, _NULL_TIME_ROW
 
     def drain(name, first):
         src = tmp_path / name
         src.mkdir()
         _write_chunks(src, [first, events[3:]])
-        sdf = (spark.readStream.schema(schema).json(str(src))
+        sdf = (spark.readStream.schema(_NULL_TIME_SCHEMA).json(str(src))
                .withColumn("time", F.timestamp_millis(F.col("t_ms")))
                .drop("t_ms"))
         out = getattr(stream, op)(sdf, partition_by=["user"],
@@ -1675,6 +1614,56 @@ def test_keyed_state_ops_drop_null_time(spark, tmp_path, op):
     want = drain("clean", events[:3])
     assert want
     assert drain("null", events[:3] + [null]) == want
+
+
+_BATCH_TIME_CALLS = {
+    "throttle": ("rolling", "throttle", {"min_spacing": "1m"}),
+    "fill": ("fill", "fill", {"method": "linear"}),
+    "rolling": ("rolling", "rolling", {
+        "window": "2m", "aggregation": {"v_avg": {"value": "avg"}}}),
+    "zscore": ("rolling", "zscore", {"window": "5m", "threshold": 1.0}),
+    "zscore_series": ("rolling", "zscore", {"threshold": 1.0}),
+    "cusum": ("rolling", "cusum", {"target": 100.0}),
+    "cusum_own_mean": ("rolling", "cusum", {}),
+    "control_chart_rules": ("changepoint", "control_chart_rules", {
+        "bucket": "1m", "target": 100.0, "sigma": 10.0}),
+    "cumulative": ("rolling", "cumulative", {
+        "aggregation": {"v_sum": {"value": "sum"}, "n": {"value": "count"}}}),
+    "ewma": ("rolling", "ewma", {}),
+    "holt": ("rolling", "holt", {}),
+    "holt_winters": ("rolling", "holt_winters", {"period": 2}),
+    "cusum_changepoints": ("changepoint", "cusum_changepoints", {
+        "bucket": "1m"}),
+    "rolling_robust_zscore": ("rolling", "rolling_robust_zscore", {
+        "window": "5m"}),
+    "seasonal_profile": ("seasonal", "seasonal_profile", {}),
+    "seasonal_anomaly": ("seasonal", "seasonal_anomaly", {}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_BATCH_TIME_CALLS))
+def test_batch_time_ops_drop_null_time(spark, op):
+    """The batch time operators (the keyed state operators' twins among
+    them) follow the stream side's NULL-time law: the same rows with and
+    without one NULL-time row give equal output (the row used to come
+    out as an extra NULL-time row or slot, or sort first and shift every
+    later row)."""
+    import importlib
+    mod, name, kw = _BATCH_TIME_CALLS[op]
+    fn = getattr(importlib.import_module(f"pypond_spark.operators.{mod}"),
+                 name)
+
+    def run(rows):
+        # one input partition, so float sums add in the same order
+        df = (spark.createDataFrame(rows, _NULL_TIME_SCHEMA).coalesce(1)
+              .withColumn("time", F.timestamp_millis(F.col("t_ms")))
+              .drop("t_ms"))
+        return sorted(repr(r) for r in
+                      fn(df, partition_by=["user"], **kw).collect())
+
+    want = run(_NULL_TIME_EVENTS)
+    assert want
+    assert run(_NULL_TIME_EVENTS + [_NULL_TIME_ROW]) == want
 
 
 @contextmanager
