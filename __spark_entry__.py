@@ -2392,7 +2392,7 @@ def q_tar_shard_ingest(spark, sf_dir):
 def q_tar_sample_pairing(spark, sf_dir):
     """WebDataset sample pairing (datapipe/tarshard.py::
     read_tar_samples — r13): adjacent members group into one sample
-    row WITHOUT a shuffle (batch-local run detection); ragged
+    row WITHOUT a shuffle (per-shard run detection); ragged
     samples (the rotating cls member) keep their true part counts
     and the txt payload rides the map intact."""
     from pypond_spark.datapipe.tarshard import read_tar_samples
@@ -2477,7 +2477,7 @@ def q_pdf_page_stats(spark, sf_dir):
 def q_zip_sample_pairing(spark, sf_dir):
     """Zip-shard sample pairing (datapipe/tarshard.py::
     read_zip_samples — the zip twin of tar_sample_pairing, same
-    batch-local adjacent-member pairing, same oracle): ragged samples
+    per-shard adjacent-member pairing, same oracle): ragged samples
     keep their part counts and the txt payload rides the map."""
     from pypond_spark.datapipe.tarshard import read_zip_samples
 

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import re
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import shuffle_width
 
@@ -73,11 +75,7 @@ def global_prefix_sums(df: DataFrame, order_exprs: list[Column],
 #: construction: a warehouse-scale scan is far above the floor (and
 #: already arrives in enough file-splits that spread() is a no-op
 #: anyway), while a bench/sample-scale frame stays partition-local.
-#: Env-overridable for cluster tuning; 0 restores unconditional spread.
-import os as _os
-
-SPREAD_MIN_TASK_BYTES = int(
-    _os.environ.get("PYPOND_SPREAD_MIN_TASK_BYTES", str(2 << 20)))
+SPREAD_MIN_TASK_BYTES = 2 << 20
 
 
 def spread(df: DataFrame, min_task_bytes: int | None = None) -> DataFrame:
@@ -129,6 +127,40 @@ def spread_io(df: DataFrame) -> DataFrame:
     per-row media/extraction operators (work proportional to input
     bytes).  See ``SPREAD_MIN_TASK_BYTES`` for the threshold law."""
     return spread(df, min_task_bytes=SPREAD_MIN_TASK_BYTES)
+
+
+def map_blobs(df: DataFrame, schema: T.StructType, fn, id_col: str,
+              blob_col: str, *extra_cols: str) -> DataFrame:
+    """The codec tier's one Arrow row shell: ``fn`` over every
+    ``(id, blob, *extras)`` row of ``df``, one ``mapInPandas`` stage,
+    zero shuffle.
+
+    ``fn(blob, *extras)`` returns zero or more tuples; each becomes one
+    output row ``(int(id), *tuple)`` under ``schema``.  The blob
+    arrives as ``bytes`` (a string column passes through as ``str``);
+    extras arrive as pandas hands them over (a NULL int is NaN).
+
+    The NULL law: a row whose id or blob is NULL gives no output.  It
+    is a JVM filter in front of the stage, so a NULL never reaches
+    ``fn`` and never turns the batch's id column into float64.  A
+    decoder's exception still fails the job: corruption stays loud.
+    Callers pass an already-spread frame (:func:`spread` or
+    :func:`spread_io`)."""
+    cols = schema.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for rid, blob, *ex in zip(pdf[id_col], pdf[blob_col],
+                                      *(pdf[c] for c in extra_cols)):
+                if not isinstance(blob, str):
+                    blob = bytes(blob)
+                rows.extend((int(rid), *t) for t in fn(blob, *ex))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return (df.where(F.col(id_col).isNotNull()
+                     & F.col(blob_col).isNotNull())
+            .mapInPandas(run, schema=schema))
 
 
 #: The whitespace class of the word-token law: Java regex ``\s`` spelled

@@ -227,41 +227,3 @@ def encode_avi_mjpeg(width: int, height: int, frames_y: list[bytes],
     movi = b"movi" + b"".join(_chunk(b"00dc", j) for j in jpegs)
     body = b"AVI " + _chunk(b"LIST", hdrl) + _chunk(b"LIST", movi)
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def encode_avi_dib(width: int, height: int, frames_rgb: list[bytes],
-                   fps: tuple[int, int] = (25, 1)) -> bytes:
-    """Uncompressed (BI_RGB 24-bpp) AVI encoder — the synthesis half
-    of the r12 DIB decode path: interleaved RGB frames in, bottom-up
-    4-byte-padded BGR ``00db`` chunks out.  Lossless, so decode
-    recovers the BT.601 luma of the exact input pixels (or the input
-    verbatim for gray-valued frames)."""
-    if width < 1 or height < 1:
-        raise ValueError(f"dimensions must be >= 1, got {width}x{height}")
-    row_bytes = (width * 3 + 3) & ~3
-    chunks = []
-    for i, px in enumerate(frames_rgb):
-        if len(px) != width * height * 3:
-            raise ValueError(f"frame {i}: need {width * height * 3} "
-                             f"RGB bytes, got {len(px)}")
-        rgb = np.frombuffer(px, np.uint8).reshape(height, width, 3)
-        rows = np.zeros((height, row_bytes), np.uint8)
-        rows[:, :width * 3] = rgb[:, :, ::-1].reshape(height, -1)
-        chunks.append(rows[::-1].tobytes())
-    num, den = fps
-    usec = (1_000_000 * den) // num
-    bufsz = max(len(c) for c in chunks)
-    avih = struct.pack("<14I", usec, 0, 0, 0, len(chunks), 0, 1,
-                       bufsz, width, height, 0, 0, 0, 0)
-    strh = (b"vids" + b"DIB "
-            + struct.pack("<IHHIIIIIIiI4H", 0, 0, 0, 0, den, num, 0,
-                          len(chunks), bufsz, -1, 0, 0, 0, width,
-                          height))
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24,
-                       b"\x00\x00\x00\x00", row_bytes * height,
-                       0, 0, 0, 0)
-    strl = b"strl" + _chunk(b"strh", strh) + _chunk(b"strf", strf)
-    hdrl = b"hdrl" + _chunk(b"avih", avih) + _chunk(b"LIST", strl)
-    movi = b"movi" + b"".join(_chunk(b"00db", c) for c in chunks)
-    body = b"AVI " + _chunk(b"LIST", hdrl) + _chunk(b"LIST", movi)
-    return b"RIFF" + struct.pack("<I", len(body)) + body

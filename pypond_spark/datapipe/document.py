@@ -32,13 +32,11 @@ shuffle — the router adds dispatch, not plan complexity.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 #: markdown is a HEURISTIC label (there is no magic byte): an ATX
 #: heading at line start, a fenced code block, or an inline link —
@@ -112,15 +110,5 @@ def extract_documents(df: DataFrame, content_col: str = "content",
     """One row per blob: ``(doc_id, format, text, n_units)`` —
     Arrow ``mapInPandas`` over :func:`route_document`, zero
     shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in DOC_ROUTE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                fmt, text, n = route_document(bytes(content))
-                rows.append((int(did), fmt, text, n))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=DOC_ROUTE_SCHEMA)
+    return map_blobs(spread(df), DOC_ROUTE_SCHEMA,
+                     lambda b: [route_document(b)], id_col, content_col)

@@ -31,13 +31,12 @@ zero shuffle, the standard datapipe decoder plan shape.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 __all__ = ["parse_id3v2", "encode_id3v2", "audio_id3_tags",
            "ID3_SCHEMA"]
@@ -218,17 +217,6 @@ def audio_id3_tags(df: DataFrame, content_col: str = "content",
     artist, album, length_ms)`` — Arrow ``mapInPandas`` over
     :func:`parse_id3v2`, zero shuffle; the header-only MP3 triage
     beside ``multimodal.sniff_audio_meta``."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ID3_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                d = parse_id3v2(bytes(content))
-                rows.append((int(did), d["version"], d["title"],
-                             d["artist"], d["album"],
-                             d["length_ms"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=ID3_SCHEMA)
+    tags = itemgetter(*ID3_SCHEMA.fieldNames()[1:])
+    return map_blobs(spread(df), ID3_SCHEMA,
+                     lambda b: [tags(parse_id3v2(b))], id_col, content_col)

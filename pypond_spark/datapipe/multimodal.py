@@ -35,14 +35,12 @@ import math
 import struct
 import wave
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._util import spread, spread_io
+from ._util import map_blobs, spread, spread_io
 
 from pypond_spark.datapipe.bmp import decode_bmp
 from pypond_spark.datapipe.gif import decode_gif
@@ -585,9 +583,12 @@ def extract_features(df: DataFrame, fake: bool = False,
                      n_features: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over media rows via mapInPandas.
 
-    ``fake=False`` routes through the real decoder (stubbed -> raises);
-    ``fake=True`` produces deterministic hash features, exercising the same
-    batch path.
+    ``fake=False`` decodes each blob with :func:`decode_image` (falling
+    back to :func:`decode_audio`) and returns its :func:`image_stats` /
+    :func:`audio_stats` numbers as the feature vector; a blob neither
+    decoder reads raises ``NotImplementedError``.  ``fake=True``
+    produces deterministic hash features, exercising the same batch
+    path.
     """
 
     def real_features(data: bytes) -> list[float]:
@@ -598,26 +599,13 @@ def extract_features(df: DataFrame, fake: bool = False,
             return [float(v) for v in _audio_feats(aud)]
         return [float(v) for v in _image_feats(img)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = pdf["content"]
-            feats, digests, sizes = [], [], []
-            for content in contents:
-                data = bytes(content) if content is not None else b""
-                if fake:
-                    feats.append(_fake_features(data, n_features))
-                else:
-                    feats.append(real_features(data))
-                digests.append(hashlib.md5(data).hexdigest())
-                sizes.append(len(data))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "n_bytes": pd.Series(sizes, dtype="int64"),
-                "digest": digests,
-                "features": feats,
-            })
+    def features(data: bytes):
+        feats = (_fake_features(data, n_features) if fake
+                 else real_features(data))
+        return [(len(data), hashlib.md5(data).hexdigest(), feats)]
 
-    return spread(df).mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_blobs(spread(df), FEATURE_SCHEMA, features,
+                     "media_id", "content")
 
 
 IMAGE_STATS_SCHEMA = T.StructType([
@@ -645,32 +633,18 @@ def image_stats(df: DataFrame) -> DataFrame:
     means are exact doubles when width*height is a power of two, so a SQL
     oracle reproduces them bit-for-bit."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows.append((int(mid),
-                             *_image_feats(decode_image(bytes(content)))))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              IMAGE_STATS_SCHEMA.fields])
-
-    return spread(df).mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
+    return map_blobs(spread(df), IMAGE_STATS_SCHEMA,
+                     lambda b: [_image_feats(decode_image(b))],
+                     "media_id", "content")
 
 
 def audio_stats(df: DataFrame) -> DataFrame:
     """REAL per-clip stats via the stdlib WAV/PCM16 decoder: channel count,
     rate, sample count, peak amplitude, RMS."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows.append((int(mid),
-                             *_audio_feats(decode_audio(bytes(content)))))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AUDIO_STATS_SCHEMA.fields])
-
-    return spread(df).mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
+    return map_blobs(spread(df), AUDIO_STATS_SCHEMA,
+                     lambda b: [_audio_feats(decode_audio(b))],
+                     "media_id", "content")
 
 
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -757,17 +731,12 @@ def resize_image(df: DataFrame, out_w: int, out_h: int,
                          f"got {out_w}x{out_h}")
     header = f"P6\n{out_w} {out_h}\n255\n".encode()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                img = decode_image(bytes(content))
-                raw = _resize_pixels(img, out_w, out_h, method)
-                rows.append((int(mid), out_w, out_h, header + raw))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              RESIZED_SCHEMA.fields])
+    def resize(b: bytes):
+        raw = _resize_pixels(decode_image(b), out_w, out_h, method)
+        return [(out_w, out_h, header + raw)]
 
-    return spread(df).mapInPandas(run, schema=RESIZED_SCHEMA)
+    return map_blobs(spread(df), RESIZED_SCHEMA, resize,
+                     "media_id", "content")
 
 
 IMAGE_META_SCHEMA = T.StructType([
@@ -860,16 +829,8 @@ def sniff_image_meta(df: DataFrame, engine: str = "arrow") -> DataFrame:
     100-TB scan).
     """
     if engine == "arrow":
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for mid, content in zip(pdf["media_id"], pdf["content"]):
-                    fmt, w, h = _sniff_meta(bytes(content))
-                    rows.append((int(mid), fmt, w, h))
-                yield pd.DataFrame(rows, columns=[f.name for f in
-                                                  IMAGE_META_SCHEMA.fields])
-
-        return spread_io(df).mapInPandas(run, schema=IMAGE_META_SCHEMA)
+        return map_blobs(spread_io(df), IMAGE_META_SCHEMA,
+                         lambda b: [_sniff_meta(b)], "media_id", "content")
     if engine != "expr":
         raise ValueError(f"engine must be arrow|expr, got {engine!r}")
 
@@ -899,7 +860,9 @@ def sniff_image_meta(df: DataFrame, engine: str = "arrow") -> DataFrame:
     height = (F.when(is_png, be(21, 4)).when(is_gif, le(9, 2))
               .when(is_bmp, bmp_h)
               .otherwise(F.lit(None).cast("long")))
-    return df.select(
+    # the codec NULL law of map_blobs, so both engines agree
+    kept = df.where(F.col("media_id").isNotNull() & content.isNotNull())
+    return kept.select(
         F.col("media_id").cast("long").alias("media_id"),
         fmt.alias("format"),
         width.cast("int").alias("width"),
@@ -991,24 +954,17 @@ def image_phash(df: DataFrame, grid_w: int = 7, grid_h: int = 7,
     out_schema = T.StructType(list(PHASH_SCHEMA.fields)
                               + [df.schema[c] for c in extra_cols])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            extras = [pdf[c] for c in extra_cols]
-            for mid, content, *ex in zip(pdf["media_id"],
-                                         pdf["content"], *extras):
-                img = decode_image(bytes(content))
-                if grid_w > img["width"] or grid_h > img["height"]:
-                    raise ValueError(
-                        f"grid {grid_w}x{grid_h} exceeds image "
-                        f"{img['width']}x{img['height']}")
-                ah, dh = _phash_of(img, grid_w, grid_h)
-                rows.append((int(mid), img["width"], img["height"],
-                             ah, dh, *ex))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              out_schema.fields])
+    def phash(b: bytes, *ex):
+        img = decode_image(b)
+        if grid_w > img["width"] or grid_h > img["height"]:
+            raise ValueError(
+                f"grid {grid_w}x{grid_h} exceeds image "
+                f"{img['width']}x{img['height']}")
+        ah, dh = _phash_of(img, grid_w, grid_h)
+        return [(img["width"], img["height"], ah, dh, *ex)]
 
-    return spread(df).mapInPandas(run, schema=out_schema)
+    return map_blobs(spread(df), out_schema, phash,
+                     "media_id", "content", *extra_cols)
 
 
 def image_near_dups(df: DataFrame, grid_w: int = 7, grid_h: int = 7,
@@ -1091,25 +1047,19 @@ def audio_fingerprint(df: DataFrame, frame_size: int = 8,
         raise ValueError(f"max_frames must be in [2, 64], "
                          f"got {max_frames}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                aud = decode_audio(bytes(content))
-                s = aud["samples"]
-                n_fr = min(len(s) // frame_size, max_frames)
-                e = [sum(v * v for v in
-                         s[f * frame_size:(f + 1) * frame_size])
-                     for f in range(n_fr)]
-                fp = 0
-                for f in range(1, n_fr):
-                    if e[f] > e[f - 1]:
-                        fp |= 1 << (f - 1)
-                rows.append((int(mid), n_fr, fp))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AUDIO_FP_SCHEMA.fields])
+    def fingerprint(b: bytes):
+        s = decode_audio(b)["samples"]
+        n_fr = min(len(s) // frame_size, max_frames)
+        e = [sum(v * v for v in s[f * frame_size:(f + 1) * frame_size])
+             for f in range(n_fr)]
+        fp = 0
+        for f in range(1, n_fr):
+            if e[f] > e[f - 1]:
+                fp |= 1 << (f - 1)
+        return [(n_fr, fp)]
 
-    return spread(df).mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return map_blobs(spread(df), AUDIO_FP_SCHEMA, fingerprint,
+                     "media_id", "content")
 
 
 def audio_near_dups(df: DataFrame, frame_size: int = 8,
@@ -1268,15 +1218,8 @@ def sniff_audio_meta(df: DataFrame) -> DataFrame:
     rate/channels/duration without decoding a sample, including MP3,
     which this tier cannot decode (triage is still possible and is
     exactly what a 100-TB pre-filter needs)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows.append((int(mid), *_sniff_audio(bytes(content))))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AUDIO_META_SCHEMA.fields])
-
-    return spread_io(df).mapInPandas(run, schema=AUDIO_META_SCHEMA)
+    return map_blobs(spread_io(df), AUDIO_META_SCHEMA,
+                     lambda b: [_sniff_audio(b)], "media_id", "content")
 
 
 def _exif_orientation(content: bytes):
@@ -1494,19 +1437,13 @@ def image_exif(df: DataFrame) -> DataFrame:
         T.StructField("focal_length", T.DoubleType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                t = exif_tags(bytes(content)) or {}
-                rows.append((int(mid), t.get("make"), t.get("model"),
-                             t.get("orientation"), t.get("datetime"),
-                             t.get("exposure_time"), t.get("iso"),
-                             t.get("focal_length")))
-            yield pd.DataFrame(rows, columns=cols)
+    tags = schema.fieldNames()[1:]
 
-    return spread_io(df).mapInPandas(run, schema=schema)
+    def exif(b: bytes):
+        t = exif_tags(b) or {}
+        return [tuple(t.get(k) for k in tags)]
+
+    return map_blobs(spread_io(df), schema, exif, "media_id", "content")
 
 
 def image_orientation(df: DataFrame) -> DataFrame:
@@ -1518,16 +1455,9 @@ def image_orientation(df: DataFrame) -> DataFrame:
         T.StructField("orientation", T.IntegerType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows.append((int(mid),
-                             _exif_orientation(bytes(content))))
-            yield pd.DataFrame(rows, columns=["media_id",
-                                              "orientation"])
-
-    return spread_io(df).mapInPandas(run, schema=schema)
+    return map_blobs(spread_io(df), schema,
+                     lambda b: [(_exif_orientation(b),)],
+                     "media_id", "content")
 
 
 def exif_app1(orientation: int, byte_order: str = "II") -> bytes:
@@ -1558,38 +1488,30 @@ def orient_image(df: DataFrame,
     arithmetic), so it is trivially lossless and SQL-replayable; NULL
     or 1 passes through.  Output is binary PPM (dims swap for the
     transpose family 5..8), composing with the rest of the tier."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        ops = {
-            1: lambda a: a,
-            2: lambda a: a[:, ::-1],
-            3: lambda a: a[::-1, ::-1],
-            4: lambda a: a[::-1],
-            5: lambda a: a.transpose(1, 0, 2),
-            6: lambda a: a.transpose(1, 0, 2)[:, ::-1],
-            7: lambda a: a.transpose(1, 0, 2)[::-1, ::-1],
-            8: lambda a: a.transpose(1, 0, 2)[::-1],
-        }
-        for pdf in batches:
-            rows = []
-            for mid, content, o in zip(pdf["media_id"], pdf["content"],
-                                       pdf[orientation_col]):
-                img = decode_image(bytes(content))
-                W, H = img["width"], img["height"]
-                a = np.frombuffer(img["pixels"],
-                                  np.uint8).reshape(H, W, 3)
-                o = 1 if o is None or (isinstance(o, float)
-                                       and np.isnan(o)) else int(o)
-                if o not in ops:
-                    raise ValueError(f"orientation must be 1..8, "
-                                     f"got {o}")
-                out = ops[o](a)
-                oh, ow = out.shape[0], out.shape[1]
-                header = f"P6\n{ow} {oh}\n255\n".encode()
-                rows.append((int(mid), ow, oh,
-                             header + np.ascontiguousarray(out)
-                             .tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              RESIZED_SCHEMA.fields])
+    ops = {
+        1: lambda a: a,
+        2: lambda a: a[:, ::-1],
+        3: lambda a: a[::-1, ::-1],
+        4: lambda a: a[::-1],
+        5: lambda a: a.transpose(1, 0, 2),
+        6: lambda a: a.transpose(1, 0, 2)[:, ::-1],
+        7: lambda a: a.transpose(1, 0, 2)[::-1, ::-1],
+        8: lambda a: a.transpose(1, 0, 2)[::-1],
+    }
 
-    return spread(df).mapInPandas(run, schema=RESIZED_SCHEMA)
+    def orient(b: bytes, o):
+        import numpy as np
+        img = decode_image(b)
+        W, H = img["width"], img["height"]
+        a = np.frombuffer(img["pixels"], np.uint8).reshape(H, W, 3)
+        o = 1 if o is None or (isinstance(o, float)
+                               and np.isnan(o)) else int(o)
+        if o not in ops:
+            raise ValueError(f"orientation must be 1..8, got {o}")
+        out = ops[o](a)
+        oh, ow = out.shape[0], out.shape[1]
+        header = f"P6\n{ow} {oh}\n255\n".encode()
+        return [(ow, oh, header + np.ascontiguousarray(out).tobytes())]
+
+    return map_blobs(spread(df), RESIZED_SCHEMA, orient,
+                     "media_id", "content", orientation_col)

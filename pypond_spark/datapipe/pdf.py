@@ -55,14 +55,13 @@ import binascii
 import re
 import struct
 import zlib
-from collections.abc import Iterator
+from operator import itemgetter
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 __all__ = ["parse_pdf", "pdf_text_pages", "pdf_info",
            "extract_pdf_text", "extract_pdf_info", "encode_pdf",
@@ -1072,19 +1071,9 @@ def extract_pdf_text(df: DataFrame, content_col: str = "content",
     """One row per PDF page: ``(doc_id, page_no, text)`` — Arrow
     ``mapInPandas`` over :func:`pdf_text_pages`, zero shuffle,
     the same plan shape as every other codec here."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_PAGE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for pno, text in enumerate(
-                        pdf_text_pages(bytes(content))):
-                    rows.append((int(did), pno, text))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=PDF_PAGE_SCHEMA)
+    return map_blobs(spread(df), PDF_PAGE_SCHEMA,
+                     lambda b: enumerate(pdf_text_pages(b)),
+                     id_col, content_col)
 
 
 PDF_INFO_SCHEMA = T.StructType([
@@ -1104,21 +1093,9 @@ def extract_pdf_info(df: DataFrame, content_col: str = "content",
     """One row per PDF: /Info metadata + page count — the header-only
     triage twin of :func:`extract_pdf_text` (no content streams are
     decoded beyond the pages walk)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_INFO_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                d = pdf_info(bytes(content))
-                rows.append((int(did), d["title"], d["author"],
-                             d["subject"], d["producer"],
-                             d["created"], d["encrypted"],
-                             d["n_pages"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=PDF_INFO_SCHEMA)
+    info = itemgetter(*PDF_INFO_SCHEMA.fieldNames()[1:])
+    return map_blobs(spread(df), PDF_INFO_SCHEMA,
+                     lambda b: [info(pdf_info(b))], id_col, content_col)
 
 
 # ----------------------------------------------------- synthesis half

@@ -37,13 +37,11 @@ zero shuffle, the standard datapipe extractor plan shape.
 from __future__ import annotations
 
 import re as _re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 __all__ = ["rtf_text", "extract_rtf_text", "encode_rtf",
            "RTF_TEXT_SCHEMA"]
@@ -213,18 +211,8 @@ def extract_rtf_text(df: DataFrame, content_col: str = "content",
     """One row per document: ``(doc_id, text, n_paragraphs)`` — the
     RTF leg of the document-extraction tier (same schema and
     zero-shuffle Arrow plan as the DOCX/ODT extractors)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RTF_TEXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                text, npar = rtf_text(bytes(content))
-                rows.append((int(did), text, npar))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=RTF_TEXT_SCHEMA)
+    return map_blobs(spread(df), RTF_TEXT_SCHEMA,
+                     lambda b: [rtf_text(b)], id_col, content_col)
 
 
 def _rtf_escape(text: str) -> str:

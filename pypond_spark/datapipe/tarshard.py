@@ -39,13 +39,13 @@ from __future__ import annotations
 
 import io as _io
 import tarfile
-from collections.abc import Iterator
+from itertools import groupby
+from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 __all__ = ["parse_tar_members", "read_tar_members",
            "read_tar_samples", "encode_tar_shard",
@@ -99,57 +99,40 @@ TAR_SAMPLE_SCHEMA = T.StructType([
 ])
 
 
+def _member_rows(members):
+    """``(member_name, sample_key, ext, n_bytes, data)`` per member."""
+    for name, data in members:
+        yield (name, *_split_key(name), len(data), data)
+
+
+def _sample_rows(members):
+    """``(sample_key, n_parts, parts)`` per run of ADJACENT members
+    sharing a key; a repeated ext keeps the LAST member."""
+    split = ((*_split_key(name), data) for name, data in members)
+    for key, run in groupby(split, key=itemgetter(0)):
+        parts = {ext: data for _, ext, data in run}
+        yield key, len(parts), parts
+
+
 def read_tar_members(df: DataFrame, content_col: str = "content",
                      id_col: str = "shard_id") -> DataFrame:
     """One row per regular-file tar member, archive order preserved
     through (shard_id, member_name)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TAR_MEMBER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for sid, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for name, data in parse_tar_members(bytes(content)):
-                    key, ext = _split_key(name)
-                    rows.append((int(sid), name, key, ext,
-                                 len(data), data))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=TAR_MEMBER_SCHEMA)
+    return map_blobs(spread(df), TAR_MEMBER_SCHEMA,
+                     lambda b: _member_rows(parse_tar_members(b)),
+                     id_col, content_col)
 
 
 def read_tar_samples(df: DataFrame, content_col: str = "content",
                      id_col: str = "shard_id") -> DataFrame:
     """One row per sample: ADJACENT members sharing a key pair into
-    ``parts[ext] -> data``.  Pairing is batch-local (no shuffle); a
-    repeated ext within one sample keeps the LAST member (webdataset
-    semantics for duplicate fields)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TAR_SAMPLE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for sid, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                cur_key = None
-                parts: dict[str, bytes] = {}
-
-                def flush():
-                    if cur_key is not None:
-                        rows.append((int(sid), cur_key, len(parts),
-                                     dict(parts)))
-
-                for name, data in parse_tar_members(bytes(content)):
-                    key, ext = _split_key(name)
-                    if key != cur_key:
-                        flush()
-                        cur_key, parts = key, {}
-                    parts[ext] = data
-                flush()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=TAR_SAMPLE_SCHEMA)
+    ``parts[ext] -> data``.  Pairing is per shard (the key run starts
+    afresh for each input row; no shuffle); a repeated ext within one
+    sample keeps the LAST member (webdataset semantics for duplicate
+    fields)."""
+    return map_blobs(spread(df), TAR_SAMPLE_SCHEMA,
+                     lambda b: _sample_rows(parse_tar_members(b)),
+                     id_col, content_col)
 
 
 def encode_tar_shard(samples: list[tuple[str, dict[str, bytes]]],
@@ -219,20 +202,9 @@ def read_zip_members(df: DataFrame, content_col: str = "content",
     """One row per zip member with the WebDataset key/ext split —
     the zip twin of :func:`read_tar_members` (same schema, same
     zero-shuffle Arrow plan)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TAR_MEMBER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for sid, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for name, data in parse_zip_members(bytes(content)):
-                    key, ext = _split_key(name)
-                    rows.append((int(sid), name, key, ext,
-                                 len(data), data))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=TAR_MEMBER_SCHEMA)
+    return map_blobs(spread(df), TAR_MEMBER_SCHEMA,
+                     lambda b: _member_rows(parse_zip_members(b)),
+                     id_col, content_col)
 
 
 def encode_zip_shard(samples: list[tuple[str, dict[str, bytes]]],
@@ -275,30 +247,8 @@ def zip_bytes(members: list[tuple[str, bytes]],
 def read_zip_samples(df: DataFrame, content_col: str = "content",
                      id_col: str = "shard_id") -> DataFrame:
     """Adjacent-member sample pairing over ZIP shards — the zip twin
-    of :func:`read_tar_samples` (same schema, same batch-local
+    of :func:`read_tar_samples` (same schema, same per-shard
     zero-shuffle pairing, last-ext-wins within a sample)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TAR_SAMPLE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for sid, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                cur_key = None
-                parts: dict[str, bytes] = {}
-
-                def flush():
-                    if cur_key is not None:
-                        rows.append((int(sid), cur_key, len(parts),
-                                     dict(parts)))
-
-                for name, data in parse_zip_members(bytes(content)):
-                    key, ext = _split_key(name)
-                    if key != cur_key:
-                        flush()
-                        cur_key, parts = key, {}
-                    parts[ext] = data
-                flush()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=TAR_SAMPLE_SCHEMA)
+    return map_blobs(spread(df), TAR_SAMPLE_SCHEMA,
+                     lambda b: _sample_rows(parse_zip_members(b)),
+                     id_col, content_col)

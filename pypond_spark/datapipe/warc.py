@@ -26,13 +26,14 @@ which keeps the parser engine-portable and the oracle replay exact.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._util import spread, spread_io
+from ._util import map_blobs, spread, spread_io
 
 WARC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -98,29 +99,25 @@ def parse_warc_text(data: str) -> list[dict]:
     return out
 
 
+_RECORD = itemgetter(*WARC_SCHEMA.fieldNames()[1:])
+
+
+def _record_rows(data) -> list[tuple]:
+    """The :data:`WARC_SCHEMA` tuple, less ``doc_id``, of every record
+    in ``data`` (text, or bytes decoded as UTF-8 with replacement)."""
+    if not isinstance(data, str):
+        data = data.decode("utf-8", "replace")
+    return [_RECORD(rec) for rec in parse_warc_text(data)]
+
+
 def parse_warc(df: DataFrame, warc_col: str = "warc",
                id_col: str = "doc_id") -> DataFrame:
     """One row per WARC record per input row — Arrow-batched
     ``mapInPandas`` over :func:`parse_warc_text`, the same plan shape
     as the media decoders (zero shuffle, scan-parallel per file
     split)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, data in zip(pdf[id_col], pdf[warc_col]):
-                if data is None:
-                    continue
-                if isinstance(data, (bytes, bytearray)):
-                    data = bytes(data).decode("utf-8", "replace")
-                for rec in parse_warc_text(data):
-                    rows.append((int(did), rec["record_no"],
-                                 rec["warc_type"], rec["target_uri"],
-                                 rec["warc_date"], rec["content_type"],
-                                 rec["content_length"], rec["block"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=WARC_SCHEMA)
+    return map_blobs(spread(df), WARC_SCHEMA, _record_rows,
+                     id_col, warc_col)
 
 
 def split_gzip_members(data: bytes) -> list[bytes]:
@@ -157,23 +154,9 @@ def parse_warc_gz(df: DataFrame, gz_col: str = "warc_gz",
     decompress independently and their concatenation parses with the
     same Content-Length framing, so ``record_no`` matches the
     uncompressed layout.  Same Arrow batch shape — zero shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, data in zip(pdf[id_col], pdf[gz_col]):
-                if data is None:
-                    continue
-                text = b"".join(split_gzip_members(bytes(data))) \
-                    .decode("utf-8", "replace")
-                for rec in parse_warc_text(text):
-                    rows.append((int(did), rec["record_no"],
-                                 rec["warc_type"], rec["target_uri"],
-                                 rec["warc_date"], rec["content_type"],
-                                 rec["content_length"], rec["block"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=WARC_SCHEMA)
+    return map_blobs(spread(df), WARC_SCHEMA,
+                     lambda b: _record_rows(b"".join(split_gzip_members(b))),
+                     id_col, gz_col)
 
 
 def http_payload_expr(block_col: str = "block") -> Column:
@@ -277,6 +260,11 @@ def transcode_payload(df: DataFrame, content_col: str = "content",
     Python codecs do the decoding because the JVM's charset table and
     Python's disagree on edge bytes, and ONE implementation must own
     the result (the normalize_unicode argument).
+
+    Unlike the codec entry points it keeps its own loop rather than
+    :func:`~pypond_spark.datapipe._util.map_blobs`: it is 1:1, so a
+    NULL payload comes out as a row of NULLs instead of no row, and its
+    ladder cannot raise.
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -25,14 +25,11 @@ toolchain can actually materialize.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 _MAGIC = b"YUV4MPEG2"
 
@@ -186,25 +183,18 @@ def sample_video_frames(df: DataFrame, every_n: int = 1) -> DataFrame:
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def frames(b: bytes):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                vid = decode_video(bytes(content))
-                w, h = vid["width"], vid["height"]
-                header = f"P6\n{w} {h}\n255\n".encode()
-                for idx in range(0, vid["n_frames"], every_n):
-                    y = np.frombuffer(vid["frames"][idx]["y"],
-                                      np.uint8)
-                    rgb = np.repeat(y, 3).tobytes()
-                    ts = (idx * 1000 * vid["fps_den"]) // vid["fps_num"]
-                    rows.append((int(mid), idx, ts, w, h,
-                                 header + rgb))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              FRAME_SCHEMA.fields])
+        vid = decode_video(b)
+        w, h = vid["width"], vid["height"]
+        header = f"P6\n{w} {h}\n255\n".encode()
+        for idx in range(0, vid["n_frames"], every_n):
+            y = np.frombuffer(vid["frames"][idx]["y"], np.uint8)
+            ts = (idx * 1000 * vid["fps_den"]) // vid["fps_num"]
+            yield idx, ts, w, h, header + np.repeat(y, 3).tobytes()
 
-    return spread(df).mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_blobs(spread(df), FRAME_SCHEMA, frames,
+                     "media_id", "content")
 
 
 def video_near_dups(df: DataFrame, every_n: int = 1,

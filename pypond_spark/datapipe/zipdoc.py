@@ -45,14 +45,12 @@ from __future__ import annotations
 import io as _io
 import re as _re
 import xml.etree.ElementTree as _ET
-from collections.abc import Iterator
 from xml.sax.saxutils import escape as _xml_escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ._util import spread
+from ._util import map_blobs, spread
 
 from .tarshard import parse_zip_members, zip_bytes
 
@@ -118,18 +116,8 @@ def extract_docx_text(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """One row per document: ``(doc_id, text, n_paragraphs)`` —
     Arrow ``mapInPandas`` over :func:`docx_text`, zero shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in DOCX_TEXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                text, npar = docx_text(bytes(content))
-                rows.append((int(did), text, npar))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=DOCX_TEXT_SCHEMA)
+    return map_blobs(spread(df), DOCX_TEXT_SCHEMA,
+                     lambda b: [docx_text(b)], id_col, content_col)
 
 
 _DOCX_CONTENT_TYPES = (
@@ -301,18 +289,8 @@ def extract_epub_text(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """One row per spine chapter: ``(doc_id, chapter_no, text)`` —
     Arrow ``mapInPandas`` over :func:`epub_chapters`, zero shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in EPUB_CHAPTER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                for no, text in epub_chapters(bytes(content)):
-                    rows.append((int(did), no, text))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=EPUB_CHAPTER_SCHEMA)
+    return map_blobs(spread(df), EPUB_CHAPTER_SCHEMA, epub_chapters,
+                     id_col, content_col)
 
 
 _EPUB_CONTAINER = (
@@ -409,18 +387,8 @@ def extract_odt_text(df: DataFrame, content_col: str = "content",
     """One row per document: ``(doc_id, text, n_paragraphs)`` — the
     ODT twin of :func:`extract_docx_text` (same schema, same
     zero-shuffle Arrow plan)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in DOCX_TEXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                if content is None:
-                    continue
-                text, npar = odt_text(bytes(content))
-                rows.append((int(did), text, npar))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spread(df).mapInPandas(run, schema=DOCX_TEXT_SCHEMA)
+    return map_blobs(spread(df), DOCX_TEXT_SCHEMA,
+                     lambda b: [odt_text(b)], id_col, content_col)
 
 
 def _odt_spans(text: str) -> str:

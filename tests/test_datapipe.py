@@ -424,7 +424,7 @@ def test_multimodal_plumbing(spark, docs):
         assert len(r["features"]) == 8
         assert len(r["digest"]) == 32
 
-    # real decode path is stubbed
+    # text is no media format, so the real decoders raise
     with pytest.raises(Exception):
         multimodal.extract_features(media, fake=False).collect()
 
@@ -3956,6 +3956,44 @@ def test_gif_animation_frames():
         gif.decode_gif_frames(gif.encode_gif_anim(4, 3, [f1])[:-3])
 
 
+def _encode_avi_dib(width, height, frames_rgb, fps=(25, 1)):
+    """Uncompressed (BI_RGB 24-bpp) AVI fixture writer for the DIB
+    decode path: interleaved RGB frames in, bottom-up 4-byte-padded
+    BGR ``00db`` chunks out.  Lossless, so decode recovers the BT.601
+    luma of the exact input pixels (or the input verbatim for
+    gray-valued frames)."""
+    import struct
+
+    import numpy as np
+
+    from pypond_spark.datapipe.avi import _chunk
+
+    row_bytes = (width * 3 + 3) & ~3
+    chunks = []
+    for px in frames_rgb:
+        rgb = np.frombuffer(px, np.uint8).reshape(height, width, 3)
+        rows = np.zeros((height, row_bytes), np.uint8)
+        rows[:, :width * 3] = rgb[:, :, ::-1].reshape(height, -1)
+        chunks.append(rows[::-1].tobytes())
+    num, den = fps
+    usec = (1_000_000 * den) // num
+    bufsz = max(len(c) for c in chunks)
+    avih = struct.pack("<14I", usec, 0, 0, 0, len(chunks), 0, 1,
+                       bufsz, width, height, 0, 0, 0, 0)
+    strh = (b"vids" + b"DIB "
+            + struct.pack("<IHHIIIIIIiI4H", 0, 0, 0, 0, den, num, 0,
+                          len(chunks), bufsz, -1, 0, 0, 0, width,
+                          height))
+    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24,
+                       b"\x00\x00\x00\x00", row_bytes * height,
+                       0, 0, 0, 0)
+    strl = b"strl" + _chunk(b"strh", strh) + _chunk(b"strf", strf)
+    hdrl = b"hdrl" + _chunk(b"avih", avih) + _chunk(b"LIST", strl)
+    movi = b"movi" + b"".join(_chunk(b"00db", c) for c in chunks)
+    body = b"AVI " + _chunk(b"LIST", hdrl) + _chunk(b"LIST", movi)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def test_avi_mjpeg_roundtrip_and_errors():
     """MJPEG-in-AVI: the RIFF chunk walk + per-frame JPEG decode
     recovers block-constant luma EXACTLY (baseline and progressive
@@ -4016,7 +4054,7 @@ def test_avi_mjpeg_roundtrip_and_errors():
     for f in range(2):
         g = rng.integers(0, 256, size=(6, 10), dtype=np.uint8)
         gray_frames.append(np.repeat(g[..., None], 3, 2).tobytes())
-    dib = avi.encode_avi_dib(10, 6, gray_frames, fps=(15, 1))
+    dib = _encode_avi_dib(10, 6, gray_frames, fps=(15, 1))
     vdib = y4m.decode_video(dib)
     assert (vdib["n_frames"], vdib["fps_num"]) == (2, 15)
     for f in range(2):
@@ -4024,7 +4062,7 @@ def test_avi_mjpeg_roundtrip_and_errors():
                              np.uint8).reshape(6, 10, 3)[..., 0]
         assert vdib["frames"][f]["y"] == want.tobytes()
     c = rng.integers(0, 256, size=(6, 10, 3), dtype=np.uint8)
-    vc = avi.decode_avi_mjpeg(avi.encode_avi_dib(10, 6, [c.tobytes()]))
+    vc = avi.decode_avi_mjpeg(_encode_avi_dib(10, 6, [c.tobytes()]))
     luma = np.clip(np.floor(0.299 * c[..., 0] + 0.587 * c[..., 1]
                             + 0.114 * c[..., 2] + 0.5),
                    0, 255).astype(np.uint8)
@@ -4366,7 +4404,7 @@ def test_avi_dib_top_down():
     rng = np.random.default_rng(7)
     w, h = 5, 4
     frame = rng.integers(0, 256, size=w * h * 3, dtype=np.uint8)
-    data = avi.encode_avi_dib(w, h, [frame.tobytes()], fps=(10, 1))
+    data = _encode_avi_dib(w, h, [frame.tobytes()], fps=(10, 1))
     want = np.frombuffer(
         avi.decode_avi_mjpeg(data)["frames"][0]["y"], np.uint8) \
         .reshape(h, w)
