@@ -261,10 +261,11 @@ def transcode_payload(df: DataFrame, content_col: str = "content",
     Python's disagree on edge bytes, and ONE implementation must own
     the result (the normalize_unicode argument).
 
-    Unlike the codec entry points it keeps its own loop rather than
+    It keeps its own loop rather than
     :func:`~pypond_spark.datapipe._util.map_blobs`: it is 1:1, so a
     NULL payload comes out as a row of NULLs instead of no row, and its
-    ladder cannot raise.
+    ladder cannot raise.  A NULL id follows the codec tier's NULL law:
+    a JVM filter in front of the loop drops the row.
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -290,4 +291,5 @@ def transcode_payload(df: DataFrame, content_col: str = "content",
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               TRANSCODE_SCHEMA.fields])
 
-    return spread_io(df).mapInPandas(run, schema=TRANSCODE_SCHEMA)
+    return (spread_io(df.where(F.col(id_col).isNotNull()))
+            .mapInPandas(run, schema=TRANSCODE_SCHEMA))

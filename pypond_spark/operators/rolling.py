@@ -22,10 +22,13 @@ window instead (streaming-friendly: no future leakage).
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import _prefilter, normalize_agg_spec
 from ..index import window_duration_ms
@@ -189,6 +192,163 @@ def cumulative(df: DataFrame, aggregation: dict,
     return df.select(*df.columns, *cols)
 
 
+def _f64(pdf, col: str) -> np.ndarray:
+    """A value column as float64 with NaN for missing (None/NaN alike)."""
+    return pdf[col].to_numpy(dtype="float64", na_value=math.nan)
+
+
+def _t_ms(pdf, time_col: str) -> np.ndarray:
+    """Event times as int64 epoch-ms, floored like Spark's ``unix_millis``
+    (``astype('int64')`` is ns-since-epoch for naive and tz-aware pandas
+    datetime columns alike)."""
+    return (pdf[time_col].astype("int64") // 10**6).to_numpy()
+
+
+# The four smoothing folds below are the ONE implementation of their
+# recurrences: the batch operators run them through ``_keyed_scan`` and the
+# streaming twins (streaming/stream.py) through ``_keyed_state``. A kernel
+# takes one series' contiguous, time-sorted run of arrays plus the state
+# carried from the run before it, and returns ``(outputs, state)``. NaN in
+# a float state means "no valid sample yet"; NaN/None samples carry the
+# state forward unchanged. Each loop writes its recurrence verbatim over
+# Python floats: it rounds at every step, so any reassociated closed form
+# (pandas ``ewm``'s normalized weights, ``ewma_scan``'s affine compose)
+# drifts in the last ulp, while a fold in any engine (the DuckDB oracle's
+# ``list_reduce`` / recursive CTEs) reproduces this one bit-for-bit.
+
+def _ewma_fold(xs: Sequence[np.ndarray], alpha: float,
+               accs: Sequence[float]):
+    """EWMA over one float64 array per field; ``accs`` is the accumulator
+    per field."""
+    outs, new = [], []
+    for x, s in zip(xs, accs):
+        out = []
+        for v in x.tolist():
+            if not math.isnan(v):
+                s = v if math.isnan(s) else alpha * v + (1.0 - alpha) * s
+            out.append(s)
+        outs.append(out)
+        new.append(s)
+    return outs, new
+
+
+def _holt_fold(x: np.ndarray, alpha: float, beta: float, state):
+    """Holt level + trend; ``state`` is ``(l, b)``."""
+    lv, bt = state
+    lev, trd = [], []
+    for v in x.tolist():
+        if not math.isnan(v):
+            if math.isnan(lv):
+                lv, bt = v, 0.0
+            else:
+                new_l = alpha * v + (1.0 - alpha) * (lv + bt)
+                bt = beta * (new_l - lv) + (1.0 - beta) * bt
+                lv = new_l
+        lev.append(lv)
+        trd.append(bt)
+    return (lev, trd), (lv, bt)
+
+
+def _hw_fold(x: np.ndarray, period: int, alpha: float, beta: float,
+             gamma: float, state):
+    """Holt-Winters additive; ``state`` is ``(l, b, sv, k, seas)``: level,
+    trend, the last seasonal written, the count of valid samples (the
+    phase is ``k % period``) and the ``period`` seasonal slots."""
+    lv, bt, sv, k, seas = state
+    seas = list(seas)
+    lev, trd, sea = [], [], []
+    for v in x.tolist():
+        if not math.isnan(v):
+            p = k % period
+            if math.isnan(lv):
+                lv, bt = v, 0.0
+            else:
+                new_l = alpha * (v - seas[p]) + (1.0 - alpha) * (lv + bt)
+                bt = beta * (new_l - lv) + (1.0 - beta) * bt
+                lv = new_l
+            sv = gamma * (v - lv) + (1.0 - gamma) * seas[p]
+            seas[p] = sv
+            k += 1
+        lev.append(lv)
+        trd.append(bt)
+        sea.append(sv)
+    return (lev, trd, sea), (lv, bt, sv, k, seas)
+
+
+def _throttle_fold(t: np.ndarray, gap_ms: int, last: int | None):
+    """Greedy keep over sorted int64 epoch-ms ``t``; ``last`` is the last
+    KEPT time (None before the first). The rule "keep iff cur - last >=
+    gap" admits exactly this next-fit chain, so Python is re-entered once
+    per KEPT event (``searchsorted`` jumps to the next time >= last + gap;
+    side='left' skips the equal-time peers of a kept event), not once per
+    event."""
+    n = len(t)
+    keep = np.zeros(n, dtype=bool)
+    i = 0 if last is None else int(np.searchsorted(t, last + gap_ms,
+                                                   side="left"))
+    while i < n:
+        keep[i] = True
+        last = int(t[i])
+        i = int(np.searchsorted(t, last + gap_ms, side="left"))
+    return (keep,), last
+
+
+def _keyed_scan(df: DataFrame, partition_by: Sequence[str], time_col: str,
+                tiebreak: str | None, out_fields: list, columns, fold,
+                fresh) -> DataFrame:
+    """The batch shell of the smoothing folds: appends ``out_fields`` to
+    ``df`` by running ``fold(columns(pdf)[run], state) -> (outputs,
+    state)`` over every series' time-ordered run, from state ``fresh``.
+
+    Hash-partition on the series key (no key: one global series, one
+    partition), sort each partition by (key, time, tiebreak), then ONE
+    ``mapInPandas`` pass that splits each Arrow batch into runs of equal
+    key and carries the state across batch boundaries.
+
+    NULL keys form one series, as Spark's ``groupBy`` (the streaming
+    twins) and SQL ``PARTITION BY`` treat them. A NULL numeric key reaches
+    pandas as NaN, which equals nothing, so NULL-ness is compared first.
+    """
+    keys = list(partition_by)
+    df = timed_events(df, time_col)
+    tb = [tiebreak] if tiebreak else []
+    parts = (df.repartition(*[F.col(k) for k in keys]) if keys
+             else df.coalesce(1)).sortWithinPartitions(*keys, time_col, *tb)
+
+    def per_partition(batches):
+        prev_key, state = object(), fresh
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            new = np.zeros(n, dtype=bool)
+            first, last = [], []
+            for k in keys:
+                v, na = pdf[k].to_numpy(), pdf[k].isna().to_numpy()
+                new[1:] |= (v[1:] != v[:-1]) & ~(na[1:] & na[:-1])
+                first.append(None if na[0] else v[0])
+                last.append(None if na[-1] else v[-1])
+            new[0] = tuple(first) != prev_key
+            prev_key = tuple(last)
+            ins = columns(pdf)
+            bounds = [*np.flatnonzero(new).tolist(), n]
+            if bounds[0]:  # the run carried over from the last batch
+                bounds.insert(0, 0)
+            pieces = [[] for _ in out_fields]
+            for lo, hi in zip(bounds, bounds[1:]):
+                if new[lo]:
+                    state = fresh
+                outs, state = fold([a[lo:hi] for a in ins], state)
+                for acc, o in zip(pieces, outs):
+                    acc.append(o)
+            for fld, acc in zip(out_fields, pieces):
+                pdf[fld.name] = np.concatenate(acc)
+            yield pdf
+
+    return parts.mapInPandas(
+        per_partition, T.StructType(list(df.schema.fields) + out_fields))
+
+
 def ewma(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
          partition_by: Sequence[str] = (),
          time_col: str = "time",
@@ -218,52 +378,12 @@ def ewma(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    keys = list(partition_by)
-    df = timed_events(df, time_col)
-    from pyspark.sql import types as T
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField(f"{f}_ewma", T.DoubleType())
-                                 for f in fields])
-
-    if keys:
-        parts = df.repartition(*[F.col(k) for k in keys]) \
-            .sortWithinPartitions(*keys, time_col,
-                                  *([tiebreak] if tiebreak else []))
-    else:  # unkeyed: one global series (same contract as align/rate)
-        parts = df.coalesce(1).sortWithinPartitions(
-            time_col, *([tiebreak] if tiebreak else []))
-
-    def per_partition(batches):
-        import math
-
-        import numpy as np
-        # groups are contiguous within the sorted partition but may span
-        # Arrow batches — carry (key, accumulators) across batches
-        prev_key = object()
-        accs = [math.nan] * len(fields)
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            kcols = [pdf[k].to_numpy() for k in keys]
-            xcols = [pdf[f].to_numpy(dtype="float64", na_value=math.nan)
-                     for f in fields]
-            outs = [np.empty(n) for _ in fields]
-            for i in range(n):
-                key = tuple(kc[i] for kc in kcols) if keys else ()
-                if key != prev_key:
-                    prev_key, accs = key, [math.nan] * len(fields)
-                for j in range(len(fields)):
-                    v = xcols[j][i]
-                    if not math.isnan(v):
-                        accs[j] = v if math.isnan(accs[j]) \
-                            else alpha * v + (1.0 - alpha) * accs[j]
-                    outs[j][i] = accs[j]
-            for j, f in enumerate(fields):
-                pdf[f"{f}_ewma"] = outs[j]
-            yield pdf
-
-    return parts.mapInPandas(per_partition, out_schema)
+    return _keyed_scan(
+        df, partition_by, time_col, tiebreak,
+        [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields],
+        lambda pdf: [_f64(pdf, f) for f in fields],
+        lambda xs, accs: _ewma_fold(xs, alpha, accs),
+        [math.nan] * len(fields))
 
 
 def holt(df: DataFrame, field: str = "value", alpha: float = 0.5,
@@ -294,56 +414,13 @@ def holt(df: DataFrame, field: str = "value", alpha: float = 0.5,
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 <= beta <= 1.0:
         raise ValueError(f"beta must be in [0, 1], got {beta}")
-    keys = list(partition_by)
-    df = timed_events(df, time_col)
-    from pyspark.sql import types as T
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField(f"{field}_level",
-                                               T.DoubleType()),
-                                 T.StructField(f"{field}_trend",
-                                               T.DoubleType())])
-
-    if keys:
-        parts = df.repartition(*[F.col(k) for k in keys]) \
-            .sortWithinPartitions(*keys, time_col,
-                                  *([tiebreak] if tiebreak else []))
-    else:
-        parts = df.coalesce(1).sortWithinPartitions(
-            time_col, *([tiebreak] if tiebreak else []))
-
-    def per_partition(batches):
-        import math
-
-        import numpy as np
-        prev_key = object()
-        lv = bt = math.nan
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            kcols = [pdf[k].to_numpy() for k in keys]
-            x = pdf[field].to_numpy(dtype="float64", na_value=math.nan)
-            lev = np.empty(n)
-            trd = np.empty(n)
-            for i in range(n):
-                key = tuple(kc[i] for kc in kcols) if keys else ()
-                if key != prev_key:
-                    prev_key, lv, bt = key, math.nan, math.nan
-                v = x[i]
-                if not math.isnan(v):
-                    if math.isnan(lv):
-                        lv, bt = v, 0.0
-                    else:
-                        new_l = alpha * v + (1.0 - alpha) * (lv + bt)
-                        bt = beta * (new_l - lv) + (1.0 - beta) * bt
-                        lv = new_l
-                lev[i] = lv
-                trd[i] = bt
-            pdf[f"{field}_level"] = lev
-            pdf[f"{field}_trend"] = trd
-            yield pdf
-
-    return parts.mapInPandas(per_partition, out_schema)
+    return _keyed_scan(
+        df, partition_by, time_col, tiebreak,
+        [T.StructField(f"{field}_level", T.DoubleType()),
+         T.StructField(f"{field}_trend", T.DoubleType())],
+        lambda pdf: [_f64(pdf, field)],
+        lambda xs, st: _holt_fold(xs[0], alpha, beta, st),
+        (math.nan, math.nan))
 
 
 def throttle(df: DataFrame, min_spacing: str | int = "1m",
@@ -368,50 +445,17 @@ def throttle(df: DataFrame, min_spacing: str | int = "1m",
     (throttling is almost always per alert-source anyway); keyless is
     for one-series frames.
     """
-    from ..index import window_duration_ms as _dur
-
-    gap_ms = (_dur(min_spacing) if isinstance(min_spacing, str)
-              else int(min_spacing))
+    gap_ms = (window_duration_ms(min_spacing)
+              if isinstance(min_spacing, str) else int(min_spacing))
     if gap_ms is None or gap_ms <= 0:
         raise ValueError(f"min_spacing must be a positive fixed window, "
                          f"got {min_spacing!r}")
-    keys = list(partition_by)
-    df = timed_events(df, time_col)
-    from pyspark.sql import types as T
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField("throttle_keep",
-                                               T.BooleanType())])
-    if keys:
-        parts = df.repartition(*[F.col(k) for k in keys]) \
-            .sortWithinPartitions(*keys, time_col,
-                                  *([tiebreak] if tiebreak else []))
-    else:
-        parts = df.coalesce(1).sortWithinPartitions(
-            time_col, *([tiebreak] if tiebreak else []))
-
-    def per_partition(batches):
-        prev_key = object()
-        last_kept = None
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            kcols = [pdf[k].to_numpy() for k in keys]
-            ts = pdf[time_col].to_numpy()
-            keep = []
-            for i in range(n):
-                key = tuple(kc[i] for kc in kcols) if keys else ()
-                if key != prev_key:
-                    prev_key, last_kept = key, None
-                cur = int(ts[i].astype("datetime64[ms]").astype("int64"))
-                k = last_kept is None or cur - last_kept >= gap_ms
-                if k:
-                    last_kept = cur
-                keep.append(k)
-            pdf["throttle_keep"] = keep
-            yield pdf
-
-    return parts.mapInPandas(per_partition, out_schema)
+    return _keyed_scan(
+        df, partition_by, time_col, tiebreak,
+        [T.StructField("throttle_keep", T.BooleanType())],
+        lambda pdf: [_t_ms(pdf, time_col)],
+        lambda ts, last: _throttle_fold(ts[0], gap_ms, last),
+        None)
 
 
 def anomaly_ensemble(df: DataFrame, field: str = "value",
@@ -493,72 +537,14 @@ def holt_winters(df: DataFrame, field: str = "value", period: int = 24,
         raise ValueError(f"gamma must be in [0, 1], got {gamma}")
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    keys = list(partition_by)
-    df = timed_events(df, time_col)
-    from pyspark.sql import types as T
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField(f"{field}_level",
-                                               T.DoubleType()),
-                                 T.StructField(f"{field}_trend",
-                                               T.DoubleType()),
-                                 T.StructField(f"{field}_seasonal",
-                                               T.DoubleType())])
-
-    if keys:
-        parts = df.repartition(*[F.col(k) for k in keys]) \
-            .sortWithinPartitions(*keys, time_col,
-                                  *([tiebreak] if tiebreak else []))
-    else:
-        parts = df.coalesce(1).sortWithinPartitions(
-            time_col, *([tiebreak] if tiebreak else []))
-
-    def per_partition(batches):
-        import math
-
-        import numpy as np
-        prev_key = object()
-        lv = bt = sv = math.nan
-        seas = None
-        kcount = 0
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            kcols = [pdf[k].to_numpy() for k in keys]
-            x = pdf[field].to_numpy(dtype="float64", na_value=math.nan)
-            lev = np.empty(n)
-            trd = np.empty(n)
-            sea = np.empty(n)
-            for i in range(n):
-                key = tuple(kc[i] for kc in kcols) if keys else ()
-                if key != prev_key:
-                    prev_key = key
-                    lv = bt = sv = math.nan
-                    seas = np.zeros(period)
-                    kcount = 0
-                v = x[i]
-                if not math.isnan(v):
-                    p = kcount % period
-                    if math.isnan(lv):
-                        lv, bt = v, 0.0
-                    else:
-                        s_prev = seas[p]
-                        new_l = (alpha * (v - s_prev)
-                                 + (1.0 - alpha) * (lv + bt))
-                        bt = beta * (new_l - lv) + (1.0 - beta) * bt
-                        lv = new_l
-                    sv = gamma * (v - lv) + (1.0 - gamma) * seas[p]
-                    seas[p] = sv
-                    kcount += 1
-                lev[i] = lv
-                trd[i] = bt
-                sea[i] = sv
-            pdf[f"{field}_level"] = lev
-            pdf[f"{field}_trend"] = trd
-            pdf[f"{field}_seasonal"] = sea
-            yield pdf
-
-    return parts.mapInPandas(per_partition, out_schema)
+    return _keyed_scan(
+        df, partition_by, time_col, tiebreak,
+        [T.StructField(f"{field}_level", T.DoubleType()),
+         T.StructField(f"{field}_trend", T.DoubleType()),
+         T.StructField(f"{field}_seasonal", T.DoubleType())],
+        lambda pdf: [_f64(pdf, field)],
+        lambda xs, st: _hw_fold(xs[0], period, alpha, beta, gamma, st),
+        (math.nan, math.nan, math.nan, 0, [0.0] * period))
 
 
 def zscore(df: DataFrame, field_spec: str = "value",
@@ -629,10 +615,6 @@ def ewma_scan(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
 
     Output: input columns + ``<field>_ewma``, in series order.
     """
-    import math
-
-    from pyspark.sql import types as T
-
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if isinstance(field_spec, (list, tuple)):
@@ -662,7 +644,7 @@ def ewma_scan(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
         for pdf in batches:
             if len(pdf):
                 pid = int(pdf["__pid"].iloc[0])
-                for v in pdf[f].to_numpy(dtype="float64", na_value=math.nan):
+                for v in _f64(pdf, f):
                     if not math.isnan(v):
                         A *= (1.0 - alpha)
                         B = alpha * v + (1.0 - alpha) * B
@@ -698,26 +680,14 @@ def ewma_scan(df: DataFrame, field_spec: str = "value", alpha: float = 0.5,
     out_cols = [fld.name for fld in out_schema.fields]
 
     def apply_scan(batches):
-        import numpy as np
-        import pandas as pd
-        acc = None
-        primed = False
+        s = None
         for pdf in batches:
-            m = len(pdf)
-            if not m:
+            if not len(pdf):
                 continue
-            if not primed:
-                acc = entry.get(int(pdf["__pid"].iloc[0]))
-                primed = True
-            xs = pdf[f].to_numpy(dtype="float64", na_value=math.nan)
-            out = np.empty(m)
-            s = math.nan if acc is None else acc
-            for i in range(m):
-                v = xs[i]
-                if not math.isnan(v):
-                    s = v if math.isnan(s) else alpha * v + (1.0 - alpha) * s
-                out[i] = s
-            acc = None if math.isnan(s) else s
+            if s is None:
+                s = entry.get(int(pdf["__pid"].iloc[0]))
+                s = math.nan if s is None else s
+            (out,), (s,) = _ewma_fold([_f64(pdf, f)], alpha, [s])
             pdf = pdf.drop(columns=["__pid"])
             pdf[f"{f}_ewma"] = out
             yield pdf[out_cols]

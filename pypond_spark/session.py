@@ -37,8 +37,7 @@ def get_spark(app_name: str = "pypond_spark",
         # UTC instant), not TIMESTAMP_NTZ — keeps unix_millis/epoch math valid
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions
-                    or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
+                str(shuffle_partitions or 32))
         # distributed file-listing width: the default (10000) launches one
         # task per file when a directory source exceeds the discovery
         # threshold — a 5000-file shard dir costs a 5000-task listing job
@@ -62,8 +61,7 @@ def get_spark(app_name: str = "pypond_spark",
         # burst of short availableNow drains keeps every predecessor's
         # state maps in heap for up to a minute (measured: the second
         # drain pass ran 20-50% slower from the accumulation).
-        .config("spark.sql.streaming.stateStore.maintenanceInterval",
-                os.environ.get("SPARK_GRAFT_STATE_MAINTENANCE", "10s"))
+        .config("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

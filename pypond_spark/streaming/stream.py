@@ -24,7 +24,11 @@ when no series key is given (and its drop), the key-prefixed output schema,
 the state schema, and the ``append`` / ``NoTimeout`` call. Each processor
 supplies only a step function, which sees the WHOLE group (every Arrow
 chunk), stable-sorted by time and optional tiebreak, and never an empty
-group. The three dedup gates (first-seen, SimHash and MinHash) share a
+group. The four smoothing steps (ewma, holt, holt_winters, throttle) call
+the batch operators' fold kernels in ``operators/rolling.py`` (the first
+three through ``_fold_state``): one implementation per recurrence, so a
+drained stream and the batch operator agree bit-for-bit, NULL keys
+included. The three dedup gates (first-seen, SimHash and MinHash) share a
 second shell, ``_first_seen_claims``: they key on a digest or band, not a
 series, and arm event-time timeouts when given a TTL.
 
@@ -51,6 +55,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..datapipe._util import py_word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
+from ..operators.rolling import (_ewma_fold, _f64, _holt_fold, _hw_fold,
+                                 _t_ms, _throttle_fold)
 from ..session import shuffle_width
 from ..util import timed_events
 
@@ -176,19 +182,6 @@ def _keyed_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout)
     return out.drop("__k") if dummy else out
-
-
-def _t_ms(pdf: pd.DataFrame, time_col: str) -> "np.ndarray":
-    """Event times of a (sorted) group chunk as int64 epoch-ms — the
-    vectorized twin of the old per-row ``row[time_col].value // 10**6``
-    (``astype('int64')`` is ns-since-epoch for both naive and tz-aware
-    pandas datetime columns)."""
-    return (pdf[time_col].astype("int64") // 10**6).to_numpy()
-
-
-def _f64(pdf: pd.DataFrame, col: str) -> "np.ndarray":
-    """A value column as float64 with NaN for missing (None/NaN alike)."""
-    return pdf[col].to_numpy(dtype="float64", na_value=np.nan)
 
 
 def _key_frame(key, keys: list[str], n: int, cols: dict) -> pd.DataFrame:
@@ -443,26 +436,13 @@ def stream_sessions(
 
 def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int):
     def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized: the greedy keep-chain only re-enters Python once
-        per KEPT event (``searchsorted`` jumps to the next time >=
-        last + gap), not once per event — O(kept * log n) instead of
-        O(n) Python rows, identical keep set by construction (the
-        sequential rule "keep iff cur - last >= gap" admits exactly
-        this next-fit chain on sorted times; equal-ts peers after the
-        first kept are skipped by searchsorted side='left')."""
-        last = state.get[0] if state.exists else None
         t = _t_ms(pdf, time_col)
-        n = len(t)
-        keep = np.zeros(n, dtype=bool)
-        i = 0 if last is None else int(np.searchsorted(t, last + gap_ms,
-                                                       side="left"))
-        while i < n:
-            keep[i] = True
-            last = int(t[i])
-            i = int(np.searchsorted(t, last + gap_ms, side="left"))
+        (keep,), last = _throttle_fold(
+            t, gap_ms, state.get[0] if state.exists else None)
         if last is not None:
             state.update((last,))
-        yield _key_frame(key, keys, n, {"t_ms": t, "throttle_keep": keep})
+        yield _key_frame(key, keys, len(t), {"t_ms": t,
+                                             "throttle_keep": keep})
 
     return fn
 
@@ -964,37 +944,37 @@ def stream_fill_pad(
     return stream_fill(sdf, field_spec, "pad", None, partition_by, time_col)
 
 
-def _ewma_state_fn(fields: list[str], keys: list[str], time_col: str,
-                   alpha: float, carry: Sequence[str] = ()):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        # array-based loop (r11): the EWMA recurrence rounds at every
-        # step, so any reassociated closed form (the ewma_scan affine
-        # compose) drifts in the last ulp and would break the
-        # bit-for-bit drained==batch parity contract; the per-event
-        # cost that mattered was iterrows row materialization, not the
-        # two flops — plain indexing over numpy arrays removes it while
-        # keeping the scalar float ops identical
-        accs = list(state.get) if state.exists else [None] * len(fields)
-        t_arr = _t_ms(pdf, time_col)
-        v_arrs = [_f64(pdf, f) for f in fields]
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            for j in range(len(fields)):
-                v = v_arrs[j][r]
-                if not np.isnan(v):
-                    accs[j] = float(v) if accs[j] is None \
-                        else alpha * float(v) + (1.0 - alpha) * accs[j]
-                rec.append(accs[j])
-            outs.append(rec)
-        state.update(tuple(accs))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{f}_ewma" for f in fields])
-        yield pd.DataFrame(outs, columns=cols)
+def _fold_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
+                tiebreak: str | None, carry_cols: Sequence[str],
+                out_names: list[str], state_fields: list, columns, fold,
+                fresh) -> DataFrame:
+    """The stream side of the float-state smoothing twins (ewma, holt,
+    holt_winters): ``_keyed_state`` whose step runs the batch operator's
+    ``fold(columns(pdf), state) -> (outputs, state)`` over the group from
+    the carried state (``fresh`` for a new key), as ``_keyed_scan`` runs
+    it over a batch run. Output is ``t_ms``, ``carry_cols`` and one double
+    per ``out_names``. A stored None reads as NaN: checkpoints may hold
+    None for an EWMA accumulator with no valid sample yet."""
+    carry = list(carry_cols)
 
-    return fn
+    def make_step(keys):
+        def fn(key, pdf: pd.DataFrame, state: GroupState):
+            st = (tuple(np.nan if v is None else v for v in state.get)
+                  if state.exists else fresh)
+            outs, st = fold(columns(pdf), st)
+            state.update(tuple(st))
+            yield _key_frame(key, keys, len(pdf), {
+                "t_ms": _t_ms(pdf, time_col),
+                **{c: pdf[c].to_list() for c in carry},
+                **dict(zip(out_names, outs))})
+        return fn
+
+    return _keyed_state(
+        sdf, partition_by, time_col,
+        [T.StructField("t_ms", T.LongType())]
+        + [sdf.schema[c] for c in carry]
+        + [T.StructField(n, T.DoubleType()) for n in out_names],
+        state_fields, make_step, tiebreak)
 
 
 def stream_ewma(
@@ -1010,65 +990,19 @@ def stream_ewma(
 
     State per series key is just the current accumulator per field, so the
     state store is O(keys), independent of event volume; the recurrence is
-    written identically to the batch operator, so draining a stream and
-    running the batch op on the same data agree bit-for-bit — provided
+    the batch operator's kernel, so draining a stream and running the
+    batch op on the same data agree bit-for-bit — provided
     equal-timestamp events are impossible or ``tiebreak=`` (same contract
     as the batch operator) pins their fold order on both sides.
     """
     fields = [field_spec] if isinstance(field_spec, str) else list(field_spec)
-    return _keyed_state(
-        sdf, partition_by, time_col,
-        [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{f}_ewma", T.DoubleType()) for f in fields],
+    return _fold_state(
+        sdf, partition_by, time_col, tiebreak, carry_cols,
+        [f"{f}_ewma" for f in fields],
         [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))],
-        lambda keys: _ewma_state_fn(fields, keys, time_col, alpha,
-                                    list(carry_cols)),
-        tiebreak)
-
-
-def _holt_state_fn(field: str, keys: list[str], time_col: str,
-                   alpha: float, beta: float, carry: Sequence[str] = ()):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        import math
-
-        # NaN sentinel for "no valid sample yet", matching the batch
-        # operator's per_partition accumulators exactly — None here would
-        # emit Arrow NULLs where batch emits NaN doubles (and would even
-        # vary with micro-batch boundaries via pandas dtype inference)
-        if state.exists:
-            lv, bt = state.get
-            lv = math.nan if lv is None else lv
-            bt = math.nan if bt is None else bt
-        else:
-            lv = bt = math.nan
-        # array-based loop (r11): Holt is a genuinely order-1 sequential
-        # recurrence (level feeds trend feeds level) — no parallel
-        # decomposition reproduces the fold's per-step rounding, so the
-        # win is dropping iterrows, not the arithmetic
-        t_arr = _t_ms(pdf, time_col)
-        v_arr = _f64(pdf, field)
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            v = v_arr[r]
-            if not np.isnan(v):
-                if math.isnan(lv):
-                    lv, bt = float(v), 0.0
-                else:
-                    nl = alpha * float(v) + (1.0 - alpha) * (lv + bt)
-                    bt = beta * (nl - lv) + (1.0 - beta) * bt
-                    lv = nl
-            rec += [lv, bt]
-            outs.append(rec)
-        state.update((lv, bt))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{field}_level", f"{field}_trend"])
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+        lambda pdf: [_f64(pdf, f) for f in fields],
+        lambda xs, accs: _ewma_fold(xs, alpha, accs),
+        [np.nan] * len(fields))
 
 
 def stream_holt(
@@ -1084,71 +1018,18 @@ def stream_holt(
     """Cross-batch Holt double exponential smoothing: the streaming twin
     of ``operators.rolling.holt``. State per series key is TWO doubles
     (level, trend) — O(keys) state store regardless of event volume; the
-    recurrence is written identically to the batch operator, so a
-    drained stream and the batch op agree bit-for-bit (same tiebreak
-    contract as stream_ewma).
+    recurrence is the batch operator's kernel, so a drained stream and
+    the batch op agree bit-for-bit (same tiebreak contract as
+    stream_ewma).
     """
-    return _keyed_state(
-        sdf, partition_by, time_col,
-        [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{field}_level", T.DoubleType()),
-           T.StructField(f"{field}_trend", T.DoubleType())],
+    return _fold_state(
+        sdf, partition_by, time_col, tiebreak, carry_cols,
+        [f"{field}_level", f"{field}_trend"],
         [T.StructField("l", T.DoubleType()),
          T.StructField("b", T.DoubleType())],
-        lambda keys: _holt_state_fn(field, keys, time_col, alpha, beta,
-                                    list(carry_cols)),
-        tiebreak)
-
-
-def _hw_state_fn(field: str, keys: list[str], time_col: str,
-                 period: int, alpha: float, beta: float, gamma: float,
-                 carry: Sequence[str] = ()):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        import math
-
-        if state.exists:
-            lv, bt, sv, kcount, seas = state.get
-            lv = math.nan if lv is None else lv
-            bt = math.nan if bt is None else bt
-            sv = math.nan if sv is None else sv
-            seas = list(seas)
-        else:
-            lv = bt = sv = math.nan
-            kcount, seas = 0, [0.0] * period
-        # array-based loop (r11): like Holt, the seasonal recurrence is
-        # order-1 sequential per key (level/trend/seasonal all feed the
-        # next step) — iterrows was the cost, not the arithmetic
-        t_arr = _t_ms(pdf, time_col)
-        v_arr = _f64(pdf, field)
-        c_arrs = [pdf[c].to_list() for c in carry]
-        outs = []
-        for r in range(len(t_arr)):
-            rec = (list(key) + [int(t_arr[r])]
-                   + [c[r] for c in c_arrs])
-            v = v_arr[r]
-            if not np.isnan(v):
-                p = kcount % period
-                if math.isnan(lv):
-                    lv, bt = float(v), 0.0
-                else:
-                    s_prev = seas[p]
-                    nl = (alpha * (float(v) - s_prev)
-                          + (1.0 - alpha) * (lv + bt))
-                    bt = beta * (nl - lv) + (1.0 - beta) * bt
-                    lv = nl
-                sv = gamma * (float(v) - lv) + (1.0 - gamma) * seas[p]
-                seas[p] = sv
-                kcount += 1
-            rec += [lv, bt, sv]
-            outs.append(rec)
-        state.update((lv, bt, sv, kcount, seas))
-        cols = (keys + ["t_ms"] + list(carry)
-                + [f"{field}_level", f"{field}_trend",
-                   f"{field}_seasonal"])
-        yield pd.DataFrame(outs, columns=cols)
-
-    return fn
+        lambda pdf: [_f64(pdf, field)],
+        lambda xs, st: _holt_fold(xs[0], alpha, beta, st),
+        (np.nan, np.nan))
 
 
 def stream_holt_winters(
@@ -1166,28 +1047,24 @@ def stream_holt_winters(
     """Cross-batch Holt-Winters additive smoothing: the streaming twin
     of ``operators.rolling.holt_winters``. State per series key is
     (level, trend, last-seasonal, phase count, seasonal[period]) —
-    O(period) per key, flat in event volume; recurrence written
-    identically to the batch operator (same zero-init seasonal, same
+    O(period) per key, flat in event volume; the recurrence is the
+    batch operator's kernel (same zero-init seasonal, same
     sample-indexed phase), so a drained stream agrees bit-for-bit for
     dyadic coefficients.
     """
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    return _keyed_state(
-        sdf, partition_by, time_col,
-        [T.StructField("t_ms", T.LongType())]
-        + [sdf.schema[c] for c in carry_cols]
-        + [T.StructField(f"{field}_level", T.DoubleType()),
-           T.StructField(f"{field}_trend", T.DoubleType()),
-           T.StructField(f"{field}_seasonal", T.DoubleType())],
+    return _fold_state(
+        sdf, partition_by, time_col, tiebreak, carry_cols,
+        [f"{field}_level", f"{field}_trend", f"{field}_seasonal"],
         [T.StructField("l", T.DoubleType()),
          T.StructField("b", T.DoubleType()),
          T.StructField("sv", T.DoubleType()),
          T.StructField("k", T.LongType()),
          T.StructField("seas", T.ArrayType(T.DoubleType()))],
-        lambda keys: _hw_state_fn(field, keys, time_col, period, alpha,
-                                  beta, gamma, list(carry_cols)),
-        tiebreak)
+        lambda pdf: [_f64(pdf, field)],
+        lambda xs, st: _hw_fold(xs[0], period, alpha, beta, gamma, st),
+        (np.nan, np.nan, np.nan, 0, [0.0] * period))
 
 
 _STREAM_ROLLING_FUNCS = ("sum", "avg", "min", "max", "count", "stddev",

@@ -4078,7 +4078,7 @@ def test_avi_mjpeg_roundtrip_and_errors():
 def test_transcode_payload(spark):
     """transcode_payload: declared codec used when it works, UTF-8 ->
     latin-1 ladder on failure or unknown labels, audit columns, NULL
-    content passthrough."""
+    content passthrough, and a NULL-id row dropped beside them."""
     from pypond_spark.datapipe import warc
 
     rows = [
@@ -4089,12 +4089,15 @@ def test_transcode_payload(spark):
         (4, "naïve".encode("utf-8"), "x-unknown-label"),
         (5, None, "utf-8"),
         (6, "﻿bom".encode("utf-16-le"), "utf-16le"),
+        (None, b"no id", "utf-8"),
     ]
     df = spark.createDataFrame(rows,
                                "doc_id long, content binary, "
                                "charset string")
+    out = warc.transcode_payload(df).collect()
     got = {r["doc_id"]: (r["text"], r["used_charset"], r["had_errors"])
-           for r in warc.transcode_payload(df).collect()}
+           for r in out}
+    assert len(out) == 7 and set(got) == set(range(7))
     assert got[0] == ("héllo", "utf-8", False)
     assert got[1] == ("café", "latin-1", False)
     assert got[2] == ("日本語", "shift_jis", False)
