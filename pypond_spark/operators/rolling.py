@@ -26,6 +26,7 @@ import math
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -199,9 +200,9 @@ def _f64(pdf, col: str) -> np.ndarray:
 
 def _t_ms(pdf, time_col: str) -> np.ndarray:
     """Event times as int64 epoch-ms, floored like Spark's ``unix_millis``
-    (``astype('int64')`` is ns-since-epoch for naive and tz-aware pandas
+    (an int64 view is ns-since-epoch for naive and tz-aware pandas
     datetime columns alike)."""
-    return (pdf[time_col].astype("int64") // 10**6).to_numpy()
+    return pdf[time_col].to_numpy(dtype="int64") // 10**6
 
 
 # The four smoothing folds below are the ONE implementation of their
@@ -293,6 +294,21 @@ def _throttle_fold(t: np.ndarray, gap_ms: int, last: int | None):
     return (keep,), last
 
 
+def _run_starts(pdf, keys: Sequence[str]) -> np.ndarray:
+    """The run splitter of the keyed shells (``_keyed_scan`` here, the
+    stream's bucket shell): over rows sorted by ``keys``, True where a
+    row's key differs from the row before it (row 0 is left False).
+
+    NULL keys form one series, as Spark's ``groupBy`` and SQL
+    ``PARTITION BY`` treat them. A NULL numeric key reaches pandas as NaN,
+    which equals nothing, so NULL-ness is compared first."""
+    new = np.zeros(len(pdf), dtype=bool)
+    for k in keys:
+        v, na = pdf[k].to_numpy(), pdf[k].isna().to_numpy()
+        new[1:] |= (v[1:] != v[:-1]) & ~(na[1:] & na[:-1])
+    return new
+
+
 def _keyed_scan(df: DataFrame, partition_by: Sequence[str], time_col: str,
                 tiebreak: str | None, out_fields: list, columns, fold,
                 fresh) -> DataFrame:
@@ -303,11 +319,8 @@ def _keyed_scan(df: DataFrame, partition_by: Sequence[str], time_col: str,
     Hash-partition on the series key (no key: one global series, one
     partition), sort each partition by (key, time, tiebreak), then ONE
     ``mapInPandas`` pass that splits each Arrow batch into runs of equal
-    key and carries the state across batch boundaries.
-
-    NULL keys form one series, as Spark's ``groupBy`` (the streaming
-    twins) and SQL ``PARTITION BY`` treat them. A NULL numeric key reaches
-    pandas as NaN, which equals nothing, so NULL-ness is compared first.
+    key (:func:`_run_starts`, whose NULL-key law this shares) and carries
+    the state across batch boundaries.
     """
     keys = list(partition_by)
     df = timed_events(df, time_col)
@@ -321,15 +334,12 @@ def _keyed_scan(df: DataFrame, partition_by: Sequence[str], time_col: str,
             n = len(pdf)
             if not n:
                 continue
-            new = np.zeros(n, dtype=bool)
-            first, last = [], []
-            for k in keys:
-                v, na = pdf[k].to_numpy(), pdf[k].isna().to_numpy()
-                new[1:] |= (v[1:] != v[:-1]) & ~(na[1:] & na[:-1])
-                first.append(None if na[0] else v[0])
-                last.append(None if na[-1] else v[-1])
-            new[0] = tuple(first) != prev_key
-            prev_key = tuple(last)
+            new = _run_starts(pdf, keys)
+            first, last = (tuple(None if pd.isna(x) else x for x in
+                                 (pdf[k].iat[i] for k in keys))
+                           for i in (0, -1))
+            new[0] = first != prev_key
+            prev_key = last
             ins = columns(pdf)
             bounds = [*np.flatnonzero(new).tolist(), n]
             if bounds[0]:  # the run carried over from the last batch

@@ -17,30 +17,29 @@ Mapping of the reference's push-based stream mode:
   micro-batch boundaries exactly like the reference's long-lived processor
   objects.
 
-The fifteen keyed processors (rate, gaps, sessions, throttle, transitions,
-cumulative, align, fill, ewma, holt, holt_winters, rolling, zscore, cusum,
-xchart) share one shell, ``_keyed_state``. It owns the constant key used
-when no series key is given (and its drop), the key-prefixed output schema,
-the state schema, and the ``append`` / ``NoTimeout`` call. Each processor
-supplies only a step function, which sees the WHOLE group (every Arrow
-chunk), stable-sorted by time and optional tiebreak, and never an empty
-group. The four smoothing steps (ewma, holt, holt_winters, throttle) call
-the batch operators' fold kernels in ``operators/rolling.py`` (the first
-three through ``_fold_state``): one implementation per recurrence, so a
-drained stream and the batch operator agree bit-for-bit, NULL keys
-included. The three dedup gates (first-seen, SimHash and MinHash) share a
-second shell, ``_first_seen_claims``: they key on a digest or band, not a
-series, and arm event-time timeouts when given a TTL.
+All Python stream state runs through one ``applyInPandasWithState``
+shell, ``_bucketed_state``: one state row per bucket of the key hash, each
+holding an Arrow table with a row per key, and one Python call per touched
+bucket per micro-batch. ``_keyed_state`` runs the fifteen keyed processors
+(rate, gaps, sessions, throttle, transitions, cumulative, align, fill, ewma,
+holt, holt_winters, rolling, zscore, cusum, xchart) on it, one step call
+per key; the smoothing steps (ewma, holt, holt_winters, throttle) call the
+batch operators' fold kernels in ``operators/rolling.py``, so a drained
+stream and the batch operator agree bit-for-bit, NULL keys included.
+``_first_seen_claims`` runs the three dedup gates (first-seen, SimHash,
+MinHash) on it, one vectorized step per bucket.
 
 State width: every state partition costs a state store and a Python state
 start per micro-batch, and AQE is off inside streaming queries. So every
 ``availableNow`` drain starts in ``_drain_available_now``, which gives a
 new query ``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
-partitions. The checkpoint pins the width a query first ran with.
+partitions. The checkpoint pins the width a query first ran with, and the
+bucket count it was written with.
 """
 
 from __future__ import annotations
 
+import json
 import uuid
 from typing import Iterator, Sequence
 
@@ -56,7 +55,7 @@ from ..datapipe._util import py_word_tokens
 from ..functions import compile_agg_spec
 from ..index import window_duration_ms
 from ..operators.rolling import (_ewma_fold, _f64, _holt_fold, _hw_fold,
-                                 _t_ms, _throttle_fold)
+                                 _run_starts, _t_ms, _throttle_fold)
 from ..session import shuffle_width
 from ..util import timed_events
 
@@ -122,65 +121,208 @@ def windowed_stream_aggregate(
     return out, mode
 
 
-def _whole_group(pdfs: Iterator[pd.DataFrame], time_col: str,
-                 tiebreak: Sequence[str] = ()) -> pd.DataFrame:
-    """Concatenate ALL Arrow chunks of the group, then sort by time.
+#: Python stream state lives in this many state rows per operator, one per
+#: bucket ``pmod(xxhash64(keys), STATE_BUCKETS)``, each holding the Arrow
+#: table of its keys' state. Every micro-batch rewrites each touched
+#: bucket's whole table, so the value trades Python calls per batch against
+#: bytes rewritten per touched key (SCALE.md, "State buckets"). A checkpoint
+#: records the value it was written with and refuses any other.
+STATE_BUCKETS = 64
 
-    applyInPandasWithState splits a group larger than the Arrow batch size
-    into multiple chunks in shuffle order — sorting chunks independently
-    silently corrupts any order-dependent state computation.
 
-    ``tiebreak`` columns extend the sort key for operators whose result
-    depends on the order of equal-timestamp events (e.g. EWMA); without
-    one, the stable mergesort preserves concatenated chunk order, which is
-    deterministic per run but shuffle-dependent across runs.
+class _KeyState:
+    """One key's row of a bucket's state table, as a keyed step sees it:
+    the ``exists`` / ``get`` / ``update`` part of ``GroupState``."""
+
+    def __init__(self, value):
+        self.get, self.new, self.exists = value, None, value is not None
+
+    def update(self, value) -> None:
+        self.get = self.new = tuple(value)
+        self.exists = True
+
+
+def _bucketed_state(sdf: DataFrame, keys: list[str], sort_cols: list[str],
+                    exact: Sequence[str], out_schema: T.StructType,
+                    state_fields: list, step,
+                    ttl: bool = False) -> DataFrame:
+    """The one ``applyInPandasWithState`` shell of the stream tier.
+
+    The JVM groups on ``pmod(__h, STATE_BUCKETS)``, ``__h = xxhash64(keys)``.
+    A bucket's state is an Arrow IPC table of (``__h``, keys,
+    ``state_fields``), one row per key. Python gets the whole bucket,
+    stable-sorted by (``keys``, ``sort_cols``) and split into key runs by
+    :func:`_run_starts` (NULL keys form one series), and calls
+    ``step(pdf, starts, run_keys, prior, wm) -> (frames, states)`` with each
+    run's stored state tuple (None: new key); a None new state leaves the
+    key's row as it was. Numeric keys, ``sort_cols`` and ``exact`` columns
+    cross as a coalesced value plus a NULL flag and reach ``step`` as pandas
+    masked arrays, since pandas would hold a numeric column with a NULL as
+    float64 (rounding a long above 2**53, merging NULL into NaN).
+
+    ``ttl``: a ``deadline`` field holds each key's event-time deadline and
+    the bucket's timer is the smallest one. A key with no rows in the batch
+    whose deadline is below the watermark is removed, in the batch where a
+    per-key timer would fire; a key with rows stays, and ``step`` re-arms it.
     """
-    chunks = list(pdfs)
-    if not chunks:
-        return pd.DataFrame()
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    # stable mergesort: rows sharing the full sort key keep their
-    # concatenated chunk order (the default unstable quicksort made
-    # stateful rate/align/fill output order-dependent across runs)
-    return pdf.sort_values([time_col, *tiebreak], kind="mergesort")
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    types = {f.name: f.dataType for f in sdf.schema.fields}
+    enc = [c for c in dict.fromkeys([*keys, *sort_cols, *exact])
+           if isinstance(types[c], (T.IntegralType, T.FloatType,
+                                     T.DoubleType))]
+    sdf = sdf.select(
+        *[F.coalesce(F.col(c), F.lit(0).cast(types[c])).alias(c)
+          if c in enc else F.col(c) for c in sdf.columns],
+        *[F.col(c).isNull().alias(f"__null_{c}") for c in enc],
+        F.xxhash64(*keys).alias("__h")).withColumn(
+            "__b", F.pmod(F.col("__h"), F.lit(STATE_BUCKETS)))
+    def flagged(cs):  # an encoded column sorts and splits on (flag, value)
+        return [x for c in cs for x in ([f"__null_{c}", c] if c in enc
+                                        else [c])]
+    split, order = flagged(keys), flagged([*keys, *sort_cols])
+    names = [f.name for f in state_fields]
+    buckets = str(STATE_BUCKETS)
+    schema = pa.schema(
+        [pa.field("__h", pa.int64())]
+        + [pa.field(f"__k{i}", to_arrow_type(types[k]))
+           for i, k in enumerate(keys)]
+        + [pa.field(f.name, to_arrow_type(f.dataType)) for f in state_fields],
+        metadata={"buckets": buckets})
+    nk = len(keys)
+
+    def fn(_bucket, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        old = None
+        if state.exists:
+            old = pa.ipc.open_stream(pa.py_buffer(state.get[0])).read_all()
+            got = old.schema.metadata.get(b"buckets", b"?").decode()
+            if got != buckets:
+                raise ValueError(f"checkpoint state has {got} buckets, "
+                                 f"this build {buckets}")
+        wm = state.getCurrentWatermarkMs() if ttl else None
+        drop = np.zeros(old.num_rows if old is not None else 0, dtype=bool)
+        frames, parts = [], []
+        chunks = [p for p in pdfs if len(p)]
+        if chunks:
+            pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
+                   else chunks[0])
+            pdf = pdf.take(np.lexsort([_sortable(pdf[c])
+                                       for c in reversed(order)]))
+            new = _run_starts(pdf, split)
+            new[0] = True
+            starts = np.flatnonzero(new)
+            for c in enc:
+                mask = pdf.pop(f"__null_{c}").to_numpy()
+                v = pdf[c].to_numpy()
+                pdf[c] = (pd.arrays.FloatingArray if v.dtype.kind == "f"
+                          else pd.arrays.IntegerArray)(v, mask)
+            h = pdf["__h"].to_numpy()[starts]
+            karr = [pa.Array.from_pandas(pdf[k].iloc[starts],
+                                         type=schema.field(i + 1).type)
+                    for i, k in enumerate(keys)]
+            run_keys = list(zip(*(a.to_pylist() for a in karr)))
+            prior, row = [None] * len(starts), {}
+            if old is not None:
+                cand = np.flatnonzero(np.isin(old["__h"].to_numpy(), h))
+                sub = old.take(cand)
+                at = {_nan_key(k): i for i, k in enumerate(run_keys)}
+                sts = [sub[n].to_pylist() for n in names]
+                for j, k in enumerate(zip(*(sub[f"__k{i}"].to_pylist()
+                                            for i in range(nk)))):
+                    i = at.get(_nan_key(k))
+                    if i is not None:
+                        prior[i] = tuple(c[j] for c in sts)
+                        row[i] = cand[j]
+            frames, states = step(pdf, starts, run_keys, prior, wm)
+            upd = [i for i, s in enumerate(states) if s is not None]
+            drop[[row[i] for i in upd if i in row]] = True
+            if upd:
+                parts.append(pa.Table.from_arrays(
+                    [pa.array(h[upd])] + [a.take(upd) for a in karr]
+                    + [pa.array([states[i][j] for i in upd],
+                                type=schema.field(nk + 1 + j).type)
+                       for j in range(len(names))], schema=schema))
+        if old is not None:
+            if ttl:
+                drop |= old["deadline"].to_numpy() < wm
+            parts.insert(0, old.filter(~drop))
+        tbl = pa.concat_tables(parts) if parts else None
+        if tbl is None or not tbl.num_rows:
+            state.remove()
+        else:
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, schema) as w:
+                w.write_table(tbl)
+            state.update((sink.getvalue().to_pybytes(),))
+            if ttl:
+                state.setTimeoutTimestamp(
+                    int(tbl["deadline"].to_numpy().min()))
+        yield from frames
+
+    return sdf.groupBy("__b").applyInPandasWithState(
+        fn, outputStructType=out_schema,
+        stateStructType=T.StructType(
+            [T.StructField("tbl", T.BinaryType())]),
+        outputMode="append",
+        timeoutConf=(GroupStateTimeout.EventTimeTimeout if ttl
+                     else GroupStateTimeout.NoTimeout))
+
+
+def _sortable(col: pd.Series) -> np.ndarray:
+    """A sort key for ``np.lexsort`` (stable): numbers and times as they
+    are, anything else as its sorted codes, with NULL after every value."""
+    v = col.to_numpy()
+    if v.dtype.kind == "M":
+        return v.view("int64")
+    if v.dtype.kind != "O":
+        return v
+    codes, uniq = pd.factorize(v, sort=True)
+    return np.where(codes < 0, len(uniq), codes)
+
+
+def _nan_key(key: tuple) -> tuple:
+    """A key tuple as a dict key: NaN (a double key) equals nothing, so it
+    is swapped for a token that equals itself."""
+    return tuple("\0nan" if x != x else x for x in key)
 
 
 def _keyed_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
                  out_fields: list, state_fields: list, make_step,
-                 tiebreak: str | None = None) -> DataFrame:
-    """The shell of every keyed, timeout-free state operator below.
-
-    It owns the constant ``__k`` key (and its drop), the output schema
-    (key fields + ``out_fields``), the state schema, the ``append`` /
-    ``NoTimeout`` ``applyInPandasWithState`` call, and the group
-    prologue. ``make_step(keys)`` gets the resolved grouping keys
-    and returns ``step(key, pdf, state)``, a generator of output frames.
-    The step sees the WHOLE group (:func:`_whole_group`), stable-sorted by
-    time then ``tiebreak``, and never an empty one: under ``NoTimeout``
-    Spark only calls for groups that have rows.  A row with NULL time is
-    dropped on the JVM side, as the batch twins drop it.
+                 tiebreak: str | None = None, exact: Sequence[str] = (),
+                 reads: Sequence[str] = ()) -> DataFrame:
+    """The shell of every keyed, timeout-free state operator below: the
+    constant ``__k`` key (and its drop), the output schema (key fields +
+    ``out_fields``) and the per-key adapter over :func:`_bucketed_state`.
+    ``make_step(keys)`` returns ``step(key, pdf, state)``, a generator of
+    output frames called once per key with rows, with the key's run
+    (stable-sorted by time then ``tiebreak``) and its :class:`_KeyState`.
+    Only the keys, time, ``tiebreak``, ``reads`` (value columns) and
+    ``exact`` (pass-through columns, kept lossless) reach Python. A row
+    with NULL time is dropped on the JVM side, as the batch twins drop it.
     """
     sdf = timed_events(sdf, time_col)
     keys, dummy = list(partition_by), not partition_by
     if dummy:
-        # Spark's StatefulOpClusteredDistribution rejects an empty key
-        # list: with no series key, one constant key (one state partition)
+        # with no series key, one constant key (one state bucket)
         sdf, keys = sdf.withColumn("__k", F.lit(0)), ["__k"]
     step = make_step(keys)
-    tb = (tiebreak,) if tiebreak else ()
+    out_schema = T.StructType([sdf.schema[k] for k in keys] + out_fields)
+    tb = [tiebreak] if tiebreak else []
+    sdf = sdf.select(*dict.fromkeys([*keys, time_col, *tb, *reads, *exact]))
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pdf = _whole_group(pdfs, time_col, tb)
-        if len(pdf):
-            yield from step(key, pdf, state)
+    def per_key(pdf, starts, run_keys, prior, _wm):
+        frames, states = [], []
+        for lo, hi, key, st in zip(starts.tolist(),
+                                   [*starts[1:].tolist(), len(pdf)],
+                                   run_keys, prior):
+            view = _KeyState(st)
+            frames.extend(step(key, pdf.iloc[lo:hi], view))
+            states.append(view.new)
+        return frames, states
 
-    out = sdf.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=T.StructType(
-            [sdf.schema[k] for k in keys] + out_fields),
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
+    out = _bucketed_state(sdf, keys, [time_col, *tb], exact, out_schema,
+                          state_fields, per_key)
     return out.drop("__k") if dummy else out
 
 
@@ -192,31 +334,28 @@ def _key_frame(key, keys: list[str], n: int, cols: dict) -> pd.DataFrame:
     return pd.DataFrame(data)
 
 
+def _with_last(pdf: pd.DataFrame, state: _KeyState, fields: list[str],
+               time_col: str):
+    """The (last time, last values) state of rate and align: the run's
+    epoch-ms times and float64 values with the stored last event in front
+    (a stored None value reads as NaN), after storing the run's last one."""
+    t = _t_ms(pdf, time_col)
+    vals = {f: _f64(pdf, f) for f in fields}
+    if state.exists:
+        t = np.r_[np.int64(state.get[0]), t]
+        vals = {f: np.r_[np.nan if p is None else p, vals[f]]
+                for f, p in zip(fields, state.get[1:])}
+    state.update((int(t[-1]), *(None if np.isnan(v[-1]) else float(v[-1])
+                                for v in vals.values())))
+    return t, vals
+
+
 def _rate_state_fn(fields: list[str], keys: list[str], time_col: str,
                    allow_negative: bool, counter_wrap: float | None = None):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized: consecutive-pair rates via shifted numpy arrays
-        (state-prepended), elementwise IEEE-identical to the former
-        per-row loop ((cv - pv) / ((cur - prev) / 1000.0), same wrap
-        add), so drained output is bit-for-bit unchanged."""
-        if state.exists:
-            prev_ms, prev_vals = state.get[0], list(state.get[1:])
-        else:
-            prev_ms, prev_vals = None, [None] * len(fields)
-        t_new = _t_ms(pdf, time_col)
-        vals = {f: _f64(pdf, f) for f in fields}
-        if prev_ms is not None:
-            t_all = np.concatenate(
-                [np.array([prev_ms], dtype=np.int64), t_new])
-            v_all = {f: np.concatenate(
-                [np.array([np.nan if prev_vals[i] is None
-                           else prev_vals[i]]), vals[f]])
-                for i, f in enumerate(fields)}
-        else:
-            t_all, v_all = t_new, vals
-        state.update((int(t_all[-1]),
-                      *(None if np.isnan(v_all[f][-1]) else float(v_all[f][-1])
-                        for f in fields)))
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """Consecutive-pair rates ``(cv - pv) / ((cur - prev) / 1000.0)``
+        via shifted numpy arrays, the stored last event prepended."""
+        t_all, v_all = _with_last(pdf, state, fields, time_col)
         if len(t_all) < 2:
             return  # yield nothing: no output rows for this group
         begin, end = t_all[:-1], t_all[1:]
@@ -266,19 +405,13 @@ def stream_rate(
         [T.StructField("ts", T.LongType())]
         + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))],
         lambda keys: _rate_state_fn(fields, keys, time_col, allow_negative,
-                                    wrap))
+                                    wrap), reads=fields)
 
 
 def _gaps_state_fn(keys: list[str], time_col: str, gap_ms: int):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized: one ``np.diff`` over the state-prepended sorted
-        times replaces the former per-row loop — integer arithmetic, so
-        output is identical by construction."""
-        prev_ms = state.get[0] if state.exists else None
-        t = _t_ms(pdf, time_col)
-        t_all = (np.concatenate([np.array([prev_ms], dtype=np.int64), t])
-                 if prev_ms is not None else t)
-        state.update((int(t_all[-1]),))
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """One ``np.diff`` over the state-prepended sorted times."""
+        t_all, _ = _with_last(pdf, state, [], time_col)
         d = np.diff(t_all)
         idx = np.nonzero(d > gap_ms)[0]
         yield _key_frame(key, keys, len(idx),
@@ -322,15 +455,11 @@ def stream_gaps(
 
 def _sessions_state_fn(keys: list[str], time_col: str, gap_ms: int,
                        fields: list[str]):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized (r10): session breaks come from one ``np.diff``
-        (strictly greater than the gap — an event at EXACTLY last+gap
-        still joins, matching Spark's native session_window boundary);
-        Python re-enters once per SEGMENT (closed session + the one
-        left open), not once per event. Per-segment field sums keep
-        the sequential left-fold order by seeding a ``np.cumsum`` with
-        the carried state sum (missing samples add an exact 0.0), so
-        drained output is bit-identical to the former per-row loop."""
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """Session breaks come from one ``np.diff`` (strictly greater than
+        the gap); Python re-enters once per SEGMENT. Field sums keep the
+        sequential left-fold order by seeding a ``np.cumsum`` with the
+        carried sum (missing samples add an exact 0.0)."""
         if state.exists:
             begin, last, n0 = state.get[0], state.get[1], state.get[2]
             sums0 = list(state.get[3:])
@@ -395,22 +524,16 @@ def stream_sessions(
     """Cross-batch stateful sessionization: the streaming twin of
     ``TimeSeries.session_window_rollup`` — a session is a run of events
     per key with inter-event silence <= ``window`` (an event at exactly
-    ``last + window`` still joins: Spark's native session_window end is
-    inclusive, and the batch operator inherits that); ``end`` extends
-    the last event by the session window, matching the batch operator
-    exactly.
+    ``last + window`` still joins, as Spark's inclusive session_window
+    end); ``end`` is the last event plus the window, as in batch.
 
-    State per key is THREE longs (session begin, last-seen ts, event
-    count) plus one running double per ``field_spec`` field (emitted as
-    ``<field>_sum``; invalid samples contribute nothing) — flat
-    regardless of throughput or session length, so a million-key stream
-    holds state proportional to keys, not events.
-    A session is emitted when it CLOSES: the first event >= ``window``
-    after its predecessor both emits the previous session and opens the
-    next, even across micro-batch boundaries (the open session rides the
-    state store). The session still OPEN at stream end is not emitted —
-    closure needs the next event; pair with a processing-time timeout
-    for open-ended session expiry in production alerting.
+    State per key is three longs (begin, last-seen ts, event count) plus
+    one running double per ``field_spec`` field (emitted as
+    ``<field>_sum``; invalid samples add nothing), flat in throughput.
+    A session is emitted when it CLOSES: the first event more than
+    ``window`` after its predecessor emits it and opens the next, across
+    micro-batches too.  The session still open at stream end is not
+    emitted (closure needs the next event).
     """
     gap_ms = (window_duration_ms(window)
               if isinstance(window, str) else int(window))
@@ -431,11 +554,12 @@ def stream_sessions(
          T.StructField("n", T.LongType())]
         + [T.StructField(f"s{i}", T.DoubleType())
            for i in range(len(fields))],
-        lambda keys: _sessions_state_fn(keys, time_col, gap_ms, fields))
+        lambda keys: _sessions_state_fn(keys, time_col, gap_ms, fields),
+        reads=fields)
 
 
 def _throttle_state_fn(keys: list[str], time_col: str, gap_ms: int):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
         t = _t_ms(pdf, time_col)
         (keep,), last = _throttle_fold(
             t, gap_ms, state.get[0] if state.exists else None)
@@ -474,23 +598,16 @@ def stream_throttle(
 
 
 def _transitions_state_fn(keys: list[str], time_col: str, type_col: str):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized: (prev, cur) pairs via a shifted object array with
-        the cross-batch state prepended. A NULL type value is a REAL
-        observation: it participates as both `to_type` and the next
-        row's `from_type` (the batch lead()-pairs semantics), so the
-        only row without an edge is each key's very first event — state
-        carries an explicit `seen` flag to tell "no predecessor yet"
-        apart from "predecessor was null" (the r10 review found the
-        per-row version silently bridging over null events across
-        micro-batch boundaries, fabricating never-adjacent edges)."""
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """(prev, cur) pairs via a shifted object array with the state
+        prepended. A NULL type is a REAL observation, both a `to_type` and
+        the next row's `from_type` (the batch lead()-pairs semantics), so
+        only a key's very first event has no edge: the `seen` flag tells
+        "no predecessor yet" from "predecessor was null"."""
         seen = state.exists and bool(state.get[1])
         prev = state.get[0] if state.exists else None
         t = _t_ms(pdf, time_col)
-        cur = pdf[type_col].to_numpy(dtype=object)
-        cur = np.array([None if (x is None or (isinstance(x, float)
-                                               and np.isnan(x))) else x
-                        for x in cur], dtype=object)
+        cur = pdf[type_col].to_numpy(dtype=object, na_value=None)
         prevs = np.empty(len(cur), dtype=object)
         prevs[1:] = cur[:-1]
         prevs[0] = prev
@@ -527,20 +644,17 @@ def stream_transitions(
          T.StructField("from_type", t), T.StructField("to_type", t)],
         [T.StructField("prev", t), T.StructField("seen", T.BooleanType())],
         lambda keys: _transitions_state_fn(keys, time_col, type_col),
-        tiebreak)
+        tiebreak, [type_col])
 
 
 def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
                   carry: list[str]):
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized (r10): every cumulative reducer is a prefix scan
-        — state-seeded ``np.cumsum`` for sum/count (sequential
-        left-to-right, bit-identical to the former per-row ``+=``),
-        ``np.minimum/maximum.accumulate`` with ±inf for invalid samples
-        — so the whole batch is a handful of C scans, zero per-row
-        Python."""
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """Every reducer is a prefix scan: state-seeded ``np.cumsum`` for
+        sum/count (sequential, as a per-row ``+=``) and
+        ``np.minimum/maximum.accumulate`` with ±inf for invalid samples."""
         # state per input column: (sum, count, min, max) over VALID values
         if state.exists:
             st = list(state.get)
@@ -568,7 +682,7 @@ def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
                       None if cn[-1] == 0 else float(cmx[-1])]
         out_cols = {"t_ms": _t_ms(pdf, time_col)}
         for c in carry:
-            out_cols[c] = pdf[c].to_numpy(dtype=object)
+            out_cols[c] = pdf[c].array
         for out, in_col, func, _flt in rows_spec:
             cs, cn, cmn, cmx = scans[in_col]
             if func == "count":
@@ -641,39 +755,20 @@ def stream_cumulative(
                          else T.DoubleType()) for r in rows_spec],
         state_fields,
         lambda keys: _cum_state_fn(rows_spec, keys, time_col, carry),
-        tiebreak)
+        tiebreak, carry, in_cols)
 
 
 def _align_state_fn(fields: list[str], keys: list[str], time_col: str,
                     dur_ms: int, method: str, limit: int | None):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized (r11): boundary synthesis per consecutive pair via
-        np.repeat over per-gap boundary counts; the interpolation
-        ``pv + (cv - pv) * (b - prev) / (cur - prev)`` runs elementwise
-        in float64 with int64 time deltas promoted exactly, so every
-        emitted value is IEEE-identical to the former per-row loop."""
-        if state.exists:
-            prev_ms, prev_vals = state.get[0], list(state.get[1:])
-        else:
-            prev_ms, prev_vals = None, [None] * len(fields)
-        t_new = _t_ms(pdf, time_col)
-        vals = {f: _f64(pdf, f) for f in fields}
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """Boundaries per consecutive pair via np.repeat over per-gap
+        boundary counts; ``pv + (cv - pv) * (b - prev) / (cur - prev)``
+        runs elementwise in float64 (int64 time deltas promote exactly)."""
+        fresh = not state.exists
+        t_all, v_all = _with_last(pdf, state, fields, time_col)
         head = None
-        if prev_ms is None:
-            if int(t_new[0]) % dur_ms == 0:   # first event, already aligned
-                head = (int(t_new[0]),
-                        {f: vals[f][0] for f in fields})
-            t_all, v_all = t_new, vals
-        else:
-            t_all = np.concatenate(
-                [np.array([prev_ms], dtype=np.int64), t_new])
-            v_all = {f: np.concatenate(
-                [np.array([np.nan if prev_vals[i] is None
-                           else prev_vals[i]]), vals[f]])
-                for i, f in enumerate(fields)}
-        state.update((int(t_all[-1]),
-                      *(None if np.isnan(v_all[f][-1])
-                        else float(v_all[f][-1]) for f in fields)))
+        if fresh and int(t_all[0]) % dur_ms == 0:  # first event, aligned
+            head = (int(t_all[0]), {f: v_all[f][0] for f in fields})
         pos = t_all // dur_ms
         nb = pos[1:] - pos[:-1] if len(t_all) > 1 \
             else np.zeros(0, dtype=np.int64)
@@ -747,7 +842,7 @@ def stream_align(
         [T.StructField("ts", T.LongType())]
         + [T.StructField(f"v{i}", T.DoubleType()) for i in range(len(fields))],
         lambda keys: _align_state_fn(fields, keys, time_col, dur, method,
-                                     limit))
+                                     limit), reads=fields)
 
 
 def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
@@ -764,15 +859,14 @@ def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
       event time (rows are emitted when their run closes, append-mode).
     """
 
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
         n = len(fields)
         if state.exists:
             snap = state.get
             last = list(snap[0:n])
             counts = list(snap[n:2 * n])
             last_ms = list(snap[2 * n:3 * n])
-            import json as _json
-            cache = _json.loads(snap[3 * n]) if method == "linear" else \
+            cache = json.loads(snap[3 * n]) if method == "linear" else \
                 [[] for _ in range(n)]
         else:
             last = [None] * n          # last valid value per column
@@ -885,9 +979,8 @@ def _fill_state_fn(fields: list[str], keys: list[str], time_col: str,
                             cache[i] = []
                             last[i], last_ms[i] = None, None
         if method == "linear":
-            import json as _json
             state.update(tuple(last) + tuple(counts) + tuple(last_ms)
-                         + (_json.dumps(cache),))
+                         + (json.dumps(cache),))
         else:
             state.update(tuple(last) + tuple(counts) + tuple(last_ms)
                          + ("",))
@@ -931,7 +1024,7 @@ def stream_fill(
         + [T.StructField(f"t{i}", T.LongType()) for i in range(n)]
         + [T.StructField("cache", T.StringType())],
         lambda keys: _fill_state_fn(fields, keys, time_col, method,
-                                    fill_limit))
+                                    fill_limit), reads=fields)
 
 
 def stream_fill_pad(
@@ -946,26 +1039,25 @@ def stream_fill_pad(
 
 def _fold_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
                 tiebreak: str | None, carry_cols: Sequence[str],
-                out_names: list[str], state_fields: list, columns, fold,
-                fresh) -> DataFrame:
+                out_names: list[str], state_fields: list, fields: list[str],
+                fold, fresh) -> DataFrame:
     """The stream side of the float-state smoothing twins (ewma, holt,
     holt_winters): ``_keyed_state`` whose step runs the batch operator's
-    ``fold(columns(pdf), state) -> (outputs, state)`` over the group from
+    ``fold([float64 array per field], state) -> (outputs, state)`` over the
+    group from
     the carried state (``fresh`` for a new key), as ``_keyed_scan`` runs
     it over a batch run. Output is ``t_ms``, ``carry_cols`` and one double
-    per ``out_names``. A stored None reads as NaN: checkpoints may hold
-    None for an EWMA accumulator with no valid sample yet."""
+    per ``out_names``."""
     carry = list(carry_cols)
 
     def make_step(keys):
-        def fn(key, pdf: pd.DataFrame, state: GroupState):
-            st = (tuple(np.nan if v is None else v for v in state.get)
-                  if state.exists else fresh)
-            outs, st = fold(columns(pdf), st)
-            state.update(tuple(st))
+        def fn(key, pdf: pd.DataFrame, state: _KeyState):
+            outs, st = fold([_f64(pdf, f) for f in fields],
+                            state.get if state.exists else fresh)
+            state.update(st)
             yield _key_frame(key, keys, len(pdf), {
                 "t_ms": _t_ms(pdf, time_col),
-                **{c: pdf[c].to_list() for c in carry},
+                **{c: pdf[c].array for c in carry},
                 **dict(zip(out_names, outs))})
         return fn
 
@@ -974,7 +1066,7 @@ def _fold_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
         [T.StructField("t_ms", T.LongType())]
         + [sdf.schema[c] for c in carry]
         + [T.StructField(n, T.DoubleType()) for n in out_names],
-        state_fields, make_step, tiebreak)
+        state_fields, make_step, tiebreak, carry, fields)
 
 
 def stream_ewma(
@@ -1000,8 +1092,7 @@ def stream_ewma(
         sdf, partition_by, time_col, tiebreak, carry_cols,
         [f"{f}_ewma" for f in fields],
         [T.StructField(f"s{i}", T.DoubleType()) for i in range(len(fields))],
-        lambda pdf: [_f64(pdf, f) for f in fields],
-        lambda xs, accs: _ewma_fold(xs, alpha, accs),
+        fields, lambda xs, accs: _ewma_fold(xs, alpha, accs),
         [np.nan] * len(fields))
 
 
@@ -1027,8 +1118,7 @@ def stream_holt(
         [f"{field}_level", f"{field}_trend"],
         [T.StructField("l", T.DoubleType()),
          T.StructField("b", T.DoubleType())],
-        lambda pdf: [_f64(pdf, field)],
-        lambda xs, st: _holt_fold(xs[0], alpha, beta, st),
+        [field], lambda xs, st: _holt_fold(xs[0], alpha, beta, st),
         (np.nan, np.nan))
 
 
@@ -1062,7 +1152,7 @@ def stream_holt_winters(
          T.StructField("sv", T.DoubleType()),
          T.StructField("k", T.LongType()),
          T.StructField("seas", T.ArrayType(T.DoubleType()))],
-        lambda pdf: [_f64(pdf, field)],
+        [field],
         lambda xs, st: _hw_fold(xs[0], period, alpha, beta, gamma, st),
         (np.nan, np.nan, np.nan, 0, [0.0] * period))
 
@@ -1126,22 +1216,15 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
     rolling includes all peers of the current ms, zscore excludes them.
     ``carry`` columns pass through per row (e.g. an event id), so stream
     output can line up row-for-row with the batch twin's."""
-    import json as _json
-
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
-        """Vectorized (r10): the buffer and batch concatenate into one
-        sorted int64/float64 array pair; every distinct timestamp's
-        window is a contiguous slice located by ONE vectorized
-        searchsorted over all runs (the old per-ts head-scan eviction
-        and list `del` are gone), aggregated by :func:`_np_agg` whose
-        cumsum folds are bit-identical to the old Python sums. Python
-        re-enters once per DISTINCT timestamp (the windows genuinely
-        differ), not once per row; per-row work (carry passthrough,
-        z-scores, run broadcast) is numpy repeat/elementwise."""
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
+        """The buffer and the run concatenate into one sorted array pair;
+        each distinct timestamp's window is a contiguous slice found by
+        one vectorized searchsorted and aggregated by :func:`_np_agg`.
+        Python re-enters once per DISTINCT timestamp, not once per row."""
         if state.exists:
-            d = _json.loads(state.get[0])
+            d = json.loads(state.get[0])
         else:
             d = {"t": [], **{c: [] for c in in_cols}}
         n = len(pdf)
@@ -1163,7 +1246,7 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
         lim = np.searchsorted(t_all, tu, side="left")
         out_cols = {"t_ms": t_new}
         for c in carry:
-            out_cols[c] = pdf[c].to_numpy(dtype=object)
+            out_cols[c] = pdf[c].array
         if zscore_threshold is None:
             per_run = {out: [] for out, _i, _f, _fl in rows_spec}
             for r in range(len(tu)):
@@ -1204,7 +1287,7 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
         # current ms included — exactly the old progressive eviction's
         # end state on sorted times
         keep = int(np.searchsorted(t_all, tu[-1] - dur_ms, side="right"))
-        state.update((_json.dumps(
+        state.update((json.dumps(
             {"t": [int(x) for x in t_all[keep:]],
              **{c: [None if np.isnan(x) else float(x)
                     for x in v_all[c][keep:]] for c in in_cols}}),))
@@ -1262,7 +1345,8 @@ def stream_rolling(
            for out, _in, func, _fl in rows_spec],
         [T.StructField("buf", T.StringType())],
         lambda keys: _buffer_state_fn(rows_spec, keys, time_col, dur_ms,
-                                      None, list(carry_cols)))
+                                      None, list(carry_cols)),
+        exact=carry_cols, reads=[r[1] for r in rows_spec])
 
 
 def stream_zscore(
@@ -1304,7 +1388,8 @@ def stream_zscore(
         + [sdf.schema[c] for c in carry_cols] + per_field,
         [T.StructField("buf", T.StringType())],
         lambda keys: _buffer_state_fn(rows_spec, keys, time_col, dur_ms,
-                                      float(threshold), list(carry_cols)))
+                                      float(threshold), list(carry_cols)),
+        exact=carry_cols, reads=fields)
 
 
 def stream_exact_dedup(
@@ -1515,80 +1600,13 @@ class StreamPipeline:
                                  self._time_col, tiebreak, carry_cols)
 
 
-def _first_seen_state_fn(key_cols: list[str], payload_cols: list[str],
-                         order_col: str, ttl_ms: int | None = None,
-                         time_col: str | None = None):
-    def empty() -> pd.DataFrame:
-        return pd.DataFrame(columns=key_cols + payload_cols)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            # event-time TTL expiry: the watermark passed the claim's
-            # deadline — drop it so state stays bounded; a later
-            # arrival re-claims (and re-emits) the key.
-            state.remove()
-            yield empty()
-            return
-        chunks = [p for p in pdfs if len(p)]
-        pdf = pd.concat(chunks) if chunks else pd.DataFrame()
-
-        def arm() -> None:
-            # deadline = ttl past the key's NEWEST sighting (event
-            # time) — a sliding window, monotone under late data via
-            # the max with the stored deadline — clamped above the
-            # current watermark (Spark rejects timers at/below it)
-            new_dl = int(pdf[time_col].max().value // 10**6) + ttl_ms
-            old_dl = state.get[1] if state.exists else 0
-            dl = max(new_dl, old_dl, state.getCurrentWatermarkMs() + 1)
-            state.update((True, dl))
-            state.setTimeoutTimestamp(dl)
-
-        if state.exists:
-            # key already emitted in an earlier micro-batch: suppress
-            # (and slide the claim deadline forward — Spark clears a
-            # previously-set timer whenever the function is invoked
-            # with data, so it must be re-set every sighting)
-            if ttl_ms is not None and len(pdf):
-                arm()
-            yield empty()
-            return
-        if not len(pdf):
-            yield empty()
-            return
-        first = pdf.sort_values(order_col, kind="mergesort").iloc[0]
-        if ttl_ms is not None:
-            arm()
-        else:
-            state.update((True,))
-        yield pd.DataFrame(
-            [list(key) + [first[c] for c in payload_cols]],
-            columns=key_cols + payload_cols)
-
-    return fn
-
-
-_FIRST_SEEN_TTL_NOTE = """\
-Claim-TTL design note (shared by stream_first_seen and the two near-dup
-gates): the TTL is EVENT-TIME, watermark-bounded — a claim expires when
-the stream's watermark passes the key's newest sighting + ttl, at which
-point the state-store row is physically deleted and a later arrival
-re-claims (re-emits) the key.  Event time was chosen over
-GroupStateTimeout.ProcessingTimeTimeout deliberately: processing-time
-timeouts make Spark's shouldRunAnotherBatch unconditionally true, so an
-availableNow drain NEVER terminates (measured: the drain hangs), and
-wall-clock eviction is not replayable — re-running yesterday's data
-today would evict different keys.  Event-time TTL is deterministic,
-replay-safe, and terminates: after the last data batch the engine runs
-exactly the extra batches needed to fire timers the advanced watermark
-unlocked."""
-
-
 def _first_seen_claims(sdf: DataFrame, key_col: str,
                        payload_cols: Sequence[str], order_col: str,
                        ttl, time_col: str, late: str,
                        keyed=None) -> DataFrame:
     """The shell of the three claim gates: validate the claim-TTL
-    options, key the frame, and run the first-seen state operator.
+    options, key the frame, and run the claim step over
+    :func:`_bucketed_state`.
 
     ``keyed(carry)`` builds the claim-keyed frame from ``sdf``, passing
     the ``carry`` columns through (the event-time column when ``ttl``
@@ -1597,9 +1615,19 @@ def _first_seen_claims(sdf: DataFrame, key_col: str,
     gets the contract error below, not a KeyError from a carry-schema
     build.  Output: ``key_col`` + ``payload_cols``, typed as in the
     keyed frame.
+
+    The step is vectorized over the bucket: the first row of each key
+    run (sorted by ``order_col``, stable) is emitted for a key the table
+    does not hold yet, and every key with rows is stored.  With a TTL
+    its deadline is ttl past the key's newest sighting, never earlier
+    than the stored one, and above the watermark (Spark rejects a timer
+    at or below it).  The TTL is event time, not processing time: a
+    processing-time timeout keeps ``shouldRunAnotherBatch`` true, so an
+    ``availableNow`` drain never ends, and wall-clock expiry would not
+    replay.
     """
     ms = None
-    state_fields = [T.StructField("seen", T.BooleanType())]
+    state_fields = []
     if ttl is not None:
         ms = ttl if isinstance(ttl, int) else window_duration_ms(ttl)
         if not ms or ms <= 0:
@@ -1612,18 +1640,24 @@ def _first_seen_claims(sdf: DataFrame, key_col: str,
         state_fields.append(T.StructField("deadline", T.LongType()))
     if keyed is not None:
         sdf = keyed((time_col,) if ms is not None else ())
-    out_schema = T.StructType([sdf.schema[c]
-                               for c in (key_col, *payload_cols)])
+    cols = [key_col, *payload_cols]
+    out_schema = T.StructType([sdf.schema[c] for c in cols])
     if ms is not None:
         sdf = sdf.withWatermark(time_col, late)
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        _first_seen_state_fn([key_col], list(payload_cols), order_col,
-                             ms, time_col),
-        outputStructType=out_schema,
-        stateStructType=T.StructType(state_fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if ms is not None else GroupStateTimeout.NoTimeout))
+    sdf = sdf.select(*dict.fromkeys([*cols, order_col,
+                                     *([time_col] if ms else [])]))
+
+    def claim(pdf, starts, _keys, prior, wm):
+        fresh = np.array([p is None for p in prior])
+        frames = [pdf.iloc[starts[fresh]][cols]]
+        if ms is None:
+            return frames, [() if f else None for f in fresh]
+        dl = np.maximum.reduceat(_t_ms(pdf, time_col), starts) + ms
+        return frames, [(max(int(d), p[0] if p else 0, wm + 1),)
+                        for d, p in zip(dl, prior)]
+
+    return _bucketed_state(sdf, [key_col], [order_col], payload_cols,
+                           out_schema, state_fields, claim, ms is not None)
 
 
 def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
@@ -1635,27 +1669,20 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
     """Cross-batch first-occurrence keeper: the streaming ingestion
     dedup — the first row per ``key_col`` ever seen is emitted (ties
     within a micro-batch break to the smallest ``order_col``), every
-    later occurrence in ANY micro-batch is suppressed.
+    later occurrence in ANY micro-batch is suppressed.  Append mode:
+    each admitted row emits once per claim epoch, so the sink IS the
+    deduped corpus.
 
-    State is ONE boolean per distinct key — the honest cost of exact
-    streaming dedup is O(distinct keys), which grows MONOTONICALLY over
-    an unbounded stream.  ``ttl`` bounds it: a claim expires once the
-    stream's event-time watermark (over ``time_col``, lateness
-    allowance ``late``) passes the key's newest sighting + ``ttl``
-    (window string or ms) — a SLIDING window re-armed by every arrival
-    (claimed or suppressed), implemented as an event-time state timeout
-    so expired keys are physically removed from the state store.  The
-    documented trade: a duplicate arriving more than ``ttl`` of event
-    time after its key's last traffic is RE-ADMITTED (emitted again) —
-    exact dedup within the horizon, bounded state beyond it, the same
-    retention contract as a windowed-restart pipeline but without the
-    restart.  At 100 TB, pair it with the Bloom prefilter
-    (``datapipe.sketch.bloom_build`` over yesterday's corpus) so only
-    maybe-seen keys reach the stateful operator.  Append mode: each
-    admitted row emits exactly once per claim epoch, so the sink IS
-    the deduped corpus (dedup the sink offline if ``ttl`` re-admits
-    matter downstream).  See ``_FIRST_SEEN_TTL_NOTE`` for why the TTL
-    is event-time rather than processing-time.
+    State is one table row per distinct key: O(distinct keys), growing
+    MONOTONICALLY over an unbounded stream.  ``ttl`` (window string or
+    ms) bounds it: a claim expires once the event-time watermark (over
+    ``time_col``, lateness ``late``) passes the key's newest sighting +
+    ``ttl``, re-armed by every arrival, and the key is then deleted from
+    state.  The trade: a duplicate arriving more than ``ttl`` after its
+    key's last traffic is RE-ADMITTED.  At 100 TB, front it with the
+    Bloom prefilter (``datapipe.sketch.bloom_build``) so only maybe-seen
+    keys reach the state.  ``_first_seen_claims`` says why the TTL is
+    event time.
     """
     return _first_seen_claims(sdf, key_col, payload_cols, order_col, ttl,
                               time_col, late)
@@ -1663,7 +1690,7 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
 
 def _cusum_state_fn(field: str, keys: list[str], time_col: str,
                     t_mic: int, k_mic: int, h_mic: int):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
         """Vectorized: the clipped recurrence s_j = max(0, s_{j-1} + a_j)
         has the closed form s_j = P_j - min(0, runmin(P)_j) with
         P = s_0 + cumsum(a) (the same identity the batch operator uses,
@@ -1743,20 +1770,15 @@ def stream_cusum(
 ) -> DataFrame:
     """Cross-batch per-event CUSUM drift detector (Page 1954): the
     streaming twin of :func:`pypond_spark.operators.changepoint.
-    cusum_changepoints` in its explicit-``target`` form — streaming
-    monitoring cannot self-reference a final mean, so the reference
-    level is a parameter (the previous corpus' mean, an SLO level).
+    cusum_changepoints` in its explicit-``target`` form (a stream cannot
+    self-reference a final mean, so the reference level is a parameter).
 
     Each event (in event-time order, ``tiebreak`` pinning equal
-    timestamps) updates the two one-sided sums in INTEGER micro-units
-    — identical arithmetic to the batch fold, so draining a stream
-    equals the batch replay bit-for-bit; alarms emit as append-mode
-    rows ``(*keys, t_ms, direction, stat)`` and both sides restart at
-    0 after each alarm.
-
-    State is TWO longs per series key — O(keys), independent of event
-    volume; at 100 TB this is the cheapest stateful operator in the
-    engine (cf. ``stream_ewma``'s one double per field).
+    timestamps) updates the two one-sided sums in INTEGER micro-units,
+    the batch fold's arithmetic, so a drained stream equals the batch
+    replay bit-for-bit; alarms emit append-mode as ``(*keys, t_ms,
+    direction, stat)`` and both sides restart at 0.  State is two longs
+    per series key.
     """
     t_mic = int(round(float(target) * 1e6))
     k_mic = int(round(float(k) * 1e6))
@@ -1772,8 +1794,7 @@ def stream_cusum(
          T.StructField("stat", T.DoubleType())],
         [T.StructField("sp", T.LongType()), T.StructField("sn", T.LongType())],
         lambda keys: _cusum_state_fn(field, keys, time_col, t_mic, k_mic,
-                                     h_mic),
-        tiebreak)
+                                     h_mic), tiebreak, reads=[field])
 
 
 # ---------------------------------------------------------------------------
@@ -1865,28 +1886,20 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
                          ttl: str | int | None = None,
                          time_col: str = "time",
                          late: str = "0 seconds") -> DataFrame:
-    """Streaming NEAR-duplicate ingestion gate — the near-dup
+    """Streaming NEAR-duplicate ingestion gate, the SimHash (Hamming)
     counterpart of :func:`stream_first_seen`: each document's 64-bit
-    SimHash is cut into ``n_bands`` equal band keys; per band key the
-    FIRST document ever seen claims it (one boolean of state per
-    claimed band key), and every later document hitting that key is
-    suppressed on it.  Append-mode output is the claim table
-    ``(band, doc_id)``: a document that claims no band is a near-dup of
-    earlier traffic (every one of its bands was already taken) and is
-    dropped by the gate; distinct claimed doc_ids ARE the admitted
-    corpus.  Ties inside a micro-batch break to the smallest id.
+    SimHash is cut into ``n_bands`` band keys; the FIRST document seen
+    with a band key claims it, and later documents are suppressed on
+    it.  Append-mode output is the claim table ``(band, doc_id)``: a
+    document that claims no band is a near-dup of earlier traffic, so
+    the distinct claimed doc_ids ARE the admitted corpus.  Ties inside a
+    micro-batch break to the smallest id.
 
-    State is O(distinct band keys) — 4x the admitted-doc count, which
-    still grows monotonically over an unbounded stream; ``ttl`` bounds
-    it with the same sliding idle-window claim expiry as
-    :func:`stream_first_seen` (a band key idle for ``ttl`` is evicted
-    and re-claimable — near-dups are then only guaranteed caught
-    within the idle horizon), and the Bloom-prefilter pairing note
-    there applies unchanged.  Recall/precision follow SimHash
-    banding: documents
-    within a small Hamming radius share band keys with high
-    probability (16 identical bits per shared band), exactly the batch
-    ``simhash_near_dups`` blocking contract, applied temporally.
+    State is O(distinct band keys) (4x the admitted docs), bounded by
+    the same ``ttl`` claim expiry as :func:`stream_first_seen` (near-dups
+    are then caught only within the idle horizon).  Documents within a
+    small Hamming radius share a 16-bit band with high probability: the
+    batch ``simhash_near_dups`` blocking contract, applied temporally.
     """
     if n_bands < 2 or n_bands % 2 or 64 % n_bands:
         raise ValueError(f"n_bands must be even and divide 64, "
@@ -1916,31 +1929,23 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", num_hashes: int = 8,
                           band_size: int = 4, shingle_n: int = 3,
                           carry_cols: Sequence[str] = ()) -> DataFrame:
-    """Stateless per-row MinHash band keys for streaming frames — the
-    batch ``minhash_signature`` is a shingle explode + per-doc min
-    aggregate (a streaming agg that could not feed append-mode state);
-    this computes the IDENTICAL signatures row-locally.  Same shingling
-    (``greatest(n_toks-2, 1)`` slices of the ``word_tokens`` law), same
-    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` derivation, same band
-    digests — a batch SQL twin over ``word_shingles`` replays it
-    exactly.
+    """Stateless per-row MinHash band keys for streaming frames: the batch
+    ``minhash_signature`` is a shingle explode + per-doc min aggregate (a
+    streaming agg that could not feed append-mode state), so this
+    computes the IDENTICAL signatures row-locally, in one vectorized
+    Arrow stage: same shingling (``greatest(n_toks-2, 1)`` slices of the
+    ``word_tokens`` law, via
+    :func:`~pypond_spark.datapipe._util.py_word_tokens`), C md5 per
+    shingle, h1/h2 the first/second 4 md5 bytes big-endian, the
+    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` per-doc min-folds as
+    ``numpy.minimum.reduceat``, and the same ``md5("b|m0|..|m3")`` band
+    digest — pinned by equality tests against the batch
+    ``lsh_band_buckets``.  NULL text is dropped (the batch gives it no
+    shingle); an empty or token-less text yields the one empty-string
+    shingle the batch emits.
 
-    Output: ``(id_col, *carry_cols, band)`` — one row per band per
+    Output: ``(id_col, *carry_cols, band)``, one row per band per
     document; ``carry_cols`` pass through untouched.
-
-    One vectorized Arrow stage: C md5 per shingle (``hashlib``), per-doc
-    min-folds as ``numpy.minimum.reduceat`` over the doc boundaries of
-    the whole batch (measured 3.3x the interpreted JVM fold it replaced,
-    guide §4.2 "heavy lifting in native code").  h1/h2 are the
-    first/second 4 md5 bytes big-endian (== ``conv(md5_hex[0:8], 16,
-    10)``), the tokens are
-    :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python form
-    of the batch ``word_tokens`` law), NULL text is dropped before the
-    stage (the batch ``word_shingles`` gives it no shingle), an empty or
-    token-less text yields the single empty-string shingle the batch
-    emits, and the band digest is the same ``md5("b|m0|..|m3")`` hex
-    string — pinned by the equality tests against the batch
-    ``lsh_band_buckets``.
     """
     if num_hashes % band_size:
         raise ValueError("num_hashes must be a multiple of band_size")
@@ -2002,34 +2007,24 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
                          time_col: str = "time",
                          late: str = "0 seconds",
                          index_path: str | None = None) -> DataFrame:
-    """Streaming MinHash-LSH near-dup ingestion gate — the shingle-set
-    (Jaccard) counterpart of :func:`stream_simhash_dedup`'s bit-vector
-    (Hamming) gate, completing the streaming near-dup pair: per LSH
-    band key the FIRST document claims it, later hits are suppressed.
-    Documents whose every band was claimed earlier are near-dups of
-    prior traffic by exactly the batch ``lsh_candidate_pairs``
-    banding contract, applied temporally.  Append-mode claim table
-    ``(band, doc_id)``; state O(distinct band keys), bounded by the
-    same sliding idle-window ``ttl`` claim expiry as
-    :func:`stream_first_seen`; ties inside a micro-batch break to the
-    smallest id.
+    """Streaming MinHash-LSH near-dup ingestion gate, the shingle-set
+    (Jaccard) counterpart of :func:`stream_simhash_dedup`: per LSH band
+    key the FIRST document claims it and later hits are suppressed, so a
+    document whose every band was claimed earlier is a near-dup by the
+    batch ``lsh_candidate_pairs`` banding contract, applied temporally.
+    Append-mode claim table ``(band, doc_id)``; state O(distinct band
+    keys), bounded by the ``ttl`` claim expiry of
+    :func:`stream_first_seen`; ties in a micro-batch go to the smallest id.
 
-    ``index_path`` (r11) points the gate at a PERSISTED corpus band
-    index (:func:`pypond_spark.datapipe.dedup.write_neardup_index` —
-    banding parameters MUST match): bands already in the corpus index
-    count as claimed before the stream started, so a live ingest
-    checks "near-dup of the EXISTING corpus" and not just "near-dup
-    within the stream".  Mechanics: a stream-static LEFT ANTI join
-    against the index's distinct band keys ahead of the state op —
-    index-claimed bands are suppressed per micro-batch AND never enter
-    stream state (state stays bounded by NOVEL bands only).  The
-    static side is persisted so repeated micro-batches hit the
-    materialized table, not the parquet scan; at corpus scale where
-    even the distinct band table cannot persist, swap it for a
-    broadcast Bloom filter of band keys (bounded memory; the
-    documented false-positive rate then over-suppresses a ~1e-4 share
-    of genuinely novel bands — banding is already heuristic, but that
-    trade must be opted into, so it is not the default here).
+    ``index_path`` points the gate at a PERSISTED corpus band index
+    (:func:`pypond_spark.datapipe.dedup.write_neardup_index`, with the
+    same banding parameters): its bands count as claimed before the
+    stream started, so a live ingest checks "near-dup of the EXISTING
+    corpus".  A stream-static LEFT ANTI join against the index's
+    persisted distinct band keys runs ahead of the state op, so
+    index-claimed bands never enter stream state.  Where even that table
+    cannot persist, a broadcast Bloom filter of band keys would bound
+    memory at a false-positive over-suppression, an opt-in trade.
     """
     def keyed(carry):
         out = minhash_bands_rowwise(sdf, text_col, id_col, num_hashes,
@@ -2047,7 +2042,7 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
 
 def _xchart_state_fn(field: str, keys: list[str], time_col: str,
                      t_mic: int, s_mic: int):
-    def fn(key, pdf: pd.DataFrame, state: GroupState):
+    def fn(key, pdf: pd.DataFrame, state: _KeyState):
         prior = list(state.get[0]) if state.exists else []
         cols = keys + ["t_ms", "rule", "side", "value"]
         vals = pdf[field]
@@ -2117,20 +2112,15 @@ def stream_xchart(
     time_col: str = "time",
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Streaming individuals (XmR) control chart — the per-EVENT twin
-    of :func:`~pypond_spark.operators.changepoint.control_chart_rules`:
-    the four Western Electric zone rules evaluated on every measurement
-    as it arrives, against an explicit ``target``/``sigma`` (the
-    streamable SPC form).  Deviations are pinned to integer micro-units
-    (float-parity recipe #5's discipline), so a drained stream equals a
-    batch window replay bit-for-bit.
+    """Streaming individuals (XmR) control chart, the per-EVENT twin of
+    :func:`~pypond_spark.operators.changepoint.control_chart_rules`: the
+    four Western Electric zone rules on every measurement as it arrives,
+    against an explicit ``target``/``sigma``.  Deviations are integer
+    micro-units, so a drained stream equals a batch replay bit-for-bit.
 
-    State is the last EIGHT micro-unit deviations per series key — a
-    fixed ring buffer (8 longs), the window every rule needs and
-    nothing more; alarms emit append-mode as ``(*keys, t_ms, rule,
-    side, value)``.  An event can legitimately fire several rules at
-    once (a 3σ spike usually completes 2σ and 1σ patterns too) — each
-    fires as its own row, matching the batch operator.
+    State is the last eight deviations per series key (the rules' whole
+    lookback); alarms emit append-mode as ``(*keys, t_ms, rule, side,
+    value)``, one row per fired rule, as the batch operator emits them.
     """
     if sigma <= 0:
         raise ValueError(f"sigma must be positive, got {sigma}")
@@ -2144,7 +2134,7 @@ def stream_xchart(
          T.StructField("value", T.DoubleType())],
         [T.StructField("hist", T.ArrayType(T.LongType()))],
         lambda keys: _xchart_state_fn(field, keys, time_col, t_mic, s_mic),
-        tiebreak)
+        tiebreak, reads=[field])
 
 
 # ---------------------------------------------------------------------------

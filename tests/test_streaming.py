@@ -1843,3 +1843,179 @@ def test_wide_checkpoint_resumes_at_its_width(spark, tmp_path, keys):
                     partition_by=keys), "append").collect()
     assert len(fresh) > 3
     assert sorted(map(tuple, got)) == sorted(map(tuple, fresh))
+
+
+def test_stream_first_seen_ttl_rows_keep_claim(spark, tmp_path):
+    """A key whose claim deadline is already below the watermark in the
+    micro-batch that brings it new rows stays claimed (suppressed and
+    re-armed), as a per-key event-time timer only fires for a key with no
+    rows; the idle key beside it expires in that same batch."""
+    import json as _json
+    from pyspark.sql import types as T2
+    from pypond_spark.streaming.stream import stream_first_seen
+    schema = T2.StructType([T2.StructField("doc_id", T2.LongType()),
+                            T2.StructField("digest", T2.StringType()),
+                            T2.StructField("t_ms", T2.LongType())])
+    drains = [
+        # A and B claimed, deadlines 1060 s
+        [[{"doc_id": 1, "digest": "A", "t_ms": 1_000_000},
+          {"doc_id": 2, "digest": "B", "t_ms": 1_000_000}]],
+        # two files, one micro-batch each: E at 1100 s moves the
+        # watermark past 1060 s, then A's rows arrive in the next batch
+        # (A stays claimed, doc 4 suppressed) while idle B expires
+        [[{"doc_id": 3, "digest": "E", "t_ms": 1_100_000}],
+         [{"doc_id": 4, "digest": "A", "t_ms": 1_110_000}]],
+        # B re-claimed; A (re-armed to 1170 s) still suppressed
+        [[{"doc_id": 5, "digest": "B", "t_ms": 1_120_000},
+          {"doc_id": 6, "digest": "A", "t_ms": 1_120_000}]],
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    n = 0
+    for files in drains:
+        for chunk in files:
+            path = src / f"p{n}.json"
+            with open(path, "w") as fh:
+                for rec in chunk:
+                    fh.write(_json.dumps(rec) + "\n")
+            os.utime(path, (1_000_000 + n, 1_000_000 + n))
+            n += 1
+        sdf = (spark.readStream.schema(schema)
+               .option("maxFilesPerTrigger", 1).json(str(src))
+               .withColumn("time", F.timestamp_millis(F.col("t_ms")))
+               .drop("t_ms"))
+        out = stream_first_seen(sdf, key_col="digest",
+                                payload_cols=("doc_id",),
+                                order_col="doc_id", ttl="1m")
+        q = (out.writeStream.format("parquet").outputMode("append")
+             .option("path", str(tmp_path / "out"))
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .trigger(availableNow=True).start())
+        assert q.awaitTermination(120), "drain did not terminate"
+    got = sorted((r["digest"], r["doc_id"]) for r in
+                 spark.read.parquet(str(tmp_path / "out")).collect())
+    assert got == [("A", 1), ("B", 2), ("B", 5), ("E", 3)]
+
+
+def test_bucket_boundary_is_lossless(spark, tmp_path, monkeypatch):
+    """Every key shares one state bucket, so each bucket frame mixes a
+    NULL into a `long` column: keys, carry columns and claim payloads
+    above 2**53 still come back exact, beside their NULLs."""
+    from pypond_spark.streaming import stream
+    monkeypatch.setattr(stream, "STATE_BUCKETS", 1)
+    big = 2 ** 53
+    rows = [(k, t, v, None) for k in (big, big + 1, None)
+            for t, v in ((1_000, 1.0), (2_000, 3.0))]
+    rows += [(7, 3_000 + i, 1.0, p)
+             for i, p in enumerate((big + 1, None, big + 3))]
+    for d, recs in (("ev", [dict(zip(("k", "t_ms", "value", "payload"), r))
+                            for r in rows]),
+                    ("docs", [{"digest": "x", "doc_id": big + 1},
+                              {"digest": "y", "doc_id": None}])):
+        (tmp_path / d).mkdir()
+        with open(tmp_path / d / "p0.json", "w") as fh:
+            for rec in recs:
+                fh.write(json.dumps(rec) + "\n")
+    sdf = (spark.readStream.schema("k long, t_ms long, value double, "
+                                   "payload long").json(str(tmp_path / "ev"))
+           .withColumn("time", F.timestamp_millis("t_ms")))
+    rate = stream.stream_rate(sdf.where(~F.col("k").eqNullSafe(7)),
+                              partition_by=["k"])
+    got = sorted(((r["k"] is None, r["k"] or 0), r["value_rate"])
+                 for r in run_available_now(rate, "append").collect())
+    assert got == [((False, big), 2.0), ((False, big + 1), 2.0),
+                   ((True, 0), 2.0)]
+    ewma = stream.stream_ewma(sdf.where(F.col("k") == 7), "value",
+                              partition_by=["k"], carry_cols=["payload"])
+    got = sorted((r["t_ms"], r["k"], r["payload"]) for r in
+                 run_available_now(ewma, "append").collect())
+    assert got == [(3_000, 7, big + 1), (3_001, 7, None),
+                   (3_002, 7, big + 3)]
+    docs = spark.readStream.schema("digest string, doc_id long").json(
+        str(tmp_path / "docs"))
+    got = sorted((r["digest"], r["doc_id"]) for r in run_available_now(
+        stream.stream_first_seen(docs), "append").collect())
+    assert got == [("x", big + 1), ("y", None)]
+
+
+_THREE_FILES = _TWO_FILES + [
+    [{"t_ms": 150_000, "user": "b", "value": 70.0},
+     {"t_ms": 150_000, "user": None, "value": 5.0},
+     {"t_ms": 180_000, "user": "a", "value": 200.0},
+     {"t_ms": 210_000, "user": None, "value": 9.0}]]
+_RESUME_DOCS = [
+    [{"doc_id": 1, "text": "spark window batch order data column agg"},
+     {"doc_id": 2, "text": "entirely different words nothing shared here"}],
+    [{"doc_id": 3, "text": "spark window batch order data column agg"},
+     {"doc_id": 4, "text": "a third text about state stores and buckets"}],
+    [{"doc_id": 5, "text": "a third text about state stores and buckets"},
+     {"doc_id": 6, "text": "the last one talks of checkpoints resuming"}],
+]
+
+
+@pytest.mark.parametrize("op", ["rate", "holt_winters", "minhash"])
+def test_bucket_state_resumes_like_fresh_drain(spark, tmp_path, op):
+    """Draining file 1, then files 2-3 over the same checkpoint gives the
+    rows of one fresh drain of all three files."""
+    from pypond_spark.streaming import stream_holt_winters
+    from pypond_spark.streaming.stream import stream_minhash_dedup
+    chunks = _RESUME_DOCS if op == "minhash" else _THREE_FILES
+    both, src = tmp_path / "both", tmp_path / "src"
+    both.mkdir()
+    src.mkdir()
+    _write_chunks(both, chunks)
+
+    def build(path):
+        if op == "minhash":
+            return stream_minhash_dedup(
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1).json(str(path)))
+        sdf = _read_stream(spark, str(path))
+        if op == "rate":
+            return stream_rate(sdf, partition_by=["user"])
+        return stream_holt_winters(sdf, "value", 2, partition_by=["user"])
+
+    def drain(path, ck):
+        got = []
+        q = (build(path).writeStream.outputMode("append")
+             .foreachBatch(lambda df, _: got.extend(df.collect()))
+             .option("checkpointLocation", str(ck))
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return got
+
+    shutil.copy2(both / "p0.json", src)
+    resumed = drain(src, tmp_path / "ck")
+    for name in ("p1.json", "p2.json"):
+        shutil.copy2(both / name, src)
+    resumed += drain(src, tmp_path / "ck")
+    fresh = drain(both, tmp_path / "ck_fresh")
+    assert len(fresh) > 4
+    assert sorted(map(repr, resumed)) == sorted(map(repr, fresh))
+
+
+def test_bucket_count_is_pinned_by_checkpoint(spark, tmp_path, monkeypatch):
+    """A checkpoint records the bucket count its state was written with:
+    resuming it with another count fails instead of losing the state of
+    keys that moved bucket."""
+    from pypond_spark.streaming import stream
+    both, src = tmp_path / "both", tmp_path / "src"
+    both.mkdir()
+    src.mkdir()
+    _write_chunks(both, _THREE_FILES)
+
+    def drain():
+        out = stream.stream_rate(_read_stream(spark, str(src)),
+                                 partition_by=["user"])
+        (out.writeStream.format("noop").outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start().awaitTermination())
+
+    monkeypatch.setattr(stream, "STATE_BUCKETS", 1)
+    shutil.copy2(both / "p0.json", src)
+    drain()
+    monkeypatch.setattr(stream, "STATE_BUCKETS", 2)
+    shutil.copy2(both / "p1.json", src)
+    with pytest.raises(StreamingQueryException,
+                       match="checkpoint state has 1 buckets, this build 2"):
+        drain()
