@@ -26,7 +26,6 @@ import math
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -335,11 +334,13 @@ def _keyed_scan(df: DataFrame, partition_by: Sequence[str], time_col: str,
             if not n:
                 continue
             new = _run_starts(pdf, keys)
-            first, last = (tuple(None if pd.isna(x) else x for x in
-                                 (pdf[k].iat[i] for k in keys))
-                           for i in (0, -1))
-            new[0] = first != prev_key
-            prev_key = last
+            first, last = [], []
+            for k in keys:
+                v, na = pdf[k].to_numpy(), pdf[k].isna().to_numpy()
+                first.append(None if na[0] else v[0])
+                last.append(None if na[-1] else v[-1])
+            new[0] = tuple(first) != prev_key
+            prev_key = tuple(last)
             ins = columns(pdf)
             bounds = [*np.flatnonzero(new).tolist(), n]
             if bounds[0]:  # the run carried over from the last batch

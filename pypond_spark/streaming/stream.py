@@ -158,7 +158,9 @@ def _bucketed_state(sdf: DataFrame, keys: list[str], sort_cols: list[str],
     key's row as it was. Numeric keys, ``sort_cols`` and ``exact`` columns
     cross as a coalesced value plus a NULL flag and reach ``step`` as pandas
     masked arrays, since pandas would hold a numeric column with a NULL as
-    float64 (rounding a long above 2**53, merging NULL into NaN).
+    float64 (rounding a long above 2**53). A NaN double key is its own
+    series, as in Spark's ``groupBy``, but ``step`` sees a NaN in these
+    columns as NULL and so emits NULL, as the batch twins do.
 
     ``ttl``: a ``deadline`` field holds each key's event-time deadline and
     the bucket's timer is the smallest one. A key with no rows in the batch
@@ -207,14 +209,16 @@ def _bucketed_state(sdf: DataFrame, keys: list[str], sort_cols: list[str],
         if chunks:
             pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
                    else chunks[0])
-            pdf = pdf.take(np.lexsort([_sortable(pdf[c])
-                                       for c in reversed(order)]))
+            pdf = pdf.sort_values(order, kind="stable")
             new = _run_starts(pdf, split)
             new[0] = True
             starts = np.flatnonzero(new)
+            nan = {}
             for c in enc:
                 mask = pdf.pop(f"__null_{c}").to_numpy()
                 v = pdf[c].to_numpy()
+                if v.dtype.kind == "f":
+                    nan[c] = v, mask | np.isnan(v)
                 pdf[c] = (pd.arrays.FloatingArray if v.dtype.kind == "f"
                           else pd.arrays.IntegerArray)(v, mask)
             h = pdf["__h"].to_numpy()[starts]
@@ -222,6 +226,8 @@ def _bucketed_state(sdf: DataFrame, keys: list[str], sort_cols: list[str],
                                          type=schema.field(i + 1).type)
                     for i, k in enumerate(keys)]
             run_keys = list(zip(*(a.to_pylist() for a in karr)))
+            for c, (v, m) in nan.items():  # the state keys hold NaN apart
+                pdf[c] = pd.arrays.FloatingArray(v, m)
             prior, row = [None] * len(starts), {}
             if old is not None:
                 cand = np.flatnonzero(np.isin(old["__h"].to_numpy(), h))
@@ -267,18 +273,6 @@ def _bucketed_state(sdf: DataFrame, keys: list[str], sort_cols: list[str],
         outputMode="append",
         timeoutConf=(GroupStateTimeout.EventTimeTimeout if ttl
                      else GroupStateTimeout.NoTimeout))
-
-
-def _sortable(col: pd.Series) -> np.ndarray:
-    """A sort key for ``np.lexsort`` (stable): numbers and times as they
-    are, anything else as its sorted codes, with NULL after every value."""
-    v = col.to_numpy()
-    if v.dtype.kind == "M":
-        return v.view("int64")
-    if v.dtype.kind != "O":
-        return v
-    codes, uniq = pd.factorize(v, sort=True)
-    return np.where(codes < 0, len(uniq), codes)
 
 
 def _nan_key(key: tuple) -> tuple:
@@ -353,8 +347,10 @@ def _with_last(pdf: pd.DataFrame, state: _KeyState, fields: list[str],
 def _rate_state_fn(fields: list[str], keys: list[str], time_col: str,
                    allow_negative: bool, counter_wrap: float | None = None):
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """Consecutive-pair rates ``(cv - pv) / ((cur - prev) / 1000.0)``
-        via shifted numpy arrays, the stored last event prepended."""
+        """Vectorized: consecutive-pair rates via shifted numpy arrays
+        (state-prepended), elementwise IEEE-identical to the former
+        per-row loop ((cv - pv) / ((cur - prev) / 1000.0), same wrap
+        add), so drained output is bit-for-bit unchanged."""
         t_all, v_all = _with_last(pdf, state, fields, time_col)
         if len(t_all) < 2:
             return  # yield nothing: no output rows for this group
@@ -410,7 +406,9 @@ def stream_rate(
 
 def _gaps_state_fn(keys: list[str], time_col: str, gap_ms: int):
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """One ``np.diff`` over the state-prepended sorted times."""
+        """Vectorized: one ``np.diff`` over the state-prepended sorted
+        times replaces the former per-row loop — integer arithmetic, so
+        output is identical by construction."""
         t_all, _ = _with_last(pdf, state, [], time_col)
         d = np.diff(t_all)
         idx = np.nonzero(d > gap_ms)[0]
@@ -456,10 +454,14 @@ def stream_gaps(
 def _sessions_state_fn(keys: list[str], time_col: str, gap_ms: int,
                        fields: list[str]):
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """Session breaks come from one ``np.diff`` (strictly greater than
-        the gap); Python re-enters once per SEGMENT. Field sums keep the
-        sequential left-fold order by seeding a ``np.cumsum`` with the
-        carried sum (missing samples add an exact 0.0)."""
+        """Vectorized (r10): session breaks come from one ``np.diff``
+        (strictly greater than the gap — an event at EXACTLY last+gap
+        still joins, matching Spark's native session_window boundary);
+        Python re-enters once per SEGMENT (closed session + the one
+        left open), not once per event. Per-segment field sums keep
+        the sequential left-fold order by seeding a ``np.cumsum`` with
+        the carried state sum (missing samples add an exact 0.0), so
+        drained output is bit-identical to the former per-row loop."""
         if state.exists:
             begin, last, n0 = state.get[0], state.get[1], state.get[2]
             sums0 = list(state.get[3:])
@@ -524,16 +526,22 @@ def stream_sessions(
     """Cross-batch stateful sessionization: the streaming twin of
     ``TimeSeries.session_window_rollup`` — a session is a run of events
     per key with inter-event silence <= ``window`` (an event at exactly
-    ``last + window`` still joins, as Spark's inclusive session_window
-    end); ``end`` is the last event plus the window, as in batch.
+    ``last + window`` still joins: Spark's native session_window end is
+    inclusive, and the batch operator inherits that); ``end`` extends
+    the last event by the session window, matching the batch operator
+    exactly.
 
-    State per key is three longs (begin, last-seen ts, event count) plus
-    one running double per ``field_spec`` field (emitted as
-    ``<field>_sum``; invalid samples add nothing), flat in throughput.
-    A session is emitted when it CLOSES: the first event more than
-    ``window`` after its predecessor emits it and opens the next, across
-    micro-batches too.  The session still open at stream end is not
-    emitted (closure needs the next event).
+    State per key is THREE longs (session begin, last-seen ts, event
+    count) plus one running double per ``field_spec`` field (emitted as
+    ``<field>_sum``; invalid samples contribute nothing) — flat
+    regardless of throughput or session length, so a million-key stream
+    holds state proportional to keys, not events.
+    A session is emitted when it CLOSES: the first event >= ``window``
+    after its predecessor both emits the previous session and opens the
+    next, even across micro-batch boundaries (the open session rides the
+    state store). The session still OPEN at stream end is not emitted —
+    closure needs the next event; pair with a processing-time timeout
+    for open-ended session expiry in production alerting.
     """
     gap_ms = (window_duration_ms(window)
               if isinstance(window, str) else int(window))
@@ -599,11 +607,15 @@ def stream_throttle(
 
 def _transitions_state_fn(keys: list[str], time_col: str, type_col: str):
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """(prev, cur) pairs via a shifted object array with the state
-        prepended. A NULL type is a REAL observation, both a `to_type` and
-        the next row's `from_type` (the batch lead()-pairs semantics), so
-        only a key's very first event has no edge: the `seen` flag tells
-        "no predecessor yet" from "predecessor was null"."""
+        """Vectorized: (prev, cur) pairs via a shifted object array with
+        the cross-batch state prepended. A NULL type value is a REAL
+        observation: it participates as both `to_type` and the next
+        row's `from_type` (the batch lead()-pairs semantics), so the
+        only row without an edge is each key's very first event — state
+        carries an explicit `seen` flag to tell "no predecessor yet"
+        apart from "predecessor was null" (the r10 review found the
+        per-row version silently bridging over null events across
+        micro-batch boundaries, fabricating never-adjacent edges)."""
         seen = state.exists and bool(state.get[1])
         prev = state.get[0] if state.exists else None
         t = _t_ms(pdf, time_col)
@@ -652,9 +664,12 @@ def _cum_state_fn(rows_spec, keys: list[str], time_col: str,
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """Every reducer is a prefix scan: state-seeded ``np.cumsum`` for
-        sum/count (sequential, as a per-row ``+=``) and
-        ``np.minimum/maximum.accumulate`` with ±inf for invalid samples."""
+        """Vectorized (r10): every cumulative reducer is a prefix scan
+        — state-seeded ``np.cumsum`` for sum/count (sequential
+        left-to-right, bit-identical to the former per-row ``+=``),
+        ``np.minimum/maximum.accumulate`` with ±inf for invalid samples
+        — so the whole batch is a handful of C scans, zero per-row
+        Python."""
         # state per input column: (sum, count, min, max) over VALID values
         if state.exists:
             st = list(state.get)
@@ -761,9 +776,11 @@ def stream_cumulative(
 def _align_state_fn(fields: list[str], keys: list[str], time_col: str,
                     dur_ms: int, method: str, limit: int | None):
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """Boundaries per consecutive pair via np.repeat over per-gap
-        boundary counts; ``pv + (cv - pv) * (b - prev) / (cur - prev)``
-        runs elementwise in float64 (int64 time deltas promote exactly)."""
+        """Vectorized (r11): boundary synthesis per consecutive pair via
+        np.repeat over per-gap boundary counts; the interpolation
+        ``pv + (cv - pv) * (b - prev) / (cur - prev)`` runs elementwise
+        in float64 with int64 time deltas promoted exactly, so every
+        emitted value is IEEE-identical to the former per-row loop."""
         fresh = not state.exists
         t_all, v_all = _with_last(pdf, state, fields, time_col)
         head = None
@@ -1044,10 +1061,9 @@ def _fold_state(sdf: DataFrame, partition_by: Sequence[str], time_col: str,
     """The stream side of the float-state smoothing twins (ewma, holt,
     holt_winters): ``_keyed_state`` whose step runs the batch operator's
     ``fold([float64 array per field], state) -> (outputs, state)`` over the
-    group from
-    the carried state (``fresh`` for a new key), as ``_keyed_scan`` runs
-    it over a batch run. Output is ``t_ms``, ``carry_cols`` and one double
-    per ``out_names``."""
+    group from the carried state (``fresh`` for a new key), as
+    ``_keyed_scan`` runs it over a batch run. Output is ``t_ms``,
+    ``carry_cols`` and one double per ``out_names``."""
     carry = list(carry_cols)
 
     def make_step(keys):
@@ -1219,10 +1235,15 @@ def _buffer_state_fn(rows_spec, keys: list[str], time_col: str, dur_ms: int,
     in_cols = list(dict.fromkeys(r[1] for r in rows_spec))
 
     def fn(key, pdf: pd.DataFrame, state: _KeyState):
-        """The buffer and the run concatenate into one sorted array pair;
-        each distinct timestamp's window is a contiguous slice found by
-        one vectorized searchsorted and aggregated by :func:`_np_agg`.
-        Python re-enters once per DISTINCT timestamp, not once per row."""
+        """Vectorized (r10): the buffer and batch concatenate into one
+        sorted int64/float64 array pair; every distinct timestamp's
+        window is a contiguous slice located by ONE vectorized
+        searchsorted over all runs (the old per-ts head-scan eviction
+        and list `del` are gone), aggregated by :func:`_np_agg` whose
+        cumsum folds are bit-identical to the old Python sums. Python
+        re-enters once per DISTINCT timestamp (the windows genuinely
+        differ), not once per row; per-row work (carry passthrough,
+        z-scores, run broadcast) is numpy repeat/elementwise."""
         if state.exists:
             d = json.loads(state.get[0])
         else:
@@ -1669,20 +1690,30 @@ def stream_first_seen(sdf: DataFrame, key_col: str = "digest",
     """Cross-batch first-occurrence keeper: the streaming ingestion
     dedup — the first row per ``key_col`` ever seen is emitted (ties
     within a micro-batch break to the smallest ``order_col``), every
-    later occurrence in ANY micro-batch is suppressed.  Append mode:
-    each admitted row emits once per claim epoch, so the sink IS the
-    deduped corpus.
+    later occurrence in ANY micro-batch is suppressed.
 
-    State is one table row per distinct key: O(distinct keys), growing
-    MONOTONICALLY over an unbounded stream.  ``ttl`` (window string or
-    ms) bounds it: a claim expires once the event-time watermark (over
-    ``time_col``, lateness ``late``) passes the key's newest sighting +
-    ``ttl``, re-armed by every arrival, and the key is then deleted from
-    state.  The trade: a duplicate arriving more than ``ttl`` after its
-    key's last traffic is RE-ADMITTED.  At 100 TB, front it with the
-    Bloom prefilter (``datapipe.sketch.bloom_build``) so only maybe-seen
-    keys reach the state.  ``_first_seen_claims`` says why the TTL is
-    event time.
+    State is ONE row per distinct key in its bucket's state table — the
+    honest cost of exact streaming dedup is O(distinct keys), which grows
+    MONOTONICALLY over an unbounded stream.  ``ttl`` bounds it: a claim
+    expires once the stream's event-time watermark (over ``time_col``,
+    lateness allowance ``late``) passes the key's newest sighting +
+    ``ttl`` (window string or ms) — a SLIDING window re-armed by every
+    arrival (claimed or suppressed) — and the expired key is deleted
+    from its bucket's table.  The
+    documented trade: a duplicate arriving more than ``ttl`` of event
+    time after its key's last traffic is RE-ADMITTED (emitted again) —
+    exact dedup within the horizon, bounded state beyond it, the same
+    retention contract as a windowed-restart pipeline but without the
+    restart.  Every micro-batch rewrites each state bucket it touches,
+    so a batch touching few of many claimed keys writes the whole table
+    (SCALE.md, "State buckets": 1M claims, 100 touched, ~10 MB per
+    batch); a claim table that large wants ``ttl``, and at corpus scale
+    the Bloom prefilter (``datapipe.sketch.bloom_build`` over
+    yesterday's corpus) so only maybe-seen keys reach the stateful
+    operator.  Append mode: each admitted row emits exactly once per
+    claim epoch, so the sink IS the deduped corpus (dedup the sink
+    offline if ``ttl`` re-admits matter downstream).
+    ``_first_seen_claims`` says why the TTL is event time.
     """
     return _first_seen_claims(sdf, key_col, payload_cols, order_col, ttl,
                               time_col, late)
@@ -1770,15 +1801,20 @@ def stream_cusum(
 ) -> DataFrame:
     """Cross-batch per-event CUSUM drift detector (Page 1954): the
     streaming twin of :func:`pypond_spark.operators.changepoint.
-    cusum_changepoints` in its explicit-``target`` form (a stream cannot
-    self-reference a final mean, so the reference level is a parameter).
+    cusum_changepoints` in its explicit-``target`` form — streaming
+    monitoring cannot self-reference a final mean, so the reference
+    level is a parameter (the previous corpus' mean, an SLO level).
 
     Each event (in event-time order, ``tiebreak`` pinning equal
-    timestamps) updates the two one-sided sums in INTEGER micro-units,
-    the batch fold's arithmetic, so a drained stream equals the batch
-    replay bit-for-bit; alarms emit append-mode as ``(*keys, t_ms,
-    direction, stat)`` and both sides restart at 0.  State is two longs
-    per series key.
+    timestamps) updates the two one-sided sums in INTEGER micro-units
+    — identical arithmetic to the batch fold, so draining a stream
+    equals the batch replay bit-for-bit; alarms emit as append-mode
+    rows ``(*keys, t_ms, direction, stat)`` and both sides restart at
+    0 after each alarm.
+
+    State is TWO longs per series key — O(keys), independent of event
+    volume; at 100 TB this is the cheapest stateful operator in the
+    engine (cf. ``stream_ewma``'s one double per field).
     """
     t_mic = int(round(float(target) * 1e6))
     k_mic = int(round(float(k) * 1e6))
@@ -1886,20 +1922,28 @@ def stream_simhash_dedup(sdf: DataFrame, text_col: str = "text",
                          ttl: str | int | None = None,
                          time_col: str = "time",
                          late: str = "0 seconds") -> DataFrame:
-    """Streaming NEAR-duplicate ingestion gate, the SimHash (Hamming)
+    """Streaming NEAR-duplicate ingestion gate — the near-dup
     counterpart of :func:`stream_first_seen`: each document's 64-bit
-    SimHash is cut into ``n_bands`` band keys; the FIRST document seen
-    with a band key claims it, and later documents are suppressed on
-    it.  Append-mode output is the claim table ``(band, doc_id)``: a
-    document that claims no band is a near-dup of earlier traffic, so
-    the distinct claimed doc_ids ARE the admitted corpus.  Ties inside a
-    micro-batch break to the smallest id.
+    SimHash is cut into ``n_bands`` equal band keys; per band key the
+    FIRST document ever seen claims it (one state-table row per
+    claimed band key), and every later document hitting that key is
+    suppressed on it.  Append-mode output is the claim table
+    ``(band, doc_id)``: a document that claims no band is a near-dup of
+    earlier traffic (every one of its bands was already taken) and is
+    dropped by the gate; distinct claimed doc_ids ARE the admitted
+    corpus.  Ties inside a micro-batch break to the smallest id.
 
-    State is O(distinct band keys) (4x the admitted docs), bounded by
-    the same ``ttl`` claim expiry as :func:`stream_first_seen` (near-dups
-    are then caught only within the idle horizon).  Documents within a
-    small Hamming radius share a 16-bit band with high probability: the
-    batch ``simhash_near_dups`` blocking contract, applied temporally.
+    State is O(distinct band keys) — 4x the admitted-doc count, which
+    still grows monotonically over an unbounded stream; ``ttl`` bounds
+    it with the same sliding idle-window claim expiry as
+    :func:`stream_first_seen` (a band key idle for ``ttl`` is evicted
+    and re-claimable — near-dups are then only guaranteed caught
+    within the idle horizon), and the Bloom-prefilter pairing note
+    there applies unchanged.  Recall/precision follow SimHash
+    banding: documents
+    within a small Hamming radius share band keys with high
+    probability (16 identical bits per shared band), exactly the batch
+    ``simhash_near_dups`` blocking contract, applied temporally.
     """
     if n_bands < 2 or n_bands % 2 or 64 % n_bands:
         raise ValueError(f"n_bands must be even and divide 64, "
@@ -1929,23 +1973,31 @@ def minhash_bands_rowwise(sdf: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", num_hashes: int = 8,
                           band_size: int = 4, shingle_n: int = 3,
                           carry_cols: Sequence[str] = ()) -> DataFrame:
-    """Stateless per-row MinHash band keys for streaming frames: the batch
-    ``minhash_signature`` is a shingle explode + per-doc min aggregate (a
-    streaming agg that could not feed append-mode state), so this
-    computes the IDENTICAL signatures row-locally, in one vectorized
-    Arrow stage: same shingling (``greatest(n_toks-2, 1)`` slices of the
-    ``word_tokens`` law, via
-    :func:`~pypond_spark.datapipe._util.py_word_tokens`), C md5 per
-    shingle, h1/h2 the first/second 4 md5 bytes big-endian, the
-    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` per-doc min-folds as
-    ``numpy.minimum.reduceat``, and the same ``md5("b|m0|..|m3")`` band
-    digest — pinned by equality tests against the batch
-    ``lsh_band_buckets``.  NULL text is dropped (the batch gives it no
-    shingle); an empty or token-less text yields the one empty-string
-    shingle the batch emits.
+    """Stateless per-row MinHash band keys for streaming frames — the
+    batch ``minhash_signature`` is a shingle explode + per-doc min
+    aggregate (a streaming agg that could not feed append-mode state);
+    this computes the IDENTICAL signatures row-locally.  Same shingling
+    (``greatest(n_toks-2, 1)`` slices of the ``word_tokens`` law), same
+    Kirsch-Mitzenmacher ``(h1 + k*h2) mod 2^32`` derivation, same band
+    digests — a batch SQL twin over ``word_shingles`` replays it
+    exactly.
 
-    Output: ``(id_col, *carry_cols, band)``, one row per band per
+    Output: ``(id_col, *carry_cols, band)`` — one row per band per
     document; ``carry_cols`` pass through untouched.
+
+    One vectorized Arrow stage: C md5 per shingle (``hashlib``), per-doc
+    min-folds as ``numpy.minimum.reduceat`` over the doc boundaries of
+    the whole batch (measured 3.3x the interpreted JVM fold it replaced,
+    guide §4.2 "heavy lifting in native code").  h1/h2 are the
+    first/second 4 md5 bytes big-endian (== ``conv(md5_hex[0:8], 16,
+    10)``), the tokens are
+    :func:`~pypond_spark.datapipe._util.py_word_tokens` (the Python form
+    of the batch ``word_tokens`` law), NULL text is dropped before the
+    stage (the batch ``word_shingles`` gives it no shingle), an empty or
+    token-less text yields the single empty-string shingle the batch
+    emits, and the band digest is the same ``md5("b|m0|..|m3")`` hex
+    string — pinned by the equality tests against the batch
+    ``lsh_band_buckets``.
     """
     if num_hashes % band_size:
         raise ValueError("num_hashes must be a multiple of band_size")
@@ -2007,24 +2059,34 @@ def stream_minhash_dedup(sdf: DataFrame, text_col: str = "text",
                          time_col: str = "time",
                          late: str = "0 seconds",
                          index_path: str | None = None) -> DataFrame:
-    """Streaming MinHash-LSH near-dup ingestion gate, the shingle-set
-    (Jaccard) counterpart of :func:`stream_simhash_dedup`: per LSH band
-    key the FIRST document claims it and later hits are suppressed, so a
-    document whose every band was claimed earlier is a near-dup by the
-    batch ``lsh_candidate_pairs`` banding contract, applied temporally.
-    Append-mode claim table ``(band, doc_id)``; state O(distinct band
-    keys), bounded by the ``ttl`` claim expiry of
-    :func:`stream_first_seen`; ties in a micro-batch go to the smallest id.
+    """Streaming MinHash-LSH near-dup ingestion gate — the shingle-set
+    (Jaccard) counterpart of :func:`stream_simhash_dedup`'s bit-vector
+    (Hamming) gate, completing the streaming near-dup pair: per LSH
+    band key the FIRST document claims it, later hits are suppressed.
+    Documents whose every band was claimed earlier are near-dups of
+    prior traffic by exactly the batch ``lsh_candidate_pairs``
+    banding contract, applied temporally.  Append-mode claim table
+    ``(band, doc_id)``; state O(distinct band keys), bounded by the
+    same sliding idle-window ``ttl`` claim expiry as
+    :func:`stream_first_seen`; ties inside a micro-batch break to the
+    smallest id.
 
-    ``index_path`` points the gate at a PERSISTED corpus band index
-    (:func:`pypond_spark.datapipe.dedup.write_neardup_index`, with the
-    same banding parameters): its bands count as claimed before the
-    stream started, so a live ingest checks "near-dup of the EXISTING
-    corpus".  A stream-static LEFT ANTI join against the index's
-    persisted distinct band keys runs ahead of the state op, so
-    index-claimed bands never enter stream state.  Where even that table
-    cannot persist, a broadcast Bloom filter of band keys would bound
-    memory at a false-positive over-suppression, an opt-in trade.
+    ``index_path`` (r11) points the gate at a PERSISTED corpus band
+    index (:func:`pypond_spark.datapipe.dedup.write_neardup_index` —
+    banding parameters MUST match): bands already in the corpus index
+    count as claimed before the stream started, so a live ingest
+    checks "near-dup of the EXISTING corpus" and not just "near-dup
+    within the stream".  Mechanics: a stream-static LEFT ANTI join
+    against the index's distinct band keys ahead of the state op —
+    index-claimed bands are suppressed per micro-batch AND never enter
+    stream state (state stays bounded by NOVEL bands only).  The
+    static side is persisted so repeated micro-batches hit the
+    materialized table, not the parquet scan; at corpus scale where
+    even the distinct band table cannot persist, swap it for a
+    broadcast Bloom filter of band keys (bounded memory; the
+    documented false-positive rate then over-suppresses a ~1e-4 share
+    of genuinely novel bands — banding is already heuristic, but that
+    trade must be opted into, so it is not the default here).
     """
     def keyed(carry):
         out = minhash_bands_rowwise(sdf, text_col, id_col, num_hashes,
@@ -2112,15 +2174,20 @@ def stream_xchart(
     time_col: str = "time",
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Streaming individuals (XmR) control chart, the per-EVENT twin of
-    :func:`~pypond_spark.operators.changepoint.control_chart_rules`: the
-    four Western Electric zone rules on every measurement as it arrives,
-    against an explicit ``target``/``sigma``.  Deviations are integer
-    micro-units, so a drained stream equals a batch replay bit-for-bit.
+    """Streaming individuals (XmR) control chart — the per-EVENT twin
+    of :func:`~pypond_spark.operators.changepoint.control_chart_rules`:
+    the four Western Electric zone rules evaluated on every measurement
+    as it arrives, against an explicit ``target``/``sigma`` (the
+    streamable SPC form).  Deviations are pinned to integer micro-units
+    (float-parity recipe #5's discipline), so a drained stream equals a
+    batch window replay bit-for-bit.
 
-    State is the last eight deviations per series key (the rules' whole
-    lookback); alarms emit append-mode as ``(*keys, t_ms, rule, side,
-    value)``, one row per fired rule, as the batch operator emits them.
+    State is the last EIGHT micro-unit deviations per series key — a
+    fixed ring buffer (8 longs), the window every rule needs and
+    nothing more; alarms emit append-mode as ``(*keys, t_ms, rule,
+    side, value)``.  An event can legitimately fire several rules at
+    once (a 3σ spike usually completes 2σ and 1σ patterns too) — each
+    fires as its own row, matching the batch operator.
     """
     if sigma <= 0:
         raise ValueError(f"sigma must be positive, got {sigma}")

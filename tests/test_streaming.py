@@ -1938,6 +1938,39 @@ def test_bucket_boundary_is_lossless(spark, tmp_path, monkeypatch):
     assert got == [("x", big + 1), ("y", None)]
 
 
+def test_bucket_nan_double_leaves_as_null(spark, tmp_path, monkeypatch):
+    """A NaN `double` key is a series of its own beside the NULL key, as
+    in Spark's groupBy, and both gate and keyed outputs emit a NaN key or
+    pass-through value as NULL, as the batch twins' pandas frames do."""
+    from pypond_spark.streaming import stream
+    monkeypatch.setattr(stream, "STATE_BUCKETS", 1)
+    (tmp_path / "ev").mkdir()
+    with open(tmp_path / "ev" / "p0.json", "w") as fh:
+        for s, t, v, p in (("NaN", 1_000, 1.0, "NaN"), ("NaN", 2_000, 3.0, "1"),
+                           (None, 1_500, 10.0, "2"), (None, 2_500, 20.0, "3"),
+                           ("1.5", 1_000, 5.0, "4")):
+            fh.write(json.dumps({"s": s, "t_ms": t, "value": v, "p": p})
+                     + "\n")
+    sdf = (spark.readStream.schema("s string, t_ms long, value double, "
+                                   "p string").json(str(tmp_path / "ev"))
+           .select(F.col("s").cast("double").alias("d"), "t_ms", "value",
+                   F.col("p").cast("double").alias("p"),
+                   F.timestamp_millis("t_ms").alias("time")))
+    seen = stream.stream_first_seen(sdf, key_col="d", payload_cols=("p",),
+                                    order_col="t_ms")
+    got = sorted(((r["d"] is None, r["d"] or 0), r["p"] is None, r["p"] or 0)
+                 for r in run_available_now(seen, "append").collect())
+    assert got == [((False, 1.5), False, 4.0), ((True, 0), False, 2.0),
+                   ((True, 0), True, 0)]
+    ewma = stream.stream_ewma(sdf, "value", partition_by=["d"],
+                              carry_cols=["p"])
+    got = sorted((r["d"], r["t_ms"], r["p"], r["value_ewma"])
+                 for r in run_available_now(ewma, "append").collect()
+                 if r["d"] is None)
+    assert got == [(None, 1_000, None, 1.0), (None, 1_500, 2.0, 10.0),
+                   (None, 2_000, 1.0, 2.0), (None, 2_500, 3.0, 15.0)]
+
+
 _THREE_FILES = _TWO_FILES + [
     [{"t_ms": 150_000, "user": "b", "value": 70.0},
      {"t_ms": 150_000, "user": None, "value": 5.0},

@@ -13,22 +13,20 @@ Two audits:
 2. **Write amplification** (``--buckets 4,64,1024``): every micro-batch
    rewrites each touched bucket's whole table. For each bucket count
    (patched into the module constant for the run), drains
-   ``stream_first_seen`` keyed on ``--series`` long keys: one file claims
-   every key, then ``--batches`` files each touch ``--touched`` random
-   keys. After one warm-up drain, prints for those small batches the
-   median ``addBatch`` and state-commit ms and the checkpoint bytes
-   written per batch, and the checkpoint's total state bytes.
+   ``stream_first_seen`` keyed on ``SERIES`` long keys: one file claims
+   every key, then ``BATCHES`` files each touch ``TOUCHED`` random keys.
+   After one warm-up drain, prints for those small batches the median
+   ``addBatch`` and state-commit ms and the checkpoint bytes written per
+   batch, and the checkpoint's total state bytes.
 
 Usage::
 
-    python tools/stream_state_audit.py [sf_dir]    # default $SPARK_GRAFT_SF_DIR
-    python tools/stream_state_audit.py --buckets 4,64,1024 \\
-        [--series 1000000] [--batches 5] [--touched 100]
+    python tools/stream_state_audit.py [sf_dir]
+    python tools/stream_state_audit.py --buckets 4,64,1024
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import statistics
 import sys
@@ -37,9 +35,13 @@ import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entry  # noqa: E402
 from pypond_spark.session import get_spark  # noqa: E402
 from pypond_spark.streaming import stream  # noqa: E402
 from pypond_spark.streaming.stream import _drain_available_now  # noqa: E402
+
+#: the write-amplification workload: key space, small batches, keys per batch
+SERIES, BATCHES, TOUCHED = 1_000_000, 5, 100
 
 
 def drain_with_progress(sdf, output_mode: str):
@@ -59,51 +61,6 @@ def drain_with_progress(sdf, output_mode: str):
     return rows, state
 
 
-def fmt(val, width):
-    # metrics can be absent (no stateful progress recorded) — a string
-    # '?' must not hit a numeric-only ',' format spec
-    s = f"{val:,}" if isinstance(val, int) else str(val)
-    return s.rjust(width)
-
-
-def cardinality(spark, sf_dir: str) -> None:
-    import __spark_entry__ as entry
-    variants = [
-        ("event_type (5 keys)", ["event_type"]),
-        ("user_id (1.5k keys)", ["user_id"]),
-        ("event_id (1 key/row)", ["event_id"]),
-    ]
-    print(f"{'grouping':24s} {'out rows':>9s} {'state rows':>11s} "
-          f"{'state bytes':>12s}")
-    for label, keys in variants:
-        sdf = entry._events_stream(spark, sf_dir)
-        out = stream.stream_ewma(sdf, "value", alpha=0.5, partition_by=keys)
-        rows, state = drain_with_progress(out, "append")
-        print(f"{label:24s} {rows:>9,} "
-              f"{fmt(state.get('numRowsTotal', '?'), 11)} "
-              f"{fmt(state.get('memoryUsedBytes', '?'), 12)}")
-
-    # claim-table eviction: the stream_first_seen family's state is
-    # O(distinct keys) and grows monotonically UNLESS ttl= is set; with
-    # an event-time TTL the watermark sweep evicts idle claims, so the
-    # final state plateaus at ~(keys sighted in the last ttl of event
-    # time) regardless of how much history streamed through.  The events
-    # table spans ~30 days, so ttl='1d' should hold ~1/30 of the keys.
-    print()
-    print(f"{'first_seen claim state':24s} {'out rows':>9s} "
-          f"{'state rows':>11s} {'state bytes':>12s}")
-    for label, ttl in [("no ttl (monotone)", None),
-                       ("ttl=1d (evicted)", "1d")]:
-        sdf = entry._events_stream(spark, sf_dir)
-        out = stream.stream_first_seen(sdf, key_col="event_id",
-                                       payload_cols=("user_id",),
-                                       order_col="event_id", ttl=ttl)
-        rows, state = drain_with_progress(out, "append")
-        print(f"{label:24s} {rows:>9,} "
-              f"{fmt(state.get('numRowsTotal', '?'), 11)} "
-              f"{fmt(state.get('memoryUsedBytes', '?'), 12)}")
-
-
 def _dir_bytes(path: str, name: str | None = None) -> int:
     """Bytes of the files under ``path`` (only those called ``name``)."""
     return sum(os.path.getsize(os.path.join(d, f))
@@ -111,8 +68,7 @@ def _dir_bytes(path: str, name: str | None = None) -> int:
                if name is None or f == name)
 
 
-def amplification(spark, buckets: list[int], series: int, batches: int,
-                  touched: int) -> None:
+def amplification(spark, buckets: list[int]) -> None:
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -122,9 +78,9 @@ def amplification(spark, buckets: list[int], series: int, batches: int,
     with tempfile.TemporaryDirectory() as tmp:
         src = os.path.join(tmp, "src")
         os.makedirs(src)
-        files = [np.arange(series)] + [
-            rng.choice(series, touched, replace=False)
-            for _ in range(batches)]
+        files = [np.arange(SERIES)] + [
+            rng.choice(SERIES, TOUCHED, replace=False)
+            for _ in range(BATCHES)]
         for i, keys in enumerate(files):
             path = os.path.join(src, f"p{i:03d}.parquet")
             pq.write_table(pa.table({"g": keys.astype(np.int64),
@@ -157,25 +113,57 @@ def amplification(spark, buckets: list[int], series: int, batches: int,
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("sf_dir", nargs="?",
-                    default=os.environ.get("SPARK_GRAFT_SF_DIR"),
-                    help="testdata dir (default: $SPARK_GRAFT_SF_DIR)")
-    ap.add_argument("--buckets", help="comma list: run the write-"
-                    "amplification sweep instead of the cardinality audit")
-    ap.add_argument("--series", type=int, default=1_000_000)
-    ap.add_argument("--batches", type=int, default=5)
-    ap.add_argument("--touched", type=int, default=100)
-    args = ap.parse_args()
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("pypond_state_audit")
     spark.sparkContext.setLogLevel("ERROR")
-    if args.buckets:
-        amplification(spark, [int(b) for b in args.buckets.split(",")],
-                      args.series, args.batches, args.touched)
-    elif args.sf_dir:
-        cardinality(spark, args.sf_dir)
-    else:
-        ap.error("the cardinality audit needs sf_dir or $SPARK_GRAFT_SF_DIR")
+    if sf_dir == "--buckets":
+        amplification(spark, [int(b) for b in sys.argv[2].split(",")])
+        return
+
+    from pypond_spark.streaming import stream_ewma
+    from pypond_spark.streaming.stream import stream_first_seen
+
+    def fmt(val, width):
+        # metrics can be absent (no stateful progress recorded) — a
+        # string '?' must not hit a numeric-only ',' format spec
+        s = f"{val:,}" if isinstance(val, int) else str(val)
+        return s.rjust(width)
+
+    variants = [
+        ("event_type (5 keys)", ["event_type"]),
+        ("user_id (1.5k keys)", ["user_id"]),
+        ("event_id (1 key/row)", ["event_id"]),
+    ]
+    print(f"{'grouping':24s} {'out rows':>9s} {'state rows':>11s} "
+          f"{'state bytes':>12s}")
+    for label, keys in variants:
+        sdf = entry._events_stream(spark, sf_dir)
+        out = stream_ewma(sdf, "value", alpha=0.5, partition_by=keys)
+        rows, state = drain_with_progress(out, "append")
+        print(f"{label:24s} {rows:>9,} "
+              f"{fmt(state.get('numRowsTotal', '?'), 11)} "
+              f"{fmt(state.get('memoryUsedBytes', '?'), 12)}")
+
+    # claim-table eviction: the stream_first_seen family's state is
+    # O(distinct keys) and grows monotonically UNLESS ttl= is set; with
+    # an event-time TTL the watermark sweep evicts idle claims, so the
+    # final state plateaus at ~(keys sighted in the last ttl of event
+    # time) regardless of how much history streamed through — the
+    # bounded-state evidence for VERDICT r8 item 1.  The events table
+    # spans ~30 days, so ttl='1d' should hold ~1/30 of the keys.
+    print()
+    print(f"{'first_seen claim state':24s} {'out rows':>9s} "
+          f"{'state rows':>11s} {'state bytes':>12s}")
+    for label, ttl in [("no ttl (monotone)", None),
+                       ("ttl=1d (evicted)", "1d")]:
+        sdf = entry._events_stream(spark, sf_dir)
+        out = stream_first_seen(sdf, key_col="event_id",
+                                payload_cols=("user_id",),
+                                order_col="event_id", ttl=ttl)
+        rows, state = drain_with_progress(out, "append")
+        print(f"{label:24s} {rows:>9,} "
+              f"{fmt(state.get('numRowsTotal', '?'), 11)} "
+              f"{fmt(state.get('memoryUsedBytes', '?'), 12)}")
 
 
 if __name__ == "__main__":
